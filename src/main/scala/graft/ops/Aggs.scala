@@ -142,7 +142,8 @@ object Aggs {
     // Results [413]). Split out, the sketch pass partial-aggregates to
     // |flags| rows per map task and the exact pass shuffles 16-byte
     // (flag, okey) rows with map-side partial distinct — identical
-    // values (countDistinct ≡ distinct + count; l_orderkey is null-free).
+    // values (countDistinct ≡ distinct + count; l_orderkey is null-free,
+    // gated in TestdataAsciiSpec).
     val sketches = li.groupBy("l_returnflag")
       .agg(approx_count_distinct(col("l_orderkey"), 0.02).as("apx"),
            percentile_approx(col("l_extendedprice"), lit(0.5), lit(1000))

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, GraftSql, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.functions._
 
 /** Stage-by-stage run report — the Spark-native analog of the reference's
@@ -23,12 +25,17 @@ case class PipelineStats(
 /** The reference's 10-step ETL (`/root/reference/real_estate_etl_job.py`),
   * re-expressed Spark-first — same semantics, scale-safe mechanics:
   *
-  *  - ONE pass for audit counts (single agg) instead of the reference's
-  *    13 uncached full rescans (SURVEY §3.2);
-  *  - the census-coverage restriction is a broadcast left-semi JOIN, not
-  *    a driver-collected IN list (`:41,96` — unbounded at 100 TB);
-  *  - stratified sampling keeps the reference's window shape
-  *    (`row_number over (partition by state order by rand(seed))`, `:112-115`);
+  *  - ONE listings scan feeds ONE grouped aggregate (key: the target
+  *    state, or null) that yields the four audit counts AND the
+  *    stratified sample together, instead of the reference's 13 uncached
+  *    full rescans (SURVEY §3.2) plus a window sort;
+  *  - the census-coverage restriction is a broadcast left JOIN with a
+  *    marker column, not a driver-collected IN list (`:41,96` — unbounded
+  *    at 100 TB);
+  *  - stratified sampling (`row_number over (partition by state order by
+  *    rand(seed)) <= n`, `:112-115`) is a bounded top-k (`CollectTopK`,
+  *    smallest n of `rand(seed)` per state) — the same rows, with no
+  *    window, no exchange of every covered row and no sort;
   *  - the enrichment join broadcasts the census side (`:130-134`);
   *  - final projection emits the 18-column Schema.json contract with the
   *    left `state` kept on ambiguity (`:181`).
@@ -37,9 +44,9 @@ object RealEstatePipeline {
 
   val targetStates = Seq("Massachusetts", "California", "New York")
 
-  /** Step-4 clean columns and the ONE predicate derived from them —
-    * shared by [[transform]]'s stage filter and [[run]]'s folded audit
-    * so the two can never diverge. The isNotNull conjunction equals the
+  /** Step-4 clean columns and the ONE predicate derived from them — the
+    * clean-stage count and the sample's eligibility both apply it, so the
+    * two can never diverge. The isNotNull conjunction equals the
     * reference's dropna ONLY because listings are read ALL-STRING (Glue
     * DynamicFrame parity — `na.drop` on typed float/double columns would
     * additionally drop NaN); stating the predicate once means a future
@@ -64,25 +71,9 @@ object RealEstatePipeline {
   def readListings(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").csv(path)
 
-  /** Steps 3–9 as one composable transform; sampleSeed mirrors rand(42). */
-  def transform(listings: DataFrame, census: DataFrame,
-                samplePerState: Int = 100, sampleSeed: Long = 42L): DataFrame = {
-    // STEP 3: state IN-list filter (:64-65)
-    val inStates = listings.filter(col("state").isin(targetStates: _*))
-    // STEP 4: conjunctive NOT NULL clean (:79-85) — the shared cleanOk
-    // predicate (the folded audit applies the identical Column)
-    val cleaned = inStates.filter(cleanOk)
-    // STEP 5: census-coverage restriction — left-semi join, the scale-safe
-    // form of the reference's collect+isin (:41,96)
-    val censusKeys = census.select(col("zip_code")).distinct()
-    val covered = cleaned.join(broadcast(censusKeys), Seq("zip_code"), "left_semi")
-    // STEP 6: stratified sample — top-N per state under seeded-random
-    // order (:112-115)
-    val w = Window.partitionBy("state").orderBy(rand(sampleSeed))
-    val sampled = covered
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= samplePerState)
-      .drop("rn")
+  /** Steps 7–9 over the stratified sample (PipelineSpec also applies it
+    * to the window-form reference sample). */
+  private[graft] def enrich(sampled: DataFrame, census: DataFrame): DataFrame = {
     // STEP 7: broadcast left-outer enrichment join on zip_code (:130-134)
     val joined = sampled.join(
       broadcast(census.withColumnRenamed("state", "census_state")),
@@ -110,11 +101,12 @@ object RealEstatePipeline {
       col("price_per_sqft"))
   }
 
-  /** Full run: read → transform → audit → write (STEP 10: single-file
-    * header CSV overwrite, `real_estate_etl_job.py:202`), wrapped in the
-    * Step-Functions retry contract (`RealEstatePipeline.asl.json:62-72`:
-    * 2 attempts, 60 s interval, 2.0 backoff on TaskFailed; exhausted
-    * retries rethrow = the Catch → ProcessingFailed state `:73-81`).
+  /** Full run: read → sample + audit → enrich → write (STEP 10:
+    * single-file header CSV overwrite, `real_estate_etl_job.py:202`),
+    * wrapped in the Step-Functions retry contract
+    * (`RealEstatePipeline.asl.json:62-72`: 2 attempts, 60 s interval, 2.0
+    * backoff on TaskFailed; exhausted retries rethrow = the Catch →
+    * ProcessingFailed state `:73-81`). `sampleSeed` mirrors rand(42).
     * `onAttempt` is the TaskFailed seam (tests inject transient faults);
     * `retrySleep` is injectable so tests don't wait 60 s. Returns the
     * enriched frame + the audit stats the Step Functions contract checks. */
@@ -139,38 +131,64 @@ object RealEstatePipeline {
     val listings = readListings(spark, listingsCsv)
     val censusKeys = census.select(col("zip_code")).distinct()
 
-    // audit counts: the reference prints a count after EVERY stage (13
-    // uncached rescans, SURVEY §3.2). The four stage boundaries are
-    // running-AND predicates, so they fold into ONE conditional
-    // aggregation over ONE listings scan — each sum is exactly the
-    // corresponding staged count (PipelineSpec pins both the values and
-    // the ≤ 2 total CSV scans per run: this agg + the cache fill).
-    // Coverage is a broadcast LEFT join against the distinct census
-    // keys (no row multiplication), marker-null = uncovered.
+    // STEPS 3–6 and their audit counts: the reference prints a count
+    // after EVERY stage (13 uncached rescans, SURVEY §3.2) and samples
+    // with a window. Here ONE scan feeds ONE aggregate grouped by the
+    // target state (null for every other row, so ≤ |targetStates| + 1
+    // groups). The stage boundaries are running-AND predicates, so each
+    // count is a conditional count summed over the groups. Coverage
+    // (STEP 5) is a broadcast LEFT join against the distinct census keys
+    // (no row multiplication), marker-null = uncovered. PipelineSpec pins
+    // the values, exactly 1 listings-CSV scan per run (scans behind
+    // caches included), and no Window/Sort node in any executed plan.
     val stateOk = col("state").isin(targetStates: _*)
-    val staged = listings
+    val covered = stateOk && cleanOk && col("__census_cov").isNotNull
+    val groups = listings
       .join(broadcast(censusKeys.withColumn("__census_cov", lit(1))),
             Seq("zip_code"), "left")
-      .agg(
-        count(lit(1)).as("raw"),
-        sum(when(stateOk, 1L).otherwise(0L)).as("in_states"),
-        sum(when(stateOk && cleanOk, 1L).otherwise(0L)).as("cleaned"),
-        sum(when(stateOk && cleanOk && col("__census_cov").isNotNull, 1L)
-              .otherwise(0L)).as("covered"))
-      .head()
+      // The aggregate reads only these four columns. Because `__cand`
+      // holds rand, Catalyst cannot inline this projection into the
+      // aggregate, so the candidate struct is built by the scan stage's
+      // generated code and only for covered rows.
+      .select(
+        when(stateOk, col("state")).as("__state"),
+        (stateOk && cleanOk).as("__clean"),
+        covered.as("__covered"),
+        // STEP 6 candidates: (rand, row) for covered rows only, rand drawn
+        // in scan order — the same rand(seed) stream per split the window
+        // form drew after its filters, so the same rows win (PipelineSpec
+        // keeps the window form as the reference)
+        when(covered,
+             struct(rand(sampleSeed) +: listings.columns.toSeq.map(col): _*))
+          .as("__cand"))
+      .groupBy(col("__state"))
+      .agg(count(lit(1)), count_if(col("__clean")), count_if(col("__covered")),
+        // STEP 6: the n smallest (rand, row) structs per state — a bounded
+        // top-k; CollectTopK skips the nulls of uncovered rows
+        GraftSql.column(new CollectTopK(
+          GraftSql.expression(col("__cand")), samplePerState, reverse = true)))
+      .collect().toSeq
+    def total(rows: Seq[Row], i: Int): Long = rows.map(_.getLong(i)).sum
+    val inStates = groups.filterNot(_.isNullAt(0))
+    // rebuild the ≤ samplePerState × |targetStates| sampled rows, per
+    // state in rand order, dropping the leading sort key
+    val sampledRows = inStates.sortBy(_.getString(0))
+      .flatMap(_.getSeq[Row](4))
+      .map(r => Row.fromSeq(r.toSeq.tail))
 
-    val enriched = transform(listings, census, samplePerState, sampleSeed).cache()
+    val enriched = enrich(
+      spark.createDataFrame(sampledRows.asJava, listings.schema), census).cache()
     val audit = enriched.agg(
       count(lit(1)).as("joined"),
       count(col("census_median_income")).as("matched")).head()
     val (joinedN, matchedN) = (audit.getLong(0), audit.getLong(1))
     val stats = PipelineStats(
       censusZips = censusKeys.count(),
-      rawListings = staged.getLong(0),
-      afterStateFilter = staged.getLong(1),
-      afterNullClean = staged.getLong(2),
-      afterCoverage = staged.getLong(3),
-      sampled = joinedN, // sample rows == join left side rows (left join)
+      rawListings = total(groups, 1),
+      afterStateFilter = total(inStates, 1),
+      afterNullClean = total(inStates, 2),
+      afterCoverage = total(inStates, 3),
+      sampled = sampledRows.size,
       joined = joinedN,
       matched = matchedN,
       matchRatePct = if (joinedN > 0) 100.0 * matchedN / joinedN else 0.0,

@@ -3,6 +3,10 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.pipeline.{RealEstatePipeline, Retry, Validate}
+import graft.tools.RefScale
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 import scala.util.{Failure, Success}
 
@@ -114,37 +118,47 @@ class PipelineSpec extends SparkSpec {
 
   test("audit counts cost one uncached listings-CSV scan, not one per stage") {
     // Counts csv FileSourceScan nodes across every EXECUTED plan of a
-    // full run, descending through AQE and materialized query stages.
-    // Cache-hidden scans (the InMemoryRelation fill) are deliberately
-    // not counted — a cached read is the opposite of a rescan. The old
-    // per-stage audit issued 4 uncached csv-scanning counts; the folded
-    // conditional agg issues exactly 1.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.FileSourceScanExec
+    // full run, descending through AQE stages, materialized query stages
+    // AND cached relations (a scan hidden behind a cache fill still
+    // counts). The old per-stage audit issued 4 csv-scanning counts and
+    // the window sample a 5th; the single grouped aggregate issues
+    // exactly 1. The same walk finds no Window, WindowGroupLimit or
+    // Sort node: the stratified sample is a bounded top-k.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def csvScans(p: SparkPlan): Int = {
-      val self = p match {
-        // CSV-format data scans only: header resolution issues two
-        // bounded Text-format probes (CollectLimit 1 over the first
-        // line) that are metadata reads, not rescans of the data
-        case f: FileSourceScanExec
-          if f.relation.fileFormat.getClass.getSimpleName.contains("CSV") &&
-             f.relation.location.rootPaths.exists(_.toString.contains("listings.csv")) => 1
-        case _ => 0
-      }
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = {
       val kids = p match {
         case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
         case q: QueryStageExec => Seq(q.plan)
+        case m: InMemoryTableScanExec => m.children :+ m.relation.cachedPlan
         case other => other.children
       }
-      self + kids.map(csvScans).sum
+      p +: kids.flatMap(nodes)
+    }
+    // CSV-format data scans only: header resolution issues two bounded
+    // Text-format probes (CollectLimit 1 over the first line) that are
+    // metadata reads, not rescans of the data
+    def isListingsScan(p: SparkPlan): Boolean = p match {
+      case f: FileSourceScanExec =>
+        f.relation.fileFormat.getClass.getSimpleName.contains("CSV") &&
+          f.relation.location.rootPaths.exists(_.toString.contains("listings.csv"))
+      case _ => false
     }
     val scans = new java.util.concurrent.atomic.AtomicInteger(0)
+    val ranked = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              durationNs: Long): Unit = {
-        scans.addAndGet(csvScans(qe.executedPlan)); ()
+        val all = nodes(qe.executedPlan)
+        scans.addAndGet(all.count(isListingsScan))
+        all.foreach {
+          case n @ (_: WindowExec | _: WindowGroupLimitExec | _: SortExec) =>
+            ranked.add(n.nodeName)
+          case _ =>
+        }
       }
       override def onFailure(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
@@ -152,7 +166,8 @@ class PipelineSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      RealEstatePipeline.run(spark, fixtures._1, fixtures._2, samplePerState = 10)
+      val (enriched, _) = RealEstatePipeline.run(
+        spark, fixtures._1, fixtures._2, samplePerState = 10)
       // QueryExecutionListener delivery is async; a fixed sleep on a
       // contended box undercounts and the assertion passes vacuously.
       // Poll until the count is stable for 2 s (max 20 s) — late events
@@ -165,13 +180,98 @@ class PipelineSpec extends SparkSpec {
         val cur = scans.get()
         if (cur == last) stableMs += 250 else { stableMs = 0; last = cur }
       }
-      assert(scans.get() >= 1,
-        "no uncached CSV scan observed — listener events never arrived, " +
-        "the assertion below would be vacuous")
-      assert(scans.get() <= 2,
-        s"listings CSV scanned uncached ${scans.get()} times — the stage " +
-        "counts have unfolded back into per-stage actions")
+      enriched.unpersist()
+      assert(scans.get() === 1,
+        s"listings CSV scanned ${scans.get()} times — expected exactly the " +
+        "one scan of the grouped aggregate (0 means the listener events " +
+        "never arrived; > 1 means a stage count or the sample got its own scan)")
+      assert(ranked.isEmpty,
+        s"run() executed ${ranked.toArray.mkString(", ")} — the stratified " +
+        "sample must stay a bounded top-k, never a window or a sort")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The window formulation the single aggregate replaced, kept here,
+    * and only here, as the reference: steps 3–5 as filters and a
+    * left-semi coverage join, then step 6 as
+    * `row_number() over (partition by state order by rand(seed)) <= n`. */
+  private def windowSample(listingsCsv: String, censusJson: String,
+                           n: Int, seed: Long): DataFrame = {
+    val covered = RealEstatePipeline.readListings(spark, listingsCsv)
+      .filter(col("state").isin(RealEstatePipeline.targetStates: _*))
+      .filter(Seq("price", "zip_code", "house_size", "bed", "bath")
+        .map(col(_).isNotNull).reduce(_ && _))
+      .join(broadcast(RealEstatePipeline.readCensus(spark, censusJson)
+              .select("zip_code").distinct()),
+            Seq("zip_code"), "left_semi")
+    covered
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("state").orderBy(rand(seed))))
+      .filter(col("rn") <= n)
+      .drop("rn")
+  }
+
+  /** The four stage counts as the old conditional aggregation took them. */
+  private def conditionalCounts(listingsCsv: String, censusJson: String): Seq[Long] = {
+    val stateOk = col("state").isin(RealEstatePipeline.targetStates: _*)
+    val cleanOk = Seq("price", "zip_code", "house_size", "bed", "bath")
+      .map(col(_).isNotNull).reduce(_ && _)
+    val keys = RealEstatePipeline.readCensus(spark, censusJson)
+      .select("zip_code").distinct().withColumn("__cov", lit(1))
+    val r = RealEstatePipeline.readListings(spark, listingsCsv)
+      .join(broadcast(keys), Seq("zip_code"), "left")
+      .agg(
+        count(lit(1)),
+        sum(when(stateOk, 1L).otherwise(0L)),
+        sum(when(stateOk && cleanOk, 1L).otherwise(0L)),
+        sum(when(stateOk && cleanOk && col("__cov").isNotNull, 1L).otherwise(0L)))
+      .head()
+    (0 until 4).map(r.getLong)
+  }
+
+  /** run() ≡ the window reference for each seed: the same enriched rows
+    * (as a set) and the same four stage counts. Returns the sampled
+    * brokers per seed, so callers can check that the seed matters. */
+  private def assertMatchesWindowForm(listingsCsv: String, censusJson: String,
+                                      n: Int, seeds: Seq[Long]): Seq[Set[String]] =
+    seeds.map { seed =>
+      val (enriched, stats) = RealEstatePipeline.run(
+        spark, listingsCsv, censusJson, samplePerState = n, sampleSeed = seed)
+      try {
+        val expected = RealEstatePipeline.enrich(
+          windowSample(listingsCsv, censusJson, n, seed),
+          RealEstatePipeline.readCensus(spark, censusJson))
+        assert(enriched.count() === expected.count(), s"seed $seed")
+        assert(enriched.exceptAll(expected).isEmpty &&
+                 expected.exceptAll(enriched).isEmpty,
+          s"seed $seed: the sample differs from the window formulation")
+        assert(Seq(stats.rawListings, stats.afterStateFilter,
+                   stats.afterNullClean, stats.afterCoverage) ===
+                 conditionalCounts(listingsCsv, censusJson), s"seed $seed")
+        assert(stats.sampled === enriched.count())
+        enriched.select("brokered_by").collect().map(_.getString(0)).toSet
+      } finally enriched.unpersist()
+    }
+
+  test("sample and counts ≡ the window formulation on the fixtures (3 seeds)") {
+    val samples = assertMatchesWindowForm(
+      fixtures._1, fixtures._2, 10, Seq(42L, 7L, 20261017L))
+    // MA has 12 eligible rows for 10 slots, so the seeds draw different rows
+    assert(samples.distinct.size > 1)
+  }
+
+  test("sample and counts ≡ the window formulation on RefScale's 22k rows (3 seeds)") {
+    val dir = Files.createTempDirectory("graft-pipeline-ref").toString
+    // several part files, so several splits each seeding its own rand stream
+    RefScale.listings(spark, 22000L).write.mode("overwrite")
+      .option("header", "true").csv(s"$dir/listings_csv")
+    assert(new java.io.File(s"$dir/listings_csv").listFiles()
+      .count(_.getName.startsWith("part-")) > 1)
+    RefScale.writeCensusJson(s"$dir/census.json")
+    val samples = assertMatchesWindowForm(
+      s"$dir/listings_csv", s"$dir/census.json", 100, Seq(42L, 7L, 31000L))
+    assert(samples.forall(_.size == 300))
+    assert(samples.distinct.size === 3)
   }
 
   test("run() itself retries like the Step Functions contract (x2 @60s, backoff 2.0)") {

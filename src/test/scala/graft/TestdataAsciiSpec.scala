@@ -68,6 +68,22 @@ class TestdataAsciiSpec extends SparkSpec {
     }
   }
 
+  test("lineitem.l_orderkey is non-null at every scale") {
+    // agg_approx's exact count rewrites countDistinct(l_orderkey) as
+    // distinct() + count(*): a NULL key would count as its own group,
+    // while the oracle's count(DISTINCT l_orderkey) ignores it — the
+    // rewrite is exact only on a null-free column.
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val dir = sf0001.replace("sf0.001", sf) // the scales sit side by side
+      if (new java.io.File(s"$dir/lineitem.parquet").exists()) {
+        assert(Tables.lineitem(spark, dir)
+                 .filter(col("l_orderkey").isNull).count() === 0L,
+          s"$sf has NULL lineitem.l_orderkey — agg_approx's distinct + " +
+            "count rewrite needs an isNotNull filter before this data is usable")
+      }
+    }
+  }
+
   // A third suspected invariant of this class — "the funnel/scd2/asof
   // strict-ts oracles need microsecond-grain event timestamps" — was
   // investigated and REFUTED: the at-rest nanos DO carry sub-µs
