@@ -19,16 +19,17 @@ import org.apache.spark.sql.DataFrame
   *
   * Sized well above any single run's working set, so it never evicts
   * during Verify/Bench/tests — it is the unbounded-growth guardrail, not
-  * a hot cache policy.
+  * a hot cache policy. An eviction is WARN-logged (slf4j `graft.CkptMemo`)
+  * and counted in `evictions`, so a run that outgrows the cap says so.
   *
   * Builds run OUTSIDE the map's monitor (per-key lazy cells): concurrent
   * sessions memoizing distinct keys — e.g. two thrift-server queries each
   * materializing their own dedup pipeline — build in parallel; only
   * same-key callers block on one build.
   */
-private[ext] object CkptMemo {
+private[graft] class CkptMemo(maxEntries: Int) {
 
-  private val MaxEntries = 64
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.CkptMemo")
 
   /** Lazy-val init is synchronized on the cell, not the memo; a build
     * that throws is NOT cached (Scala lazy vals retry after failure), and
@@ -39,6 +40,12 @@ private[ext] object CkptMemo {
 
   private val m =
     new java.util.LinkedHashMap[Any, Cell](16, 0.75f, /*accessOrder=*/ true)
+  private var evicted = 0L
+
+  /** Entries dropped at the cap so far. Eviction means a later request
+    * for that key pays its build again, so every one is also WARN-logged
+    * with its key — the memo never degrades silently. */
+  def evictions: Long = synchronized(evicted)
 
   def getOrElseUpdate(key: Any, build: => DataFrame): DataFrame = {
     val cell = synchronized {
@@ -47,10 +54,13 @@ private[ext] object CkptMemo {
       else {
         val c = new Cell(() => build)
         m.put(key, c)
-        if (m.size > MaxEntries) {
+        if (m.size > maxEntries) {
           val it = m.entrySet().iterator()
-          it.next()
+          val eldest = it.next().getKey
           it.remove() // drop reference only; ContextCleaner reclaims blocks
+          evicted += 1
+          log.warn(s"evicted $eldest at the $maxEntries-entry cap " +
+            s"($evicted evictions so far); a later request rebuilds it")
         }
         c
       }
@@ -58,3 +68,6 @@ private[ext] object CkptMemo {
     cell.value
   }
 }
+
+/** The process-wide memo [[Dedup]] and [[Similarity]] share. */
+private[graft] object CkptMemo extends CkptMemo(maxEntries = 64)

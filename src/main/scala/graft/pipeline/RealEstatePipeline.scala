@@ -2,9 +2,12 @@ package graft.pipeline
 
 import scala.jdk.CollectionConverters._
 
+import graft.functions.{CsvRecordLine, SeededRand}
 import org.apache.spark.sql.{Column, DataFrame, GraftSql, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.CsvToStructs
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Stage-by-stage run report — the Spark-native analog of the reference's
   * printed audit trail + Step-Functions count assertions
@@ -29,13 +32,20 @@ case class PipelineStats(
   *    state, or null) that yields the four audit counts AND the
   *    stratified sample together, instead of the reference's 13 uncached
   *    full rescans (SURVEY §3.2) plus a window sort;
+  *  - the scan is late-materialized: it reads the listings as raw record
+  *    lines, parses only the six predicate columns (`state` + the five
+  *    clean columns) per line, carries the raw line as the sample
+  *    payload, and parses the full 12-column record only for the
+  *    ≤ n × |targetStates| winners;
   *  - the census-coverage restriction is a broadcast left JOIN with a
   *    marker column, not a driver-collected IN list (`:41,96` — unbounded
   *    at 100 TB);
   *  - stratified sampling (`row_number over (partition by state order by
   *    rand(seed)) <= n`, `:112-115`) is a bounded top-k (`CollectTopK`,
   *    smallest n of `rand(seed)` per state) — the same rows, with no
-  *    window, no exchange of every covered row and no sort;
+  *    window, no exchange of every covered row and no sort; the rand is
+  *    [[graft.functions.SeededRand]], so a new seed reuses the compiled
+  *    scan stage;
   *  - the enrichment join broadcasts the census side (`:130-134`);
   *  - final projection emits the 18-column Schema.json contract with the
   *    left `state` kept on ambiguity (`:181`).
@@ -66,10 +76,24 @@ object RealEstatePipeline {
   def readCensus(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", "true").json(path)
 
+  /** The listings CSV options — the ONE map `readListings` and the
+    * scan's record parse share, so the two parses cannot drift. */
+  private val listingsOptions = Map("header" -> "true")
+
   /** STEP 2: listings CSV, header, all-string (Glue DynamicFrame parity,
-    * `real_estate_etl_job.py:49-54`); types arrive via casts in step 8. */
+    * `real_estate_etl_job.py:49-54`); types arrive via casts in step 8.
+    * The single definition of the reader: `runOnce` takes its schema
+    * from here and parses record lines with its options. */
   def readListings(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
+    spark.read.options(listingsOptions).csv(path)
+
+  /** A raw listings line parsed as `readListings` parses it — same
+    * schema, same options. With `required`, the CSV parser decodes only
+    * those columns and skips the rest of the line. */
+  private def parseRecord(line: Column, schema: StructType,
+                          required: Option[StructType] = None): Column =
+    GraftSql.column(new CsvToStructs(
+      schema, listingsOptions, GraftSql.expression(line), None, required))
 
   /** Steps 7–9 over the stratified sample (PipelineSpec also applies it
     * to the window-form reference sample). */
@@ -128,8 +152,22 @@ object RealEstatePipeline {
                       outDir: Option[String], samplePerState: Int,
                       sampleSeed: Long): (DataFrame, PipelineStats) = {
     val census = readCensus(spark, censusJson)
-    val listings = readListings(spark, listingsCsv)
+    val schema = readListings(spark, listingsCsv).schema
     val censusKeys = census.select(col("zip_code")).distinct()
+
+    // STEP 2, late-materialized: the listings as raw record lines (the
+    // line-based CSV reader takes one line as one record; blank and
+    // header lines are dropped as it drops them), each parsed ONCE into
+    // only the six columns the stage predicates read. PipelineSpec pins
+    // the six.
+    val predicateSchema = StructType(
+      schema.filter(f => f.name == "state" || cleanColumns.contains(f.name)))
+    val records = spark.read.text(listingsCsv)
+      .filter(CsvRecordLine.col(col("value"),
+        header = listingsOptions("header").toBoolean))
+      .select(col("value"),
+        parseRecord(col("value"), schema, Some(predicateSchema)).as("__rec"))
+      .select(col("value"), col("__rec.*"))
 
     // STEPS 3–6 and their audit counts: the reference prints a count
     // after EVERY stage (13 uncached rescans, SURVEY §3.2) and samples
@@ -139,11 +177,11 @@ object RealEstatePipeline {
     // count is a conditional count summed over the groups. Coverage
     // (STEP 5) is a broadcast LEFT join against the distinct census keys
     // (no row multiplication), marker-null = uncovered. PipelineSpec pins
-    // the values, exactly 1 listings-CSV scan per run (scans behind
+    // the values, exactly 1 listings data scan per run (scans behind
     // caches included), and no Window/Sort node in any executed plan.
     val stateOk = col("state").isin(targetStates: _*)
     val covered = stateOk && cleanOk && col("__census_cov").isNotNull
-    val groups = listings
+    val groups = records
       .join(broadcast(censusKeys.withColumn("__census_cov", lit(1))),
             Seq("zip_code"), "left")
       // The aggregate reads only these four columns. Because `__cand`
@@ -154,30 +192,36 @@ object RealEstatePipeline {
         when(stateOk, col("state")).as("__state"),
         (stateOk && cleanOk).as("__clean"),
         covered.as("__covered"),
-        // STEP 6 candidates: (rand, row) for covered rows only, rand drawn
-        // in scan order — the same rand(seed) stream per split the window
-        // form drew after its filters, so the same rows win (PipelineSpec
-        // keeps the window form as the reference)
-        when(covered,
-             struct(rand(sampleSeed) +: listings.columns.toSeq.map(col): _*))
+        // STEP 6 candidates: (rand, raw line) for covered rows only, rand
+        // drawn in scan order — the same rand(seed) stream per split the
+        // window form drew after its filters, so the same rows win
+        // (PipelineSpec keeps the window form as the reference). SeededRand
+        // keeps the seed out of the generated code, so a new seed reuses
+        // the compiled scan stage.
+        when(covered, struct(SeededRand.col(sampleSeed), col("value")))
           .as("__cand"))
       .groupBy(col("__state"))
       .agg(count(lit(1)), count_if(col("__clean")), count_if(col("__covered")),
-        // STEP 6: the n smallest (rand, row) structs per state — a bounded
-        // top-k; CollectTopK skips the nulls of uncovered rows
+        // STEP 6: the n smallest (rand, line) structs per state — a
+        // bounded top-k; CollectTopK skips the nulls of uncovered rows
         GraftSql.column(new CollectTopK(
           GraftSql.expression(col("__cand")), samplePerState, reverse = true)))
       .collect().toSeq
     def total(rows: Seq[Row], i: Int): Long = rows.map(_.getLong(i)).sum
     val inStates = groups.filterNot(_.isNullAt(0))
-    // rebuild the ≤ samplePerState × |targetStates| sampled rows, per
-    // state in rand order, dropping the leading sort key
-    val sampledRows = inStates.sortBy(_.getString(0))
+    // the ≤ samplePerState × |targetStates| winning lines, per state in
+    // rand order, parsed in full only now — as ONE partition, so the
+    // step-10 coalesce(1) has nothing to merge
+    val winners = inStates.sortBy(_.getString(0))
       .flatMap(_.getSeq[Row](4))
-      .map(r => Row.fromSeq(r.toSeq.tail))
+      .map(r => Row(r.getString(1)))
+    val sampled = spark.createDataFrame(winners.asJava,
+        StructType(Seq(StructField("value", StringType))))
+      .select(parseRecord(col("value"), schema).as("__rec"))
+      .select(col("__rec.*"))
+      .coalesce(1)
 
-    val enriched = enrich(
-      spark.createDataFrame(sampledRows.asJava, listings.schema), census).cache()
+    val enriched = enrich(sampled, census).cache()
     val audit = enriched.agg(
       count(lit(1)).as("joined"),
       count(col("census_median_income")).as("matched")).head()
@@ -188,7 +232,7 @@ object RealEstatePipeline {
       afterStateFilter = total(inStates, 1),
       afterNullClean = total(inStates, 2),
       afterCoverage = total(inStates, 3),
-      sampled = sampledRows.size,
+      sampled = winners.size,
       joined = joinedN,
       matched = matchedN,
       matchRatePct = if (joinedN > 0) 100.0 * matchedN / joinedN else 0.0,
