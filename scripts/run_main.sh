@@ -15,6 +15,5 @@ java.base/sun.nio.cs java.base/sun.security.action \
 java.base/sun.util.calendar"
 ADD=""
 for p in $OPENS; do ADD="$ADD --add-opens $p=ALL-UNNAMED"; done
-exec java $ADD -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-8g}" \
+exec java $ADD -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"

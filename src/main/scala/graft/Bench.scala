@@ -3,21 +3,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the bounded top-k Aggregator (TopKPairsAggregator) must stay in
-      // HASH-based object aggregation: the default fallback threshold
-      // (128 keys) silently degrades the n-keys-per-partition ranked-IVF
-      // partial agg to sort-based, re-paying the window sort it replaced
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ext.CapMetrics.register(spark)
+    val spark = Sessions.local()
     // noop sink: full distributed evaluation of EVERY output column —
     // unlike count(), which lets Catalyst skip projected expressions for
     // some plans and understates real work non-uniformly

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,27 +11,7 @@ object Verify {
       if (args.length > 2) { val ps = args(2).split(',').toSeq
                              n => ps.exists(n.startsWith) }
       else _ => true
-    // the bucket-cap env is a scale-measurement-only override; the 1024
-    // default is the oracle contract — a gate run with it set would
-    // silently diverge every capped-family oracle (ADVICE r15)
-    require(!graft.ext.Similarity.bucketCapOverridden,
-      "SPARK_GRAFT_BUCKET_CAP is set — unset it for Verify gate runs " +
-      "(the default cap is the oracle contract)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the bounded top-k Aggregator (TopKPairsAggregator) must stay in
-      // HASH-based object aggregation: the default fallback threshold
-      // (128 keys) silently degrades the n-keys-per-partition ranked-IVF
-      // partial agg to sort-based, re-paying the window sort it replaced
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ext.CapMetrics.register(spark)
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => nameFilter(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

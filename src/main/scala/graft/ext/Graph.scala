@@ -494,11 +494,7 @@ object Graph {
     * the graph family — round-17 verdict item 6); one loop, two edge
     * sets, so the comparison can never measure two algorithms. */
   private[graft] def componentsOverEdges(spark: SparkSession, dir: String,
-                                         mu: DataFrame,
-                                         roundsOut: Option[
-                                           java.util.concurrent.atomic
-                                             .AtomicLong] = None)
-      : DataFrame = {
+                                         mu: DataFrame): DataFrame = {
       import org.apache.spark.storage.StorageLevel
       val edges = mu
         .unionByName(mu.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
@@ -509,17 +505,7 @@ object Graph {
       var prevRdd = org.apache.spark.sql.GraftSql.checkpointRdd(labels)
       var changed = 1L
       var rounds = 0
-      val roundLog = scala.collection.mutable.ArrayBuffer.empty[String]
-      // instrumented calls also decompose each round into task CPU /
-      // task count / checkpoint partitions (round-19 CC-tail analysis)
-      val met = roundsOut.map { _ =>
-        val m = new graft.BenchMetrics
-        spark.sparkContext.addSparkListener(m)
-        m
-      }
       while (changed > 0 && rounds < 30) {
-        val tR = System.nanoTime()
-        val mB = met.map(_.snapshot(spark.sparkContext))
         val neighborMin = edges
           .join(labels.withColumnsRenamed(Map("vec_id" -> "v", "comp" -> "vc")),
                 Seq("v"))
@@ -554,25 +540,7 @@ object Graph {
         prevRdd = org.apache.spark.sql.GraftSql.checkpointRdd(mat)
         labels = mat.select("vec_id", "comp")
         rounds += 1
-        val mEx = met.map(m => m.delta(spark.sparkContext, mB.get))
-          .map(d => s",tasks=${d("n_tasks")},cpu_ms=${d("task_ms")}" +
-                    s",sr_mb=${d("shuffle_read_b") / 1000000}")
-          .getOrElse("")
-        val ph = org.apache.spark.sql.GraftSql.planningPhaseMs(matPre)
-        roundLog += f"r$rounds%d=${(System.nanoTime() - tR) / 1e9}%.1fs" +
-          s"(chg=$changed$mEx" +
-          // planning probe: analysis/optimization ms of the round's
-          // materialized query — the phase the pre-fix tail spent
-          // doubling in (constraint propagation)
-          s",ana_ms=${ph.getOrElse("analysis", -1L)}" +
-          s",opt_ms=${ph.getOrElse("optimization", -1L)})"
       }
-      met.foreach(spark.sparkContext.removeSparkListener)
-      // per-round wall profile (stderr) so scale tools can attribute a
-      // CC wall without re-instrumenting (round-19 split-CC analysis);
-      // emitted only on instrumented calls — production queries silent
-      if (roundsOut.isDefined)
-        System.err.println(s"[componentsOverEdges] ${roundLog.mkString(" ")}")
       // Non-convergence must fail loudly, not return silently-wrong
       // labels that diverge from the recursive-closure oracle: with
       // pointer jumping, label reach doubles per round, so 30 rounds
@@ -581,7 +549,6 @@ object Graph {
       require(changed == 0,
         s"components(): hash-min loop hit the $rounds-round cap with " +
         s"$changed labels still changing — unconverged labels would be wrong")
-      roundsOut.foreach(_.set(rounds.toLong))
       edges.unpersist()
       labels
   }

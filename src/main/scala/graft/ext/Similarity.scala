@@ -179,24 +179,7 @@ object Similarity {
     * firing means a bucket is ~128× over the ~8-vector target — raise
     * numPlanes (or re-shard the bucket) rather than rely on the cap;
     * it is a guardrail against quadratic blowup, not a sampler. */
-  // SPARK_GRAFT_BUCKET_CAP is a SCALE-MEASUREMENT override only (the
-  // round-15 post-cap flat-line observation forces the cap at sf6
-  // instead of generating 4.2 M vectors): results CHANGE when the cap
-  // binds (documented sampling behavior), so Verify/Bench gate runs and
-  // production must never set it — the default is the contract.
-  private val MaxBucketCandidates =
-    sys.env.get("SPARK_GRAFT_BUCKET_CAP") match {
-      case None => 1024
-      case Some(raw) => raw.toIntOption.filter(_ > 0).getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_BUCKET_CAP must be a positive int, got '$raw'"))
-    }
-
-  /** True when the scale-measurement cap override is active — gate
-    * entry points (Verify) use this to fail fast, since the 1024
-    * default is the oracle contract (ADVICE r15). */
-  private[graft] def bucketCapOverridden: Boolean =
-    sys.env.contains("SPARK_GRAFT_BUCKET_CAP")
+  private val MaxBucketCandidates = 1024
 
   /** Salted deterministic order for cap truncation: a Knuth
     * multiplicative scramble of the id, so an oversized bucket degrades
@@ -425,7 +408,7 @@ object Similarity {
   /** The multi-probe candidate stage (a_id, b_id, 6-dp sim) shared by
     * [[ivfTopK]] and [[rangeSearch]] — its oracle mirror is
     * ivfTopKCteSql's chain through `p` (lockstep). */
-  private[ext] def ivfCandidates(spark: SparkSession, dir: String): DataFrame = {
+  private def ivfCandidates(spark: SparkSession, dir: String): DataFrame = {
     val ranked = ivfAssignRanked(spark, dir)
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
@@ -580,7 +563,7 @@ object Similarity {
     * "splitseeds"/"splitasg", owner in Bench's list: sim_cell_split —
     * because FOUR queries consume them (report, split serve, recall
     * eval, persisted serve) plus the deep chain's round 1. */
-  private[ext] def cellSplitParts(spark: SparkSession, dir: String)
+  private def cellSplitParts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val home = ivfAssignRanked(spark, dir).filter(col("rn") === 1)
       .select("vec_id", "cell")
@@ -687,7 +670,7 @@ object Similarity {
     * cell·2 + sub for hot-cell members, cell·2 for cool (bijective) —
     * shared by [[splitTopK]] (served in-session) and
     * [[splitIndexPersistSearch]] (written to durable parquet). */
-  private[ext] def splitPostings(hot: DataFrame, members: DataFrame,
+  private def splitPostings(hot: DataFrame, members: DataFrame,
                             assigned: DataFrame): DataFrame =
     assigned
       .select(col("vec_id"), (col("cell") * 2 + col("sub")).as("ncell"))
@@ -701,7 +684,7 @@ object Similarity {
     * [[splitDeepTopK]]'s per-round fold. `probe` is (vec_id, cell),
     * possibly [[NProbe]] rows per vector — each probed cell descends
     * independently. */
-  private[ext] def probeDescend(emb: DataFrame, probe: DataFrame,
+  private def probeDescend(emb: DataFrame, probe: DataFrame,
                            hot: DataFrame, seeds: DataFrame): DataFrame = {
     val hotPick = probe.join(emb, Seq("vec_id"))
       .join(broadcast(seeds), Seq("cell"))
@@ -1239,30 +1222,16 @@ object Similarity {
   /** The shared-truth recall fold: screen hits vs the memoized exact
     * top-3 per probe — one metric row (the eval-family shape), shared
     * by the two split legs so their metric forms can never drift. */
-  /** The eval family's probe-sample predicate. Default = the leading
-    * probeN ids (vec_id < probeN — the oracle literal 100). Setting
-    * SPARK_GRAFT_PROBE_HELDOUT flips EVERY eval probe filter to the
-    * TRAILING probeN ids (vec_id ≥ n − probeN), which are never stub
-    * quantizer seeds (seeds are the leading ivfCells ids): at knee
-    * scales each leading probe IS a centroid, structurally inflating
-    * absolute recall (~97 % vs sf0.01's ~40 % regime — BASELINE r18;
-    * VERDICT r18 item 4). SCALE-MEASUREMENT-ONLY (the
-    * SPARK_GRAFT_BUCKET_CAP precedent): Verify/Bench gates and
-    * production never set it, so every sf0.01 oracle literal is
-    * untouched; the "simtruth" memo key carries the mode. */
-  private def probeHeldOut: Boolean =
-    sys.env.contains("SPARK_GRAFT_PROBE_HELDOUT")
-  private def probeSample(spark: SparkSession, dir: String, probeN: Long,
-                          id: Column): Column =
-    if (probeHeldOut) id >= lit(embCount(spark, dir) - probeN)
-    else id < lit(probeN)
+  /** The eval family's probe-sample predicate: the leading probeN ids
+    * (vec_id < probeN — the oracle literal 100). */
+  private def probeSample(probeN: Long, id: Column): Column = id < lit(probeN)
 
   private def recallVsSharedTruth(spark: SparkSession, dir: String,
                                   served: DataFrame,
                                   probeN: Long): DataFrame = {
     val exact = exactTruthTop3(spark, dir, probeN)
     val screen = served
-      .filter(probeSample(spark, dir, probeN, col("a_id")))
+      .filter(probeSample(probeN, col("a_id")))
       .select("a_id", "b_id")
     val hit = exact.join(screen, Seq("a_id", "b_id"))
     exact.agg(count(lit(1)).as("n_truth"))
@@ -1428,7 +1397,7 @@ object Similarity {
     // sim_split_band_sweep in Bench's list): the planner re-reads the
     // SAME sweep to choose its margin — before round 19 both queries
     // re-ran all five serve arms (~24 s task time each at sf0.1)
-    CkptMemo.getOrElseUpdate((spark, dir, "bandsweepfrm", probeN, probeHeldOut),
+    CkptMemo.getOrElseUpdate((spark, dir, "bandsweepfrm", probeN),
       splitBandSweepBuild(spark, dir, probeN).localCheckpoint())
 
   private def splitBandSweepBuild(spark: SparkSession, dir: String,
@@ -1439,7 +1408,7 @@ object Similarity {
     val hotCells = seeds.select("cell").distinct()
     val indexed = emb.join(postings, Seq("vec_id"))
     val probed = ivfAssignRanked(spark, dir).select("vec_id", "cell")
-      .filter(probeSample(spark, dir, probeN, col("vec_id")))
+      .filter(probeSample(probeN, col("vec_id")))
     val truth = exactTruthTop3(spark, dir, probeN)
     SplitBandSweepMargins.map { m =>
       val probes = emb.join(
@@ -1840,12 +1809,12 @@ object Similarity {
 
   private[ext] def exactTruthRanked(spark: SparkSession, dir: String,
                                     probeN: Long): DataFrame =
-    CkptMemo.getOrElseUpdate((spark, dir, "simtruth", probeN, probeHeldOut), {
+    CkptMemo.getOrElseUpdate((spark, dir, "simtruth", probeN), {
       import org.apache.spark.sql.expressions.Window
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"),
                 sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
-      val q = emb.filter(probeSample(spark, dir, probeN, col("vec_id")))
+      val q = emb.filter(probeSample(probeN, col("vec_id")))
         .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
                 col("nrm").as("qnrm"))
       val w = Window.partitionBy("a_id")
@@ -1876,9 +1845,9 @@ object Similarity {
   def nnDescentEval(spark: SparkSession, dir: String,
                     probeN: Long = 100): DataFrame = {
     val exact = exactTruthTop3(spark, dir, probeN)
-    val base = ivfTopK(spark, dir).filter(probeSample(spark, dir, probeN, col("a_id")))
+    val base = ivfTopK(spark, dir).filter(probeSample(probeN, col("a_id")))
       .select("a_id", "b_id")
-    val ref = nnDescent(spark, dir).filter(probeSample(spark, dir, probeN, col("a_id")))
+    val ref = nnDescent(spark, dir).filter(probeSample(probeN, col("a_id")))
       .select("a_id", "b_id")
     exact.agg(count(lit(1)).as("n_truth"))
       .crossJoin(exact.join(base, Seq("a_id", "b_id"))
@@ -1913,7 +1882,7 @@ object Similarity {
                     probeN: Long = 100): DataFrame = {
     val exact = exactTruthTop3(spark, dir, probeN)
     val screen = ivfTopK(spark, dir)
-      .filter(probeSample(spark, dir, probeN, col("a_id")))
+      .filter(probeSample(probeN, col("a_id")))
       .select("a_id", "b_id")
     val hit = exact.join(screen, Seq("a_id", "b_id"))
     exact.agg(count(lit(1)).as("n_truth"))
@@ -1945,7 +1914,7 @@ object Similarity {
     val ks = Seq(1, 3, 5, 10).toDF("k")
     val ranked = exactTruthRanked(spark, dir, probeN)
     val w = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
-    val scr = ivfCandidates(spark, dir).filter(probeSample(spark, dir, probeN, col("a_id")))
+    val scr = ivfCandidates(spark, dir).filter(probeSample(probeN, col("a_id")))
       .withColumn("srn", row_number().over(w))
       .select("a_id", "b_id", "srn")
     val tr = ranked.crossJoin(broadcast(ks)).filter(col("rn") <= col("k"))
@@ -1986,7 +1955,7 @@ object Similarity {
     val truth1 = exactTruthRanked(spark, dir, probeN)
       .filter(col("rn") === 1).select("a_id", "b_id")
     val screen = ivfTopK(spark, dir)
-      .filter(probeSample(spark, dir, probeN, col("a_id")))
+      .filter(probeSample(probeN, col("a_id")))
       .select(col("a_id"), col("b_id"), col("rn"))
     truth1.join(screen, Seq("a_id", "b_id"), "left")
       .agg(count(lit(1)).as("n_probes"),
@@ -2018,7 +1987,7 @@ object Similarity {
       .filter(col("vec_id") % 10 =!= 0)
       .select(col("vec_id"), col("embedding"),
               sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
-    val probes = emb.filter(probeSample(spark, dir, probeN, col("vec_id")))
+    val probes = emb.filter(probeSample(probeN, col("vec_id")))
       .join(ranked.select("vec_id", "cell"), Seq("vec_id"))
     val indexed = emb.join(ranked.filter(col("rn") === 1)
                              .select("vec_id", "cell"), Seq("vec_id"))
@@ -2049,11 +2018,11 @@ object Similarity {
     // memoized serve ("fltopk", owner sim_filtered_topk in Bench's
     // list — pinned: sim_filtered_recall sorts before it and would
     // steal the build): the recall eval re-ran the identical
-    // (cell, label)-bucketed serve (round 20); keyed (probeN, heldout)
-    CkptMemo.getOrElseUpdate((spark, dir, "fltopk", probeN, probeHeldOut),
+    // (cell, label)-bucketed serve (round 20); keyed by probeN
+    CkptMemo.getOrElseUpdate((spark, dir, "fltopk", probeN),
       filteredTopKFor(spark, dir,
         Tables.embeddings(spark, dir)
-          .filter(probeSample(spark, dir, probeN, col("vec_id")))
+          .filter(probeSample(probeN, col("vec_id")))
           .select("vec_id", "embedding", "label")).localCheckpoint())
 
   /** The filtered-search composition over a GIVEN probe frame (vec_id,
@@ -2100,7 +2069,7 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), col("label"),
               sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
-    val q = emb.filter(probeSample(spark, dir, probeN, col("vec_id")))
+    val q = emb.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
               col("label").as("qlabel"), col("nrm").as("qnrm"))
     val w = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
@@ -2152,7 +2121,7 @@ object Similarity {
       .select(col("vec_id").as("cell"), col("embedding").as("cv"),
               col("nrm").as("cnrm"))
     val wp = Window.partitionBy("a_id").orderBy(col("csim").desc, col("cell").asc)
-    val probeRanks = emb.filter(probeSample(spark, dir, probeN, col("vec_id")))
+    val probeRanks = emb.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
               col("nrm").as("qnrm"))
       .crossJoin(broadcast(cents))
@@ -2298,7 +2267,7 @@ object Similarity {
                      probeN: Long = 100): DataFrame =
     // memoized 1-row result ("int8recall", owner sim_eval_frontier —
     // the jlrecall rule, round 20)
-    CkptMemo.getOrElseUpdate((spark, dir, "int8recall", probeN, probeHeldOut),
+    CkptMemo.getOrElseUpdate((spark, dir, "int8recall", probeN),
       int8RecallEvalUncached(spark, dir, probeN).localCheckpoint())
 
   private def int8RecallEvalUncached(spark: SparkSession, dir: String,
@@ -2320,7 +2289,7 @@ object Similarity {
     val dq = st.select(col("vec_id"), dqv.as("d"))
       .select(col("vec_id"), col("d"),
               sqrt(dotCols(col("d"), col("d"))).as("dnrm"))
-    val q = base.filter(probeSample(spark, dir, probeN, col("vec_id")))
+    val q = base.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
               sqrt(dotCols(col("embedding"), col("embedding"))).as("qnrm"))
     val w = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
@@ -2381,7 +2350,7 @@ object Similarity {
                             probeN: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val pk = signBits(spark, dir).select("vec_id", "w1", "w2")
-    val pr = pk.filter(probeSample(spark, dir, probeN, col("vec_id")))
+    val pr = pk.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("w1").as("q1"), col("w2").as("q2"))
     val wH = Window.partitionBy("a_id").orderBy(col("hd").asc, col("b_id").asc)
     fanOut(pk).crossJoin(broadcast(pr))
@@ -2412,7 +2381,7 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
               sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
-    val q = emb.filter(probeSample(spark, dir, probeN, col("vec_id")))
+    val q = emb.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
               col("nrm").as("qnrm"))
     val wS = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
@@ -2439,7 +2408,7 @@ object Similarity {
                      probeN: Long = 100): DataFrame =
     // memoized 1-row result ("signrecall", owner sim_eval_frontier —
     // the jlrecall rule, round 20)
-    CkptMemo.getOrElseUpdate((spark, dir, "signrecall", probeN, probeHeldOut),
+    CkptMemo.getOrElseUpdate((spark, dir, "signrecall", probeN),
       signRecallEvalUncached(spark, dir, probeN).localCheckpoint())
 
   private def signRecallEvalUncached(spark: SparkSession, dir: String,
@@ -2489,9 +2458,9 @@ object Similarity {
   def rrfFusion(spark: SparkSession, dir: String,
                 probeN: Long = 100): DataFrame =
     // memoized serve frame ("rrfserve", owner sim_rrf_fusion in Bench's
-    // list; probeN + held-out mode in the key): the fused top-3 is
+    // list; probeN in the key): the fused top-3 is
     // re-read by sim_rrf_recall and the frontier's rrf leg
-    CkptMemo.getOrElseUpdate((spark, dir, "rrfserve", probeN, probeHeldOut),
+    CkptMemo.getOrElseUpdate((spark, dir, "rrfserve", probeN),
       rrfFusionBuild(spark, dir, probeN).localCheckpoint())
 
   private def rrfFusionBuild(spark: SparkSession, dir: String,
@@ -2499,7 +2468,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val wa = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
     val legA = ivfCandidates(spark, dir)
-      .filter(probeSample(spark, dir, probeN, col("a_id")))
+      .filter(probeSample(probeN, col("a_id")))
       .withColumn("ra", row_number().over(wa))
       .filter(col("ra") <= RrfDepth)
       .select("a_id", "b_id", "ra")
@@ -2572,10 +2541,10 @@ object Similarity {
   def graphSearch(spark: SparkSession, dir: String,
                   probeN: Long = 100): DataFrame =
     // memoized serve frame ("gssearch", owner sim_graph_search in
-    // Bench's list; probeN + held-out mode in the key, the simtruth
-    // rule): the 2-round beam walk is re-read by its eval and the
+    // Bench's list; probeN in the key, the simtruth rule): the
+    // 2-round beam walk is re-read by its eval and the
     // frontier's graph leg — before round 19 each re-ran the walk
-    CkptMemo.getOrElseUpdate((spark, dir, "gssearch", probeN, probeHeldOut),
+    CkptMemo.getOrElseUpdate((spark, dir, "gssearch", probeN),
       graphSearchBuild(spark, dir, probeN).localCheckpoint())
 
   private def graphSearchBuild(spark: SparkSession, dir: String,
@@ -2587,7 +2556,7 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
               sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
-    val probes = emb.filter(probeSample(spark, dir, probeN, col("vec_id")))
+    val probes = emb.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
               col("nrm").as("qnrm"))
     val wE = Window.partitionBy("a_id").orderBy(col("hd").asc, col("b_id").asc)
@@ -2707,23 +2676,39 @@ object Similarity {
     // forced FIRST so no leg's thread wins the simtruth build and
     // hides the owner's cost inside a leg.
     exactTruthTop3(spark, dir, 100)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val legs =
-      try {
-        val futs = legDefs.map { case (m, f) =>
-          (m, scala.concurrent.Future(f()))
-        }
-        futs.map { case (m, fut) =>
-          (m, scala.concurrent.Await.result(
-                fut, scala.concurrent.duration.Duration.Inf))
-        }
-      } finally pool.shutdown()
+    val legs = runLegs(legDefs, threads = 6)
     legs.map { case (m, df) =>
       df.select(lit(m).as("method"), col("n_truth"), col("n_hit"),
                 col("recall_micro"))
     }.reduce(_.unionByName(_)).orderBy("method")
+  }
+
+  /** Runs `legs` concurrently on `threads` named daemon threads and
+    * returns their results in input order. Every leg settles before a
+    * failure surfaces: the first failing leg's exception (in input
+    * order) is rethrown with the other legs' failures attached as
+    * suppressed, so no leg is left running detached. */
+  private[graft] def runLegs[A](legs: Seq[(String, () => A)],
+                                threads: Int): Seq[(String, A)] = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads,
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-leg-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    val settled =
+      try legs.map { case (m, f) => (m, pool.submit[A](() => f())) }.map {
+        case (m, fut) => (m, try Right(fut.get()) catch {
+          case e: java.util.concurrent.ExecutionException => Left(e.getCause)
+        })
+      } finally pool.shutdown()
+    val failures = settled.collect { case (_, Left(e)) => e }
+    failures.headOption.foreach { first =>
+      failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+      throw first
+    }
+    settled.collect { case (m, Right(a)) => (m, a) }
   }
 
   // ---- Johnson–Lindenstrauss random projection ----
@@ -2785,8 +2770,8 @@ object Similarity {
     // memoized 1-row result ("jlrecall", owner sim_eval_frontier — the
     // frontier runs first and this eval IS its jl leg; the standalone
     // query re-ran the whole probe×corpus JL ranking before round 20);
-    // keyed (probeN, heldout) per the simtruth rule
-    CkptMemo.getOrElseUpdate((spark, dir, "jlrecall", probeN, probeHeldOut),
+    // keyed by probeN per the simtruth rule
+    CkptMemo.getOrElseUpdate((spark, dir, "jlrecall", probeN),
       jlRecallEvalUncached(spark, dir, probeN).localCheckpoint())
 
   private def jlRecallEvalUncached(spark: SparkSession, dir: String,
@@ -2799,7 +2784,7 @@ object Similarity {
     // the self-dot instance.
     val nsq = graft.functions.ArrayDotLong.col(col("jl"), col("jl"))
     val jlw = jlWide(spark, dir).withColumn("n2", nsq)
-    val qj = jlw.filter(probeSample(spark, dir, probeN, col("vec_id")))
+    val qj = jlw.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("jl").as("qjl"),
               col("n2").as("qn2"))
     val wP = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
@@ -3041,9 +3026,8 @@ object Similarity {
                                      cents: DataFrame,
                                      probeN: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // stays the literal leading band: this is a SERVE-side sample knob
-    // on a seam without (spark, dir) (stream-shared), not an eval probe
-    // — the held-out mode targets the eval family only
+    // the literal leading band: a SERVE-side sample knob on a
+    // stream-shared seam, not an eval probe
     val probeSide = live.filter(col("vec_id") < probeN)
     val probeRanked = explodeRanked(
       fanOut(probeSide).crossJoin(broadcast(cents))
@@ -3174,7 +3158,7 @@ object Similarity {
                            probeN: Long = 100): DataFrame =
     // memoized 1-row result ("matrecall", owner sim_eval_frontier —
     // the jlrecall rule, round 20)
-    CkptMemo.getOrElseUpdate((spark, dir, "matrecall", probeN, probeHeldOut),
+    CkptMemo.getOrElseUpdate((spark, dir, "matrecall", probeN),
       matryoshkaRecallEvalUncached(spark, dir, probeN).localCheckpoint())
 
   private def matryoshkaRecallEvalUncached(spark: SparkSession, dir: String,
@@ -3183,7 +3167,7 @@ object Similarity {
     val pre = Tables.embeddings(spark, dir)
       .select(col("vec_id"), slice(col("embedding"), 1, 16).as("pv"))
       .withColumn("pn2", dotCols(col("pv"), col("pv")))
-    val qp = pre.filter(probeSample(spark, dir, probeN, col("vec_id")))
+    val qp = pre.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("pv").as("qpv"),
               col("pn2").as("qpn2"))
     val wP = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
@@ -3221,12 +3205,12 @@ object Similarity {
     * comparisons; the dedup-side mirror of the nprobe trade. */
   def semanticDedupEval(spark: SparkSession, dir: String,
                         probeN: Long = 100): DataFrame = {
-    val sem = semanticDedup(spark, dir).filter(probeSample(spark, dir, probeN, col("vec_id")))
+    val sem = semanticDedup(spark, dir).filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id"), col("keep"))
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
               sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
-    val q = emb.filter(probeSample(spark, dir, probeN, col("vec_id")))
+    val q = emb.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
               col("nrm").as("qnrm"))
     val truth = fanOut(emb).crossJoin(broadcast(q))

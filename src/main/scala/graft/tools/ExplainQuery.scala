@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit helper: `runMain graft.tools.ExplainQuery <sfDir> <q1,q2,…>`
   * prints each named query's formatted physical plan — the per-round
@@ -10,13 +9,7 @@ object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args(1).split(",").toSeq
-    val spark = SparkSession.builder()
-      .appName("graft-explain").master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     try names.foreach { n =>
       println(s"\n===== $n =====")
       println(SparkEntry.queries(n)(spark, dir).queryExecution.explainString(

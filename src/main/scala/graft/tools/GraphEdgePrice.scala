@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Prices the SPLIT-served mutual-kNN edge frame against the audited
@@ -20,22 +19,7 @@ import org.apache.spark.sql.functions._
 object GraphEdgePrice {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              "4194304")
-      // A/B knob for the round-19 CC-tail attribution: the per-round
-      // wall grew geometrically in the LAST rounds with constant data,
-      // tasks and shuffle — AQE re-planning is the candidate
-      .config("spark.sql.adaptive.enabled",
-              sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ext.CapMetrics.register(spark)
+    val spark = graft.Sessions.local()
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()
@@ -61,34 +45,20 @@ object GraphEdgePrice {
     val (p1, pm1) = partStats(e1)
     val (p2, pm2) = partStats(e2)
     val overlap = e1.join(e2, Seq("a_id", "b_id")).count()
-    // per-CC-phase task metrics + round counts (VERDICT r18 item 5: the
-    // 768 k split-edge CC wall read 2.2× the unsplit one — decompose it
-    // into rounds × per-round shuffle instead of guessing)
+    // per-CC-phase task metrics (VERDICT r18 item 5: the 768 k
+    // split-edge CC wall read 2.2× the unsplit one — decompose it into
+    // per-phase shuffle and task time instead of guessing)
     val metrics = new graft.BenchMetrics
     spark.sparkContext.addSparkListener(metrics)
-    val r1 = new java.util.concurrent.atomic.AtomicLong
-    val r2 = new java.util.concurrent.atomic.AtomicLong
-    // GRAFT_EDGEPRICE_ORDER=split_first swaps CC execution order: the
-    // split CC always ran SECOND, so session aging (cached blocks, JIT
-    // deopt, heap shape) is itself a candidate for its wall gap — the
-    // A/B that separates edge-set properties from ordering artifacts
-    val splitFirst =
-      sys.env.get("GRAFT_EDGEPRICE_ORDER").contains("split_first")
-    def runCc(e: org.apache.spark.sql.DataFrame,
-              r: java.util.concurrent.atomic.AtomicLong) = {
+    def runCc(e: org.apache.spark.sql.DataFrame) = {
       val b = metrics.snapshot(spark.sparkContext)
       val (c, wc) = timed {
-        graft.ext.Graph.componentsOverEdges(spark, dir, e, Some(r))
-          .localCheckpoint()
+        graft.ext.Graph.componentsOverEdges(spark, dir, e).localCheckpoint()
       }
       (c, wc, metrics.delta(spark.sparkContext, b))
     }
-    val ((c1, wc1, m1), (c2, wc2, m2)) =
-      if (splitFirst) {
-        val s = runCc(e2, r2); val u = runCc(e1, r1); (u, s)
-      } else {
-        val u = runCc(e1, r1); val s = runCc(e2, r2); (u, s)
-      }
+    val (c1, wc1, m1) = runCc(e1)
+    val (c2, wc2, m2) = runCc(e2)
     def mj(m: Map[String, Long]): String =
       s"""{"n_tasks":${m("n_tasks")},"task_ms":${m("task_ms")},""" +
       s""""shuffle_read_b":${m("shuffle_read_b")},""" +
@@ -115,7 +85,6 @@ object GraphEdgePrice {
       s""""giant_comp_unsplit":$g1,"giant_comp_split":$g2,""" +
       s""""parts_unsplit":$p1,"max_part_rows_unsplit":$pm1,""" +
       s""""parts_split":$p2,"max_part_rows_split":$pm2,""" +
-      s""""cc_rounds_unsplit":${r1.get},"cc_rounds_split":${r2.get},""" +
       s""""cc_metrics_unsplit":${mj(m1)},"cc_metrics_split":${mj(m2)}}""")
     spark.stop()
   }

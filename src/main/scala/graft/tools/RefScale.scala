@@ -135,14 +135,7 @@ object RefScale {
 
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse("/tmp/graft_refscale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     try prove(spark, workDir)
     finally spark.stop()
   }

@@ -61,13 +61,7 @@ object ScaleGen {
       if (args.length > 3 && args(3).nonEmpty) args(3).split(',').toSet
       else _ => true
     val jitterPerMille = if (args.length > 4) args(4).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     new java.io.File(dst).mkdirs()
 
     def tbl(name: String): DataFrame =

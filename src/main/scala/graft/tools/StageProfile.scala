@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Per-stage decomposition of one named query's cost — the optimization
@@ -10,7 +9,7 @@ import graft.SparkEntry
   * (spark_optimization_guide §1/§7: the UI is disabled here, so this is
   * the stage page in text form). Usage:
   *
-  *   scripts/run_main.sh graft.tools.StageProfile <sfDir> <q1,q2,...> [cpus]
+  *   scripts/run_main.sh graft.tools.StageProfile <sfDir> <q1,q2,...>
   *
   * For each query: noop-exhaust it (same timed action as Bench), then
   * print one row per stage — task wall (executorRunTime), task CPU
@@ -26,17 +25,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args(1).split(",").toSeq
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .appName("graft-stageprofile").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ext.CapMetrics.register(spark)
+    val spark = graft.Sessions.local()
     val byStage = new ConcurrentHashMap[Int, Rec]()
     val stageName = new ConcurrentHashMap[Int, String]()
     spark.sparkContext.addSparkListener(new SparkListener {

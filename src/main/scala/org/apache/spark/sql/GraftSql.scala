@@ -56,12 +56,4 @@ object GraftSql {
       case _ => df
     }
   }
-
-  /** The per-round planning cost of the query that materialized `df`
-    * (analysis/optimization ms from its QueryPlanningTracker) — the
-    * probe that attributed the CC-loop tail to driver-side planning. */
-  def planningPhaseMs(df: Dataset[_]): Map[String, Long] =
-    df.queryExecution.tracker.phases.map { case (k, v) =>
-      k -> v.durationMs
-    }.toMap
 }

@@ -2,7 +2,7 @@ package graft
 
 /** The SparkSessionExtensions injection path: the shared test session is
   * built with `spark.sql.extensions=graft.functions.GraftExtensions`
-  * (a STATIC conf, applied at SparkContext creation — see SparkSpec), so
+  * (a STATIC conf, applied at SparkContext creation — see Sessions), so
   * the custom expressions resolve from plain SQL in every session of the
   * application. This is the production registration route; per-session
   * `GraftSql.register` remains the fallback for externally-constructed

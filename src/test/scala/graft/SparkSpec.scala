@@ -3,27 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole test JVM. */
+/** One shared local session for the whole test JVM: the production
+  * session at 4 cores, with a temp warehouse. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // production registration path for the custom expressions — every
-      // session in the test JVM gets poly_hash / poly_hash_mod in SQL
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep the bounded top-k Aggregator hash-based (see Bench.scala)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              "4194304")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4, Some(
+    java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }
 
 trait SparkSpec extends AnyFunSuite {
