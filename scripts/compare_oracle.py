@@ -2,11 +2,16 @@
 """Local mirror of the driver's t2 DuckDB-oracle compare.
 
 Usage: python3 scripts/compare_oracle.py <sfDir> <verifyOutDir>
+       python3 scripts/compare_oracle.py <verifyOutDir> --same-sql <other oracle_sql.json>
 
 For each query dumped by graft.Verify: load the Spark parquet result and
 the DuckDB result of the oracle SQL, sort columns by name, sort rows,
 compare shape + values. Reports per-query PASS/FAIL. Queries without
 oracle SQL get a rows-only report.
+
+--same-sql proves a Spark-side change left the reference untouched: it
+prints every query whose oracle SQL string in <verifyOutDir> differs from
+(or is missing in) the other dump, and exits 1 if there is any.
 """
 import json
 import math
@@ -64,6 +69,22 @@ def values_equal(a, b) -> bool:
     except (TypeError, ValueError):
         pass
     return str(a) == str(b)
+
+
+def same_sql(out_dir: str, other_path: str) -> int:
+    with open(f"{out_dir}/oracle_sql.json") as f:
+        mine = json.load(f)
+    with open(other_path) as f:
+        other = json.load(f)
+    differ = sorted(n for n in mine.keys() | other.keys()
+                    if mine.get(n) != other.get(n))
+    for n in differ:
+        why = ("only in the other dump" if n not in mine else
+               "only in this dump" if n not in other else "SQL differs")
+        print(f"DIFF  {n}: {why}")
+    print(f"\n{len(mine)} oracle strings, {len(differ)} differ from "
+          f"{other_path}")
+    return 1 if differ else 0
 
 
 def main(sf_dir: str, out_dir: str) -> int:
@@ -145,4 +166,10 @@ def main(sf_dir: str, out_dir: str) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    args = sys.argv[1:]
+    if "--same-sql" in args:
+        i = args.index("--same-sql")
+        other = args[i + 1]
+        del args[i:i + 2]
+        sys.exit(same_sql(args[0], other))
+    sys.exit(main(args[0], args[1]))

@@ -17,10 +17,12 @@ import org.apache.spark.sql.DataFrame
   * ContextCleaner unpersists its blocks — the reclamation path that is
   * safe against aliasing. A later request for an evicted key rebuilds.
   *
-  * Sized well above any single run's working set, so it never evicts
-  * during Verify/Bench/tests — it is the unbounded-growth guardrail, not
-  * a hot cache policy. An eviction is WARN-logged (slf4j `graft.CkptMemo`)
-  * and counted in `evictions`, so a run that outgrows the cap says so.
+  * Sized well above any single session's working set, so it never
+  * evicts during Verify/Bench — it is the unbounded-growth guardrail, not
+  * a hot cache policy (the test JVM's SplitFamilyOrderSpec opens 23
+  * sessions and does evict; later requests rebuild). An eviction is
+  * WARN-logged (slf4j `graft.CkptMemo`) and counted in `evictions`, so
+  * a run that outgrows the cap says so.
   *
   * Builds run OUTSIDE the map's monitor (per-key lazy cells): concurrent
   * sessions memoizing distinct keys — e.g. two thrift-server queries each

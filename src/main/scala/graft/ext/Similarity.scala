@@ -368,9 +368,7 @@ object Similarity {
     * doesn't carry, a query-time cost like probe descent. */
   private def rankedAtNprobe(spark: SparkSession, dir: String,
                              k: Int): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-              sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+    val emb = embWithNrm(spark, dir)
     val cents = emb.filter(col("vec_id") < ivfCells(embCount(spark, dir)))
       .select(col("vec_id").as("cell"), col("embedding").as("cv"),
               col("nrm").as("cnrm"))
@@ -410,9 +408,7 @@ object Similarity {
     * ivfTopKCteSql's chain through `p` (lockstep). */
   private def ivfCandidates(spark: SparkSession, dir: String): DataFrame = {
     val ranked = ivfAssignRanked(spark, dir)
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-              sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+    val emb = embWithNrm(spark, dir)
     val probes = emb.join(ranked.select("vec_id", "cell"), Seq("vec_id"))
     val indexed = emb.join(ranked.filter(col("rn") === 1)
                              .select("vec_id", "cell"), Seq("vec_id"))
@@ -425,40 +421,285 @@ object Similarity {
     * occur naturally; mirrored literally in the oracle (lockstep). */
   private[graft] val SplitOccupancy = 32L
 
-  /** Occupancy-triggered cell SPLIT (sim_cell_split) — the re-shard
-    * maintenance job the bucket cap's own guidance prescribes
-    * ([[pairCandidates]] scaladoc: "raise numPlanes or re-shard the
-    * bucket rather than rely on the cap"): every home cell past
-    * [[SplitOccupancy]] members is split by MEDIAN-THRESHOLD BISECTION
-    * — the model per hot cell is (seed direction = the lowest member
-    * vec_id's embedding, τ = the cell's lower-median 6-dp cosine to it,
-    * rank (n+1) div 2 under (s0sim desc, vec_id asc) — the agg_median
-    * exact-selection discipline); members with s0sim ≥ τ form child 0,
-    * the rest child 1, and a probe routes by the SAME compare at query
-    * time. SPLIT-RULE HISTORY (BASELINE round 16): the round-15 rule
-    * ("two lowest member ids", nearest-of-two) measured DEGENERATE at
-    * 768 k — the biggest child kept 96 % of members and candidate
-    * volume fell only 6 %; a farthest-seed (2-means++-style) variant
-    * measured IDENTICALLY degenerate, because in 64 dims nearly every
-    * member is closer to the cell center than to any single extreme
-    * point, so ANY nearest-of-two-points cut shaves a thin cap. The
-    * median threshold is balanced BY CONSTRUCTION (up to tie mass at
-    * τ — an identical-vector clump keeps child 0 and reads in the
-    * report as an unsplittable cell, which is the honest answer).
-    * Scale shape: occupancy is one |cells|-row agg; the model is one
-    * min(vec_id) agg + one exact rank selection per cell (a window
-    * over hot MEMBERS — one row each, never an n×cells expansion; the
-    * qv/md positional-selection family); re-assignment and probe
-    * routing are a single threshold compare — NO pick window at all. */
+  /** Default depth for the RECURSIVE split queries — 2 rounds. The
+    * median-τ cut halves every sf0.01 hot cell under the threshold in
+    * one round, so round 2 is a provable no-op there (a bijective
+    * ncell relabel — CellSplitSpec pins deep serve ≡ depth-1 serve);
+    * the crafted-fixture spec drives a genuinely recursive chain
+    * (packed cell whose 33-member children stay hot) AND the
+    * fail-closed plan branch (an identical-vector clump no rule can
+    * split). Mirrored literally in the cs<k>-prefixed oracle chains
+    * (lockstep). */
+  private[graft] val SplitDepth = 2
+
+  // ---- The split index ---------------------------------------------------
+  //
+  // Every split query composes five functions — [[splitRound]] (one
+  // median-τ round, with its postings and next assignment beside it),
+  // [[splitDescend]] (one probe descent step at a band margin),
+  // [[splitServe]] (descend every round's model, serve top-3),
+  // [[persistSplitIndex]] (write, then serve from the reload) and
+  // [[recallVsSharedTruth]] — over one row of parameters:
+  //
+  //   query                          quantizer  depth  probe       maintenance  persisted
+  //   sim_cell_split / _trained      stub/Lloyd 1      —           full         no (report)
+  //   sim_split_topk / _trained      stub/Lloyd 1      home        full         no
+  //   sim_split_persist              stub       1      home        full         yes
+  //   sim_cell_split_deep            stub       2      —           full         no (report)
+  //   sim_split_deep_topk            stub       2      home        full         no
+  //   sim_split_deep_persist         stub       2      home        full         yes
+  //   sim_split_band_topk            stub       1      band 50k µ  full         no
+  //   sim_split_band_sweep           stub       1      band grid   full         no (recall)
+  //   sim_split_band_planned         stub       1      planned     full         no
+  //   sim_split_serve_planned        stub       planned home       full         no
+  //   sim_split_incremental          frozen     1+1    —           incremental  yes (report)
+  //   sim_split_incremental_serve    frozen     1+1    home        incremental  yes
+  //   sim_split_incremental_deep     frozen     1+2    —           deep         yes (per round)
+  //
+  // Recall legs (split, deepsplit, band, trainedsplit), sim_split_plan
+  // and sim_knn_mutual_split read the memoized serves above.
+
+  /** One split round over a (vec_id, cell) assignment: its occupancy,
+    * hot cells (past [[SplitOccupancy]]), home members with embeddings,
+    * median-τ model ([[splitSeeds]]) and the hot members' child picks
+    * (cell, vec_id, sub). */
+  private case class SplitRound(asg: DataFrame, occ: DataFrame,
+                                hot: DataFrame, members: DataFrame,
+                                seeds: DataFrame, assigned: DataFrame) {
+    /** (vec_id, ncell): hot members at cell·2 + sub, cool members at
+      * cell·2 — bijective, so cool-cell results equal the unsplit
+      * serve's. The same mapping as [[next]], but its cool branch reads
+      * `members`: that is the plan the memoized serves were measured
+      * with, and switching it to `asg` would change their stages. */
+    def postings: DataFrame =
+      assigned
+        .select(col("vec_id"), (col("cell") * 2 + col("sub")).as("ncell"))
+        .unionByName(members.join(hot, Seq("cell"), "left_anti")
+          .select(col("vec_id"), (col("cell") * 2).as("ncell")))
+
+    /** The assignment after the round, in the next round's cell space. */
+    def next: DataFrame = nextSplitAsg(asg, hot, assigned)
+  }
+
+  /** Build one [[SplitRound]] over `asg`. `memoKeys` (model, picks)
+    * memoize a round several queries share — the audited stub round
+    * (splitseeds/splitasg), the trained round (tsplitseeds/tsplitasg)
+    * and the incremental base round (incsplit0s/incsplit0a) — so the
+    * applied index can never drift from the audited one. */
+  private def splitRound(spark: SparkSession, dir: String, asg: DataFrame,
+                         memoKeys: Option[(String, String)] = None)
+      : SplitRound = {
+    def memo(key: Option[String], df: => DataFrame): DataFrame =
+      key.fold(df)(k =>
+        CkptMemo.getOrElseUpdate((spark, dir, k), df.localCheckpoint()))
+    val members = embWithNrm(spark, dir).join(asg, Seq("vec_id"))
+    val occ = occupancy(asg)
+    val hot = occ.filter(col("n_before") > SplitOccupancy).select("cell")
+    val seeds = memo(memoKeys.map(_._1), splitSeeds(spark, dir, members, hot))
+    SplitRound(asg, occ, hot, members, seeds,
+      memo(memoKeys.map(_._2), assignToSubSeeds(members, seeds)))
+  }
+
+  private def occupancy(asg: DataFrame): DataFrame =
+    asg.groupBy("cell").agg(count(lit(1)).as("n_before"))
+
+  /** The memoized depth-1 round over a quantizer's home (rn = 1)
+    * cells: the audited stub round, or the Lloyd-trained one. */
+  private def homeRound(spark: SparkSession, dir: String, ranked: DataFrame,
+                        memoKeys: (String, String)): SplitRound =
+    splitRound(spark, dir,
+      ranked.filter(col("rn") === 1).select("vec_id", "cell"), Some(memoKeys))
+
+  private def stubRound(spark: SparkSession, dir: String): SplitRound =
+    homeRound(spark, dir, ivfAssignRanked(spark, dir), ("splitseeds", "splitasg"))
+
+  private def trainedRound(spark: SparkSession, dir: String): SplitRound =
+    homeRound(spark, dir, ivfTrainedRanked(spark, dir),
+      ("tsplitseeds", "tsplitasg"))
+
+  /** The stub quantizer's [[NProbe]] probe rows (vec_id, cell). */
+  private def stubProbes(spark: SparkSession, dir: String): DataFrame =
+    ivfAssignRanked(spark, dir).select("vec_id", "cell")
+
+  /** Median-threshold child pick for hot-cell members — (cell, vec_id,
+    * sub): sub 0 iff the member's 6-dp cosine to the cell's seed
+    * direction clears the model's τ — ONE broadcast join + compare,
+    * no window. */
+  private def assignToSubSeeds(members: DataFrame, seeds: DataFrame)
+      : DataFrame =
+    members.join(broadcast(seeds), Seq("cell"))
+      .select(col("cell"), col("vec_id"),
+        when(Num.rnd(dotCols(col("embedding"), col("sv")) /
+                       (col("nrm") * col("snrm")), 6) >= col("tau"),
+             lit(0)).otherwise(lit(1)).as("sub"))
+
+  /** The post-round full assignment: hot members re-homed to
+    * cell·2 + sub, cool members to cell·2 — the bijective encoding at
+    * every depth (distinct sources stay distinct; a source is either
+    * split or not, never both). */
+  private def nextSplitAsg(asg: DataFrame, hot: DataFrame,
+                           assigned: DataFrame): DataFrame =
+    assigned.select(col("vec_id"),
+        (col("cell") * 2 + col("sub")).cast("long").as("cell"))
+      .unionByName(asg.join(hot, Seq("cell"), "left_anti")
+        .select(col("vec_id"), (col("cell") * 2).cast("long").as("cell")))
+
+  /** Rounds 1..depth of the recursive stub split: round 1 IS the
+    * audited memoized [[stubRound]], every later round applies the
+    * identical rule to the previous round's [[SplitRound.next]]. */
+  private def cellSplitRounds(spark: SparkSession, dir: String, depth: Int)
+      : Seq[SplitRound] = {
+    require(depth >= 1, s"split depth must be >= 1, got $depth")
+    (2 to depth).scanLeft(stubRound(spark, dir))((r, _) =>
+      splitRound(spark, dir, r.next))
+  }
+
+  /** One probe-side descent step: a probed HOT cell routes to the
+    * child its own `s0sim ≥ τ` compare selects (the rule that placed
+    * the members), a cool cell maps to cell·2. Hot cells are the
+    * model's cells. At `marginMicro` > 0 a probe whose |s0sim − τ| is
+    * inside the band (exact integer µ-cosines, so band membership
+    * cannot drift at the ulp level) ALSO probes the other child; at 0
+    * no second-child branch is planned. Emitted rows stay distinct —
+    * the two children of one probed cell are distinct ncells — so the
+    * serve needs no dedup stage. */
+  private def splitDescend(emb: DataFrame, probe: DataFrame,
+                           seeds: DataFrame, marginMicro: Long): DataFrame = {
+    val hotRows = probe.join(emb, Seq("vec_id"))
+      .join(broadcast(seeds), Seq("cell"))
+      .select(col("vec_id"), col("cell"), col("tau"),
+        Num.rnd(dotCols(col("embedding"), col("sv")) /
+                  (col("nrm") * col("snrm")), 6).as("s0sim"))
+    val near = col("s0sim") >= col("tau")
+    def child(rows: DataFrame, sub: Column): DataFrame =
+      rows.select(col("vec_id"), (col("cell") * 2 + sub).cast("long").as("cell"))
+    val inBand = abs(round(col("s0sim") * lit(1e6), 0).cast("long") -
+                     round(col("tau") * lit(1e6), 0).cast("long")) <
+                   lit(marginMicro)
+    val other =
+      if (marginMicro > 0L)
+        Seq(child(hotRows.filter(inBand), when(near, lit(1)).otherwise(lit(0))))
+      else Nil
+    val cool = probe.join(seeds.select("cell").distinct(), Seq("cell"),
+        "left_anti")
+      .select(col("vec_id"), (col("cell") * 2).cast("long").as("cell"))
+    (child(hotRows, when(near, lit(0)).otherwise(lit(1))) +: other :+ cool)
+      .reduce(_ unionByName _)
+  }
+
+  /** The split index's candidate pairs: `probed` (vec_id, cell) rows —
+    * whatever quantizer ranked them — descend once per round's model,
+    * then meet the (vec_id, ncell) postings in one capped bucket join.
+    * A band margin is only defined at depth 1. */
+  private def splitCandidates(spark: SparkSession, dir: String,
+                              postings: DataFrame,
+                              modelsByRound: Seq[DataFrame],
+                              probed: DataFrame,
+                              marginMicro: Long): DataFrame = {
+    require(marginMicro == 0L || modelsByRound.size == 1,
+      s"a band margin needs a depth-1 index, got ${modelsByRound.size} rounds")
+    val emb = embWithNrm(spark, dir)
+    val probeMap = modelsByRound.foldLeft(probed)((p, seeds) =>
+      splitDescend(emb, p, seeds, marginMicro))
+    pairCandidatesAB(
+        emb.join(probeMap.withColumnRenamed("cell", "ncell"), Seq("vec_id")),
+        emb.join(postings, Seq("vec_id")),
+        "ncell", MaxBucketCandidates)
+      .filter(col("a_id") =!= col("b_id"))
+  }
+
+  /** The one split serve tail: [[splitCandidates]] re-ranked to top-3
+    * per probe by the bounded [[serveTop3]]. Every split serve —
+    * in-session or reloaded, stub or trained or frozen probes, any
+    * depth, any band margin, and VecStream's probe micro-batches —
+    * runs through it, so no serve path can diverge from the audited
+    * one. */
+  private def splitServe(spark: SparkSession, dir: String,
+                         postings: DataFrame, modelsByRound: Seq[DataFrame],
+                         probed: DataFrame, marginMicro: Long = 0L)
+      : DataFrame =
+    serveTop3(splitCandidates(spark, dir, postings, modelsByRound, probed,
+        marginMicro))
+      .select("a_id", "b_id", "rn", "sim")
+
+  /** The audited stub depth-1 index served to `probed`. */
+  private def stubSplitServe(spark: SparkSession, dir: String,
+                             probed: DataFrame,
+                             marginMicro: Long = 0L): DataFrame = {
+    val r = stubRound(spark, dir)
+    splitServe(spark, dir, r.postings, Seq(r.seeds), probed, marginMicro)
+  }
+
+  /** Durable posting write, PARTITIONED BY the cell column with ONE
+    * file per cell: a bare partitionBy from k shuffle partitions
+    * writes up to k files per cell directory — k×|cells| tiny files,
+    * which the round-18 PQ knee run measured as the dominant cost of
+    * sim_ivfpq_persist at 192 k vectors / 4096 cells (571 s, ~260 k
+    * files; BASELINE round 18). The matching repartition routes each
+    * cell to exactly one task — the graphedges bucketed-table
+    * discipline applied to every durable posting write. Layout-only:
+    * reloads read the same rows. */
+  private def writePostings(df: DataFrame, byCol: String,
+                            path: String): Unit =
+    df.repartition(col(byCol))
+      .write.mode("overwrite").partitionBy(byCol).parquet(path)
+
+  /** Write (vec_id, ncell) postings partitioned by ncell and reload
+    * them; the partition column comes back as the directory's inferred
+    * INT and is cast back to LONG so the serve joins stay
+    * type-identical. */
+  private def persistPostings(spark: SparkSession, postings: DataFrame,
+                              path: String): DataFrame = {
+    writePostings(postings, "ncell", path)
+    spark.read.parquet(path).withColumn("ncell", col("ncell").cast("long"))
+  }
+
+  /** Persist a split index — postings plus ONE model table, a `round`
+    * column carrying each round's (cell, sv, snrm, tau) when there is
+    * more than one round (round k's cells live in round k−1's ncell
+    * space) — and return both RELOADED. The model reload applies the
+    * written schema, so an empty round (a converged round, a base with
+    * no hot cell) still serves. Callers keep their own paths: every
+    * query returns a lazy plan over its files, so a shared path would
+    * let a later caller's overwrite invalidate an earlier caller's
+    * not-yet-materialized FileIndex. */
+  private def persistSplitIndex(spark: SparkSession, postings: DataFrame,
+                                models: Seq[DataFrame], postingsPath: String,
+                                modelsPath: String)
+      : (DataFrame, Seq[DataFrame]) = {
+    val reloaded = persistPostings(spark, postings, postingsPath)
+    val table =
+      if (models.size == 1) models.head
+      else models.zipWithIndex
+        .map { case (m, i) => m.withColumn("round", lit(i + 1)) }
+        .reduce(_ unionByName _)
+    table.write.mode("overwrite").parquet(modelsPath)
+    val back = spark.read.schema(table.schema).parquet(modelsPath)
+    (reloaded,
+     if (models.size == 1) Seq(back)
+     else models.indices.map(i =>
+       back.filter(col("round") === i + 1).drop("round")))
+  }
+
+  /** Occupancy-triggered cell SPLIT report (sim_cell_split) — the
+    * re-shard maintenance job the bucket cap's guidance prescribes
+    * ([[pairCandidates]]: "re-shard the bucket rather than rely on the
+    * cap"): every home cell past [[SplitOccupancy]] members is split by
+    * MEDIAN-THRESHOLD BISECTION ([[splitSeeds]]); members with
+    * s0sim ≥ τ form child 0, the rest child 1, and a probe routes by
+    * the SAME compare at query time. The median threshold is balanced
+    * BY CONSTRUCTION (up to tie mass at τ — an identical-vector clump
+    * keeps child 0 and reads as an unsplittable cell); nearest-of-two
+    * seed rules measured degenerate in 64 dims (BASELINE round 16).
+    * Scale shape: occupancy is one |cells|-row agg, the model one exact
+    * rank selection over hot MEMBERS, re-assignment one compare. */
   def cellSplit(spark: SparkSession, dir: String): DataFrame = {
-    val (occ, _, _, _, assigned) = cellSplitParts(spark, dir)
-    cellSplitReportOf(occ, assigned)
+    val r = stubRound(spark, dir)
+    cellSplitReportOf(r.occ, r.assigned)
   }
 
   /** The per-cell split report over an (occupancy, child-picks) pair —
-    * shared by [[cellSplit]] (stub-quantizer home cells) and
-    * [[cellSplitTrained]] (Lloyd-trained home cells) so the two
-    * reports carry ONE shape. */
+    * one shape for the stub, trained and incremental reports. */
   private def cellSplitReportOf(occ: DataFrame,
                                 assigned: DataFrame): DataFrame = {
     val childSizes = assigned.groupBy("cell")
@@ -476,381 +717,118 @@ object Similarity {
 
   /** Occupancy split over the TRAINED quantizer's home cells
     * (sim_cell_split_trained) — production indexes serve Lloyd-trained
-    * cells ([[ivfTopKTrained]] / sim_index_persist), so the
-    * maintenance loop must read occupancy THERE: the identical
-    * median-τ rule ([[splitRoundParts]] takes any (vec_id, cell)
-    * assignment) applied to [[ivfTrainedRanked]]'s rn = 1 home cells,
-    * same report shape as [[cellSplit]]. Composes the memoized trained
-    * ranking — the split adds one occupancy agg, one τ selection over
-    * hot members, and one threshold compare. */
+    * cells, so the maintenance loop reads occupancy there. */
   def cellSplitTrained(spark: SparkSession, dir: String): DataFrame = {
-    val (occ, _, _, assigned, _, _) = trainedSplitParts(spark, dir)
-    cellSplitReportOf(occ, assigned)
+    val r = trainedRound(spark, dir)
+    cellSplitReportOf(r.occ, r.assigned)
   }
 
-  /** The TRAINED split's working frames — [[splitRoundParts]] over the
-    * Lloyd-trained home assignment, with the model and child picks
-    * memoized once per (session, dir) (memo keys "tsplitseeds"/
-    * "tsplitasg", owner in Bench's list: sim_cell_split_trained)
-    * because both the [[cellSplitTrained]] report and the
-    * [[splitTopKTrained]] serve consume them — the audited trained
-    * split and the applied trained split can never drift. Also returns
-    * the trained probe ranking and the home members so the serve
-    * composes the SAME frame instances the report audited (one
-    * definition site for the trained home/member frames — ADVICE
-    * r17). */
-  private def trainedSplitParts(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
-         DataFrame) = {
-    val ranked = ivfTrainedRanked(spark, dir)
-    val home = ranked.filter(col("rn") === 1).select("vec_id", "cell")
-    val members = embWithNrm(spark, dir).join(home, Seq("vec_id"))
-    val occ = home.groupBy("cell").agg(count(lit(1)).as("n_before"))
-    val hot = occ.filter(col("n_before") > SplitOccupancy).select("cell")
-    val seeds = CkptMemo.getOrElseUpdate((spark, dir, "tsplitseeds"),
-      splitSeeds(spark, dir, members, hot).localCheckpoint())
-    val assigned = CkptMemo.getOrElseUpdate((spark, dir, "tsplitasg"),
-      assignToSubSeeds(members, seeds).localCheckpoint())
-    (occ, hot, seeds, assigned, ranked, members)
-  }
-
-  /** Search over the TRAINED split index (sim_split_topk_trained) —
-    * the round-16 verdict's apply gap: production serves the
-    * Lloyd-trained cells ([[ivfTopKTrained]] / sim_index_persist), so
-    * the occupancy-split maintenance loop's APPLY half must exist
-    * THERE, not only on the stub quantizer. Same composition as
-    * [[splitTopK]] — postings re-home hot trained cells' members to
-    * ncell = cell·2 + sub, probes descend by the model's s0sim ≥ τ
-    * compare — through the SHARED [[splitServeFrom]] tail over the
-    * TRAINED probe ranking, so an all-cool probe (its [[NProbe]]
-    * trained cells all under [[SplitOccupancy]]) is bit-identical to
-    * [[ivfTopKTrained]] (CellSplitSpec pins it). */
+  /** Search over the TRAINED split index (sim_split_topk_trained) — the
+    * split serve over the trained probe ranking, so an all-cool probe
+    * is bit-identical to [[ivfTopKTrained]] (CellSplitSpec pins it).
+    * Memoized ("tsplitserve", owner sim_split_topk_trained): the query
+    * and the trainedsplit frontier leg both read it. */
   def splitTopKTrained(spark: SparkSession, dir: String): DataFrame =
-    // memoized once per (session, dir): the query and the trainedsplit
-    // frontier leg both read it (the splitband precedent); owner in
-    // Bench's list: sim_split_topk_trained
     CkptMemo.getOrElseUpdate((spark, dir, "tsplitserve"), {
-      val (_, hot, seeds, assigned, ranked, members) =
-        trainedSplitParts(spark, dir)
-      splitServeFrom(spark, dir, splitPostings(hot, members, assigned), seeds,
-        ranked.select("vec_id", "cell")).localCheckpoint()
+      val r = trainedRound(spark, dir)
+      splitServe(spark, dir, r.postings, Seq(r.seeds),
+        ivfTrainedRanked(spark, dir).select("vec_id", "cell"))
+        .localCheckpoint()
     })
 
   /** Recall of the TRAINED unsplit serve vs the SHARED exact truth —
-    * prices what Lloyd training buys (or costs) in recall beside the
-    * stub `ivf` leg, the one quantizer-quality number the frontier was
-    * missing; joins as the `trained` leg (shared-truth contract). */
+    * the frontier's `trained` leg. */
   def trainedRecallEval(spark: SparkSession, dir: String,
                         probeN: Long = 100): DataFrame =
     recallVsSharedTruth(spark, dir, ivfTopKTrained(spark, dir), probeN)
 
-  /** Recall of the TRAINED split serve vs the SHARED exact truth —
-    * the `trainedsplit` frontier leg. Pointwise ≤ the `trained` leg:
-    * a probed hot cell's candidates shrink to one child, and a global
-    * top-3 item always survives any candidate subset containing it
-    * (nothing scores above it), so hits are monotone in the candidate
-    * set (CellSplitSpec pins the inequality). */
+  /** Recall of the TRAINED split serve — the `trainedsplit` leg.
+    * Pointwise ≤ the `trained` leg: a global top-3 item survives any
+    * candidate subset containing it, so hits are monotone in the
+    * candidate set (CellSplitSpec pins the inequality). */
   def trainedSplitRecallEval(spark: SparkSession, dir: String,
                              probeN: Long = 100): DataFrame =
     recallVsSharedTruth(spark, dir, splitTopKTrained(spark, dir), probeN)
 
-  /** The split's working frames — (per-cell occupancy, hot cells,
-    * home-cell members with embeddings, split model, hot-cell
-    * member→child assignment (cell, vec_id, sub)) — shared by the
-    * [[cellSplit]] report and the [[splitTopK]] serve so the applied
-    * index can never drift from the audited one. The seed table and
-    * the child picks are memoized once per (session, dir) — memo keys
-    * "splitseeds"/"splitasg", owner in Bench's list: sim_cell_split —
-    * because FOUR queries consume them (report, split serve, recall
-    * eval, persisted serve) plus the deep chain's round 1. */
-  private def cellSplitParts(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val home = ivfAssignRanked(spark, dir).filter(col("rn") === 1)
-      .select("vec_id", "cell")
-    val emb = embWithNrm(spark, dir)
-    val members = emb.join(home, Seq("vec_id"))
-    val occ = home.groupBy("cell").agg(count(lit(1)).as("n_before"))
-    val hot = occ.filter(col("n_before") > SplitOccupancy).select("cell")
-    val seeds = CkptMemo.getOrElseUpdate((spark, dir, "splitseeds"),
-      splitSeeds(spark, dir, members, hot).localCheckpoint())
-    val assigned = CkptMemo.getOrElseUpdate((spark, dir, "splitasg"),
-      assignToSubSeeds(members, seeds).localCheckpoint())
-    (occ, hot, members, seeds, assigned)
-  }
-
-  /** Median-threshold child pick for hot-cell members — (cell, vec_id,
-    * sub): sub 0 iff the member's 6-dp cosine to the cell's seed
-    * direction clears the model's τ — ONE broadcast join + compare,
-    * no window. */
-  private def assignToSubSeeds(members: DataFrame, seeds: DataFrame)
-      : DataFrame =
-    members.join(broadcast(seeds), Seq("cell"))
-      .select(col("cell"), col("vec_id"),
-        when(Num.rnd(dotCols(col("embedding"), col("sv")) /
-                       (col("nrm") * col("snrm")), 6) >= col("tau"),
-             lit(0)).otherwise(lit(1)).as("sub"))
-
-  /** One split round over an arbitrary (vec_id, cell) assignment —
-    * (occupancy of the SOURCE, hot cells, split model, child picks).
-    * Rounds ≥ 2 of [[cellSplitRounds]] run this directly (hot sets
-    * shrink geometrically, so later rounds are cheap); round 1 reuses
-    * the memoized depth-1 frames via [[cellSplitParts]]. */
-  private def splitRoundParts(spark: SparkSession, dir: String,
-                              asg: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val emb = embWithNrm(spark, dir)
-    val members = emb.join(asg, Seq("vec_id"))
-    val occ = asg.groupBy("cell").agg(count(lit(1)).as("n_before"))
-    val hot = occ.filter(col("n_before") > SplitOccupancy).select("cell")
-    val seeds = splitSeeds(spark, dir, members, hot)
-    (occ, hot, seeds, assignToSubSeeds(members, seeds))
-  }
-
-  /** The post-round full assignment: hot members re-homed to
-    * cell·2 + sub, cool members to cell·2 — the bijective encoding at
-    * every depth (distinct sources stay distinct; a source is either
-    * split or not, never both). */
-  private def nextSplitAsg(asg: DataFrame, hot: DataFrame,
-                           assigned: DataFrame): DataFrame =
-    assigned.select(col("vec_id"),
-        (col("cell") * 2 + col("sub")).cast("long").as("cell"))
-      .unionByName(asg.join(hot, Seq("cell"), "left_anti")
-        .select(col("vec_id"), (col("cell") * 2).cast("long").as("cell")))
-
-  /** The deep-split round states for k = 1..depth: (occupancy of the
-    * round's source = the snapshot after k−1 rounds, hot cells,
-    * split model, full assignment AFTER the round). Round 1 IS the
-    * audited depth-1 split ([[cellSplitParts]]' memoized frames);
-    * every later round applies the identical rule to the previous
-    * round's assignment — the bpeTrainRounds prefix discipline on the
-    * index side. */
-  private def cellSplitRounds(spark: SparkSession, dir: String, depth: Int)
-      : Seq[(DataFrame, DataFrame, DataFrame, DataFrame)] = {
-    require(depth >= 1, s"split depth must be >= 1, got $depth")
-    var asg = ivfAssignRanked(spark, dir).filter(col("rn") === 1)
-      .select("vec_id", "cell")
-    (1 to depth).map { k =>
-      val (occ, hot, seeds, assigned) =
-        if (k == 1) {
-          val (o, h, _, s, a) = cellSplitParts(spark, dir)
-          (o, h, s, a)
-        } else splitRoundParts(spark, dir, asg)
-      asg = nextSplitAsg(asg, hot, assigned)
-      (occ, hot, seeds, asg)
-    }
-  }
-
   /** Search over the SPLIT index (sim_split_topk) — the APPLY half of
-    * [[cellSplit]]: hot-cell members are re-homed to their child cell
-    * (ncell = cell·2 + sub; cool cells keep cell·2 — bijective, so
-    * cool-cell results are bit-identical to [[ivfTopK]]'s slices), and
-    * each probe routes a probed HOT cell by its own s0sim ≥ τ compare
-    * at query time (one compare per probed hot cell — query-time
-    * work, exactly like probe lists). What the split buys: candidates in a
-    * split cell drop to ~occupancy/2 per probe — the at-the-source
-    * remedy for the occupancy² regime the round-15 knee measured,
-    * instead of the cap's sampling. What it costs: a true neighbor in
-    * the hot cell's OTHER child is no longer seen —
-    * [[splitRecallEval]] (frontier leg `split`) puts the number on
-    * that loss vs the shared truth. Corpus-probe serve ⇒ bounded
-    * [[serveTop3]], never a window. */
+    * [[cellSplit]]: candidates in a split cell drop to ~occupancy/2 per
+    * probe, at the cost of a true neighbor in the hot cell's OTHER
+    * child ([[splitRecallEval]] prices that loss). Memoized
+    * ("splitserve", owner sim_split_topk): the query,
+    * sim_split_recall_eval and sim_knn_mutual_split re-rank from it. */
   def splitTopK(spark: SparkSession, dir: String): DataFrame =
-    // memoized once per (session, dir): THREE consumers re-rank from
-    // this serve (the query itself, sim_split_recall_eval's screen,
-    // sim_knn_mutual_split's edge build) — the knnmutual precedent;
-    // owner in Bench's list: sim_split_topk
-    CkptMemo.getOrElseUpdate((spark, dir, "splitserve"), {
-      val (_, hot, members, seeds, assigned) = cellSplitParts(spark, dir)
-      splitServeFrom(spark, dir, splitPostings(hot, members, assigned), seeds,
-          ivfAssignRanked(spark, dir).select("vec_id", "cell"))
-        .localCheckpoint()
-    })
+    CkptMemo.getOrElseUpdate((spark, dir, "splitserve"),
+      stubSplitServe(spark, dir, stubProbes(spark, dir)).localCheckpoint())
 
-  /** The split index's postings — (vec_id, ncell) with ncell =
-    * cell·2 + sub for hot-cell members, cell·2 for cool (bijective) —
-    * shared by [[splitTopK]] (served in-session) and
-    * [[splitIndexPersistSearch]] (written to durable parquet). */
-  private def splitPostings(hot: DataFrame, members: DataFrame,
-                            assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("vec_id"), (col("cell") * 2 + col("sub")).as("ncell"))
-      .unionByName(members.join(hot, Seq("cell"), "left_anti")
-        .select(col("vec_id"), (col("cell") * 2).as("ncell")))
-
-  /** One probe-side descent step: a probed HOT cell routes to the
-    * child its own `s0sim ≥ τ` compare selects (the exact rule that
-    * placed the members — query-time work, one compare per probed hot
-    * cell), a cool cell maps to cell·2. Shared by the serve paths and
-    * [[splitDeepTopK]]'s per-round fold. `probe` is (vec_id, cell),
-    * possibly [[NProbe]] rows per vector — each probed cell descends
-    * independently. */
-  private def probeDescend(emb: DataFrame, probe: DataFrame,
-                           hot: DataFrame, seeds: DataFrame): DataFrame = {
-    val hotPick = probe.join(emb, Seq("vec_id"))
-      .join(broadcast(seeds), Seq("cell"))
-      .select(col("vec_id"), (col("cell") * 2 +
-        when(Num.rnd(dotCols(col("embedding"), col("sv")) /
-                       (col("nrm") * col("snrm")), 6) >= col("tau"),
-             lit(0)).otherwise(lit(1))).cast("long").as("cell"))
-    val cool = probe.join(hot, Seq("cell"), "left_anti")
-      .select(col("vec_id"), (col("cell") * 2).cast("long").as("cell"))
-    hotPick.unionByName(cool)
-  }
-
-  /** The split-index serve over a GIVEN (vec_id, ncell) postings frame,
-    * split model, and (vec_id, cell) probe rows (whatever quantizer
-    * ranked them — stub or Lloyd-trained) — the probe side routes its
-    * probed cells by the model's s0sim ≥ τ compare at QUERY time (the
-    * durable index stores postings; the seed table is the model, hot
-    * cells = its distinct cells). Shared by [[splitTopK]] /
-    * [[splitIndexPersistSearch]] (stub probes, in-session vs reloaded
-    * frames), [[splitTopKTrained]] (trained probes), and
-    * [[graft.streaming.VecStream]]'s probe stream (arrived probes only
-    * — per-probe ranking is batch-local because the index side is
-    * complete) — the trainedServeFrom discipline, so no serve path can
-    * diverge from the audited one. */
-  private[ext] def splitServeFrom(spark: SparkSession, dir: String,
-                             postings: DataFrame,
-                             seeds: DataFrame,
-                             probed: DataFrame): DataFrame = {
-    val emb = embWithNrm(spark, dir)
-    val hot = seeds.select("cell").distinct()
-    val indexed = emb.join(postings, Seq("vec_id"))
-    val probes = emb.join(
-      probeDescend(emb, probed, hot, seeds).withColumnRenamed("cell", "ncell"),
-      Seq("vec_id"))
-    serveTop3(pairCandidatesAB(probes, indexed, "ncell", MaxBucketCandidates)
-      .filter(col("a_id") =!= col("b_id")))
-      .select("a_id", "b_id", "rn", "sim")
-  }
-
-  /** Durable posting write, PARTITIONED BY the cell column with ONE
-    * file per cell: a bare partitionBy from k shuffle partitions
-    * writes up to k files per cell directory — k×|cells| tiny files,
-    * which the round-18 PQ knee run measured as the dominant cost of
-    * sim_ivfpq_persist at 192 k vectors / 4096 cells (571 s, ~260 k
-    * files; BASELINE round 18). The matching repartition routes each
-    * cell to exactly one task — the graphedges bucketed-table
-    * discipline applied to every durable posting write. Layout-only:
-    * reloads read the same rows. */
-  private def writePostings(df: DataFrame, byCol: String,
-                            path: String): Unit =
-    df.repartition(col(byCol))
-      .write.mode("overwrite").partitionBy(byCol).parquet(path)
-
-  /** Persisted split-index round trip (sim_split_persist) — the
-    * [[ivfIndexPersistSearch]] shape for the SPLIT index (round-15
-    * verdict gap #3: the maintenance job's output was session-only):
-    * postings (vec_id, ncell) PARTITIONED BY ncell — a hot child can
-    * be audited or re-split from its own files, pruning the rest at
-    * the listing — plus the split model (cell, sv, snrm, tau;
-    * model-sized: one row per split cell), both written to durable
-    * parquet and served from the RELOAD through the SAME
-    * [[splitServeFrom]] tail as [[splitTopK]]. The oracle is
-    * sim_split_topk's VERBATIM (the shared [[splitTopKOracleSql]] val
-    * — only the index's home moved; the dedup_index_persist /
-    * sim_index_persist rule). Partition-column round-trip: ncell comes
-    * back as the directory's inferred INT — cast back to LONG so the
-    * serve joins stay type-identical. Eager writes at query
-    * construction (the eager-persist family). */
+  /** Persisted split-index round trip (sim_split_persist): postings
+    * PARTITIONED BY ncell (a hot child can be audited or re-split from
+    * its own files) plus the model, served from the RELOAD. The oracle
+    * is sim_split_topk's VERBATIM — only the index's home moved. Eager
+    * writes at query construction (the eager-persist family). */
   def splitIndexPersistSearch(spark: SparkSession, dir: String): DataFrame = {
-    val (_, hot, members, seeds, assigned) = cellSplitParts(spark, dir)
-    val postingsPath = Tables.scratch("split_index_postings")
-    writePostings(splitPostings(hot, members, assigned), "ncell",
-      postingsPath)
-    val seedsPath = Tables.scratch("split_index_seeds")
-    seeds.write.mode("overwrite").parquet(seedsPath)
-    val reloaded = spark.read.parquet(postingsPath)
-      .withColumn("ncell", col("ncell").cast("long"))
-    splitServeFrom(spark, dir, reloaded, spark.read.parquet(seedsPath),
-      ivfAssignRanked(spark, dir).select("vec_id", "cell"))
+    val r = stubRound(spark, dir)
+    val (postings, models) = persistSplitIndex(spark, r.postings,
+      Seq(r.seeds), Tables.scratch("split_index_postings"),
+      Tables.scratch("split_index_seeds"))
+    splitServe(spark, dir, postings, models, stubProbes(spark, dir))
   }
 
   /** INCREMENTAL split maintenance from the persisted index
-    * (sim_split_incremental) — proves [[splitIndexPersistSearch]]'s
-    * scaladoc claim end-to-end ("a hot child can be audited or
-    * re-split from its own files"): the frozen-quantizer base corpus
-    * (vec_id < n/2 — the [[ivfIncrementalAssign]] split contract)
-    * is depth-1-split and PERSISTED (ncell-partitioned postings +
-    * model); an arrival batch (vec_id ≥ n/2) is assigned to the frozen
-    * cells and descends the persisted model per vector; then ONE split
-    * round runs on ONLY the cells the arrivals pushed past
-    * [[SplitOccupancy]], with the round's member scan reading the
-    * persisted postings PRUNED to the new-hot ncells at the file
-    * listing (PartitionFilters — CellSplitSpec asserts the scan). The
-    * new-hot work list is collected driver-side as model-sized
-    * maintenance METADATA (≤ |cells| rows — the bookmark-ledger /
-    * CountMemo precedent, never data rows). Output = the
-    * [[cellSplitReportOf]] shape over the COMBINED occupancy;
-    * correctness argument: per-vector assignment and the median-τ rule
-    * only read a hot cell's own members, so incremental-descend +
-    * pruned-member-split ≡ a from-scratch split round of the combined
-    * corpus — the oracle rebuilds from scratch and hash equality is
-    * the proof. At sf0.01 the 250-vector base has NO hot cell (max
-    * occupancy 19), so the persisted model is legitimately EMPTY and
-    * arrivals descend through it unchanged — the spec fixture drives
-    * the non-empty-model path (a hot base cell whose children the
-    * arrivals re-heat). */
+    * (sim_split_incremental): the frozen-quantizer base corpus
+    * (vec_id < n/2) is depth-1-split and PERSISTED; arrivals
+    * (vec_id ≥ n/2) are assigned to the frozen cells and descend the
+    * persisted model; then ONE round runs on ONLY the cells the
+    * arrivals pushed past [[SplitOccupancy]], its member scan reading
+    * the persisted postings PRUNED to those ncells at the file listing
+    * (CellSplitSpec asserts the scan). Per-vector assignment and the
+    * median-τ rule only read a hot cell's own members, so this ≡ a
+    * from-scratch split of the combined corpus — the oracle rebuilds
+    * from scratch and hash equality is the proof. At sf0.01 the base
+    * has NO hot cell, so the persisted model is legitimately EMPTY;
+    * the spec fixture drives the non-empty-model path. */
   def splitIncremental(spark: SparkSession, dir: String): DataFrame = {
     val (occ, assigned1, _, _) = splitIncrementalParts(spark, dir, "report")
     cellSplitReportOf(occ, assigned1)
   }
 
-  /** The incremental chain's working frames — (combined occupancy,
+  /** The incremental chain's lazy working frames — (combined occupancy,
     * incremental-round child picks, FINAL depth-2 assignment, per-round
-    * model table). All four are LAZY plans (no memo: the final
-    * assignment and models have exactly ONE consumer —
-    * [[splitIncrementalServe]], whose parquet write IS their
-    * materialization; an earlier memoized variant doubled the report's
-    * cost for nothing, bench round 17). The base-index persist writes
-    * and the model-sized hot-list collect re-run per call (idempotent
-    * overwrite / bounded metadata); the report's plan keeps the LIVE
-    * pruned postings scans (CellSplitSpec inspects them). `tag` keys
-    * the scratch paths PER CALLER (report vs serve vs deep) — the two
-    * queries return lazy plans over these files, so a shared path
-    * would let a later caller's overwrite invalidate an earlier
-    * caller's not-yet-materialized FileIndex (ADVICE r17). */
+    * models). `tag` keys the scratch paths PER CALLER (report vs serve
+    * vs deep — see [[persistSplitIndex]]). */
   private def splitIncrementalParts(spark: SparkSession, dir: String,
                                     tag: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) =
     splitIncrementalPartsFrom(spark, dir, incBaseHome(spark, dir),
-      CkptMemo.getOrElseUpdate((spark, dir, "incarrhome"), {
-        val split = embCount(spark, dir) / 2
-        assignToCentroids(
-            embWithNrm(spark, dir).filter(col("vec_id") >= split),
-            frozenBaseCentroids(spark, dir))
-          .select("vec_id", "cell").localCheckpoint()
-      }),
-      tag, memoArrDesc = true)
-  }
+      frozenHalf(spark, dir, "incarrhome", base = false), tag,
+      memoArrDesc = true)
 
-  /** The frozen-quantizer BASE home assignment (vec_id < n/2 against
-    * the frozen centroids) — identical across the three incremental
-    * queries AND the stream-maintain seam, so it is memoized once per
-    * (session, dir) (memo "incbasehome", owner sim_split_incremental
-    * in Bench's list; VERDICT r18 item 2: the report/serve/deep trio
-    * rebuilt this exact stage three times, ~19 % of the bench). */
+  /** The frozen-quantizer BASE home assignment (vec_id < n/2) —
+    * identical across the three incremental queries and the
+    * stream-maintain seam (memo "incbasehome", owner
+    * sim_split_incremental). */
   private def incBaseHome(spark: SparkSession, dir: String): DataFrame =
-    CkptMemo.getOrElseUpdate((spark, dir, "incbasehome"), {
+    frozenHalf(spark, dir, "incbasehome", base = true)
+
+  /** One half of the corpus assigned to the frozen base centroids,
+    * memoized under `key`. */
+  private def frozenHalf(spark: SparkSession, dir: String, key: String,
+                         base: Boolean): DataFrame =
+    CkptMemo.getOrElseUpdate((spark, dir, key), {
       val split = embCount(spark, dir) / 2
-      assignToCentroids(
-          embWithNrm(spark, dir).filter(col("vec_id") < split),
+      val half = if (base) col("vec_id") < split else col("vec_id") >= split
+      assignToCentroids(embWithNrm(spark, dir).filter(half),
           frozenBaseCentroids(spark, dir))
         .select("vec_id", "cell").localCheckpoint()
     })
 
   /** [[splitIncrementalParts]] over an EXPLICIT (base home, arrival
-    * home) assignment pair — the seam
+    * home) pair — the seam
     * [[graft.streaming.VecStream.maintainFromSignalToParquet]] shares
-    * with the batch chain (arrivals assigned per micro-batch through
-    * the same frozen model), so stream-detected and batch-detected
-    * maintenance are one code path. `hotParents` (the stream signal's
-    * split_needed COARSE cells, driver-side model-sized metadata)
-    * restricts the new-hot scan to those cells' children — a provable
-    * NO-OP on the result (a coarse cell's occupancy is the sum of its
-    * children's, so a hot ncell's parent is always flagged;
-    * StreamingSpec pins report equality), but it means the maintenance
-    * round plans only the work the detector enqueued. */
+    * with the batch chain, so stream- and batch-detected maintenance
+    * are one code path. `hotParents` (the stream signal's
+    * split_needed COARSE cells) restricts the new-hot scan to those
+    * cells' children — a provable NO-OP on the result (a hot ncell's
+    * parent is always flagged; StreamingSpec pins report equality). */
   private[ext] def splitIncrementalPartsFrom(spark: SparkSession,
                                              dir: String,
                                              baseHome: DataFrame,
@@ -859,93 +837,76 @@ object Similarity {
                                              hotParents: Option[Seq[Long]] =
                                                None,
                                              memoArrDesc: Boolean = false)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val emb = embWithNrm(spark, dir)
-    // the base depth-1 split round is a pure function of the canonical
-    // baseHome (every caller — the three batch tags AND the stream
-    // seam — passes the SAME frozen-quantizer assignment for a given
-    // (session, dir)), so its model and child picks are memoized once
-    // (memos "incsplit0s"/"incsplit0a", owner sim_split_incremental;
-    // VERDICT r18 item 2). occ/hot stay cheap aggs over the
-    // checkpointed baseHome.
-    val members0 = emb.join(baseHome, Seq("vec_id"))
-    val occ0 = baseHome.groupBy("cell").agg(count(lit(1)).as("n_before"))
-    val hot0 = occ0.filter(col("n_before") > SplitOccupancy).select("cell")
-    val seeds0 = CkptMemo.getOrElseUpdate((spark, dir, "incsplit0s"),
-      splitSeeds(spark, dir, members0, hot0).localCheckpoint())
-    val assigned0 = CkptMemo.getOrElseUpdate((spark, dir, "incsplit0a"),
-      assignToSubSeeds(members0, seeds0).localCheckpoint())
+      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
+    // the base round is a pure function of the canonical baseHome
+    // (every caller passes the SAME frozen-quantizer assignment for a
+    // given (session, dir)), so its model and picks are memoized
+    // (incsplit0s/incsplit0a, owner sim_split_incremental)
+    val base = splitRound(spark, dir, baseHome,
+      Some(("incsplit0s", "incsplit0a")))
     val postingsPath = Tables.scratch(s"split_inc_postings_$tag")
-    writePostings(splitPostings(hot0, members0, assigned0), "ncell",
-      postingsPath)
-    val modelPath = Tables.scratch(s"split_inc_model_$tag")
-    seeds0.write.mode("overwrite").parquet(modelPath)
-    // explicit schema: a no-hot-cell base writes an EMPTY model table
-    // (sf0.01 does) and the reload must serve through it unchanged
-    val model = spark.read.schema(seeds0.schema).parquet(modelPath)
+    val (reloaded, Seq(model)) = persistSplitIndex(spark, base.postings,
+      Seq(base.seeds), postingsPath, Tables.scratch(s"split_inc_model_$tag"))
     // the arrival descent is canonical only for the batch trio (the
     // stream seam descends ITS OWN arrHome) — memoized behind the
     // caller flag (memo "incarrdesc", same owner)
-    def arrDesc() = probeDescend(emb, arrHome0,
-      model.select("cell").distinct(), model)
+    def arrDesc() = splitDescend(embWithNrm(spark, dir), arrHome0, model, 0L)
     val arrN =
       if (memoArrDesc)
         CkptMemo.getOrElseUpdate((spark, dir, "incarrdesc"),
           arrDesc().localCheckpoint())
       else arrDesc()
-    val reloaded = spark.read.parquet(postingsPath)
-      .withColumn("ncell", col("ncell").cast("long"))
-    val comb = reloaded.select(col("vec_id"), col("ncell").as("cell"))
-      .unionByName(arrN)
-    val occ = comb.groupBy("cell").agg(count(lit(1)).as("n_before"))
+    val comb = reloaded.withColumnRenamed("ncell", "cell").unionByName(arrN)
+    val occ = occupancy(comb)
     val newHotAll = occ.filter(col("n_before") > SplitOccupancy)
       .select("cell")
     // ncell = cell·2 + sub at depth 1, so parent = ncell div 2
     val newHot = hotParents.fold(newHotAll)(ps =>
       newHotAll.filter(expr("cell div 2").isin(ps: _*)))
-    // the maintenance work list (driver-side metadata, model-sized)
+    val (_, seeds1, assigned1) =
+      prunedRound(spark, dir, postingsPath, newHot, Some(arrN))
+    (occ, assigned1, nextSplitAsg(comb, newHot, assigned1),
+     Seq(model, seeds1))
+  }
+
+  /** A maintenance round over PERSISTED postings at `path`: the
+    * `newHot` work list is collected driver-side (model-sized metadata,
+    * never data rows), and the member scan reads the postings PRUNED to
+    * those ncells at the file listing, plus any not-yet-persisted
+    * `arrivals` in those cells. Returns (any cell hot, model, picks). */
+  private def prunedRound(spark: SparkSession, dir: String, path: String,
+                          newHot: DataFrame, arrivals: Option[DataFrame])
+      : (Boolean, DataFrame, DataFrame) = {
     val hotList = newHot.collect().map(_.getLong(0))
-    // the pruning isin below compares against the directory-inferred
-    // INT partition column — every ncell must fit INT, which the
-    // ivfCells clamp (≤ 131k cells, ncell = cell·2 + sub) guarantees
-    // today; a future depth/encoding change must not silently turn the
-    // partition filter into an empty match (VERDICT r17)
+    // the pruning isin compares against the directory-inferred INT
+    // partition column — every ncell must fit INT, which the ivfCells
+    // clamp (≤ 131k cells, ncell = cell·2^depth + path) guarantees; a
+    // future depth/encoding change must not silently turn the
+    // partition filter into an empty match
     require(hotList.forall(n => n >= 0 && n <= Int.MaxValue),
       s"new-hot ncell outside INT range (${hotList.take(3).mkString(",")}…)" +
       " — the partition-pruning filter would match nothing; widen the " +
       "partition column handling before raising the cell/depth encoding")
-    // member scan: persisted postings pruned to the new-hot ncells at
-    // the listing (filter BEFORE the long cast so the partition filter
-    // lands on the directory-inferred INT column), plus the arrivals
-    // that descended into those cells
-    val prunedBase = spark.read.parquet(postingsPath)
+    // filter BEFORE the long cast so the partition filter lands on the
+    // directory-inferred INT column
+    val pruned = spark.read.parquet(path)
       .filter(col("ncell").isin(hotList.map(_.toInt): _*))
       .select(col("vec_id"), col("ncell").cast("long").as("cell"))
-    val hotAsg = prunedBase.unionByName(
-      arrN.join(newHot, Seq("cell"), "left_semi"))
-    val membersH = emb.join(hotAsg, Seq("vec_id"))
-    val seeds1 = splitSeeds(spark, dir, membersH, newHot)
-    val assigned1 = assignToSubSeeds(membersH, seeds1)
-    val finalA = nextSplitAsg(comb, newHot, assigned1)
-    val models = model.withColumn("round", lit(1))
-      .unionByName(seeds1.withColumn("round", lit(2)))
-    (occ, assigned1, finalA, models)
+    val members = embWithNrm(spark, dir).join(arrivals.fold(pruned)(a =>
+      pruned.unionByName(a.join(newHot, Seq("cell"), "left_semi"))),
+      Seq("vec_id"))
+    val seeds = splitSeeds(spark, dir, members, newHot)
+    (hotList.nonEmpty, seeds, assignToSubSeeds(members, seeds))
   }
 
-  /** STREAM-TRIGGERED incremental maintenance — the repair half the
+  /** STREAM-TRIGGERED incremental maintenance — the repair half of the
     * hot-cell detector ([[graft.streaming.VecStream
-    * .hotCellSignalToParquet]]) was missing (round-17 verdict item 4:
-    * "a scheduler would enqueue the split" was a comment, not code):
-    * run the incremental round over STREAM-ASSIGNED arrivals with the
-    * new-hot scan restricted to the signal's split_needed cells, then
-    * PERSIST the maintained index back (ncell-partitioned postings +
-    * round-columned models — the [[splitIncrementalServe]] layout, so
-    * the repaired index serves through [[splitDeepServeFrom]]
-    * unchanged). Returns the [[cellSplitReportOf]]-shaped report;
-    * stream-detected ≡ batch-detected maintenance because every piece
-    * is the batch seam ([[splitIncrementalPartsFrom]]) — StreamingSpec
-    * pins report equality against sim_split_incremental on the same
-    * arrival split. */
+    * .hotCellSignalToParquet]]): run the incremental round over
+    * STREAM-ASSIGNED arrivals restricted to the signal's split_needed
+    * cells, PERSIST the maintained index back (the
+    * [[splitIncrementalServe]] layout) and return the
+    * [[cellSplitReportOf]] report. StreamingSpec pins report equality
+    * against sim_split_incremental on the same arrival split. */
   private[graft] def splitIncrementalMaintain(spark: SparkSession,
                                               dir: String,
                                               arrHome: DataFrame,
@@ -955,9 +916,8 @@ object Similarity {
     val (occ, assigned1, finalA, models) = splitIncrementalPartsFrom(
       spark, dir, incBaseHome(spark, dir), arrHome, "stream",
       Some(flaggedCells))
-    writePostings(finalA.withColumnRenamed("cell", "ncell"), "ncell",
-      postingsOut)
-    models.write.mode("overwrite").parquet(modelsOut)
+    persistSplitIndex(spark, finalA.withColumnRenamed("cell", "ncell"),
+      models, postingsOut, modelsOut)
     cellSplitReportOf(occ, assigned1)
   }
 
@@ -976,256 +936,134 @@ object Similarity {
         .agg(topNProbe(col("csim"), col("cell")).as("tk")))
 
   /** Serve the incrementally-maintained index
-    * (sim_split_incremental_serve) — closes [[splitIncremental]]'s
-    * maintain → PERSIST BACK → SERVE loop: the post-round assignment
-    * (depth-2 ncell space) is written as ncell-partitioned postings
-    * plus ONE model table with round 1 = the base split's model and
-    * round 2 = the incremental round's (round 1 is legitimately EMPTY
-    * at sf0.01 — the flip of the deep-persist converged case), and
-    * queries are served from the RELOAD through the SHARED
-    * [[splitDeepServeFrom]] tail: probes rank the FROZEN base
-    * quantizer's [[NProbe]] cells, then fold one τ-compare descent per
-    * persisted round. The oracle rebuilds the whole combined chain
-    * from scratch and re-derives the serve — hash equality proves
-    * maintained-index serving ≡ from-scratch serving. */
+    * (sim_split_incremental_serve) — the maintain → PERSIST BACK →
+    * SERVE loop: the depth-2 assignment and both rounds' models are
+    * persisted, and probes ranked against the FROZEN base quantizer's
+    * [[NProbe]] cells are served from the reload. Round 1's model is
+    * legitimately EMPTY at sf0.01. The oracle rebuilds the chain from
+    * scratch — hash equality proves maintained ≡ from-scratch serving. */
   def splitIncrementalServe(spark: SparkSession, dir: String): DataFrame = {
     val (_, _, finalA, models) = splitIncrementalParts(spark, dir, "serve")
-    val postPath = Tables.scratch("split_inc2_postings")
-    writePostings(finalA.withColumnRenamed("cell", "ncell"), "ncell",
-      postPath)
-    val modPath = Tables.scratch("split_inc2_models")
-    models.write.mode("overwrite").parquet(modPath)
-    val reloaded = spark.read.parquet(postPath)
-      .withColumn("ncell", col("ncell").cast("long"))
-    val m = spark.read.schema(models.schema).parquet(modPath)
-    val probe0 = rankedAgainstCentroids(embWithNrm(spark, dir),
-        frozenBaseCentroids(spark, dir))
-      .select("vec_id", "cell")
-    splitDeepServeFrom(spark, dir, reloaded,
-      (1 to 2).map(k => m.filter(col("round") === k).drop("round")),
-      probe0)
+    val (postings, reloaded) = persistSplitIndex(spark,
+      finalA.withColumnRenamed("cell", "ncell"), models,
+      Tables.scratch("split_inc2_postings"), Tables.scratch("split_inc2_models"))
+    splitServe(spark, dir, postings, reloaded,
+      rankedAgainstCentroids(embWithNrm(spark, dir),
+          frozenBaseCentroids(spark, dir))
+        .select("vec_id", "cell"))
   }
 
-  /** MULTI-ROUND incremental maintenance (sim_split_incremental_deep)
-    * — the round-17 verdict's iterate-to-depth gap: a heavy arrival
-    * batch can leave a split cell's CHILDREN still hot after
-    * [[splitIncremental]]'s single round, so the maintenance loop must
-    * fold rounds until no hot cell or [[SplitDepth]] (the
-    * [[splitPlan]] fail-closed contract's bound). Output = the
-    * [[cellSplitDeep]] trajectory shape over the incremental chain:
-    * row 0 = the combined (post-arrival-descent) occupancy, row k =
-    * the occupancy after k incremental rounds. Each round ≥ 2 models
-    * the real maintain loop: the current assignment is PERSISTED BACK
-    * as ncell-partitioned postings, the round's member scan re-reads
-    * them PRUNED to that round's new-hot ncells at the file listing
-    * (the [[splitIncrementalParts]] discipline, per round), and the
-    * work list is collected as model-sized metadata. A converged round
-    * runs NO split work — the snapshot repeats the settled stats (the
-    * oracle's bijective ×2 relabel preserves n_cells/n_hot/max_occ, so
-    * skipping the no-op keeps hash equality; the honest early-stop).
-    * The oracle folds [[splitIncrementalChainSql]] through
-    * [[SplitDepth]] from-scratch rounds — hash equality proves
-    * iterated-pruned-persisted maintenance ≡ a from-scratch recursive
-    * split of the combined corpus. At sf0.01 round 1 de-hots every
-    * cell, so round 2 is the converged no-op; the CellSplitSpec
-    * fixture drives a genuinely 2-round incremental repair. */
+  /** MULTI-ROUND incremental maintenance (sim_split_incremental_deep):
+    * a heavy arrival batch can leave a split cell's CHILDREN still hot,
+    * so the loop folds rounds until [[SplitDepth]]. Output = the
+    * [[cellSplitDeep]] trajectory over the incremental chain (row 0 =
+    * the combined occupancy, row k = after k incremental rounds). Each
+    * round ≥ 2 PERSISTS the current assignment back and re-reads it
+    * PRUNED to the round's new-hot ncells ([[prunedRound]]). A
+    * converged round runs NO split work — the snapshot repeats the
+    * settled stats (the oracle's bijective ×2 relabel preserves
+    * n_cells/n_hot/max_occ, so hash equality holds). */
   def splitIncrementalDeep(spark: SparkSession, dir: String): DataFrame = {
     val (occ0, _, finalA0, _) = splitIncrementalParts(spark, dir, "deep")
-    def occOf(asg: DataFrame): DataFrame =
-      asg.groupBy("cell").agg(count(lit(1)).as("n_before"))
-    def snap(k: Int, occ: DataFrame): DataFrame =
-      occ.agg(count(lit(1)).as("n_cells"),
-           sum(when(col("n_before") > SplitOccupancy, 1L).otherwise(0L))
-             .as("n_hot"),
-           max("n_before").as("max_occ"))
-        .select(lit(k.toLong).as("round"), col("n_cells"), col("n_hot"),
-                col("max_occ"))
-    val emb = embWithNrm(spark, dir)
     var asg = finalA0
-    var snaps = Seq(snap(0, occ0))
+    var snaps = Seq(occSnap(0, occ0))
     for (k <- 2 to SplitDepth) {
-      // persist back FIRST: the reload is the round's — and the
-      // previous snapshot's — ZERO-LINEAGE source. The maintain loop
-      // reads its own durable index (the real operational shape), and
-      // it keeps the composed plan bounded: an all-lazy variant
-      // re-planned the frozen-centroid assignment subtree ~370× in
-      // one tree (round-18 plan audit) because every snapshot and
-      // round re-referenced the full chain.
+      // persist back FIRST: the reload is the round's ZERO-LINEAGE
+      // source, which keeps the composed plan bounded (an all-lazy
+      // variant re-planned the frozen-centroid assignment ~370× in one
+      // tree, round-18 plan audit)
       val p = Tables.scratch(s"split_inc_deep_r$k")
-      writePostings(asg.withColumnRenamed("cell", "ncell"), "ncell", p)
-      val reloaded = spark.read.parquet(p)
-        .select(col("vec_id"), col("ncell").cast("long").as("cell"))
-      snaps = snaps :+ snap(k - 1, occOf(reloaded))
-      val newHot = occOf(reloaded)
-        .filter(col("n_before") > SplitOccupancy).select("cell")
-      // per-round maintenance work list (driver-side, model-sized)
-      val hotList = newHot.collect().map(_.getLong(0))
-      require(hotList.forall(n => n >= 0 && n <= Int.MaxValue),
-        "new-hot ncell outside INT range — the partition filter would " +
-        "match nothing (the ivfCells-clamp assumption)")
-      asg =
-        if (hotList.isEmpty) reloaded
-        else {
-          val pruned = spark.read.parquet(p)
-            .filter(col("ncell").isin(hotList.map(_.toInt): _*))
-            .select(col("vec_id"), col("ncell").cast("long").as("cell"))
-          val membersH = emb.join(pruned, Seq("vec_id"))
-          val seedsK = splitSeeds(spark, dir, membersH, newHot)
-          nextSplitAsg(reloaded, newHot,
-            assignToSubSeeds(membersH, seedsK))
-        }
+      val reloaded = persistPostings(spark,
+        asg.withColumnRenamed("cell", "ncell"), p)
+        .withColumnRenamed("ncell", "cell")
+      val occ = occupancy(reloaded)
+      snaps = snaps :+ occSnap(k - 1, occ)
+      val newHot = occ.filter(col("n_before") > SplitOccupancy).select("cell")
+      val (anyHot, _, assigned) = prunedRound(spark, dir, p, newHot, None)
+      asg = if (anyHot) nextSplitAsg(reloaded, newHot, assigned) else reloaded
     }
-    snaps = snaps :+ snap(SplitDepth, occOf(asg))
-    snaps.reduce(_ unionByName _).orderBy("round")
+    (snaps :+ occSnap(SplitDepth, occupancy(asg)))
+      .reduce(_ unionByName _).orderBy("round")
   }
 
-  /** Default depth for the RECURSIVE split queries — 2 rounds. The
-    * median-τ cut halves every sf0.01 hot cell under the threshold in
-    * one round, so round 2 is a provable no-op there (a bijective
-    * ncell relabel — CellSplitSpec pins deep serve ≡ depth-1 serve);
-    * the crafted-fixture spec drives a genuinely recursive chain
-    * (packed cell whose 33-member children stay hot) AND the
-    * fail-closed plan branch (an identical-vector clump no rule can
-    * split). Mirrored literally in the cs<k>-prefixed oracle chains
-    * (lockstep). */
-  private[graft] val SplitDepth = 2
+  /** One trajectory row: (round, n_cells, n_hot = cells still past
+    * [[SplitOccupancy]], max_occ) of an occupancy frame. */
+  private def occSnap(k: Int, occ: DataFrame): DataFrame =
+    occ.agg(count(lit(1)).as("n_cells"),
+         sum(when(col("n_before") > SplitOccupancy, 1L).otherwise(0L))
+           .as("n_hot"),
+         max("n_before").as("max_occ"))
+      .select(lit(k.toLong).as("round"), col("n_cells"), col("n_hot"),
+              col("max_occ"))
 
   /** Recursive split REPORT (sim_cell_split_deep) — the occupancy
-    * trajectory of iterating [[cellSplit]] until depth [[SplitDepth]]:
-    * row k = the cell snapshot AFTER k rounds (n_cells, n_hot = cells
-    * still past [[SplitOccupancy]], max_occ). Row 0 is the unsplit
-    * home assignment; n_hot at the last row > 0 means more rounds are
-    * needed — the number that drives the maintenance loop's
-    * stop-or-continue decision (round-15 verdict gap #2: one split
-    * left occupancy-188 cells at ~94). Each round is one |cells|-row
-    * agg + one median-τ model selection (a per-cell positional rank
-    * over the shrinking hot set's members) — never a member sort over
-    * the whole corpus. */
+    * trajectory of iterating [[cellSplit]] to depth [[SplitDepth]]:
+    * row k = the snapshot AFTER k rounds; n_hot > 0 at the last row
+    * means more rounds are needed — the maintenance loop's
+    * stop-or-continue number. */
   def cellSplitDeep(spark: SparkSession, dir: String,
                     depth: Int = SplitDepth): DataFrame = {
     val rounds = cellSplitRounds(spark, dir, depth)
-    def snap(k: Int, occ: DataFrame): DataFrame =
-      occ.agg(count(lit(1)).as("n_cells"),
-           sum(when(col("n_before") > SplitOccupancy, 1L).otherwise(0L))
-             .as("n_hot"),
-           max("n_before").as("max_occ"))
-        .select(lit(k.toLong).as("round"), col("n_cells"), col("n_hot"),
-                col("max_occ"))
-    val snaps = rounds.zipWithIndex.map { case ((occ, _, _, _), i) =>
-      snap(i, occ)
-    } :+ snap(depth,
-      rounds.last._4.groupBy("cell").agg(count(lit(1)).as("n_before")))
-    snaps.reduce(_ unionByName _).orderBy("round")
+    (rounds.zipWithIndex.map { case (r, i) => occSnap(i, r.occ) } :+
+      occSnap(depth, occupancy(rounds.last.next)))
+      .reduce(_ unionByName _).orderBy("round")
   }
 
-  /** Search over the RECURSIVELY split index (sim_split_deep_topk) —
-    * the depth-[[SplitDepth]] generalization of [[splitTopK]]: the
-    * index applies [[nextSplitAsg]] per round (ncell = cell·2^depth +
-    * path, bijective at every depth — an unsplit source keeps path bit
-    * 0), and each probe folds [[probeDescend]] once per round (≤ depth
-    * threshold compares per probed cell, query-time). Depth 1 is EXACTLY
-    * [[splitTopK]] (CellSplitSpec pins row equality), and a probe
-    * whose descent never touches a hot cell gets [[ivfTopK]]'s
-    * identical top-3 at ANY depth (the bijection keeps cool members
-    * together; CellSplitSpec pins it at depth 2 on sf0.01 and on the
-    * recursive fixture). */
+  /** Search over the RECURSIVELY split index (sim_split_deep_topk):
+    * ncell = cell·2^depth + path (bijective at every depth — an unsplit
+    * source keeps path bit 0), and each probe descends once per round.
+    * Depth 1 is EXACTLY [[splitTopK]], and a probe whose descent never
+    * touches a hot cell gets [[ivfTopK]]'s top-3 at ANY depth
+    * (CellSplitSpec pins both). The default-depth serve is memoized
+    * ("splitdeep", owner sim_split_deep_topk: the query, the deepsplit
+    * leg and sim_split_deep_recall_eval); explicit depths stay
+    * un-memoized. */
   def splitDeepTopK(spark: SparkSession, dir: String,
                     depth: Int = SplitDepth): DataFrame = {
     def build() = {
       val rounds = cellSplitRounds(spark, dir, depth)
-      splitDeepServeFrom(spark, dir,
-        rounds.last._4.withColumnRenamed("cell", "ncell"),
-        rounds.map(_._3),
-        ivfAssignRanked(spark, dir).select("vec_id", "cell"))
+      splitServe(spark, dir, rounds.last.next.withColumnRenamed("cell", "ncell"),
+        rounds.map(_.seeds), stubProbes(spark, dir))
     }
-    // the default-depth serve is memoized (consumers: the query, the
-    // deepsplit frontier leg, sim_split_deep_recall_eval; owner in
-    // Bench's list: sim_split_deep_topk); explicit non-default depths
-    // (spec probes) stay un-memoized
     if (depth == SplitDepth)
       CkptMemo.getOrElseUpdate((spark, dir, "splitdeep"),
         build().localCheckpoint())
     else build()
   }
 
-  /** The deep-split serve over a GIVEN (vec_id, ncell) postings frame
-    * and the per-round model list — probes fold one τ-compare descent
-    * per round (each round's hot set IS its model's distinct cells).
-    * Shared by [[splitDeepTopK]] (in-session frames) and
-    * [[splitDeepIndexPersistSearch]] (the same frames reloaded from
-    * durable parquet) — the splitServeFrom discipline at depth d. */
-  private def splitDeepServeFrom(spark: SparkSession, dir: String,
-                                 postings: DataFrame,
-                                 modelsByRound: Seq[DataFrame],
-                                 probed: DataFrame): DataFrame = {
-    val emb = embWithNrm(spark, dir)
-    val probeMap = modelsByRound.foldLeft(probed) { (p, seeds) =>
-      probeDescend(emb, p, seeds.select("cell").distinct(), seeds)
-    }
-    serveTop3(pairCandidatesAB(
-        emb.join(probeMap.withColumnRenamed("cell", "ncell"), Seq("vec_id")),
-        emb.join(postings, Seq("vec_id")),
-        "ncell", MaxBucketCandidates)
-      .filter(col("a_id") =!= col("b_id")))
-      .select("a_id", "b_id", "rn", "sim")
-  }
-
   /** Persisted RECURSIVE split index (sim_split_deep_persist) — the
-    * [[splitIndexPersistSearch]] shape at depth [[SplitDepth]], so the
-    * depth [[splitPlan]] chooses can be made durable: postings
-    * (vec_id, ncell at full depth) PARTITIONED BY ncell, plus ONE
-    * model table carrying every round's (cell, sv, snrm, tau) under a
-    * `round` column (round k's cells live in round k−1's ncell space —
-    * the probe descent consumes them in order). A converged round's
-    * model slice is legitimately EMPTY (sf0.01 round 2 — the reload
-    * path must and does serve through it unchanged). Serve runs from
-    * the RELOAD through the same [[splitDeepServeFrom]] tail as the
-    * in-session deep serve; the oracle is sim_split_deep_topk's
-    * VERBATIM (only the storage moved). */
+    * depth [[splitPlan]] chooses, made durable: full-depth postings plus
+    * one round-columned model table. A converged round's model slice is
+    * legitimately EMPTY (sf0.01 round 2) and the reload serves through
+    * it; the oracle is sim_split_deep_topk's VERBATIM. */
   def splitDeepIndexPersistSearch(spark: SparkSession, dir: String,
                                   depth: Int = SplitDepth): DataFrame = {
     val rounds = cellSplitRounds(spark, dir, depth)
-    val postingsPath = Tables.scratch("split_deep_postings")
-    writePostings(rounds.last._4.withColumnRenamed("cell", "ncell"),
-      "ncell", postingsPath)
-    val modelsPath = Tables.scratch("split_deep_models")
-    rounds.zipWithIndex
-      .map { case ((_, _, seeds, _), i) =>
-        seeds.withColumn("round", lit(i + 1)) }
-      .reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(modelsPath)
-    val reloadedIdx = spark.read.parquet(postingsPath)
-      .withColumn("ncell", col("ncell").cast("long"))
-    val models = spark.read.parquet(modelsPath)
-    splitDeepServeFrom(spark, dir, reloadedIdx,
-      (1 to depth).map(k => models.filter(col("round") === k).drop("round")),
-      ivfAssignRanked(spark, dir).select("vec_id", "cell"))
+    val (postings, models) = persistSplitIndex(spark,
+      rounds.last.next.withColumnRenamed("cell", "ncell"), rounds.map(_.seeds),
+      Tables.scratch("split_deep_postings"), Tables.scratch("split_deep_models"))
+    splitServe(spark, dir, postings, models, stubProbes(spark, dir))
   }
 
-  /** Recall of the split-index serve vs the SHARED exact truth — the
-    * single number that prices [[splitTopK]]'s candidate halving;
-    * joins the frontier as the `split` leg (shared-truth contract,
-    * GraphSearchSpec's n_truth assert covers it). */
+  /** Recall of the split serve vs the SHARED exact truth — the frontier's
+    * `split` leg. */
   def splitRecallEval(spark: SparkSession, dir: String,
                       probeN: Long = 100): DataFrame =
     recallVsSharedTruth(spark, dir, splitTopK(spark, dir), probeN)
 
-  /** Recall of the RECURSIVE split serve ([[splitDeepTopK]], depth
-    * [[SplitDepth]]) vs the SHARED exact truth — prices the extra
-    * candidate halving the second round buys; joins the frontier as
-    * the `deepsplit` leg (shared-truth contract, GraphSearchSpec's
-    * n_truth assert covers it). */
+  /** Recall of the depth-[[SplitDepth]] serve — the `deepsplit` leg. */
   def splitDeepRecallEval(spark: SparkSession, dir: String,
                           probeN: Long = 100): DataFrame =
     recallVsSharedTruth(spark, dir, splitDeepTopK(spark, dir), probeN)
 
-  /** The shared-truth recall fold: screen hits vs the memoized exact
-    * top-3 per probe — one metric row (the eval-family shape), shared
-    * by the two split legs so their metric forms can never drift. */
   /** The eval family's probe-sample predicate: the leading probeN ids
     * (vec_id < probeN — the oracle literal 100). */
   private def probeSample(probeN: Long, id: Column): Column = id < lit(probeN)
 
+  /** The shared-truth recall fold: screen hits vs the memoized exact
+    * top-3 per probe — one metric row (the eval-family shape), shared
+    * by every split leg and the band sweep's arms so their metric forms
+    * can never drift. */
   private def recallVsSharedTruth(spark: SparkSession, dir: String,
                                   served: DataFrame,
                                   probeN: Long): DataFrame = {
@@ -1249,22 +1087,17 @@ object Similarity {
   /** Margin (µ-cosine) for the BOUNDARY DUAL-PROBE band
     * ([[splitBandTopK]]): a probe whose |s0sim − τ| to a probed hot
     * cell's split model lands INSIDE the band probes BOTH children
-    * (the true neighbor it would otherwise lose sits across the cut
-    * almost surely near the cut); outside the band it descends to one
-    * child as [[splitTopK]] does. Both engines compare EXACT integer
-    * micro-cosines (round(s0sim·1e6) − round(τ·1e6) as BIGINT — s0sim
-    * and τ are already 6-dp-grained so the micronization is
-    * integer-exact), so the band membership can never drift at the
-    * ulp level. Default 50000 µ chosen from the [[splitBandSweep]]
-    * grid at sf0.01 (recall 356666 → 370000 µ of the unsplit 396666 µ
-    * for 27605 vs 24959 candidates — the middle of the
-    * candidates-vs-recall curve); mirrored literally in the oracle
-    * (lockstep). */
+    * ([[splitDescend]]) — the true neighbor it would otherwise lose
+    * sits across the cut almost surely near the cut. Default 50000 µ
+    * chosen from the [[splitBandSweep]] grid at sf0.01 (recall
+    * 356666 → 370000 µ of the unsplit 396666 µ for 27605 vs 24959
+    * candidates — the middle of the curve); mirrored literally in the
+    * oracle (lockstep). */
   private[graft] val SplitBandMargin = 50000L
 
   /** The [[splitBandSweep]] margin grid — 0 IS the plain split serve
-    * (an empty band: the margin-0 row must equal sim_split_recall_eval
-    * cell-for-cell) and the [[SplitBandMargin]] row must equal
+    * (the margin-0 row must equal sim_split_recall_eval cell-for-cell)
+    * and the [[SplitBandMargin]] row must equal
     * sim_split_band_recall_eval (CellSplitSpec pins both); mirrored
     * literally in the sweep oracle's arm list (lockstep). */
   private[graft] val SplitBandSweepMargins =
@@ -1276,198 +1109,88 @@ object Similarity {
   require(SplitBandSweepMargins.contains(0L),
     "SplitBandSweepMargins must contain the margin-0 baseline arm")
 
-  /** Band-aware probe descent — [[probeDescend]] plus the boundary
-    * dual-probe: every probed hot cell emits its compare-selected
-    * child, and ADDITIONALLY the other child when the probe's
-    * |s0sim − τ| is inside `marginMicro` (exact integer µ compare).
-    * Emitted (vec_id, cell) rows stay DISTINCT — the two children of
-    * one probed cell are distinct ncells and distinct probed cells
-    * have disjoint children — so the serve keeps the
-    * pair-appears-at-most-once invariant with no dedup stage. */
-  private[ext] def probeDescendBand(emb: DataFrame, probe: DataFrame,
-                                    hot: DataFrame, seeds: DataFrame,
-                                    marginMicro: Long): DataFrame = {
-    val hotRows = probe.join(emb, Seq("vec_id"))
-      .join(broadcast(seeds), Seq("cell"))
-      .select(col("vec_id"), col("cell"), col("tau"),
-        Num.rnd(dotCols(col("embedding"), col("sv")) /
-                  (col("nrm") * col("snrm")), 6).as("s0sim"))
-    val pick = when(col("s0sim") >= col("tau"), lit(0)).otherwise(lit(1))
-    val other = when(col("s0sim") >= col("tau"), lit(1)).otherwise(lit(0))
-    val primary = hotRows
-      .select(col("vec_id"), (col("cell") * 2 + pick).cast("long").as("cell"))
-    val secondary = hotRows
-      .filter(abs(round(col("s0sim") * lit(1e6), 0).cast("long") -
-                  round(col("tau") * lit(1e6), 0).cast("long"))
-                < lit(marginMicro))
-      .select(col("vec_id"), (col("cell") * 2 + other).cast("long").as("cell"))
-    val cool = probe.join(hot, Seq("cell"), "left_anti")
-      .select(col("vec_id"), (col("cell") * 2).cast("long").as("cell"))
-    primary.unionByName(secondary).unionByName(cool)
-  }
-
-  /** The band serve over a GIVEN postings/model pair at a GIVEN margin
-    * — [[splitServeFrom]] with [[probeDescendBand]] on the probe side;
-    * the indexed side is UNCHANGED (the band is query-time work only —
-    * the durable index and its model never move when the margin is
-    * tuned). */
-  private def splitBandServeFrom(spark: SparkSession, dir: String,
-                                 postings: DataFrame, seeds: DataFrame,
-                                 marginMicro: Long): DataFrame = {
-    val emb = embWithNrm(spark, dir)
-    val hot = seeds.select("cell").distinct()
-    val indexed = emb.join(postings, Seq("vec_id"))
-    val probed = ivfAssignRanked(spark, dir).select("vec_id", "cell")
-    val probes = emb.join(
-      probeDescendBand(emb, probed, hot, seeds, marginMicro)
-        .withColumnRenamed("cell", "ncell"),
-      Seq("vec_id"))
-    serveTop3(pairCandidatesAB(probes, indexed, "ncell", MaxBucketCandidates)
-      .filter(col("a_id") =!= col("b_id")))
-      .select("a_id", "b_id", "rn", "sim")
-  }
-
-  /** Boundary dual-probe split serve (sim_split_band_topk) — the
-    * round-16 verdict's highest-leverage item: [[splitTopK]]'s
-    * candidate halving costs ~4 recall points because a true neighbor
-    * in a probed hot cell's OTHER child is unseen, and those losses
-    * concentrate near the cut; paying double candidates for ONLY the
-    * in-band probes ([[SplitBandMargin]]) recovers a third of the gap
-    * at sf0.01 for ~11% extra candidates (the [[splitBandSweep]] grid
-    * is the measured curve). Out-of-band probes and all-cool probes
-    * are BIT-IDENTICAL to [[splitTopK]] / [[ivfTopK]] (same descent,
-    * same bijection — CellSplitSpec pins both). Memoized once per
-    * (session, dir) — memo key "splitband", owner in Bench's list:
-    * sim_split_band_topk — because the recall leg re-ranks from it. */
+  /** Boundary dual-probe split serve (sim_split_band_topk): paying
+    * double candidates for ONLY the in-band probes recovers a third of
+    * the split's recall gap at sf0.01 for ~11% extra candidates.
+    * Out-of-band and all-cool probes are BIT-IDENTICAL to
+    * [[splitTopK]] / [[ivfTopK]] (CellSplitSpec pins both). Memoized
+    * ("splitband", owner sim_split_band_topk): the recall leg re-ranks
+    * from it. */
   def splitBandTopK(spark: SparkSession, dir: String): DataFrame =
-    CkptMemo.getOrElseUpdate((spark, dir, "splitband"), {
-      val (_, hot, members, seeds, assigned) = cellSplitParts(spark, dir)
-      splitBandServeFrom(spark, dir, splitPostings(hot, members, assigned),
-        seeds, SplitBandMargin).localCheckpoint()
-    })
+    CkptMemo.getOrElseUpdate((spark, dir, "splitband"),
+      splitBandTopKAt(spark, dir, SplitBandMargin).localCheckpoint())
 
   /** The split serve restricted to a GIVEN probe-ID frame — the seam
-    * [[splitTopK]]'s full-corpus serve and
-    * [[graft.streaming.VecStream.splitSearchToParquet]]'s arriving
-    * probe micro-batches share (the filteredTopKFor discipline):
-    * per-probe ranking is complete within one call because the index
-    * side — the memoized split postings + model — is the full static
-    * corpus, so stream ≡ batch at ANY arrival split (StreamingSpec
-    * pins it row-for-row against sim_split_topk). */
+    * [[graft.streaming.VecStream.splitSearchToParquet]]'s probe
+    * micro-batches use: per-probe ranking is complete within one call
+    * because the index side is the full static corpus, so stream ≡
+    * batch at ANY arrival split (StreamingSpec pins it row-for-row
+    * against sim_split_topk). */
   private[graft] def splitTopKForProbes(spark: SparkSession, dir: String,
-                                        probeIds: DataFrame): DataFrame = {
-    val (_, hot, members, seeds, assigned) = cellSplitParts(spark, dir)
-    splitServeFrom(spark, dir, splitPostings(hot, members, assigned), seeds,
-      ivfAssignRanked(spark, dir).select("vec_id", "cell")
-        .join(probeIds.select("vec_id"), Seq("vec_id"), "left_semi"))
-  }
+                                        probeIds: DataFrame): DataFrame =
+    stubSplitServe(spark, dir, stubProbes(spark, dir)
+      .join(probeIds.select("vec_id"), Seq("vec_id"), "left_semi"))
 
-  /** Spec probe: the band serve at an EXPLICIT margin, unmemoized —
-    * CellSplitSpec drives margin 0 (must equal [[splitTopK]] exactly:
-    * an empty band never fires the dual probe) and the monotone
-    * candidate-superset property. Production serves go through the
-    * memoized [[splitBandTopK]] at [[SplitBandMargin]]. */
+  /** The band serve at an EXPLICIT margin, unmemoized — margin 0 must
+    * equal [[splitTopK]] exactly (CellSplitSpec); production serves go
+    * through the memoized [[splitBandTopK]]. */
   private[graft] def splitBandTopKAt(spark: SparkSession, dir: String,
-                                     marginMicro: Long): DataFrame = {
-    val (_, hot, members, seeds, assigned) = cellSplitParts(spark, dir)
-    splitBandServeFrom(spark, dir, splitPostings(hot, members, assigned),
-      seeds, marginMicro)
-  }
+                                     marginMicro: Long): DataFrame =
+    stubSplitServe(spark, dir, stubProbes(spark, dir), marginMicro)
 
-  /** Recall of the band serve vs the SHARED exact truth — the number
-    * that prices the dual-probe's recall recovery; joins the frontier
-    * as the `band` leg (shared-truth contract, GraphSearchSpec's
-    * n_truth assert covers it). */
+  /** Recall of the band serve — the frontier's `band` leg. */
   def splitBandRecallEval(spark: SparkSession, dir: String,
                           probeN: Long = 100): DataFrame =
     recallVsSharedTruth(spark, dir, splitBandTopK(spark, dir), probeN)
 
-  /** Band-margin SWEEP (sim_split_band_sweep) — the measure half
-    * behind [[SplitBandMargin]]'s default: one row per grid margin
-    * with the candidate count (the cost axis) and recall vs the
-    * shared truth (the benefit axis), over the eval-family 100-probe
-    * sample (the nprobe_sweep precedent — per-probe serving is
-    * batch-local because the indexed side is complete, so the sample
-    * serve IS the full serve's probe slice; CellSplitSpec pins the
-    * margin-0 row to sim_split_recall_eval and the default-margin row
-    * to sim_split_band_recall_eval cell-for-cell). */
+  /** Band-margin SWEEP (sim_split_band_sweep) — one row per grid margin
+    * with the candidate count (the cost axis) and the shared-truth
+    * recall fold (the benefit axis) over the eval-family probe sample
+    * (per-probe serving is batch-local, so the sample serve IS the
+    * full serve's probe slice). Memoized ("bandsweepfrm", owner
+    * sim_split_band_sweep): the planner re-reads the same sweep. */
   def splitBandSweep(spark: SparkSession, dir: String,
                      probeN: Long = 100): DataFrame =
-    // memoized 5-row sweep frame ("bandsweepfrm", owner
-    // sim_split_band_sweep in Bench's list): the planner re-reads the
-    // SAME sweep to choose its margin — before round 19 both queries
-    // re-ran all five serve arms (~24 s task time each at sf0.1)
     CkptMemo.getOrElseUpdate((spark, dir, "bandsweepfrm", probeN),
       splitBandSweepBuild(spark, dir, probeN).localCheckpoint())
 
   private def splitBandSweepBuild(spark: SparkSession, dir: String,
                                   probeN: Long): DataFrame = {
-    val (_, hot, members, seeds, assigned) = cellSplitParts(spark, dir)
-    val postings = splitPostings(hot, members, assigned)
-    val emb = embWithNrm(spark, dir)
-    val hotCells = seeds.select("cell").distinct()
-    val indexed = emb.join(postings, Seq("vec_id"))
-    val probed = ivfAssignRanked(spark, dir).select("vec_id", "cell")
+    val r = stubRound(spark, dir)
+    val probed = stubProbes(spark, dir)
       .filter(probeSample(probeN, col("vec_id")))
-    val truth = exactTruthTop3(spark, dir, probeN)
     SplitBandSweepMargins.map { m =>
-      val probes = emb.join(
-        probeDescendBand(emb, probed, hotCells, seeds, m)
-          .withColumnRenamed("cell", "ncell"),
-        Seq("vec_id"))
-      val cand = pairCandidatesAB(probes, indexed, "ncell",
-          MaxBucketCandidates)
-        .filter(col("a_id") =!= col("b_id"))
-      val screen = serveTop3(cand).select("a_id", "b_id")
-      val hit = truth.join(screen, Seq("a_id", "b_id"))
+      val cand = splitCandidates(spark, dir, r.postings, Seq(r.seeds),
+        probed, m)
+      // the candidate count streams first: with the fold first the arm
+      // shuffled 3 % more bytes (sf0.1, graft.Bench)
       cand.agg(count(lit(1)).as("n_cand"))
-        .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
-        .crossJoin(screen.agg(count(lit(1)).as("n_screen")))
-        .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
+        .crossJoin(recallVsSharedTruth(spark, dir, serveTop3(cand), probeN))
         .select(lit(m).as("margin_micro"), col("n_cand"), col("n_truth"),
-          col("n_screen"), col("n_hit"),
-          expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-            "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-            .as("recall_micro"))
+          col("n_screen"), col("n_hit"), col("recall_micro"))
     }.reduce(_ unionByName _).orderBy("margin_micro")
   }
 
   /** Max extra candidate pairs the band planner will pay per recovered
     * true hit ([[splitBandPlanned]]'s decision literal, mirrored in
-    * its oracle — lockstep): a grid margin qualifies iff its CUMULATIVE
-    * gain over margin 0 satisfies Δn_hit · 100 ≥ Δn_cand on the
-    * 100-probe sweep sample. At sf0.01 every step is cheap (cumulative
-    * 75–97 cand/hit — the whole grid qualifies, chosen = 150000µ,
-    * which recovers full unsplit-IVF recall for ~20 % extra
-    * candidates); on a tie-degenerate corpus (recall already 1e6, the
-    * BASELINE round-17 replica finding) the gain is 0 while the cost
-    * is huge, so ONLY margin 0 qualifies — the planner fails closed to
-    * the plain split serve instead of over-firing on tie mass. */
+    * its oracle — lockstep). At sf0.01 the whole grid qualifies
+    * (chosen = 150000µ, full unsplit-IVF recall for ~20 % extra
+    * candidates); on a tie-degenerate corpus the gain is 0 while the
+    * cost is huge, so ONLY margin 0 qualifies — the planner fails
+    * closed to the plain split serve. */
   private[graft] val BandPlanCandPerHit = 100L
 
-  /** PLAN-DRIVEN band serve (sim_split_band_planned) — closes the
-    * measure → decide → APPLY loop on the band margin (round-17
-    * verdict item 2: [[splitBandSweep]] measured the
-    * candidates-vs-recall curve but nothing consumed it — the exact
-    * gap [[splitServePlanned]] closed for depth): pick the LARGEST
-    * grid margin whose cumulative recall gain is worth its candidate
-    * cost ([[BandPlanCandPerHit]]), then serve the band at exactly
-    * that margin with a `margin_used` column stamping the decision.
-    * Margin 0 qualifies trivially (0 ≥ 0) — the fail-closed floor: a
-    * corpus where the band buys nothing (tie-mass replicas) serves the
-    * plain split index. The sweep is read driver-side as a grid-sized
-    * decision frame (5 rows — the CountMemo plan-metadata precedent);
-    * the oracle composes the SAME sweep arms
-    * ([[bandSweepArmsCtesSql]]), the same decision rule, and one
-    * full-probe serve arm per grid margin filtered by the choice —
-    * measure, decision, and serve move in lockstep. */
+  /** PLAN-DRIVEN band serve (sim_split_band_planned): read the 5-row
+    * [[splitBandSweep]] driver-side, pick the LARGEST margin whose
+    * cumulative recall gain pays its candidate cost at
+    * [[BandPlanCandPerHit]] ([[chooseNprobe]]'s rule; margin 0 is the
+    * fail-closed floor), and serve at exactly that margin with a
+    * `margin_used` column. The oracle composes the same sweep arms,
+    * rule and one full-probe serve arm per grid margin. */
   def splitBandPlanned(spark: SparkSession, dir: String): DataFrame = {
-    val sweep = splitBandSweep(spark, dir).collect()
-    val base = sweep.find(_.getLong(0) == 0L).get
-    val (c0, h0) = (base.getLong(1), base.getLong(4))
-    val chosen = sweep.filter(r =>
-        (r.getLong(4) - h0) * BandPlanCandPerHit >= r.getLong(1) - c0)
-      .map(_.getLong(0)).max
+    val chosen = chooseNprobe(splitBandSweep(spark, dir).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(4)))).toMap,
+      BandPlanCandPerHit)
     val served =
       if (chosen == 0L) splitTopK(spark, dir)
       else if (chosen == SplitBandMargin) splitBandTopK(spark, dir)
@@ -1477,16 +1200,12 @@ object Similarity {
   }
 
   /** Split-depth CHOOSER (sim_split_plan) — the decision operator over
-    * the [[cellSplitDeep]] trajectory, the bpePick /
-    * qualityGateCalibrated fail-closed pattern applied to index
-    * maintenance: chosen_depth = the smallest round whose snapshot has
-    * NO hot cell left (the depth the maintenance job should run);
-    * when no snapshot within [[SplitDepth]] qualifies the plan fails
-    * CLOSED — sentinel depth 1e9, converged 0 — telling the operator
-    * to raise the depth (or the threshold) DELIBERATELY rather than
-    * silently serving an over-occupied index. Context columns carry
-    * the final snapshot's n_hot / max_occ so the report is actionable
-    * on its own. */
+    * the [[cellSplitDeep]] trajectory: chosen_depth = the smallest
+    * round whose snapshot has NO hot cell left; when none within
+    * [[SplitDepth]] qualifies the plan fails CLOSED — sentinel depth
+    * 1e9, converged 0 — rather than silently serving an over-occupied
+    * index. Context columns carry the final snapshot's n_hot /
+    * max_occ. */
   def splitPlan(spark: SparkSession, dir: String): DataFrame = {
     val rep = cellSplitDeep(spark, dir)
     rep.agg(
@@ -1501,22 +1220,13 @@ object Similarity {
         col("n_hot_final"), col("max_occ_final"))
   }
 
-  /** PLAN-DRIVEN split serve (sim_split_serve_planned) — closes the
-    * measure → decide → APPLY loop on split depth (round-16 verdict
-    * item 5: [[splitPlan]] chose a depth but nothing consumed the
-    * choice): serve the index at exactly the depth the plan chose,
-    * with a `depth_used` column so the decision is auditable in the
-    * output. Fail-closed branches: sentinel (no depth within
-    * [[SplitDepth]] de-hots every cell — the unsplittable-clump
-    * fixture) serves the UNSPLIT index and WARN-logs rather than
-    * pretending a depth suffices; converged-at-0 (nothing hot) also
-    * serves unsplit. The chosen depth is read driver-side as a ONE-ROW
-    * decision scalar (the CountMemo adaptive-knob precedent — plan
-    * metadata, never data rows); arms mirror [[SplitDepth]] = 2
-    * (depth 1 = [[splitTopK]], depth 2 = [[splitDeepTopK]]) and the
-    * oracle composes [[splitPlanOracleSql]]'s chooser with the SAME
-    * serve chains, each arm filtered by the chosen depth — measure,
-    * decision, and serve move in lockstep. */
+  /** PLAN-DRIVEN split serve (sim_split_serve_planned): serve at
+    * exactly the depth [[splitPlan]] chose, with a `depth_used` column.
+    * The sentinel (no depth within [[SplitDepth]] de-hots every cell)
+    * serves the UNSPLIT index and WARN-logs; converged-at-0 also serves
+    * unsplit. The chosen depth is a ONE-ROW driver-side decision
+    * scalar; arms mirror [[SplitDepth]] = 2 and the oracle composes
+    * [[splitPlanOracleSql]]'s chooser with the same serve chains. */
   def splitServePlanned(spark: SparkSession, dir: String): DataFrame = {
     val p = splitPlan(spark, dir).collect().head
     val chosen = p.getLong(0)
@@ -1646,9 +1356,7 @@ object Similarity {
     * threshold-curve convention). 10 rows out at any scale. */
   def simHist(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-              sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+    val emb = embWithNrm(spark, dir)
     val probes = emb.filter(col("vec_id") < 100)
       .select(col("vec_id").as("a_id"), col("embedding").as("va"),
               col("nrm").as("na"))
@@ -1703,40 +1411,34 @@ object Similarity {
     * graphedges (NOT in PlanShapeSpec's laziness allowlist; Bench
     * owner: sim_knn_mutual). */
   def knnMutual(spark: SparkSession, dir: String): DataFrame =
-    CkptMemo.getOrElseUpdate((spark, dir, "knnmutual"), {
-      val t = ivfTopK(spark, dir).select("a_id", "b_id", "sim")
-      val rev = t.select(col("b_id").as("a_id"), col("a_id").as("b_id"))
-      t.join(rev, Seq("a_id", "b_id"))
-        .filter(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"), col("sim"))
-        .localCheckpoint()
-    })
+    CkptMemo.getOrElseUpdate((spark, dir, "knnmutual"),
+      mutualEdges(ivfTopK(spark, dir)).localCheckpoint())
 
   /** Mutual-kNN graph over the SPLIT index's serve
     * (sim_knn_mutual_split) — the pair-family consumer the split was
     * built for: a graph build's dominant cost at scale IS its serve's
     * in-cell candidate stage (the knee table, BASELINE rounds 15/16),
     * so serving the edge build from [[splitTopK]] inherits the
-    * measured candidate halving. Same mutual rule as [[knnMutual]];
-    * deliberately NOT a replacement for the `knnmutual` memo — the
-    * graph_* family stays on the audited unsplit edges, and this is
-    * the migration-path query that prices the split for graph builds
-    * (its recall side is the frontier's `split` leg). Memo
-    * "knnmutualsplit", owner sim_knn_mutual_split in Bench's list. */
+    * measured candidate halving. Deliberately NOT a replacement for the
+    * `knnmutual` memo — the graph_* family stays on the audited unsplit
+    * edges. Memo "knnmutualsplit", owner sim_knn_mutual_split. The
+    * memoized splitserve frame is already a materialization barrier,
+    * so the mutual self-join reads it on both sides instead of
+    * re-running the descent twice (531 vs 425 s task CPU at 768 k,
+    * BASELINE round 16). */
   def knnMutualSplit(spark: SparkSession, dir: String): DataFrame =
-    CkptMemo.getOrElseUpdate((spark, dir, "knnmutualsplit"), {
-      // [[splitTopK]] is the memoized splitserve frame — already a
-      // materialization barrier, so the mutual self-join reads it on
-      // both sides instead of re-running the descent+candidate stages
-      // twice (measured 531 vs 425 s task CPU at 768 k when the serve
-      // was un-memoized and un-barriered, BASELINE round 16)
-      val t = splitTopK(spark, dir).select("a_id", "b_id", "sim")
-      val rev = t.select(col("b_id").as("a_id"), col("a_id").as("b_id"))
-      t.join(rev, Seq("a_id", "b_id"))
-        .filter(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"), col("sim"))
-        .localCheckpoint()
-    })
+    CkptMemo.getOrElseUpdate((spark, dir, "knnmutualsplit"),
+      mutualEdges(splitTopK(spark, dir)).localCheckpoint())
+
+  /** The mutual rule over a top-k serve: (a < b, sim) pairs whose
+    * reversal is also served. */
+  private def mutualEdges(served: DataFrame): DataFrame = {
+    val t = served.select("a_id", "b_id", "sim")
+    val rev = t.select(col("b_id").as("a_id"), col("a_id").as("b_id"))
+    t.join(rev, Seq("a_id", "b_id"))
+      .filter(col("a_id") < col("b_id"))
+      .select(col("a_id"), col("b_id"), col("sim"))
+  }
 
   /** One NN-DESCENT refinement round (Dong et al., "Efficient K-Nearest
     * Neighbor Graph Construction for Generic Similarity Measures",
@@ -1772,9 +1474,7 @@ object Similarity {
       .join(adj.select(col("v"), col("n").as("b_id")), Seq("v"))
       .filter(col("a_id") =!= col("b_id"))
       .select("a_id", "b_id").distinct()
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-              sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+    val emb = embWithNrm(spark, dir)
     val scored = wedge
       .join(emb.select(col("vec_id").as("a_id"), col("embedding").as("av"),
                        col("nrm").as("an")), Seq("a_id"))
@@ -1811,9 +1511,7 @@ object Similarity {
                                     probeN: Long): DataFrame =
     CkptMemo.getOrElseUpdate((spark, dir, "simtruth", probeN), {
       import org.apache.spark.sql.expressions.Window
-      val emb = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"),
-                sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+      val emb = embWithNrm(spark, dir)
       val q = emb.filter(probeSample(probeN, col("vec_id")))
         .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
                 col("nrm").as("qnrm"))
@@ -2114,9 +1812,7 @@ object Similarity {
   def nprobeSweep(spark: SparkSession, dir: String,
                   probeN: Long = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-              sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+    val emb = embWithNrm(spark, dir)
     val cents = emb.filter(col("vec_id") < ivfCells(embCount(spark, dir)))
       .select(col("vec_id").as("cell"), col("embedding").as("cv"),
               col("nrm").as("cnrm"))
@@ -2204,19 +1900,22 @@ object Similarity {
       .withColumn("nprobe_used", lit(chosen))
   }
 
-  /** The pure chooser over sweep rows (width → (n_cand, n_hit)) —
-    * extracted so the decision logic is unit-testable on synthetic
-    * rows (NprobePlannedSpec drives the fail-closed floor and the
-    * all-free widest case); the oracle's npch CTE mirrors it. Note
-    * extra probed cells that turn out EMPTY make a wider arm free
-    * (Δcand = 0 ⇒ it qualifies at zero extra hits) — taking it is the
-    * correct reading, not a floor miss. */
-  private[graft] def chooseNprobe(byK: Map[Int, (Long, Long)]): Int = {
-    val (c1, h1) = byK(1)
-    byK.keysIterator.filter { k =>
-      val (ck, hk) = byK(k)
-      (hk - h1) * NprobePlanCandPerHit >= (ck - c1)
-    }.max
+  /** The pure cand-per-hit chooser over sweep arms (arm → (n_cand,
+    * n_hit)): the LARGEST arm whose cumulative extra hits over the
+    * baseline (the smallest arm — nprobe 1, band margin 0) pay its
+    * cumulative extra candidates at `candPerHit`; the baseline
+    * qualifies trivially (0 ≥ 0), the fail-closed floor.
+    * [[nprobePlanned]] and [[splitBandPlanned]] both decide through it
+    * (NprobePlannedSpec drives the cases on synthetic rows; the
+    * oracles' npch / band chooser CTEs mirror it). Extra probed cells
+    * that turn out EMPTY make a wider arm free (Δcand = 0 ⇒ it
+    * qualifies at zero extra hits) — taking it is the correct reading,
+    * not a floor miss. */
+  private[graft] def chooseNprobe[K: Ordering](byArm: Map[K, (Long, Long)],
+      candPerHit: Long = NprobePlanCandPerHit): K = {
+    val (c0, h0) = byArm(byArm.keys.min)
+    byArm.collect { case (k, (c, h)) if (h - h0) * candPerHit >= c - c0 => k }
+      .max
   }
 
   /** The full-corpus IVF serve at an explicit probe width — the
@@ -2237,9 +1936,7 @@ object Similarity {
       val rankedK =
         if (k < NProbe) ranked.filter(col("rn") <= k)
         else rankedAtNprobe(spark, dir, k)
-      val emb = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"),
-                sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+      val emb = embWithNrm(spark, dir)
       val probes = emb.join(rankedK.select("vec_id", "cell"), Seq("vec_id"))
       val indexed = emb.join(ranked.filter(col("rn") === 1)
                                .select("vec_id", "cell"), Seq("vec_id"))
@@ -2378,9 +2075,7 @@ object Similarity {
                   probeN: Long = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val short = signShortlist(spark, dir, probeN)
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-              sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+    val emb = embWithNrm(spark, dir)
     val q = emb.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
               col("nrm").as("qnrm"))
@@ -2553,9 +2248,7 @@ object Similarity {
     val mu = knnMutual(spark, dir).select("a_id", "b_id")
     val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
       .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-              sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+    val emb = embWithNrm(spark, dir)
     val probes = emb.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
               col("nrm").as("qnrm"))
@@ -2856,9 +2549,7 @@ object Similarity {
       // trained scan is the second n×cells pass and spilled identically
       // under the window form
       explodeRanked(
-        fanOut(Tables.embeddings(spark, dir)
-            .select(col("vec_id"), col("embedding"),
-                    sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm")))
+        fanOut(embWithNrm(spark, dir))
           .crossJoin(broadcast(cents))
           .select(col("vec_id"),
                   Num.rnd(dotCols(col("embedding"), col("cv")) /
@@ -2923,9 +2614,7 @@ object Similarity {
     * durable parquet), so the two serve paths can never diverge. */
   private def trainedServeFrom(spark: SparkSession, dir: String,
                                ranked: DataFrame): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-              sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+    val emb = embWithNrm(spark, dir)
     val probes = emb.join(ranked.select("vec_id", "cell"), Seq("vec_id"))
     val indexed = emb.join(ranked.filter(col("rn") === 1)
                              .select("vec_id", "cell"), Seq("vec_id"))
@@ -3082,9 +2771,7 @@ object Similarity {
     // the capped candidate join + cosine
     CkptMemo.getOrElseUpdate((spark, dir, "sempairs"), {
       val ranked = ivfTrainedRanked(spark, dir)
-      val emb = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"),
-                sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+      val emb = embWithNrm(spark, dir)
       val withCell = emb.join(
         ranked.filter(col("rn") === 1).select("vec_id", "cell"), Seq("vec_id"))
       pairCandidates(withCell, "cell").filter(col("a_id") < col("b_id"))
@@ -3207,9 +2894,7 @@ object Similarity {
                         probeN: Long = 100): DataFrame = {
     val sem = semanticDedup(spark, dir).filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id"), col("keep"))
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-              sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+    val emb = embWithNrm(spark, dir)
     val q = emb.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
               col("nrm").as("qnrm"))
@@ -3271,9 +2956,7 @@ object Similarity {
     // Bench's list; VERDICT r18 item 2)
     CkptMemo.getOrElseUpdate((spark, dir, "frozencents"), {
       val split = embCount(spark, dir) / 2
-      val emb = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"),
-                sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
+      val emb = embWithNrm(spark, dir)
       val corpus = emb.filter(col("vec_id") < split)
       val seeds = corpus.filter(col("vec_id") < ivfCells(split))
         .select(col("vec_id").as("cell"), col("embedding").as("cv"),
@@ -5275,7 +4958,7 @@ object Similarity {
     // split-index serve over the shared cs-chain + st-serve chain —
     // the APPLY half of sim_cell_split (audited ≡ applied split)
     "sim_split_topk" -> splitTopKOracleSql,
-    // the persisted split index serves THROUGH splitServeFrom from
+    // the persisted split index serves THROUGH splitServe from
     // reloaded parquet — result ≡ sim_split_topk by construction, so
     // the oracle is registered VERBATIM (only the storage moved; the
     // sim_index_persist rule)
@@ -5288,7 +4971,7 @@ object Similarity {
     // depth-1 CTEs byte-for-byte (the generator's ("cs","home")
     // instance), the dz tail mirrors the st tail
     "sim_split_deep_topk" -> splitDeepTopKOracleSql,
-    // the persisted deep index serves THROUGH splitDeepServeFrom from
+    // the persisted deep index serves THROUGH splitServe from
     // reloaded parquet — oracle VERBATIM (only the storage moved)
     "sim_split_deep_persist" -> splitDeepTopKOracleSql,
     // recall of the deep serve vs the SHARED truth (frontier leg
@@ -5985,7 +5668,7 @@ object Similarity {
     s"WHERE ${pfx}h.cell IS NULL)"
 
   /** The probe-side descent `<pfx>z`/`<pfx>q` over probe source `psrc`
-    * — [[probeDescend]]'s mirror: a probed hot cell routes by its own
+    * — [[splitDescend]]'s mirror: a probed hot cell routes by its own
     * `s0sim ≥ τ` compare (the exact member rule), a cool one maps to
     * cell·2. */
   private def probeDescendCteFor(pfx: String, psrc: String): String =
@@ -6274,7 +5957,7 @@ object Similarity {
     * rerank as the unsplit serve. */
   /** The COMPLETE split-serve oracle — shared VERBATIM by
     * sim_split_topk and sim_split_persist (the persisted index serves
-    * through the same [[splitServeFrom]] tail; only the storage
+    * through the same [[splitServe]] tail; only the storage
     * moved). */
   private lazy val splitTopKOracleSql: String =
     splitServeCteSql + " SELECT a_id, b_id, rn, sim FROM str WHERE rn <= 3"
@@ -6341,7 +6024,7 @@ object Similarity {
 
   /** One band probe-map CTE `<pfx>p` over [[splitServeCteSql]]'s
     * `stph` (probed-hot-cell s0sim/τ rows) and `probes`/`csh` (cool
-    * branch) — [[probeDescendBand]]'s mirror: compare-selected child,
+    * branch) — [[splitDescend]]'s mirror (margin > 0): compare-selected child,
     * PLUS the other child when the exact integer µ distance
     * |round(s0sim·1e6) − round(τ·1e6)| is inside the margin, plus
     * cool cells at cell·2. `probeWhere` restricts the probe sample

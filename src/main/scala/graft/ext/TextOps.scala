@@ -723,7 +723,8 @@ object TextOps {
     // the weight frame feeds THREE subtrees (norms + both dot-product
     // sides) — materialize it once instead of re-running the shingle
     // explode + tf + df chain per consumer (round 20; the dedup-family
-    // shared-frame rule)
+    // shared-frame rule), and free it once the small result is
+    // checkpointed (the sketchMergeFrom pattern)
     val w = tf.join(dfq, Seq("g"))
       .crossJoin(broadcast(nDocs))
       .select(col("doc_id"), col("g"),
@@ -736,12 +737,15 @@ object TextOps {
             Seq("g"))
       .filter(col("a_id") < col("b_id"))
       .groupBy("a_id", "b_id").agg(sum(col("wa") * col("wb")).as("dot"))
-    dot
+    val out = dot
       .join(nrm.select(col("doc_id").as("a_id"), col("n2").as("na")), Seq("a_id"))
       .join(nrm.select(col("doc_id").as("b_id"), col("n2").as("nb")), Seq("b_id"))
       .select(col("a_id"), col("b_id"),
         Num.rnd(col("dot") / (sqrt(col("na")) * sqrt(col("nb"))), 6).as("cos_sim"))
       .filter(col("cos_sim") >= thr)
+      .localCheckpoint()
+    org.apache.spark.sql.GraftSql.checkpointRdd(w).foreach(_.unpersist(false))
+    out
   }
 
   /** Sequence packing — the concat-and-split step that turns variable-

@@ -218,6 +218,22 @@ class TextOpsSpec extends SparkSpec {
     }
   }
 
+  test("cosine pairs free the weight checkpoint: the only RDD left " +
+       "persisted is the one the returned plan reads, and it holds the result") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val got = ext.TextOps.queries("text_cosine_pairs")(spark, sf001)
+    val n = got.collect().length.toLong
+    val left = sc.getPersistentRDDs.keySet -- before
+    val reads = got.queryExecution.analyzed
+      .collect { case l: LogicalRDD => l.rdd.id }.toSet
+    assert(left === reads && left.size === 1,
+      s"persisted after the call: $left; the returned plan reads: $reads")
+    assert(sc.getPersistentRDDs(left.head).count() === n,
+      "the persisted RDD is an intermediate, not the returned result")
+  }
+
   test("mixture plan: rates cap at 1e6 and the planned take fits the budget") {
     val rows = ext.TextOps.mixturePlan(spark, sf001).collect()
     assert(rows.nonEmpty)
