@@ -1,13 +1,19 @@
 #!/usr/bin/env python3
 """Interleaved A/B bench comparison (CLAUDE.md decomposition rule).
 
-Usage: python3 scripts/bench_ab.py A1.json B1.json [A2.json B2.json ...]
+Usage: python3 scripts/bench_ab.py [--tasks] A1.json B1.json [A2.json B2.json ...]
 
 Odd positions = build A runs, even = build B runs. For the queries
 common to both builds, prints per-family best-of-runs totals, the
 family-level B/A ratio, and anchor-query deltas. Using best-of per
 query across a build's runs suppresses the box's contention bursts
 (the ±2x rule) — the minimum is the least-contended observation.
+
+--tasks adds a per-query table of `n_tasks` from each file's
+`task_metrics` (the bench.json record): the distinct counts seen over
+each build's runs, A vs B, with every query whose counts differ marked.
+Task counts are deterministic for a fixed plan, so a mark is a plan
+change, not noise.
 """
 import json
 import sys
@@ -29,8 +35,33 @@ def load(paths):
     return dict(per_q)
 
 
+def task_counts(paths):
+    per_q = defaultdict(set)
+    for p in paths:
+        with open(p) as f:
+            d = json.load(f)
+        for q, m in d.get("task_metrics", {}).items():
+            per_q[q].add(m["n_tasks"])
+    return per_q
+
+
+def print_tasks(paths):
+    a = task_counts(paths[0::2])
+    b = task_counts(paths[1::2])
+    fmt = lambda s: "/".join(str(n) for n in sorted(s)) if s else "-"
+    print(f"\n{'query':<32} {'A_tasks':>9} {'B_tasks':>9}")
+    for q in sorted(set(a) | set(b)):
+        mark = "  <-- differs" if a.get(q) != b.get(q) else ""
+        print(f"{q:<32} {fmt(a.get(q)):>9} {fmt(b.get(q)):>9}{mark}")
+    ta = sum(min(s) for q, s in a.items() if q in b)
+    tb = sum(min(s) for q, s in b.items() if q in a)
+    print(f"{'TOTAL (common, min)':<32} {ta:>9} {tb:>9}")
+
+
 def main():
-    paths = sys.argv[1:]
+    args = sys.argv[1:]
+    tasks = "--tasks" in args
+    paths = [p for p in args if p != "--tasks"]
     a = load(paths[0::2])
     b = load(paths[1::2])
     common = sorted(set(a) & set(b))
@@ -54,6 +85,8 @@ def main():
     print("\nlargest absolute regressions (B - A seconds):")
     for q in worst:
         print(f"  {q:<28} {a[q]:>7.2f} -> {b[q]:>7.2f}  (+{b[q]-a[q]:.2f})")
+    if tasks:
+        print_tasks(paths)
 
 
 if __name__ == "__main__":

@@ -55,9 +55,10 @@ object Bench {
       // frozencents memo owner (the frozen base-half quantizer every
       // incremental/upsert/stream assignment path serves against)
       "sim_ivf_incremental_assign",
-      // incbasehome/incarrhome/incsplit0s/incsplit0a/incarrdesc memo
-      // owner (the shared frozen-base stage the report/serve/deep trio
-      // used to rebuild three times — VERDICT r18 item 2)
+      // incbasehome/incarrhome/incsplit0s/incsplit0a/incarrdesc/incbaseidx
+      // memo owner (the shared frozen-base stage and its persisted index
+      // the report/serve/deep trio used to rebuild three times — VERDICT
+      // r18 item 2)
       "sim_split_incremental",
       "sim_ivf_train", "sim_ivf_train_iter", "sim_ivf_assign_trained",
       "sim_ivf_topk", "sim_knn_mutual", "sim_pq_codes", "sim_ivfpq_topk",

@@ -689,13 +689,8 @@ object Dedup {
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
     memo.getOrElseUpdate((spark, dir, "minhash"), {
       val hs = corpusHs3(spark, dir)
-      val bands = bandsOfSigs(corpusSigs3(spark, dir))
-      val cand = bands.select(col("doc_id").as("a_id"), col("band"), col("bh"))
-        .join(bands.select(col("doc_id").as("b_id"), col("band"), col("bh")),
-              Seq("band", "bh"))
-        .filter(col("a_id") < col("b_id"))
-        .select("a_id", "b_id").distinct()
-      confirmJaccard(cand, hs, 1, 2).localCheckpoint()
+      confirmJaccard(bandCandidates(bandsOfSigs(corpusSigs3(spark, dir))), hs,
+        1, 2).localCheckpoint()
     })
 
   /** Memoized FULL-CORPUS hashed 3-gram shingle rows (doc_id, h) — the
@@ -745,14 +740,36 @@ object Dedup {
 
   /** Band buckets from an already-built signature frame — the seam that
     * lets production consumers fold the memoized [[corpusSigs3]] without
-    * re-aggregating signatures. */
-  private[graft] def bandsOfSigs(sigs: DataFrame): DataFrame = {
-    val bandStructs = array((0 until Bands).map { bId =>
-      val cols = (0 until RowsPerBand).map(r => col(s"h${bId * RowsPerBand + r}"))
+    * re-aggregating signatures; [[bandSweep]] folds the same 32 mins
+    * into `nb` bands of NumHashes / nb rows. */
+  private[graft] def bandsOfSigs(sigs: DataFrame, nb: Int = Bands): DataFrame = {
+    val rpb = NumHashes / nb
+    val bandStructs = array((0 until nb).map { bId =>
+      val cols = (0 until rpb).map(r => col(s"h${bId * rpb + r}"))
       struct(lit(bId).as("band"), bandFold(1000L + bId, cols).as("bh"))
     }: _*)
     sigs.select(col("doc_id"), explode(bandStructs).as("b"))
       .select(col("doc_id"), col("b.band").as("band"), col("b.bh").as("bh"))
+  }
+
+  /** Candidate pairs (a_id < b_id) sharing any (band, bh) bucket — the
+    * banding screen every minhash path reads. */
+  private def bandCandidates(bands: DataFrame): DataFrame =
+    bands.select(col("doc_id").as("a_id"), col("band"), col("bh"))
+      .join(bands.select(col("doc_id").as("b_id"), col("band"), col("bh")),
+            Seq("band", "bh"))
+      .filter(col("a_id") < col("b_id"))
+      .select("a_id", "b_id").distinct()
+
+  /** Exact Jaccard ≥ 1/2 truth (a_id, b_id) over every pair of `hs` docs
+    * sharing ≥ 1 hashed shingle — complete for the threshold (J ≥ 1/2 ⇒
+    * a shared shingle exists); the banding eval harnesses' ground truth. */
+  private def jaccardTruth(hs: DataFrame): DataFrame = {
+    val candAll = hs.select(col("doc_id").as("a_id"), col("h"))
+      .join(hs.select(col("doc_id").as("b_id"), col("h")), Seq("h"))
+      .filter(col("a_id") < col("b_id"))
+      .select("a_id", "b_id").distinct()
+    confirmJaccard(candAll, hs, 1, 2).select("a_id", "b_id")
   }
 
   /** The MinHash-LSH pipeline over an ARBITRARY documents frame — eager,
@@ -762,15 +779,10 @@ object Dedup {
     val grp = shingleGroups(docs, 3)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val hs = hsOf(grp)
-    val bands = bandsOf(hs)
-    val cand = bands.select(col("doc_id").as("a_id"), col("band"), col("bh"))
-      .join(bands.select(col("doc_id").as("b_id"), col("band"), col("bh")),
-            Seq("band", "bh"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
     // confirm over the SAME hashed rows the signatures came from:
     // the confirm shuffle carries (id, long), never shingle strings
-    val out = confirmJaccard(cand, hs, 1, 2).localCheckpoint()
+    val out = confirmJaccard(bandCandidates(bandsOf(hs)), hs, 1, 2)
+      .localCheckpoint()
     grp.unpersist()
     out
   }
@@ -817,40 +829,17 @@ object Dedup {
                                evalN: Long): (DataFrame, DataFrame) = {
     val hs = memo.getOrElseUpdate((spark, dir, "mhevhs", evalN),
       indexHsOf(Tables.documents(spark, dir).filter(col("doc_id") < evalN)))
-    val truth = memo.getOrElseUpdate((spark, dir, "mhevtruth", evalN), {
-      val candAll = hs.select(col("doc_id").as("a_id"), col("h"))
-        .join(hs.select(col("doc_id").as("b_id"), col("h")), Seq("h"))
-        .filter(col("a_id") < col("b_id"))
-        .select("a_id", "b_id").distinct()
-      confirmJaccard(candAll, hs, 1, 2).select("a_id", "b_id")
-        .localCheckpoint()
-    })
+    val truth = memo.getOrElseUpdate((spark, dir, "mhevtruth", evalN),
+      jaccardTruth(hs).localCheckpoint())
     (hs, truth)
   }
 
   /** [[minhashEval]]'s banding + report half over pre-built (hs, truth)
     * frames — shared by the memoized production entry and the
     * arbitrary-sample spec seam. */
-  private def minhashEvalFromHs(hs: DataFrame, truth: DataFrame): DataFrame = {
-    val bands = bandsOf(hs)
-    val cand = bands.select(col("doc_id").as("a_id"), col("band"), col("bh"))
-      .join(bands.select(col("doc_id").as("b_id"), col("band"), col("bh")),
-            Seq("band", "bh"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    val hit = truth.join(cand, Seq("a_id", "b_id"))
-    truth.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
-      .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-      .select(col("n_truth"), col("n_cand"), col("n_hit"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_micro"),
-        expr("CASE WHEN n_cand = 0 THEN CAST(0 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_cand END")
-          .as("precision_micro"))
-      .localCheckpoint()
-  }
+  private def minhashEvalFromHs(hs: DataFrame, truth: DataFrame): DataFrame =
+    Similarity.recallFold(truth, bandCandidates(bandsOf(hs)),
+      screenCount = Some("n_cand")).localCheckpoint()
 
   /** [[minhashEval]] over an arbitrary probe frame — parameterized so
     * the spec can drive it with crafted borderline-Jaccard pairs (the
@@ -858,12 +847,7 @@ object Dedup {
   private[graft] def minhashEvalOf(sample: DataFrame): DataFrame = {
     val grp = shingleGroups(sample, 3).persist(StorageLevel.MEMORY_AND_DISK)
     val hs = hsOf(grp)
-    val candAll = hs.select(col("doc_id").as("a_id"), col("h"))
-      .join(hs.select(col("doc_id").as("b_id"), col("h")), Seq("h"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    val truth = confirmJaccard(candAll, hs, 1, 2).select("a_id", "b_id")
-    val out = minhashEvalFromHs(hs, truth)
+    val out = minhashEvalFromHs(hs, jaccardTruth(hs))
     grp.unpersist()
     out
   }
@@ -890,12 +874,7 @@ object Dedup {
   private[graft] def bandSweepOf(sample: DataFrame): DataFrame = {
     val grp = shingleGroups(sample, 3).persist(StorageLevel.MEMORY_AND_DISK)
     val hs = hsOf(grp).localCheckpoint()
-    val candAll = hs.select(col("doc_id").as("a_id"), col("h"))
-      .join(hs.select(col("doc_id").as("b_id"), col("h")), Seq("h"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    val truth = confirmJaccard(candAll, hs, 1, 2)
-      .select("a_id", "b_id").localCheckpoint()
+    val truth = jaccardTruth(hs).localCheckpoint()
     val out = bandSweepFromHs(hs, truth)
     grp.unpersist()
     // the seam's working frames are dead once the 3-row result lands
@@ -909,30 +888,10 @@ object Dedup {
   private def bandSweepFromHs(hs: DataFrame, truth: DataFrame): DataFrame = {
     val sigs = sigsOf(hs).localCheckpoint()
     val out = Seq(4, 8, 16).map { nb =>
-      val rpb = NumHashes / nb
-      val bandStructs = array((0 until nb).map { bId =>
-        val cols = (0 until rpb).map(r => col(s"h${bId * rpb + r}"))
-        struct(lit(bId).as("band"), bandFold(1000L + bId, cols).as("bh"))
-      }: _*)
-      val bands = sigs.select(col("doc_id"), explode(bandStructs).as("b"))
-        .select(col("doc_id"), col("b.band").as("band"), col("b.bh").as("bh"))
-      val cand = bands.select(col("doc_id").as("a_id"), col("band"), col("bh"))
-        .join(bands.select(col("doc_id").as("b_id"), col("band"), col("bh")),
-              Seq("band", "bh"))
-        .filter(col("a_id") < col("b_id"))
-        .select("a_id", "b_id").distinct()
-      val hit = truth.join(cand, Seq("a_id", "b_id"))
-      truth.agg(count(lit(1)).as("n_truth"))
-        .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
-        .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-        .select(lit(nb).as("n_bands"), lit(rpb).as("rows_per_band"),
-                col("n_truth"), col("n_cand"), col("n_hit"),
-          expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-            "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-            .as("recall_micro"),
-          expr("CASE WHEN n_cand = 0 THEN CAST(0 AS BIGINT) " +
-            "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_cand END")
-            .as("precision_micro"))
+      Similarity.recallFold(truth, bandCandidates(bandsOfSigs(sigs, nb)),
+          screenCount = Some("n_cand"))
+        .select(lit(nb).as("n_bands"), lit(NumHashes / nb).as("rows_per_band"),
+                col("*"))
     }.reduce(_ unionByName _).orderBy("n_bands").localCheckpoint()
     org.apache.spark.sql.GraftSql.checkpointRdd(sigs)
       .foreach(_.unpersist(false))

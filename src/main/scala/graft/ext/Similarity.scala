@@ -439,7 +439,7 @@ object Similarity {
   // [[splitDescend]] (one probe descent step at a band margin),
   // [[splitServe]] (descend every round's model, serve top-3),
   // [[persistSplitIndex]] (write, then serve from the reload) and
-  // [[recallVsSharedTruth]] — over one row of parameters:
+  // [[recallFold]] — over one row of parameters:
   //
   //   query                          quantizer  depth  probe       maintenance  persisted
   //   sim_cell_split / _trained      stub/Lloyd 1      —           full         no (report)
@@ -645,14 +645,18 @@ object Similarity {
       .write.mode("overwrite").partitionBy(byCol).parquet(path)
 
   /** Write (vec_id, ncell) postings partitioned by ncell and reload
-    * them; the partition column comes back as the directory's inferred
-    * INT and is cast back to LONG so the serve joins stay
-    * type-identical. */
+    * them ([[readPostings]]). */
   private def persistPostings(spark: SparkSession, postings: DataFrame,
                               path: String): DataFrame = {
     writePostings(postings, "ncell", path)
-    spark.read.parquet(path).withColumn("ncell", col("ncell").cast("long"))
+    readPostings(spark, path)
   }
+
+  /** Persisted postings at `path`; the partition column comes back as
+    * the directory's inferred INT and is cast back to LONG so the serve
+    * joins stay type-identical. */
+  private def readPostings(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path).withColumn("ncell", col("ncell").cast("long"))
 
   /** Persist a split index — postings plus ONE model table, a `round`
     * column carrying each round's (cell, sv, snrm, tau) when there is
@@ -740,7 +744,7 @@ object Similarity {
     * the frontier's `trained` leg. */
   def trainedRecallEval(spark: SparkSession, dir: String,
                         probeN: Long = 100): DataFrame =
-    recallVsSharedTruth(spark, dir, ivfTopKTrained(spark, dir), probeN)
+    sharedTruthRecall(spark, dir, ivfTopKTrained(spark, dir), probeN)
 
   /** Recall of the TRAINED split serve — the `trainedsplit` leg.
     * Pointwise ≤ the `trained` leg: a global top-3 item survives any
@@ -748,7 +752,7 @@ object Similarity {
     * candidate set (CellSplitSpec pins the inequality). */
   def trainedSplitRecallEval(spark: SparkSession, dir: String,
                              probeN: Long = 100): DataFrame =
-    recallVsSharedTruth(spark, dir, splitTopKTrained(spark, dir), probeN)
+    sharedTruthRecall(spark, dir, splitTopKTrained(spark, dir), probeN)
 
   /** Search over the SPLIT index (sim_split_topk) — the APPLY half of
     * [[cellSplit]]: candidates in a split cell drop to ~occupancy/2 per
@@ -787,20 +791,53 @@ object Similarity {
     * has NO hot cell, so the persisted model is legitimately EMPTY;
     * the spec fixture drives the non-empty-model path. */
   def splitIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val (occ, assigned1, _, _) = splitIncrementalParts(spark, dir, "report")
+    val (occ, assigned1, _, _) = splitIncrementalParts(spark, dir)
     cellSplitReportOf(occ, assigned1)
   }
 
   /** The incremental chain's lazy working frames — (combined occupancy,
     * incremental-round child picks, FINAL depth-2 assignment, per-round
-    * models). `tag` keys the scratch paths PER CALLER (report vs serve
-    * vs deep — see [[persistSplitIndex]]). */
-  private def splitIncrementalParts(spark: SparkSession, dir: String,
-                                    tag: String)
+    * models) — for the batch trio's canonical arrivals. */
+  private def splitIncrementalParts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) =
-    splitIncrementalPartsFrom(spark, dir, incBaseHome(spark, dir),
-      frozenHalf(spark, dir, "incarrhome", base = false), tag,
-      memoArrDesc = true)
+    splitIncrementalPartsFrom(spark, dir,
+      frozenHalf(spark, dir, "incarrhome", base = false), memoArrDesc = true)
+
+  /** The (postings, model) paths of the frozen base's persisted split
+    * index for this (session, dir): the session's id and a name-based
+    * UUID of `dir`, so no other session or corpus shares them. */
+  private[graft] def incBasePaths(spark: SparkSession,
+                                  dir: String): (String, String) = {
+    val id = org.apache.spark.sql.GraftSql.sessionId(spark) + "_" +
+      java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8"))
+    (Tables.scratch(s"split_inc_base_postings_$id"),
+     Tables.scratch(s"split_inc_base_model_$id"))
+  }
+
+  /** The frozen base's depth-1 split index, persisted ONCE per (session,
+    * dir) at [[incBasePaths]] and never overwritten, so no caller can
+    * invalidate another's not-yet-materialized reload (the
+    * [[persistSplitIndex]] rule). The base round is a pure function of
+    * the canonical [[incBaseHome]], so its model and picks are memoized
+    * (incsplit0s/incsplit0a), and so is the postings reload (memo
+    * "incbaseidx": later callers skip the partition listing) — all
+    * owned by sim_split_incremental. A rebuild after an eviction reads
+    * the files already written (the model's _SUCCESS marks a complete
+    * index: it is written last). Returns (postings path, postings
+    * reload, model reload). */
+  private def incBaseIndex(spark: SparkSession, dir: String)
+      : (String, DataFrame, DataFrame) = {
+    val (postingsPath, modelPath) = incBasePaths(spark, dir)
+    val base = splitRound(spark, dir, incBaseHome(spark, dir),
+      Some(("incsplit0s", "incsplit0a")))
+    val postings = CkptMemo.getOrElseUpdate((spark, dir, "incbaseidx"),
+      if (new java.io.File(modelPath, "_SUCCESS").exists())
+        readPostings(spark, postingsPath)
+      else persistSplitIndex(spark, base.postings, Seq(base.seeds),
+        postingsPath, modelPath)._1)
+    (postingsPath, postings,
+     spark.read.schema(base.seeds.schema).parquet(modelPath))
+  }
 
   /** The frozen-quantizer BASE home assignment (vec_id < n/2) —
     * identical across the three incremental queries and the
@@ -821,32 +858,22 @@ object Similarity {
         .select("vec_id", "cell").localCheckpoint()
     })
 
-  /** [[splitIncrementalParts]] over an EXPLICIT (base home, arrival
-    * home) pair — the seam
-    * [[graft.streaming.VecStream.maintainFromSignalToParquet]] shares
-    * with the batch chain, so stream- and batch-detected maintenance
-    * are one code path. `hotParents` (the stream signal's
+  /** [[splitIncrementalParts]] over an EXPLICIT arrival home — the
+    * seam [[graft.streaming.VecStream.maintainFromSignalToParquet]]
+    * shares with the batch chain, so stream- and batch-detected
+    * maintenance are one code path over the one persisted base index
+    * ([[incBaseIndex]]). `hotParents` (the stream signal's
     * split_needed COARSE cells) restricts the new-hot scan to those
     * cells' children — a provable NO-OP on the result (a hot ncell's
     * parent is always flagged; StreamingSpec pins report equality). */
   private[ext] def splitIncrementalPartsFrom(spark: SparkSession,
                                              dir: String,
-                                             baseHome: DataFrame,
                                              arrHome0: DataFrame,
-                                             tag: String,
                                              hotParents: Option[Seq[Long]] =
                                                None,
                                              memoArrDesc: Boolean = false)
       : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
-    // the base round is a pure function of the canonical baseHome
-    // (every caller passes the SAME frozen-quantizer assignment for a
-    // given (session, dir)), so its model and picks are memoized
-    // (incsplit0s/incsplit0a, owner sim_split_incremental)
-    val base = splitRound(spark, dir, baseHome,
-      Some(("incsplit0s", "incsplit0a")))
-    val postingsPath = Tables.scratch(s"split_inc_postings_$tag")
-    val (reloaded, Seq(model)) = persistSplitIndex(spark, base.postings,
-      Seq(base.seeds), postingsPath, Tables.scratch(s"split_inc_model_$tag"))
+    val (postingsPath, reloaded, model) = incBaseIndex(spark, dir)
     // the arrival descent is canonical only for the batch trio (the
     // stream seam descends ITS OWN arrHome) — memoized behind the
     // caller flag (memo "incarrdesc", same owner)
@@ -914,8 +941,7 @@ object Similarity {
                                               postingsOut: String,
                                               modelsOut: String): DataFrame = {
     val (occ, assigned1, finalA, models) = splitIncrementalPartsFrom(
-      spark, dir, incBaseHome(spark, dir), arrHome, "stream",
-      Some(flaggedCells))
+      spark, dir, arrHome, Some(flaggedCells))
     persistSplitIndex(spark, finalA.withColumnRenamed("cell", "ncell"),
       models, postingsOut, modelsOut)
     cellSplitReportOf(occ, assigned1)
@@ -943,7 +969,7 @@ object Similarity {
     * legitimately EMPTY at sf0.01. The oracle rebuilds the chain from
     * scratch — hash equality proves maintained ≡ from-scratch serving. */
   def splitIncrementalServe(spark: SparkSession, dir: String): DataFrame = {
-    val (_, _, finalA, models) = splitIncrementalParts(spark, dir, "serve")
+    val (_, _, finalA, models) = splitIncrementalParts(spark, dir)
     val (postings, reloaded) = persistSplitIndex(spark,
       finalA.withColumnRenamed("cell", "ncell"), models,
       Tables.scratch("split_inc2_postings"), Tables.scratch("split_inc2_models"))
@@ -964,7 +990,7 @@ object Similarity {
     * settled stats (the oracle's bijective ×2 relabel preserves
     * n_cells/n_hot/max_occ, so hash equality holds). */
   def splitIncrementalDeep(spark: SparkSession, dir: String): DataFrame = {
-    val (occ0, _, finalA0, _) = splitIncrementalParts(spark, dir, "deep")
+    val (occ0, _, finalA0, _) = splitIncrementalParts(spark, dir)
     var asg = finalA0
     var snaps = Seq(occSnap(0, occ0))
     for (k <- 2 to SplitDepth) {
@@ -1049,39 +1075,50 @@ object Similarity {
     * `split` leg. */
   def splitRecallEval(spark: SparkSession, dir: String,
                       probeN: Long = 100): DataFrame =
-    recallVsSharedTruth(spark, dir, splitTopK(spark, dir), probeN)
+    sharedTruthRecall(spark, dir, splitTopK(spark, dir), probeN)
 
   /** Recall of the depth-[[SplitDepth]] serve — the `deepsplit` leg. */
   def splitDeepRecallEval(spark: SparkSession, dir: String,
                           probeN: Long = 100): DataFrame =
-    recallVsSharedTruth(spark, dir, splitDeepTopK(spark, dir), probeN)
+    sharedTruthRecall(spark, dir, splitDeepTopK(spark, dir), probeN)
 
   /** The eval family's probe-sample predicate: the leading probeN ids
     * (vec_id < probeN — the oracle literal 100). */
   private def probeSample(probeN: Long, id: Column): Column = id < lit(probeN)
 
-  /** The shared-truth recall fold: screen hits vs the memoized exact
-    * top-3 per probe — one metric row (the eval-family shape), shared
-    * by every split leg and the band sweep's arms so their metric forms
-    * can never drift. */
-  private def recallVsSharedTruth(spark: SparkSession, dir: String,
-                                  served: DataFrame,
-                                  probeN: Long): DataFrame = {
-    val exact = exactTruthTop3(spark, dir, probeN)
-    val screen = served
-      .filter(probeSample(probeN, col("a_id")))
-      .select("a_id", "b_id")
-    val hit = exact.join(screen, Seq("a_id", "b_id"))
-    exact.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(screen.agg(count(lit(1)).as("n_screen")))
-      .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-      .select(col("n_truth"), col("n_screen"), col("n_hit"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_micro"),
-        expr("CASE WHEN n_screen = 0 THEN CAST(0 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_screen END")
-          .as("precision_micro"))
+  /** A served frame's (a_id, b_id) rows for the probe sample. */
+  private def probeSlice(served: DataFrame, probeN: Long): DataFrame =
+    served.filter(probeSample(probeN, col("a_id"))).select("a_id", "b_id")
+
+  /** The [[recallFold]] of a served frame's probe slice against the
+    * SHARED exact truth — the body of every leg whose screen is a plain
+    * serve. */
+  private def sharedTruthRecall(spark: SparkSession, dir: String,
+                                served: DataFrame, probeN: Long): DataFrame =
+    recallFold(exactTruthTop3(spark, dir, probeN), probeSlice(served, probeN))
+
+  /** One-row, left-deep cross join of each frame's row count, in order. */
+  private def countRow(frames: (DataFrame, String)*): DataFrame =
+    frames.map { case (f, n) => f.agg(count(lit(1)).as(n)) }.reduce(_ crossJoin _)
+
+  /** THE recall fold of every eval query: a (a_id, b_id) screen's hits
+    * against a truth frame, as one metric row of counts crossed
+    * left-deep — `lead`'s (a sweep arm's extra counts, first), n_truth,
+    * the screen count (named `screenCount`), n_hit — then recall_micro
+    * (1e6 on an empty truth) and precision_micro (0 on an empty screen).
+    * A recall-only row (no `screenCount`) plans no screen count and has
+    * no precision. Callers slice their own screens, so the fold adds no
+    * filter. */
+  private[graft] def recallFold(truth: DataFrame, screen: DataFrame,
+                                screenCount: Option[String] = Some("n_screen"),
+                                lead: Seq[(DataFrame, String)] = Nil)
+      : DataFrame = {
+    val hit = truth.join(screen, Seq("a_id", "b_id"))
+    val ratios = Num.micro("n_hit", "n_truth", 1000000L).as("recall_micro") +:
+      screenCount.map(n => Num.micro("n_hit", n, 0L).as("precision_micro")).toSeq
+    countRow(lead ++ Seq(truth -> "n_truth") ++ screenCount.map(screen -> _) :+
+        (hit -> "n_hit"): _*)
+      .select(col("*") +: ratios: _*)
   }
 
   /** Margin (µ-cosine) for the BOUNDARY DUAL-PROBE band
@@ -1141,7 +1178,7 @@ object Similarity {
   /** Recall of the band serve — the frontier's `band` leg. */
   def splitBandRecallEval(spark: SparkSession, dir: String,
                           probeN: Long = 100): DataFrame =
-    recallVsSharedTruth(spark, dir, splitBandTopK(spark, dir), probeN)
+    sharedTruthRecall(spark, dir, splitBandTopK(spark, dir), probeN)
 
   /** Band-margin SWEEP (sim_split_band_sweep) — one row per grid margin
     * with the candidate count (the cost axis) and the shared-truth
@@ -1162,10 +1199,13 @@ object Similarity {
     SplitBandSweepMargins.map { m =>
       val cand = splitCandidates(spark, dir, r.postings, Seq(r.seeds),
         probed, m)
-      // the candidate count streams first: with the fold first the arm
-      // shuffled 3 % more bytes (sf0.1, graft.Bench)
-      cand.agg(count(lit(1)).as("n_cand"))
-        .crossJoin(recallVsSharedTruth(spark, dir, serveTop3(cand), probeN))
+      // the candidate count leads the fold's left-deep chain: with the
+      // fold first the arm shuffled 3 % more bytes, and with the fold as
+      // one right-deep subtree it ran 4 more tasks (sf0.1, graft.Bench);
+      // the probes already are the probe sample, so the screen is not
+      // sliced again
+      recallFold(exactTruthTop3(spark, dir, probeN),
+          serveTop3(cand).select("a_id", "b_id"), lead = Seq(cand -> "n_cand"))
         .select(lit(m).as("margin_micro"), col("n_cand"), col("n_truth"),
           col("n_screen"), col("n_hit"), col("recall_micro"))
     }.reduce(_ unionByName _).orderBy("margin_micro")
@@ -1510,23 +1550,39 @@ object Similarity {
   private[ext] def exactTruthRanked(spark: SparkSession, dir: String,
                                     probeN: Long): DataFrame =
     CkptMemo.getOrElseUpdate((spark, dir, "simtruth", probeN), {
-      import org.apache.spark.sql.expressions.Window
       val emb = embWithNrm(spark, dir)
-      val q = emb.filter(probeSample(probeN, col("vec_id")))
-        .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
-                col("nrm").as("qnrm"))
-      val w = Window.partitionBy("a_id")
-        .orderBy(col("sim").desc, col("b_id").asc)
-      fanOut(emb).crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("a_id"))
-        .select(col("a_id"), col("vec_id").as("b_id"),
-                Num.rnd(dotCols(col("embedding"), col("qv")) /
-                          (col("nrm") * col("qnrm")), 6).as("sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= TruthDepth)
-        .select("a_id", "b_id", "rn")
+      probeRanked(emb, probeVecs(emb, probeN), cosineToProbe, TruthDepth)
         .localCheckpoint()
     })
+
+  /** The probe sample of a (vec_id, embedding, nrm) frame as the probe
+    * side (a_id, qv, qnrm) of [[probeRanked]]. */
+  private def probeVecs(emb: DataFrame, probeN: Long): DataFrame =
+    emb.filter(probeSample(probeN, col("vec_id")))
+      .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
+              col("nrm").as("qnrm"))
+
+  /** The exact 6-dp cosine of a corpus row (embedding, nrm) to its
+    * probe (qv, qnrm). */
+  private def cosineToProbe: Column =
+    Num.rnd(dotCols(col("embedding"), col("qv")) / (col("nrm") * col("qnrm")), 6)
+
+  /** THE brute-force probe ranking of the eval family: one streamed pass
+    * of `corpus` (vec_id, …) against the broadcast `probes` (a_id, …),
+    * self-pairs dropped, rows passing `keep`, ranked per probe by
+    * (`sim` desc, b_id asc) — (a_id, b_id, rn) for rn ≤ k. The
+    * brute-force cost is paid for the probe sample, never n². */
+  private def probeRanked(corpus: DataFrame, probes: DataFrame, sim: Column,
+                          k: Int, keep: Column = lit(true)): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
+    fanOut(corpus).crossJoin(broadcast(probes))
+      .filter(col("vec_id") =!= col("a_id") && keep)
+      .select(col("a_id"), col("vec_id").as("b_id"), sim.as("sim"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select("a_id", "b_id", "rn")
+  }
 
   private[ext] def exactTruthTop3(spark: SparkSession, dir: String,
                                   probeN: Long): DataFrame =
@@ -1543,22 +1599,13 @@ object Similarity {
   def nnDescentEval(spark: SparkSession, dir: String,
                     probeN: Long = 100): DataFrame = {
     val exact = exactTruthTop3(spark, dir, probeN)
-    val base = ivfTopK(spark, dir).filter(probeSample(probeN, col("a_id")))
-      .select("a_id", "b_id")
-    val ref = nnDescent(spark, dir).filter(probeSample(probeN, col("a_id")))
-      .select("a_id", "b_id")
-    exact.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(exact.join(base, Seq("a_id", "b_id"))
-        .agg(count(lit(1)).as("n_hit_base")))
-      .crossJoin(exact.join(ref, Seq("a_id", "b_id"))
-        .agg(count(lit(1)).as("n_hit_ref")))
-      .select(col("n_truth"), col("n_hit_base"), col("n_hit_ref"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-          "ELSE (n_hit_base * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_base_micro"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-          "ELSE (n_hit_ref * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_ref_micro"))
+    def hits(served: DataFrame) =
+      exact.join(probeSlice(served, probeN), Seq("a_id", "b_id"))
+    countRow(exact -> "n_truth", hits(ivfTopK(spark, dir)) -> "n_hit_base",
+        hits(nnDescent(spark, dir)) -> "n_hit_ref")
+      .select(col("*"),
+        Num.micro("n_hit_base", "n_truth", 1000000L).as("recall_base_micro"),
+        Num.micro("n_hit_ref", "n_truth", 1000000L).as("recall_ref_micro"))
   }
 
   /** ANN recall EVAL HARNESS — the [[Dedup.minhashEval]] counterpart
@@ -1577,23 +1624,8 @@ object Similarity {
     * nprobe, or the bucket cap change. Tie-breaks ride the 6-dp-rounded
     * sim + vec_id order, so both engines rank identically. */
   def ivfRecallEval(spark: SparkSession, dir: String,
-                    probeN: Long = 100): DataFrame = {
-    val exact = exactTruthTop3(spark, dir, probeN)
-    val screen = ivfTopK(spark, dir)
-      .filter(probeSample(probeN, col("a_id")))
-      .select("a_id", "b_id")
-    val hit = exact.join(screen, Seq("a_id", "b_id"))
-    exact.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(screen.agg(count(lit(1)).as("n_screen")))
-      .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-      .select(col("n_truth"), col("n_screen"), col("n_hit"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_micro"),
-        expr("CASE WHEN n_screen = 0 THEN CAST(0 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_screen END")
-          .as("precision_micro"))
-  }
+                    probeN: Long = 100): DataFrame =
+    sharedTruthRecall(spark, dir, ivfTopK(spark, dir), probeN)
 
   /** Recall@k CURVE — the other axis of the [[nprobeSweep]] tuning
     * table: at fixed nprobe, how does the index degrade as the caller
@@ -1626,12 +1658,8 @@ object Similarity {
     nt.join(ns, Seq("k")).join(nh, Seq("k"), "left")
       .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
       .select(col("k"), col("n_truth"), col("n_screen"), col("n_hit"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-             "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_micro"),
-        expr("CASE WHEN n_screen = 0 THEN CAST(0 AS BIGINT) " +
-             "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_screen END")
-          .as("precision_micro"))
+        Num.micro("n_hit", "n_truth", 1000000L).as("recall_micro"),
+        Num.micro("n_hit", "n_screen", 0L).as("precision_micro"))
       .orderBy("k")
   }
 
@@ -1763,34 +1791,15 @@ object Similarity {
     * thins each bucket. */
   def filteredRecallEval(spark: SparkSession, dir: String,
                          probeN: Long = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), col("label"),
               sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
     val q = emb.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
               col("label").as("qlabel"), col("nrm").as("qnrm"))
-    val w = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
-    val truth = fanOut(emb).crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("a_id") && col("label") === col("qlabel"))
-      .select(col("a_id"), col("vec_id").as("b_id"),
-              Num.rnd(dotCols(col("embedding"), col("qv")) /
-                        (col("nrm") * col("qnrm")), 6).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select("a_id", "b_id")
-    val screen = filteredTopK(spark, dir, probeN).select("a_id", "b_id")
-    val hit = truth.join(screen, Seq("a_id", "b_id"))
-    truth.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(screen.agg(count(lit(1)).as("n_screen")))
-      .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-      .select(col("n_truth"), col("n_screen"), col("n_hit"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_micro"),
-        expr("CASE WHEN n_screen = 0 THEN CAST(0 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_screen END")
-          .as("precision_micro"))
+    val truth = probeRanked(emb, q, cosineToProbe, 3,
+      keep = col("label") === col("qlabel")).select("a_id", "b_id")
+    recallFold(truth, filteredTopK(spark, dir, probeN).select("a_id", "b_id"))
   }
 
   /** nprobe SWEEP — the tuning table behind the [[NProbe]] doc's
@@ -1817,9 +1826,7 @@ object Similarity {
       .select(col("vec_id").as("cell"), col("embedding").as("cv"),
               col("nrm").as("cnrm"))
     val wp = Window.partitionBy("a_id").orderBy(col("csim").desc, col("cell").asc)
-    val probeRanks = emb.filter(probeSample(probeN, col("vec_id")))
-      .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
-              col("nrm").as("qnrm"))
+    val probeRanks = probeVecs(emb, probeN)
       .crossJoin(broadcast(cents))
       .select(col("a_id"), col("qv"), col("qnrm"), col("cell"),
               Num.rnd(dotCols(col("qv"), col("cv")) /
@@ -1849,16 +1856,9 @@ object Similarity {
       val ck = candCk.filter(col("prn") <= k)
       val scr = ck.withColumn("rn", row_number().over(wr))
         .filter(col("rn") <= 3).select("a_id", "b_id")
-      exact.agg(count(lit(1)).as("n_truth"))
-        .crossJoin(ck.agg(count(lit(1)).as("n_cand")))
-        .crossJoin(scr.agg(count(lit(1)).as("n_screen")))
-        .crossJoin(exact.join(scr, Seq("a_id", "b_id"))
-                     .agg(count(lit(1)).as("n_hit")))
+      recallFold(exact, scr, lead = Seq(ck -> "n_cand"))
         .select(lit(k).as("nprobe"), col("n_cand"), col("n_truth"),
-                col("n_screen"), col("n_hit"),
-          expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-               "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-            .as("recall_micro"))
+                col("n_screen"), col("n_hit"), col("recall_micro"))
     }.reduce(_ unionByName _).orderBy("nprobe")
   }
 
@@ -1964,51 +1964,37 @@ object Similarity {
                      probeN: Long = 100): DataFrame =
     // memoized 1-row result ("int8recall", owner sim_eval_frontier —
     // the jlrecall rule, round 20)
-    CkptMemo.getOrElseUpdate((spark, dir, "int8recall", probeN),
-      int8RecallEvalUncached(spark, dir, probeN).localCheckpoint())
+    CkptMemo.getOrElseUpdate((spark, dir, "int8recall", probeN), {
+      val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+      val st = base.select(col("vec_id"), col("embedding"),
+        array_min(col("embedding")).cast("double").as("mn"),
+        array_max(col("embedding")).cast("double").as("mx"))
+      // code = least(255, floor((v-mn)/(mx-mn)*255))  — quantize's formula;
+      // dequant = mn + code*(mx-mn)/255 (code cast back to double)
+      val dqv = transform(col("embedding"), v =>
+        when(col("mx") > col("mn"),
+          col("mn") +
+            least(lit(255L), floor((v.cast("double") - col("mn")) /
+                                   (col("mx") - col("mn")) * 255)).cast("double") *
+            (col("mx") - col("mn")) / lit(255.0))
+          .otherwise(col("mn")))
+      val dq = st.select(col("vec_id"), dqv.as("d"))
+        .select(col("vec_id"), col("d"),
+                sqrt(dotCols(col("d"), col("d"))).as("dnrm"))
+      val q = base.filter(probeSample(probeN, col("vec_id")))
+        .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
+                sqrt(dotCols(col("embedding"), col("embedding"))).as("qnrm"))
+      approxRecall(spark, dir, probeN, probeRanked(dq, q,
+        Num.rnd(dotCols(col("d"), col("qv")) / (col("dnrm") * col("qnrm")), 6), 3))
+    })
 
-  private def int8RecallEvalUncached(spark: SparkSession, dir: String,
-                                     probeN: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val st = base.select(col("vec_id"), col("embedding"),
-      array_min(col("embedding")).cast("double").as("mn"),
-      array_max(col("embedding")).cast("double").as("mx"))
-    // code = least(255, floor((v-mn)/(mx-mn)*255))  — quantize's formula;
-    // dequant = mn + code*(mx-mn)/255 (code cast back to double)
-    val dqv = transform(col("embedding"), v =>
-      when(col("mx") > col("mn"),
-        col("mn") +
-          least(lit(255L), floor((v.cast("double") - col("mn")) /
-                                 (col("mx") - col("mn")) * 255)).cast("double") *
-          (col("mx") - col("mn")) / lit(255.0))
-        .otherwise(col("mn")))
-    val dq = st.select(col("vec_id"), dqv.as("d"))
-      .select(col("vec_id"), col("d"),
-              sqrt(dotCols(col("d"), col("d"))).as("dnrm"))
-    val q = base.filter(probeSample(probeN, col("vec_id")))
-      .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
-              sqrt(dotCols(col("embedding"), col("embedding"))).as("qnrm"))
-    val w = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
-    def top3(corpus: DataFrame, vec: Column, nrm: Column): DataFrame =
-      fanOut(corpus).crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("a_id"))
-        .select(col("a_id"), col("vec_id").as("b_id"),
-                Num.rnd(dotCols(vec, col("qv")) / (nrm * col("qnrm")), 6)
-                  .as("sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select("a_id", "b_id")
-    val truth = exactTruthTop3(spark, dir, probeN)
-    val approx = top3(dq, col("d"), col("dnrm"))
-    val hit = truth.join(approx, Seq("a_id", "b_id"))
-    truth.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-      .select(col("n_truth"), col("n_hit"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_micro"))
-  }
+  /** The recall-only [[recallFold]] of an approximate top-3 against the
+    * SHARED exact truth, checkpointed — the memoized body of the int8,
+    * JL and Matryoshka legs. */
+  private def approxRecall(spark: SparkSession, dir: String, probeN: Long,
+                           ranked: DataFrame): DataFrame =
+    recallFold(exactTruthTop3(spark, dir, probeN), ranked.select("a_id", "b_id"),
+      screenCount = None).localCheckpoint()
 
   // ---- sign-bit binary quantization (Hamming index) ----
 
@@ -2076,9 +2062,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val short = signShortlist(spark, dir, probeN)
     val emb = embWithNrm(spark, dir)
-    val q = emb.filter(probeSample(probeN, col("vec_id")))
-      .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
-              col("nrm").as("qnrm"))
+    val q = probeVecs(emb, probeN)
     val wS = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
     short
       .join(emb.select(col("vec_id").as("b_id"), col("embedding").as("bv"),
@@ -2104,24 +2088,9 @@ object Similarity {
     // memoized 1-row result ("signrecall", owner sim_eval_frontier —
     // the jlrecall rule, round 20)
     CkptMemo.getOrElseUpdate((spark, dir, "signrecall", probeN),
-      signRecallEvalUncached(spark, dir, probeN).localCheckpoint())
-
-  private def signRecallEvalUncached(spark: SparkSession, dir: String,
-                                     probeN: Long): DataFrame = {
-    val truth = exactTruthTop3(spark, dir, probeN)
-    val screen = signShortlist(spark, dir, probeN).select("a_id", "b_id")
-    val hit = truth.join(screen, Seq("a_id", "b_id"))
-    truth.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(screen.agg(count(lit(1)).as("n_screen")))
-      .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-      .select(col("n_truth"), col("n_screen"), col("n_hit"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_micro"),
-        expr("CASE WHEN n_screen = 0 THEN CAST(0 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_screen END")
-          .as("precision_micro"))
-  }
+      recallFold(exactTruthTop3(spark, dir, probeN),
+        signShortlist(spark, dir, probeN).select("a_id", "b_id"))
+        .localCheckpoint())
 
   // ---- reciprocal-rank fusion of two retrieval tiers ----
 
@@ -2194,21 +2163,9 @@ object Similarity {
     * surfacing in BOTH cheap tiers) is a better top-3 signal than
     * either tier's own score. */
   def rrfRecallEval(spark: SparkSession, dir: String,
-                    probeN: Long = 100): DataFrame = {
-    val truth = exactTruthTop3(spark, dir, probeN)
-    val screen = rrfFusion(spark, dir, probeN).select("a_id", "b_id")
-    val hit = truth.join(screen, Seq("a_id", "b_id"))
-    truth.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(screen.agg(count(lit(1)).as("n_screen")))
-      .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-      .select(col("n_truth"), col("n_screen"), col("n_hit"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_micro"),
-        expr("CASE WHEN n_screen = 0 THEN CAST(0 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_screen END")
-          .as("precision_micro"))
-  }
+                    probeN: Long = 100): DataFrame =
+    recallFold(exactTruthTop3(spark, dir, probeN),
+      rrfFusion(spark, dir, probeN).select("a_id", "b_id"))
 
   // ---- greedy graph search over the mutual-kNN graph (HNSW layer-0) ----
 
@@ -2249,9 +2206,7 @@ object Similarity {
     val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
       .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
     val emb = embWithNrm(spark, dir)
-    val probes = emb.filter(probeSample(probeN, col("vec_id")))
-      .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
-              col("nrm").as("qnrm"))
+    val probes = probeVecs(emb, probeN)
     val wE = Window.partitionBy("a_id").orderBy(col("hd").asc, col("b_id").asc)
     val w = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
     var beam: DataFrame = signShortlist(spark, dir, probeN)
@@ -2290,17 +2245,10 @@ object Similarity {
     * probe (plus the binary screen) where IVF touches
     * O(corpus/cells·nprobe). */
   def graphSearchEval(spark: SparkSession, dir: String,
-                      probeN: Long = 100): DataFrame = {
-    val truth = exactTruthTop3(spark, dir, probeN)
-    val found = graphSearch(spark, dir, probeN).select("a_id", "b_id")
-    val hit = truth.join(found, Seq("a_id", "b_id"))
-    truth.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-      .select(col("n_truth"), col("n_hit"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_micro"))
-  }
+                      probeN: Long = 100): DataFrame =
+    recallFold(exactTruthTop3(spark, dir, probeN),
+      graphSearch(spark, dir, probeN).select("a_id", "b_id"),
+      screenCount = None)
 
   /** Beam-walk chain through `gsb2` (a_id, b_id, sim, rn ≤ 4) —
     * oracle mirror of [[graphSearch]], shared by sim_graph_search and
@@ -2332,11 +2280,12 @@ object Similarity {
   }
 
   /** The recall-vs-method FRONTIER — the one-table summary an ANN
-    * deployment decision actually reads: all ten single-number recall
-    * evals (IVF index, sign-bit binary, int8, JL projection,
-    * Matryoshka prefix, graph walk, NN-descent, RRF fusion, split
-    * index, recursive split index) side by side under the SAME fixed
-    * probe set and truth definition. Pure composition: each leg IS the
+    * deployment decision actually reads: all thirteen single-number
+    * recall evals (IVF index, Lloyd-trained IVF, sign-bit binary, int8,
+    * JL projection, Matryoshka prefix, graph walk, NN-descent, RRF
+    * fusion, split index, band dual-probe split, recursive split index,
+    * trained split index) side by side under the SAME fixed probe set
+    * and truth definition. Pure composition: each leg IS the
     * registered eval query (Spark functions and oracle SQL both —
     * lockstep by construction), so the frontier can never disagree
     * with its legs. */
@@ -2376,13 +2325,22 @@ object Similarity {
     }.reduce(_.unionByName(_)).orderBy("method")
   }
 
+  /** How long [[runLegs]] waits for all its legs — far above any
+    * frontier build (seconds at sf0.1), so only a hung leg reaches it. */
+  private val LegDeadline = java.time.Duration.ofMinutes(30)
+
   /** Runs `legs` concurrently on `threads` named daemon threads and
     * returns their results in input order. Every leg settles before a
     * failure surfaces: the first failing leg's exception (in input
     * order) is rethrown with the other legs' failures attached as
-    * suppressed, so no leg is left running detached. */
-  private[graft] def runLegs[A](legs: Seq[(String, () => A)],
-                                threads: Int): Seq[(String, A)] = {
+    * suppressed, so no leg is left running detached. A leg still
+    * running at `deadline` (from the start) is cancelled, and a
+    * TimeoutException naming every such leg is thrown instead, with
+    * the failed legs' exceptions attached as suppressed. */
+  private[graft] def runLegs[A](legs: Seq[(String, () => A)], threads: Int,
+                                deadline: java.time.Duration = LegDeadline)
+      : Seq[(String, A)] = {
+    import java.util.concurrent.{ExecutionException, TimeUnit, TimeoutException}
     val n = new java.util.concurrent.atomic.AtomicInteger
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads,
       (r: Runnable) => {
@@ -2390,16 +2348,26 @@ object Similarity {
         t.setDaemon(true)
         t
       })
+    val end = System.nanoTime() + deadline.toNanos
+    // Left(None) = still running at the deadline
     val settled =
       try legs.map { case (m, f) => (m, pool.submit[A](() => f())) }.map {
-        case (m, fut) => (m, try Right(fut.get()) catch {
-          case e: java.util.concurrent.ExecutionException => Left(e.getCause)
-        })
-      } finally pool.shutdown()
-    val failures = settled.collect { case (_, Left(e)) => e }
-    failures.headOption.foreach { first =>
-      failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
-      throw first
+        case (m, fut) => (m, try Right(fut.get(
+            math.max(0L, end - System.nanoTime()), TimeUnit.NANOSECONDS))
+          catch {
+            case e: ExecutionException => Left(Some(e.getCause))
+            case _: TimeoutException => fut.cancel(true); Left(None)
+          })
+      } finally pool.shutdownNow()
+    val hung = settled.collect { case (m, Left(None)) => m }
+    val failures = settled.collect { case (_, Left(Some(e))) => e }
+    val first: Option[Throwable] =
+      if (hung.nonEmpty) Some(new TimeoutException(
+        s"legs ${hung.mkString(", ")} still running after $deadline; cancelled"))
+      else failures.headOption
+    first.foreach { e =>
+      failures.filterNot(_ eq e).foreach(e.addSuppressed)
+      throw e
     }
     settled.collect { case (m, Right(a)) => (m, a) }
   }
@@ -2464,45 +2432,24 @@ object Similarity {
     // frontier runs first and this eval IS its jl leg; the standalone
     // query re-ran the whole probe×corpus JL ranking before round 20);
     // keyed by probeN per the simtruth rule
-    CkptMemo.getOrElseUpdate((spark, dir, "jlrecall", probeN),
-      jlRecallEvalUncached(spark, dir, probeN).localCheckpoint())
-
-  private def jlRecallEvalUncached(spark: SparkSession, dir: String,
-                                   probeN: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // codegen exact-int64 dot (graft.functions.ArrayDotLong) — the
-    // probe×corpus candidate join is the JL serve's O(n·probes) inner
-    // loop; the interpreted aggregate/zip_with HOF chain it replaces is
-    // the spec reference (ArrayDotLongSpec pins value identity). Σx² is
-    // the self-dot instance.
-    val nsq = graft.functions.ArrayDotLong.col(col("jl"), col("jl"))
-    val jlw = jlWide(spark, dir).withColumn("n2", nsq)
-    val qj = jlw.filter(probeSample(probeN, col("vec_id")))
-      .select(col("vec_id").as("a_id"), col("jl").as("qjl"),
-              col("n2").as("qn2"))
-    val wP = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
-    val approx = fanOut(jlw).crossJoin(broadcast(qj))
-      .filter(col("vec_id") =!= col("a_id"))
-      .select(col("a_id"), col("vec_id").as("b_id"),
-        graft.functions.ArrayDotLong.col(col("jl"), col("qjl")).as("d16"),
-        col("n2"), col("qn2"))
-      .select(col("a_id"), col("b_id"),
+    CkptMemo.getOrElseUpdate((spark, dir, "jlrecall", probeN), {
+      // codegen exact-int64 dot (graft.functions.ArrayDotLong) — the
+      // probe×corpus candidate join is the JL serve's O(n·probes) inner
+      // loop; the interpreted aggregate/zip_with HOF chain it replaces is
+      // the spec reference (ArrayDotLongSpec pins value identity). Σx² is
+      // the self-dot instance.
+      val nsq = graft.functions.ArrayDotLong.col(col("jl"), col("jl"))
+      val jlw = jlWide(spark, dir).withColumn("n2", nsq)
+      val qj = jlw.filter(probeSample(probeN, col("vec_id")))
+        .select(col("vec_id").as("a_id"), col("jl").as("qjl"),
+                col("n2").as("qn2"))
+      val d16 = graft.functions.ArrayDotLong.col(col("jl"), col("qjl"))
+      approxRecall(spark, dir, probeN, probeRanked(jlw, qj,
         when(col("n2") === 0L || col("qn2") === 0L, lit(-2.0))
-          .otherwise(Num.rnd(col("d16").cast("double") /
+          .otherwise(Num.rnd(d16.cast("double") /
             (sqrt(col("n2").cast("double")) * sqrt(col("qn2").cast("double"))),
-            6)).as("sim"))
-      .withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= 3)
-      .select("a_id", "b_id")
-    val truth = exactTruthTop3(spark, dir, probeN)
-    val hit = truth.join(approx, Seq("a_id", "b_id"))
-    truth.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-      .select(col("n_truth"), col("n_hit"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-          "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_micro"))
-  }
+            6)), 3))
+    })
 
   /** IVF training — one distributed Lloyd (k-means) iteration that makes
     * the coarse quantizer REAL instead of the seed stub: assign every
@@ -2845,37 +2792,18 @@ object Similarity {
                            probeN: Long = 100): DataFrame =
     // memoized 1-row result ("matrecall", owner sim_eval_frontier —
     // the jlrecall rule, round 20)
-    CkptMemo.getOrElseUpdate((spark, dir, "matrecall", probeN),
-      matryoshkaRecallEvalUncached(spark, dir, probeN).localCheckpoint())
-
-  private def matryoshkaRecallEvalUncached(spark: SparkSession, dir: String,
-                                           probeN: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pre = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), slice(col("embedding"), 1, 16).as("pv"))
-      .withColumn("pn2", dotCols(col("pv"), col("pv")))
-    val qp = pre.filter(probeSample(probeN, col("vec_id")))
-      .select(col("vec_id").as("a_id"), col("pv").as("qpv"),
-              col("pn2").as("qpn2"))
-    val wP = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
-    val approx = fanOut(pre).crossJoin(broadcast(qp))
-      .filter(col("vec_id") =!= col("a_id"))
-      .select(col("a_id"), col("vec_id").as("b_id"),
+    CkptMemo.getOrElseUpdate((spark, dir, "matrecall", probeN), {
+      val pre = Tables.embeddings(spark, dir)
+        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("pv"))
+        .withColumn("pn2", dotCols(col("pv"), col("pv")))
+      val qp = pre.filter(probeSample(probeN, col("vec_id")))
+        .select(col("vec_id").as("a_id"), col("pv").as("qpv"),
+                col("pn2").as("qpn2"))
+      approxRecall(spark, dir, probeN, probeRanked(pre, qp,
         when(col("pn2") === 0.0 || col("qpn2") === 0.0, lit(-2.0))
           .otherwise(Num.rnd(dotCols(col("pv"), col("qpv")) /
-                       (sqrt(col("pn2")) * sqrt(col("qpn2"))), 6)).as("sim"))
-      .withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= 3)
-      .select("a_id", "b_id")
-    val truth = exactTruthTop3(spark, dir, probeN)
-    val hit = truth.join(approx, Seq("a_id", "b_id"))
-    truth.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-      .select(col("n_truth"), col("n_hit"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-             "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_micro"))
-  }
+                       (sqrt(col("pn2")) * sqrt(col("qpn2"))), 6)), 3))
+    })
 
   /** Semantic-dedup recall eval — the FOURTH eval harness (sketch:
     * [[Dedup.minhashEval]]; index: [[ivfRecallEval]]/[[nprobeSweep]];
@@ -2895,26 +2823,25 @@ object Similarity {
     val sem = semanticDedup(spark, dir).filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id"), col("keep"))
     val emb = embWithNrm(spark, dir)
-    val q = emb.filter(probeSample(probeN, col("vec_id")))
-      .select(col("vec_id").as("a_id"), col("embedding").as("qv"),
-              col("nrm").as("qnrm"))
+    val q = probeVecs(emb, probeN)
     val truth = fanOut(emb).crossJoin(broadcast(q))
       .filter(col("vec_id") < col("a_id"))
-      .filter(Num.rnd(dotCols(col("embedding"), col("qv")) /
-                        (col("nrm") * col("qnrm")), 6) >= 0.4)
+      .filter(cosineToProbe >= 0.4)
       .select("a_id").distinct()
+    dedupDecisionEval(sem, truth)
+  }
+
+  /** [[semanticDedupEval]]'s metric row over (vec_id, keep) decisions
+    * and the truly-duplicated probe ids (a_id). Precision is 1e6 on an
+    * empty prediction: no drop makes no false drop. */
+  private[graft] def dedupDecisionEval(sem: DataFrame,
+                                       truth: DataFrame): DataFrame = {
     val pred = sem.filter(col("keep") === 0).select(col("vec_id").as("a_id"))
-    sem.agg(count(lit(1)).as("n_probes"))
-      .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
-      .crossJoin(pred.agg(count(lit(1)).as("n_pred")))
-      .crossJoin(pred.join(truth, Seq("a_id")).agg(count(lit(1)).as("n_hit")))
-      .select(col("n_probes"), col("n_truth"), col("n_pred"), col("n_hit"),
-        expr("CASE WHEN n_truth = 0 THEN CAST(1000000 AS BIGINT) " +
-             "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_truth END")
-          .as("recall_micro"),
-        expr("CASE WHEN n_pred = 0 THEN CAST(1000000 AS BIGINT) " +
-             "ELSE (n_hit * CAST(1000000 AS BIGINT)) div n_pred END")
-          .as("precision_micro"))
+    countRow(sem -> "n_probes", truth -> "n_truth", pred -> "n_pred",
+        pred.join(truth, Seq("a_id")) -> "n_hit")
+      .select(col("*"),
+        Num.micro("n_hit", "n_truth", 1000000L).as("recall_micro"),
+        Num.micro("n_hit", "n_pred", 1000000L).as("precision_micro"))
   }
 
   /** Training convergence: squared distance each cell's centroid moved in
@@ -4241,7 +4168,7 @@ object Similarity {
   /** The shared-truth recall-eval ORACLE tail over a ranked serve
     * relation (a_id, b_id, rn ordered) — `<pfx>ex/xr/sc/ht/cm` names
     * claimed; probe literal 100 + the integer micro metric forms (the
-    * eval-family contract, [[recallVsSharedTruth]]'s mirror).
+    * eval-family contract, [[sharedTruthRecall]]'s mirror).
     * Generator for NEW eval oracles only — the st/dz/sb tails predate
     * it and stay hand-written (byte-frozen by their chains). */
   private def recallEvalTailSqlFor(pfx: String, rel: String): String =

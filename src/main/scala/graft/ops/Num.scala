@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{lit, round}
+import org.apache.spark.sql.functions.{expr, lit, round}
 
 /** Cross-engine-stable rounding.
   *
@@ -27,4 +27,11 @@ object Num {
     val p = s"1e$s" // 1e2 = 100.0 etc., double literal in DuckDB
     s"round(($expr) * $p) / $p"
   }
+
+  /** `num / den` in integer micro-units (exact BIGINT `div`), `ifZero`
+    * when `den` is 0 — the recall/precision ratio of every eval query,
+    * written once so the metric cannot drift between them. */
+  def micro(num: String, den: String, ifZero: Long): Column =
+    expr(s"CASE WHEN $den = 0 THEN CAST($ifZero AS BIGINT) " +
+      s"ELSE ($num * CAST(1000000 AS BIGINT)) div $den END")
 }

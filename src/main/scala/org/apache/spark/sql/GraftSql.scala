@@ -22,6 +22,10 @@ object GraftSql {
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
+  /** The session's own id (a UUID fixed at session creation). */
+  def sessionId(spark: SparkSession): String =
+    spark.asInstanceOf[classic.SparkSession].sessionUUID
+
   /** The RDD backing a `localCheckpoint()`ed Dataset (a `LogicalRDD`
     * leaf), if any. `Dataset.unpersist` cannot free a local checkpoint
     * (it is cached at the RDD level, not through the cache manager);

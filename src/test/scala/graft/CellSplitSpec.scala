@@ -364,7 +364,7 @@ class CellSplitSpec extends SparkSpec {
       StructField("cell", LongType), StructField("sv", ArrayType(FloatType)),
       StructField("snrm", DoubleType), StructField("tau", DoubleType)))
     assert(spark.read.schema(mSchema)
-      .parquet(Tables.scratch("split_inc_model_report")).count() === 0L)
+      .parquet(ext.Similarity.incBasePaths(spark, sf001)._2).count() === 0L)
     // the member scan reads the persisted postings PRUNED at the file
     // listing: among the postings scans in the executed plan, one
     // carries a partition filter and reads strictly fewer partitions
@@ -373,7 +373,8 @@ class CellSplitSpec extends SparkSpec {
       val self = p match {
         case f: FileSourceScanExec
           if f.relation.location.rootPaths.exists(
-            _.toString.contains("split_inc_postings_report")) => Seq(f)
+            _.toString.contains(new java.io.File(
+              ext.Similarity.incBasePaths(spark, sf001)._1).getName)) => Seq(f)
         case _ => Seq.empty
       }
       val kids = p match {
@@ -609,7 +610,7 @@ class CellSplitSpec extends SparkSpec {
                  r.getLong(3), r.getLong(4), r.getLong(5)))
     assert(inc.map(_._2).sum === 121L,
       "combined occupancy does not partition the fixture corpus")
-    assert(spark.read.parquet(Tables.scratch("split_inc_model_report")).count() >= 1L,
+    assert(spark.read.parquet(ext.Similarity.incBasePaths(spark, dir)._2).count() >= 1L,
       "the fixture base produced no split model — non-empty path vacuous")
     assert(inc.exists(_._3 === 1),
       "arrivals re-heated no cell — incremental round vacuous on fixture")
