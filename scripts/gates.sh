@@ -9,7 +9,8 @@
 #   3. graft.Bench at sf0.1                 (builder bench -> bench.json)
 #
 # Usage: scripts/gates.sh <round-number>
-# Appends a dated "Round <N> gates" block to BASELINE.md and leaves the
+# Appends a dated "Round <N> gates" block (gate results plus per-file
+# code-line counts of src/main/scala/graft/ext) to BASELINE.md and leaves the
 # builder bench.json at the repo root for the commit. Exits non-zero on
 # the first red gate. Full per-gate logs live in /tmp/gates_*_r<N>.log.
 set -uo pipefail
@@ -91,6 +92,13 @@ case "$BENCH_LINE" in
        | tee -a "$LOG"; exit 1 ;;
 esac
 
+# Per-file code lines of the operator sources (comment-only and blank
+# lines excluded), so the code-size aim has a number every round
+CODE_LINES=$(for f in src/main/scala/graft/ext/*.scala; do
+  printf '%s %s, ' "$(basename "$f" .scala)" \
+    "$(grep -vcE '^[[:space:]]*(/\*\*|\*|//|$)' "$f")"
+done)
+
 {
   echo ""
   echo "## Round ${ROUND} gates ($(date -u +%Y-%m-%d))"
@@ -98,6 +106,8 @@ esac
   echo "- tests: ${TESTS_LINE:-see $TLOG}"
   echo "- oracle mirror (sf0.01): ${ORACLE_LINE}"
   echo "- builder bench (sf0.1, local[32]): ${BENCH_LINE} — committed bench.json"
+  echo "- code lines, src/main/scala/graft/ext (grep -vcE" \
+       "'^[[:space:]]*(/\*\*|\*|//|\$)'): ${CODE_LINES%, }"
 } >> BASELINE.md
 echo "Appended Round ${ROUND} gate block to BASELINE.md"
 

@@ -64,19 +64,6 @@ object Dedup {
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
       .select("keep_id", "n_copies")
 
-  /** Inverted shingle index in ONE shuffle: explode raw word n-grams
-    * (higher-order functions, codegen-friendly, no UDF), then
-    * `collect_set(doc_id)` per shingle — the set IS the distinct, the
-    * sorted id list feeds in-plan pair generation, and the
-    * document-frequency cap is a post-agg filter. Round 1's shape
-    * (distinct → df-count → cap join → self-join) paid four shuffles on
-    * the fat (doc_id, shingle) frame; this pays one.
-    *
-    * The cap drops shingles shared by more than [[MaxShingleDf]] docs
-    * from candidate generation AND from the Jaccard sets (the operator's
-    * semantics are "similarity over informative shingles"; the oracle
-    * applies the same cap). It also bounds the in-plan pair expansion at
-    * O(MaxShingleDf²) per shingle — the hot-key M² blowup cannot occur. */
   /** Parallelize a tokenize+hash map side whose SCAN is narrower than
     * the session's parallelism: the testdata corpora are single-row-
     * group parquet files, so `maxPartitionBytes` cannot split them and
@@ -99,31 +86,60 @@ object Dedup {
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
+  /** Space-split tokens (key, toks) of the documents with at least `n`
+    * tokens — the frame [[wordGrams]] reads; shorter docs yield no gram. */
+  private[graft] def wordTokens(docs: DataFrame, n: Int,
+                                key: String = "doc_id"): DataFrame =
+    docs.select(col(key), split(col("text"), " ").as("toks"))
+      .filter(size(col("toks")) >= n)
+
+  /** The word n-grams of [[wordTokens]]' `toks`, in start order — the one
+    * gram expression (higher-order functions, codegen-friendly, no UDF)
+    * every shingle, gram and window site of Dedup and TextOps explodes. */
+  private[graft] def wordGrams(n: Int): Column =
+    expr(s"transform(sequence(1, size(toks) - ${n - 1}), " +
+         s"i -> concat_ws(' ', slice(toks, i, $n)))")
+
+  /** Hashed word n-gram rows (doc_id, h1, h2), one per occurrence — the
+    * projection under both the capped index [[shingleGroups]] and the
+    * uncapped [[hashedShinglesOf]].
+    *
+    * The key is the 16-byte DOUBLE polyhash (h1, h2) of the shingle, not
+    * the ~n·6-byte string (round-6 verdict item 7): the shingle string
+    * dies young inside the projection — the exchange, the aggregation
+    * hash table, and every downstream join carry two fixed-width longs.
+    * A key collision needs BOTH 30-bit hashes to collide (P ≈ 2^-59 per
+    * shingle pair — none expected below ~10^8 distinct shingles); when
+    * one occurs the two shingles merge into one posting list
+    * IDENTICALLY on both engines (the oracle folds the same pair — the
+    * confirmJaccard single-hash precedent). */
+  private def shingleHashes(docs: DataFrame, n: Int): DataFrame =
+    wordTokens(fanOutNarrow(docs), n)
+      .select(col("doc_id"), explode(wordGrams(n)).as("sh"))
+      .select(col("doc_id"),
+              polyHash(col("sh"), 31L, P1).as("h1"),
+              polyHash(col("sh"), 131L, P2).as("h2"))
+
+  /** Inverted shingle index in ONE shuffle: `collect_set(doc_id)` per
+    * hashed shingle — the set IS the distinct, the sorted id list feeds
+    * in-plan pair generation, and the document-frequency cap is a
+    * post-agg filter. Round 1's shape (distinct → df-count → cap join →
+    * self-join) paid four shuffles on the fat (doc_id, shingle) frame;
+    * this pays one.
+    *
+    * The cap drops shingles shared by more than [[MaxShingleDf]] docs
+    * from candidate generation AND from the Jaccard sets (the operator's
+    * semantics are "similarity over informative shingles"; the oracle
+    * applies the same cap). It also bounds the in-plan pair expansion at
+    * O(MaxShingleDf²) per shingle — the hot-key M² blowup cannot occur. */
   private[graft] def shingleGroups(df: DataFrame, n: Int): DataFrame = {
     // BoundedCollectSet, not collect_set + size filter: the plain form
     // materializes a hot key's FULL posting list in one aggregation
     // buffer before discarding it; the bounded aggregator pins hot keys
     // at cap+1 elements on the map side too — constant space per key.
-    //
-    // The index key is the 16-byte DOUBLE polyhash (h1, h2) of the
-    // shingle, not the ~n·6-byte string (round-6 verdict item 7): the
-    // shingle string dies young inside the projection — the exchange,
-    // the aggregation hash table, and every downstream join carry two
-    // fixed-width longs. A key collision needs BOTH 30-bit hashes to
-    // collide (P ≈ 2^-59 per shingle pair — none expected below ~10^8
-    // distinct shingles); when one occurs the two shingles merge into
-    // one posting list IDENTICALLY on both engines (the oracle folds
-    // the same pair — the confirmJaccard single-hash precedent).
     val bounded = udaf(new graft.functions.BoundedCollectSet(MaxShingleDf),
                        org.apache.spark.sql.Encoders.scalaLong)
-    fanOutNarrow(df).select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= n) // docs shorter than n yield no shingles
-      .select(col("doc_id"),
-        explode(expr(s"transform(sequence(1, size(toks) - ${n - 1}), " +
-                     s"i -> concat_ws(' ', slice(toks, i, $n)))")).as("sh"))
-      .select(col("doc_id"),
-              polyHash(col("sh"), 31L, P1).as("h1"),
-              polyHash(col("sh"), 131L, P2).as("h2"))
+    shingleHashes(df, n)
       .groupBy("h1", "h2")
       .agg(bounded(col("doc_id")).as("ids")) // sorted, or null when > cap
       .filter(col("ids").isNotNull)
@@ -450,9 +466,7 @@ object Dedup {
     * regime scales with the table; at sf0.01 (n=500) it is exactly the
     * 250 the static oracle encodes. */
   def incremental(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val split =
-      incSplit(CountMemo.get(spark, dir, "documents")(docs.count()))
+    val split = docSplit(spark, dir)
     val matches = jaccardPairs(spark, dir)
       // pairs are ordered a < b, and corpus ids all precede batch ids,
       // so cross pairs are exactly (a = corpus, b = batch)
@@ -460,11 +474,8 @@ object Dedup {
       .filter(col("inter") * 2 >= col("uni")) // jaccard >= 1/2, exact ints
       .groupBy(col("b_id").as("doc_id"))
       .agg(count(lit(1)).as("n_corpus_matches"))
-    docs.filter(col("doc_id") >= split).select("doc_id")
-      .join(matches, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_corpus_matches"), lit(0L)).as("n_corpus_matches"),
-        (coalesce(col("n_corpus_matches"), lit(0L)) === 0).cast("int").as("keep"))
+    screenVerdicts(
+      Tables.documents(spark, dir).filter(col("doc_id") >= split), matches)
   }
 
   /** Per-document n-gram NOVELTY against everything that came before it
@@ -488,16 +499,7 @@ object Dedup {
     hashedShinglesOf(Tables.documents(spark, dir), n)
 
   private[graft] def hashedShinglesOf(docs: DataFrame, n: Int): DataFrame =
-    fanOutNarrow(docs)
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= n)
-      .select(col("doc_id"),
-        explode(expr(s"transform(sequence(1, size(toks) - ${n - 1}), " +
-                     s"i -> concat_ws(' ', slice(toks, i, $n)))")).as("sh"))
-      .select(col("doc_id"),
-              polyHash(col("sh"), 31L, P1).as("h1"),
-              polyHash(col("sh"), 131L, P2).as("h2"))
-      .distinct()
+    shingleHashes(docs, n).distinct()
 
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
     val sh = hashedShingles(spark, dir, 3)
@@ -596,8 +598,7 @@ object Dedup {
     * positions are all set), which the spec pins. */
   def bloomScreen(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val split =
-      incSplit(CountMemo.get(spark, dir, "documents")(docs.count()))
+    val split = docSplit(spark, dir)
     val norm = regexp_replace(lower(trim(col("text"))), " +", " ")
     val keyed = docs.select(col("doc_id"), norm.as("nt"))
     val posArr = array(BloomBases.map(b =>
@@ -687,11 +688,8 @@ object Dedup {
     * 20) — dedup_sketch_merge reads the same shingle index + signature
     * table instead of rebuilding them. */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate((spark, dir, "minhash"), {
-      val hs = corpusHs3(spark, dir)
-      confirmJaccard(bandCandidates(bandsOfSigs(corpusSigs3(spark, dir))), hs,
-        1, 2).localCheckpoint()
-    })
+    memo.getOrElseUpdate((spark, dir, "minhash"),
+      lshPairs((corpusHs3(spark, dir), bandsOfSigs(corpusSigs3(spark, dir)))))
 
   /** Memoized FULL-CORPUS hashed 3-gram shingle rows (doc_id, h) — the
     * shared base of dedup_minhash_lsh (banding candidates + exact
@@ -704,7 +702,7 @@ object Dedup {
     * Owner: dedup_minhash_lsh in Bench's list. */
   private def corpusHs3(spark: SparkSession, dir: String): DataFrame =
     memo.getOrElseUpdate((spark, dir, "mh3hs"),
-      hsOf(shingleGroups(Tables.documents(spark, dir), 3)).localCheckpoint())
+      minhashIndex(Tables.documents(spark, dir), keep = true)(_._1))
 
   /** Memoized per-doc 32-component minhash signatures over
     * [[corpusHs3]] — consumed by the LSH banding and the sketch
@@ -719,17 +717,20 @@ object Dedup {
   private[graft] def hsOf(grp: DataFrame): DataFrame =
     grp.select(col("h1").as("h"), explode(col("ids")).as("doc_id"))
 
-  /** Per-doc 32-component minhash signatures from hashed shingles —
-    * the mergeable sketch itself: component j is min over the doc's
-    * shingles of the j-th affine permutation, so the signature of ANY
-    * union of docs is the element-wise min of their signatures (min is
-    * associative/commutative — the same property that makes HLL
-    * re-aggregable). [[bandsOf]] folds these into LSH buckets;
-    * [[sketchMerge]] re-aggregates them to coarser grains. */
-  private[graft] def sigsOf(hs: DataFrame): DataFrame = {
+  /** 32-component minhash signatures from hashed shingle rows, one per
+    * `key` — doc_id for the per-doc index, source for the streaming
+    * per-source sketch. The mergeable sketch itself: component j is min
+    * over the key's shingles of the j-th affine permutation, so the
+    * signature of ANY union of docs is the element-wise min of their
+    * signatures (min is associative/commutative — the same property
+    * that makes HLL re-aggregable, and the whole fold, so it is one
+    * streaming-legal aggregation with |keys| × 32 longs of state).
+    * [[bandsOfSigs]] folds these into LSH buckets; [[sketchMerge]]
+    * re-aggregates them to coarser grains. */
+  private[graft] def sigsOf(hs: DataFrame, key: String = "doc_id"): DataFrame = {
     val sigCols = (0 until NumHashes)
       .map(j => min((lit(permA(j)) * col("h") + lit(permB(j))) % lit(P1)).as(s"h$j"))
-    hs.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
+    hs.groupBy(key).agg(sigCols.head, sigCols.tail: _*)
   }
 
   /** LSH band buckets (doc_id, band, bh) from hashed shingles: 32
@@ -772,31 +773,47 @@ object Dedup {
     confirmJaccard(candAll, hs, 1, 2).select("a_id", "b_id")
   }
 
+  /** Free localCheckpoint'ed frames no caller retains (Dataset.unpersist
+    * cannot; see GraftSql.checkpointRdd). */
+  private def free(frames: DataFrame*): Unit =
+    frames.foreach(f =>
+      org.apache.spark.sql.GraftSql.checkpointRdd(f).foreach(_.unpersist(false)))
+
+  /** THE MinHash index builder: the index of a documents frame — hashed
+    * 3-gram shingle rows (doc_id, h) over the DF-capped [[shingleGroups]]
+    * and their LSH band buckets (doc_id, band, bh) — handed to `use`;
+    * every minhash path builds its index here, and this owns the
+    * index's lifecycle. `keep = true` checkpoints hs for an index that
+    * outlives the call (memo entries, the streaming static side, the
+    * compaction rebuild); its bands stay lazy for the caller to
+    * checkpoint or refold. Otherwise hs feeds `use` twice without a
+    * checkpoint (bands plus the confirm, truth or audit), so the shingle
+    * groups stay persisted while `use` runs — its result must be eager
+    * — and are freed after. */
+  private[graft] def minhashIndex[T](docs: DataFrame, keep: Boolean = false)(
+      use: ((DataFrame, DataFrame)) => T): T = {
+    val grp = shingleGroups(docs, 3)
+    if (keep) {
+      val hs = hsOf(grp).localCheckpoint()
+      use((hs, bandsOf(hs)))
+    } else {
+      val hs = hsOf(grp.persist(StorageLevel.MEMORY_AND_DISK))
+      try use((hs, bandsOf(hs))) finally grp.unpersist()
+    }
+  }
+
+  /** LSH pairs of an (hs, bands) index: band candidates confirmed at exact
+    * Jaccard ≥ 1/2 over the SAME hashed rows the signatures came from
+    * (the confirm shuffle carries (id, long), never shingle strings). */
+  private def lshPairs(index: (DataFrame, DataFrame)): DataFrame =
+    confirmJaccard(bandCandidates(index._2), index._1, 1, 2).localCheckpoint()
+
   /** The MinHash-LSH pipeline over an ARBITRARY documents frame — eager,
     * like [[jaccardPairsOf]], and parameterized for the same reason (the
     * scale-regression spec runs it over a blown-up corpus). */
-  private[graft] def minhashPairsOf(docs: DataFrame): DataFrame = {
-    val grp = shingleGroups(docs, 3)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val hs = hsOf(grp)
-    // confirm over the SAME hashed rows the signatures came from:
-    // the confirm shuffle carries (id, long), never shingle strings
-    val out = confirmJaccard(bandCandidates(bandsOf(hs)), hs, 1, 2)
-      .localCheckpoint()
-    grp.unpersist()
-    out
-  }
+  private[graft] def minhashPairsOf(docs: DataFrame): DataFrame =
+    minhashIndex(docs)(lshPairs)
 
-  /** Screen a NEW batch against a persisted corpus signature index —
-    * the production incremental shape (round-5 verdict task 2): corpus
-    * work happened ONCE at index-build time; each batch run shingles /
-    * signs / bands ONLY the batch, generates batch×corpus candidates by
-    * band-bucket equi-join (never corpus×corpus, never batch×corpus
-    * scans), and exact-Jaccard-confirms against the index's hashed
-    * shingles. Per-run cost is O(|batch| + matches) — DedupScaleSpec
-    * pins that an 8× corpus leaves both the candidate volume and the
-    * output unchanged. A batch doc is dropped (keep = 0) when >= 1
-    * corpus match confirms at Jaccard >= 1/2. */
   /** Screening-recall EVAL HARNESS — "measure, don't guess" for the
     * banding screen itself: on a FIXED-SIZE probe sample (doc_id <
     * 200 — constant cost at any corpus scale, the production shape for
@@ -812,10 +829,14 @@ object Dedup {
     * regressions when banding constants change. Sample-pair cost is
     * bounded by the df cap exactly like the production confirm. */
   def minhashEval(spark: SparkSession, dir: String,
-                  evalN: Long = 200): DataFrame = {
-    val (hs, truth) = evalSampleFrames(spark, dir, evalN)
-    minhashEvalFromHs(hs, truth)
-  }
+                  evalN: Long = 200): DataFrame =
+    minhashEvalOf(evalSample(spark, dir, evalN))
+
+  /** [[minhashEval]]'s banding + report over an (hs, truth) eval sample —
+    * the memoized one or an arbitrary one ([[withEvalSample]]). */
+  private[graft] def minhashEvalOf(sample: (DataFrame, DataFrame)): DataFrame =
+    Similarity.recallFold(sample._2, bandCandidates(bandsOf(sample._1)),
+      screenCount = Some("n_cand")).localCheckpoint()
 
   /** Memoized probe-sample frames shared by the two banding eval
     * harnesses (dedup_minhash_eval, dedup_band_sweep): hashed shingles
@@ -825,32 +846,25 @@ object Dedup {
     * expansion is the harnesses' dominant cost). evalN is part of the
     * memo key (specs probe at other sizes). Owner: dedup_band_sweep in
     * Bench's list. */
-  private def evalSampleFrames(spark: SparkSession, dir: String,
-                               evalN: Long): (DataFrame, DataFrame) = {
+  private def evalSample(spark: SparkSession, dir: String,
+                         evalN: Long): (DataFrame, DataFrame) = {
     val hs = memo.getOrElseUpdate((spark, dir, "mhevhs", evalN),
-      indexHsOf(Tables.documents(spark, dir).filter(col("doc_id") < evalN)))
-    val truth = memo.getOrElseUpdate((spark, dir, "mhevtruth", evalN),
-      jaccardTruth(hs).localCheckpoint())
-    (hs, truth)
+      minhashIndex(Tables.documents(spark, dir).filter(col("doc_id") < evalN),
+        keep = true)(_._1))
+    (hs, memo.getOrElseUpdate((spark, dir, "mhevtruth", evalN),
+      jaccardTruth(hs).localCheckpoint()))
   }
 
-  /** [[minhashEval]]'s banding + report half over pre-built (hs, truth)
-    * frames — shared by the memoized production entry and the
-    * arbitrary-sample spec seam. */
-  private def minhashEvalFromHs(hs: DataFrame, truth: DataFrame): DataFrame =
-    Similarity.recallFold(truth, bandCandidates(bandsOf(hs)),
-      screenCount = Some("n_cand")).localCheckpoint()
-
-  /** [[minhashEval]] over an arbitrary probe frame — parameterized so
-    * the spec can drive it with crafted borderline-Jaccard pairs (the
-    * regime where banding recall is genuinely < 1). */
-  private[graft] def minhashEvalOf(sample: DataFrame): DataFrame = {
-    val grp = shingleGroups(sample, 3).persist(StorageLevel.MEMORY_AND_DISK)
-    val hs = hsOf(grp)
-    val out = minhashEvalFromHs(hs, jaccardTruth(hs))
-    grp.unpersist()
-    out
-  }
+  /** The (hs, truth) eval sample of an ARBITRARY probe frame — the seam
+    * specs drive with crafted borderline-Jaccard pairs (the regime where
+    * banding recall is genuinely < 1); both frames are freed once
+    * `use`'s eager result lands. */
+  private[graft] def withEvalSample[T](sample: DataFrame)(
+      use: ((DataFrame, DataFrame)) => T): T =
+    minhashIndex(sample, keep = true) { case (hs, _) =>
+      val truth = jaccardTruth(hs).localCheckpoint()
+      try use((hs, truth)) finally free(hs, truth)
+    }
 
   /** Banding-configuration sweep — the minhash analog of Similarity's
     * nprobe sweep: for (bands, rows) ∈ {(4,8), (8,4), (16,2)}
@@ -864,131 +878,92 @@ object Dedup {
     * production 8×4. Signatures computed ONCE (the sweep re-folds 32
     * already-computed mins, it never re-shingles); the (8,4) row
     * reproduces [[minhashEval]] exactly (BandSweepSpec pins it). */
-  def bandSweep(spark: SparkSession, dir: String, evalN: Long = 200): DataFrame = {
-    val (hs, truth) = evalSampleFrames(spark, dir, evalN)
-    // shared frames outlive this query (dedup_minhash_eval reads the
-    // same memo) — only the sweep-local signature frame is freed
-    bandSweepFromHs(hs, truth)
-  }
+  def bandSweep(spark: SparkSession, dir: String, evalN: Long = 200): DataFrame =
+    bandSweepOf(evalSample(spark, dir, evalN))
 
-  private[graft] def bandSweepOf(sample: DataFrame): DataFrame = {
-    val grp = shingleGroups(sample, 3).persist(StorageLevel.MEMORY_AND_DISK)
-    val hs = hsOf(grp).localCheckpoint()
-    val truth = jaccardTruth(hs).localCheckpoint()
-    val out = bandSweepFromHs(hs, truth)
-    grp.unpersist()
-    // the seam's working frames are dead once the 3-row result lands
-    Seq(hs, truth).foreach(f =>
-      org.apache.spark.sql.GraftSql.checkpointRdd(f).foreach(_.unpersist(false)))
-    out
-  }
-
-  /** [[bandSweep]]'s refold + report half over pre-built (hs, truth)
-    * frames; builds (and frees) its own signature checkpoint. */
-  private def bandSweepFromHs(hs: DataFrame, truth: DataFrame): DataFrame = {
-    val sigs = sigsOf(hs).localCheckpoint()
+  /** [[bandSweep]]'s refold + report over an (hs, truth) eval sample;
+    * builds (and frees) its own signature checkpoint — the sample
+    * frames outlive it (dedup_minhash_eval reads the same memo). */
+  private[graft] def bandSweepOf(sample: (DataFrame, DataFrame)): DataFrame = {
+    val sigs = sigsOf(sample._1).localCheckpoint()
     val out = Seq(4, 8, 16).map { nb =>
-      Similarity.recallFold(truth, bandCandidates(bandsOfSigs(sigs, nb)),
+      Similarity.recallFold(sample._2, bandCandidates(bandsOfSigs(sigs, nb)),
           screenCount = Some("n_cand"))
         .select(lit(nb).as("n_bands"), lit(NumHashes / nb).as("rows_per_band"),
                 col("*"))
     }.reduce(_ unionByName _).orderBy("n_bands").localCheckpoint()
-    org.apache.spark.sql.GraftSql.checkpointRdd(sigs)
-      .foreach(_.unpersist(false))
+    free(sigs)
     out
   }
 
-  private[graft] def incMinhashScreen(corpusHs: DataFrame,
-                                      corpusBands: DataFrame,
-                                      batchDocs: DataFrame): DataFrame = {
-    val bg = shingleGroups(batchDocs, 3).persist(StorageLevel.MEMORY_AND_DISK)
-    val bhs = hsOf(bg)
-    val out = incMinhashScreenFromSigs(corpusHs, corpusBands, batchDocs,
-                                       bhs, bandsOf(bhs))
-    bg.unpersist()
-    out
-  }
-
-  /** The screen's confirm half over PRE-SIGNED batch frames — the seam
-    * the four production screens share so the batch is shingled /
-    * signed / banded ONCE per (session, dir) (memo [[batchMinhashSigs]])
-    * instead of once per screen; [[incMinhashScreen]] keeps the
-    * sign-inside shape for arbitrary frames (specs, compaction seam). */
-  private def incMinhashScreenFromSigs(corpusHs: DataFrame,
-                                       corpusBands: DataFrame,
-                                       batchDocs: DataFrame,
-                                       bhs: DataFrame,
-                                       bbands: DataFrame): DataFrame = {
+  /** Screen a NEW batch against a corpus signature index — the
+    * production incremental shape (round-5 verdict task 2): corpus work
+    * happened ONCE at index-build time; the batch arrives with its own
+    * (hs, bands) index ([[minhashIndex]]), batch×corpus candidates come
+    * from the band-bucket equi-join (never corpus×corpus, never
+    * batch×corpus scans), and exact Jaccard confirms against the
+    * indexes' hashed shingles. Per-run cost is O(|batch| + matches) —
+    * DedupScaleSpec pins that an 8× corpus leaves both the candidate
+    * volume and the output unchanged. A batch doc is dropped (keep = 0)
+    * when >= 1 corpus match confirms at Jaccard >= 1/2. */
+  private[graft] def minhashScreen(corpus: (DataFrame, DataFrame),
+                                   batchDocs: DataFrame,
+                                   batch: (DataFrame, DataFrame)): DataFrame = {
+    val ((hs, bands), (bhs, bbands)) = (corpus, batch)
     val cand = bbands.select(col("doc_id").as("b_id"), col("band"), col("bh"))
-      .join(corpusBands.select(col("doc_id").as("a_id"), col("band"), col("bh")),
+      .join(bands.select(col("doc_id").as("a_id"), col("band"), col("bh")),
             Seq("band", "bh"))
       .select("a_id", "b_id").distinct()
     // corpus and batch ids are disjoint, so one unioned hs frame serves
     // both sides of the confirm (sizes stay per-side by construction)
-    val matches = confirmJaccard(cand, corpusHs.unionByName(bhs), 1, 2)
+    val matches = confirmJaccard(cand, hs.unionByName(bhs), 1, 2)
       .groupBy(col("b_id").as("doc_id"))
       .agg(count(lit(1)).as("n_corpus_matches"))
+    screenVerdicts(batchDocs, matches).localCheckpoint()
+  }
+
+  /** Per batch doc: its corpus match count and keep = (no match). */
+  private def screenVerdicts(batchDocs: DataFrame,
+                             matches: DataFrame): DataFrame =
     batchDocs.select("doc_id")
       .join(matches, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_corpus_matches"), lit(0L)).as("n_corpus_matches"),
         (coalesce(col("n_corpus_matches"), lit(0L)) === 0).cast("int").as("keep"))
-      .localCheckpoint()
+
+  /** One side of the incremental family's split as a memoized MinHash
+    * index — the corpus (doc_id < split; mhidxhs/mhidxbands — in this
+    * engine the per-(session, dir) memo stands in for the persisted
+    * index a 100 TB pipeline appends to daily) or the batch (≥ split;
+    * incbhs/incbbands, owner dedup_incremental_minhash: four screens
+    * probe the same batch against different index states and sign it
+    * once). Bands derive from the CHECKPOINTED hs, so each side is
+    * shingled exactly once. split is part of the key (ADVICE r19): a
+    * caller passing a non-canonical split must not receive frames
+    * built for another — the mhevhs/mhevtruth evalN-keying rule. */
+  private[graft] def splitIndex(spark: SparkSession, dir: String, split: Long,
+                                 batch: Boolean): (DataFrame, DataFrame) = {
+    val (side, hsKey, bandsKey) =
+      if (batch) (col("doc_id") >= split, "incbhs", "incbbands")
+      else (col("doc_id") < split, "mhidxhs", "mhidxbands")
+    val hs = memo.getOrElseUpdate((spark, dir, hsKey, split),
+      minhashIndex(Tables.documents(spark, dir).filter(side), keep = true)(_._1))
+    (hs, memo.getOrElseUpdate((spark, dir, bandsKey, split),
+      bandsOf(hs).localCheckpoint()))
   }
 
-  /** Memoized BATCH signature frames (hashed shingles + band buckets
-    * for documents ≥ split) — the batch-side twin of
-    * [[corpusMinhashIndex]]: four screens (incremental, persist,
-    * delete, compact) probe the same batch against different index
-    * states, and before round 19 each re-shingled / re-signed it.
-    * Owner: dedup_incremental_minhash in Bench's list. */
-  private def batchMinhashSigs(spark: SparkSession, dir: String,
-                               split: Long): (DataFrame, DataFrame) = {
-    // split is part of the key (ADVICE r19): a caller passing a
-    // non-canonical split must not receive frames built for another —
-    // the mhevhs/mhevtruth evalN-keying rule
-    val bhs = memo.getOrElseUpdate((spark, dir, "incbhs", split),
-      indexHsOf(Tables.documents(spark, dir).filter(col("doc_id") >= split)))
-    val bands = memo.getOrElseUpdate((spark, dir, "incbbands", split),
-      bandsOf(bhs).localCheckpoint())
-    (bhs, bands)
-  }
+  /** The memoized batch index screened against `corpus` — the shared
+    * tail of the four production screens. */
+  private def batchScreen(spark: SparkSession, dir: String, split: Long,
+                          corpus: (DataFrame, DataFrame)): DataFrame =
+    minhashScreen(corpus,
+      Tables.documents(spark, dir).filter(col("doc_id") >= split),
+      splitIndex(spark, dir, split, batch = true))
 
-  /** The memoized corpus MinHash index: hashed shingles (for confirms)
-    * and band buckets (for candidates) — in this engine the per-
-    * (session, dir) memo stands in for the persisted index a 100 TB
-    * pipeline appends to daily. Bands derive from the CHECKPOINTED hs,
-    * so corpus text is shingled exactly once across both entries. */
-  private def corpusMinhashIndex(spark: SparkSession, dir: String,
-                                 split: Long): (DataFrame, DataFrame) = {
-    val hs = memo.getOrElseUpdate((spark, dir, "mhidxhs", split),
-      indexHsOf(Tables.documents(spark, dir).filter(col("doc_id") < split)))
-    val bands = memo.getOrElseUpdate((spark, dir, "mhidxbands", split),
-      bandsOf(hs).localCheckpoint())
-    (hs, bands)
-  }
-
-  /** Checkpointed hashed-shingle index rows for a corpus frame — the
-    * persisted half of the signature index; shingles the corpus exactly
-    * once. */
-  private[graft] def indexHsOf(corpusDocs: DataFrame): DataFrame = {
-    val grp = shingleGroups(corpusDocs, 3)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val out = hsOf(grp).localCheckpoint()
-    grp.unpersist()
-    out
-  }
-
-  /** Build the full (hashed shingles, band buckets) signature index for
-    * an ARBITRARY corpus frame — the un-memoized seam the streaming
-    * screen (DocStream) and specs build their static side from; the
-    * per-(session, dir) [[corpusMinhashIndex]] memo wraps the same
-    * pieces. */
-  private[graft] def buildMinhashIndex(corpusDocs: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val hs = indexHsOf(corpusDocs)
-    (hs, bandsOf(hs).localCheckpoint())
-  }
+  /** The incremental family's canonical split row for (spark, dir). */
+  private[graft] def docSplit(spark: SparkSession, dir: String): Long =
+    incSplit(CountMemo.get(spark, dir, "documents")(
+      Tables.documents(spark, dir).count()))
 
   /** INCREMENTAL dedup against the signature index — the operator a
     * 100 TB ingest runs per batch drop. Same corpus/batch split contract
@@ -996,14 +971,8 @@ object Dedup {
     * constant), but screening costs |batch|, not |corpus|. */
   def incrementalMinhash(spark: SparkSession, dir: String): DataFrame =
     memo.getOrElseUpdate((spark, dir, "incmh"), {
-      val split =
-        incSplit(CountMemo.get(spark, dir, "documents")(
-          Tables.documents(spark, dir).count()))
-      val (hs, bands) = corpusMinhashIndex(spark, dir, split)
-      val (bhs, bbands) = batchMinhashSigs(spark, dir, split)
-      incMinhashScreenFromSigs(hs, bands,
-        Tables.documents(spark, dir).filter(col("doc_id") >= split),
-        bhs, bbands)
+      val split = docSplit(spark, dir)
+      batchScreen(spark, dir, split, splitIndex(spark, dir, split, batch = false))
     })
 
   /** The persisted signature index made LITERAL: write the corpus band
@@ -1023,20 +992,14 @@ object Dedup {
     * partition layout. */
   def indexPersistScreen(spark: SparkSession, dir: String): DataFrame =
     memo.getOrElseUpdate((spark, dir, "idxpersist"), {
-      val split =
-        incSplit(CountMemo.get(spark, dir, "documents")(
-          Tables.documents(spark, dir).count()))
-      val (hs, bands) = corpusMinhashIndex(spark, dir, split)
+      val split = docSplit(spark, dir)
+      val (hs, bands) = splitIndex(spark, dir, split, batch = false)
       val bandsPath = Tables.scratch("mh_index_bands")
       bands.write.mode("overwrite").partitionBy("band").parquet(bandsPath)
       val hsPath = Tables.scratch("mh_index_hs")
       hs.write.mode("overwrite").parquet(hsPath)
-      val (bhs, bbands) = batchMinhashSigs(spark, dir, split)
-      incMinhashScreenFromSigs(
-        spark.read.parquet(hsPath),
-        spark.read.parquet(bandsPath),
-        Tables.documents(spark, dir).filter(col("doc_id") >= split),
-        bhs, bbands)
+      batchScreen(spark, dir, split,
+        (spark.read.parquet(hsPath), spark.read.parquet(bandsPath)))
     })
 
   /** Signature-index TAKEDOWN screen (dedup_index_delete) — the
@@ -1062,16 +1025,10 @@ object Dedup {
     * (IndexDeleteSpec pins both directions on a planted fixture). */
   def indexDeleteScreen(spark: SparkSession, dir: String): DataFrame =
     memo.getOrElseUpdate((spark, dir, "idxdelete"), {
-      val split =
-        incSplit(CountMemo.get(spark, dir, "documents")(
-          Tables.documents(spark, dir).count()))
-      val (hs, bands) = corpusMinhashIndex(spark, dir, split)
-      val (bhs, bbands) = batchMinhashSigs(spark, dir, split)
-      incMinhashScreenFromSigs(
-        hs.filter(col("doc_id") % 10 =!= 0),
-        bands.filter(col("doc_id") % 10 =!= 0),
-        Tables.documents(spark, dir).filter(col("doc_id") >= split),
-        bhs, bbands)
+      val split = docSplit(spark, dir)
+      val (hs, bands) = splitIndex(spark, dir, split, batch = false)
+      batchScreen(spark, dir, split, (hs.filter(col("doc_id") % 10 =!= 0),
+        bands.filter(col("doc_id") % 10 =!= 0)))
     })
 
   /** Index COMPACTION reconcile (dedup_index_compact) — retires the
@@ -1080,7 +1037,7 @@ object Dedup {
     * document frequency sat at the [[MaxShingleDf]] cap boundary
     * (deletions pull a hot shingle back under the cap — only a rebuild
     * re-signs it into the index). The compaction job is that rebuild:
-    * [[buildMinhashIndex]] over the LIVE (tombstone-filtered) corpus,
+    * [[minhashIndex]] over the LIVE (tombstone-filtered) corpus,
     * with the DF cap recomputed on surviving counts, then the same
     * batch screen. This operator runs BOTH serve paths and reconciles
     * them per batch doc — n/keep from the tombstone filter vs the
@@ -1095,36 +1052,31 @@ object Dedup {
     * in play (CompactSpec plants a 101-doc hot shingle to drive it). */
   def indexCompactReconcile(spark: SparkSession, dir: String): DataFrame =
     memo.getOrElseUpdate((spark, dir, "idxcompact"), {
-      val split =
-        incSplit(CountMemo.get(spark, dir, "documents")(
-          Tables.documents(spark, dir).count()))
+      val split = docSplit(spark, dir)
       val docs = Tables.documents(spark, dir)
       compactReconcileOf(
         indexDeleteScreen(spark, dir),
         docs.filter(col("doc_id") < split && col("doc_id") % 10 =!= 0),
         docs.filter(col("doc_id") >= split),
-        batchSigs = Some(batchMinhashSigs(spark, dir, split)))
+        splitIndex(spark, dir, split, batch = true))
     })
 
   /** The reconcile seam over an ARBITRARY (tombstone screen, live
-    * corpus, batch) triple — CompactSpec drives the planted cap-boundary
-    * fixture through it; [[indexCompactReconcile]] is the production
-    * (n/2 split, %10 takedown) instance. */
+    * corpus, batch docs, batch index) — CompactSpec drives the planted
+    * cap-boundary fixture through it; [[indexCompactReconcile]] is the
+    * production (n/2 split, %10 takedown) instance. */
   private[graft] def compactReconcileOf(tombScreen: DataFrame,
                                         liveCorpus: DataFrame,
                                         batchDocs: DataFrame,
-                                        batchSigs: Option[(DataFrame, DataFrame)]
-                                          = None): DataFrame = {
-    val (lhs, lbands) = buildMinhashIndex(liveCorpus)
-    val comp = batchSigs match {
-      case Some((bhs, bbands)) => // production path: memoized batch sigs
-        incMinhashScreenFromSigs(lhs, lbands, batchDocs, bhs, bbands)
-      case None => incMinhashScreen(lhs, lbands, batchDocs)
+                                        batch: (DataFrame, DataFrame)): DataFrame = {
+    val comp = minhashIndex(liveCorpus, keep = true) { case (lhs, lb) =>
+      val lbands = lb.localCheckpoint()
+      val out = minhashScreen((lhs, lbands), batchDocs, batch)
+      // the compacted index is dead once the screen result (a
+      // localCheckpoint) has materialized
+      free(lhs, lbands)
+      out
     }
-    // the compacted index frames are dead once the screen result (a
-    // localCheckpoint inside incMinhashScreen) has materialized
-    Seq(lhs, lbands).foreach(f =>
-      org.apache.spark.sql.GraftSql.checkpointRdd(f).foreach(_.unpersist(false)))
     tombScreen.select(col("doc_id"),
         col("n_corpus_matches").as("n_tomb"), col("keep").as("keep_tomb"))
       .join(comp.select(col("doc_id"),
@@ -1163,13 +1115,9 @@ object Dedup {
     * dedup_index_delete lockstep group. CompactSpec drives BOTH
     * decisions: the natural corpus (10% tomb, no over-cap shingle)
     * defers; the planted 101-doc hot shingle fixture compacts. */
-  def compactPolicy(spark: SparkSession, dir: String): DataFrame = {
-    val split =
-      incSplit(CountMemo.get(spark, dir, "documents")(
-        Tables.documents(spark, dir).count()))
+  def compactPolicy(spark: SparkSession, dir: String): DataFrame =
     compactPolicyOf(
-      Tables.documents(spark, dir).filter(col("doc_id") < split))
-  }
+      Tables.documents(spark, dir).filter(col("doc_id") < docSplit(spark, dir)))
 
   /** The policy seam over an ARBITRARY corpus frame (takedown rule
     * stays doc_id % 10 = 0 — the production contract); CompactSpec
@@ -1298,75 +1246,19 @@ object Dedup {
       .distinct()
   }
 
-  /** Connected-component clustering over near-dup pairs: iterative
-    * min-label propagation PLUS pointer jumping — each round every doc
-    * takes (a) the min label among its neighbors and (b) its label's own
-    * current label (path halving). (a) alone converges in O(diameter)
-    * rounds, which a 30-round cap cannot cover for long near-dup chains
-    * at 100 TB; (b) doubles the label's reach each round, giving
-    * O(log n) convergence (DedupSimilaritySpec proves an 80-doc chain
-    * collapses well inside the cap). Every round is two shuffle joins,
-    * no driver graph.
-    *
-    * Lifecycle per round: localCheckpoint (eager) materializes the round
-    * AND truncates the logical plan to constant depth — without it the
-    * self-join lineage doubles per round and Catalyst analysis (and even
-    * plan tree-printing) blows up after a handful of rounds. Once round
-    * k is materialized, round k-1's checkpoint RDD is unpersisted
-    * (Dataset.unpersist cannot free a local checkpoint;
-    * GraftSql.checkpointRdd reaches the backing RDD), so exactly ONE
-    * label frame is cached at any time. Result memoized per
-    * (session, dir) — dedup_keep reuses it instead of re-running the
-    * loop.
-    * Cluster id = smallest doc_id reachable (deterministic); the oracle
-    * reconstructs it with a recursive CTE. */
+  /** Connected-component clustering over near-dup pairs: cluster id =
+    * smallest doc_id reachable (deterministic), computed by the one CC
+    * loop ([[Graph.connectedComponents]] — hash-min plus pointer
+    * jumping, O(log n) rounds, one label checkpoint cached at a time,
+    * fails loudly if the round cap is hit unconverged; DedupSimilaritySpec
+    * proves an 80-doc chain collapses well inside the cap). Result
+    * memoized per (session, dir) — dedup_keep and the other cluster
+    * tails reuse it instead of re-running the loop. The oracle
+    * reconstructs the labels with a recursive CTE. */
   def clusters(spark: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate((spark, dir, "clusters"), {
-      val pairs = jaccardPairs(spark, dir).select("a_id", "b_id")
-      val edges = pairs
-        .unionByName(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-        .withColumnsRenamed(Map("a_id" -> "u", "b_id" -> "v"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val docs = Tables.documents(spark, dir).select(col("doc_id"))
-      var labels = docs.withColumn("cluster", col("doc_id")).localCheckpoint()
-      var prevRdd = org.apache.spark.sql.GraftSql.checkpointRdd(labels)
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < 30) {
-        val neighborMin = edges
-          .join(labels.withColumnsRenamed(Map("doc_id" -> "v", "cluster" -> "vc")),
-                Seq("v"))
-          .groupBy(col("u").as("doc_id"))
-          .agg(min("vc").as("nmin"))
-        val stepped = labels.withColumnRenamed("cluster", "old")
-          .join(neighborMin, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("old"),
-                  least(col("old"), coalesce(col("nmin"), col("old"))).as("c1"))
-        // pointer jumping: follow the label one hop (labels are doc ids,
-        // so c1 indexes back into this round's own label table)
-        val parent = stepped.select(col("doc_id").as("c1"), col("c1").as("pc"))
-        val mat = org.apache.spark.sql.GraftSql.stripOrigin(
-          stepped.join(parent, Seq("c1"), "left")
-          .select(col("doc_id"),
-                  least(col("c1"), coalesce(col("pc"), col("c1"))).as("cluster"),
-                  col("old"))
-          .select(col("doc_id"), col("cluster"),
-                  (col("cluster") < col("old")).as("chg")) // labels only decrease
-          .localCheckpoint()) // eager: one action, constant plan depth;
-          // stripOrigin drops the checkpoint's carried constraint set —
-          // in an unbounded-round self-join loop it COMPOUNDS per round
-          // and the driver's constraint propagation doubled the round
-          // wall past ~12 rounds (the componentsOverEdges finding,
-          // BASELINE round 19; same loop shape here)
-        changed = mat.filter(col("chg")).count() // cheap: reads the checkpoint
-        prevRdd.foreach(_.unpersist(false)) // round k-1's checkpoint now dead
-        prevRdd = org.apache.spark.sql.GraftSql.checkpointRdd(mat)
-        labels = mat.select("doc_id", "cluster")
-        rounds += 1
-      }
-      edges.unpersist()
-      labels // final round's checkpoint stays cached (it IS the result)
-    })
+    memo.getOrElseUpdate((spark, dir, "clusters"),
+      Graph.connectedComponents(Tables.documents(spark, dir).select(col("doc_id")),
+        jaccardPairs(spark, dir).select("a_id", "b_id"), "doc_id", "cluster"))
 
   /** The end product of the dedup pipeline: the kept document set — one
     * survivor (min doc_id) per near-dup cluster, all singletons kept. */
@@ -1535,13 +1427,8 @@ object Dedup {
     * the spec-facing entry point (synthetic fixtures); builds its own
     * shingle index where the production entry reads the memoized
     * [[corpusHs3]]/[[corpusSigs3]] frames. */
-  private[graft] def sketchMergeOf(docs: DataFrame): DataFrame = {
-    val grp = shingleGroups(docs, 3).persist(StorageLevel.MEMORY_AND_DISK)
-    val hs = hsOf(grp)
-    val out = sketchMergeFrom(docs, hs, sigsOf(hs))
-    grp.unpersist()
-    out
-  }
+  private[graft] def sketchMergeOf(docs: DataFrame): DataFrame =
+    minhashIndex(docs) { case (hs, _) => sketchMergeFrom(docs, hs, sigsOf(hs)) }
 
   /** The merge + audit half over pre-built hashed-shingle and signature
     * frames — shared by the memoized production entry and the spec seam. */
@@ -1583,7 +1470,7 @@ object Dedup {
       .withColumn("exact_jaccard_micro",
         expr("(inter * CAST(1000000 AS BIGINT)) div uni"))
       .localCheckpoint()
-    org.apache.spark.sql.GraftSql.checkpointRdd(se).foreach(_.unpersist(false))
+    free(se)
     outDf
   }
 
@@ -1592,23 +1479,12 @@ object Dedup {
     * corpus-wide aggregation feeds it, so a continuous stream can fold
     * it directly. Capped batch path and this agree while no shingle's
     * corpus DF crosses MaxShingleDf (the same regime contract as the
-    * streaming minhash screen; StreamingSpec pins it). */
+    * streaming minhash screen; StreamingSpec pins it). Signed per
+    * source by [[sigsOf]] with key "source". */
   private[graft] def sourceShingleHashes(docs: DataFrame, n: Int = 3): DataFrame =
-    docs.select(col("source"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= n)
-      .select(col("source"),
-        explode(expr(s"transform(sequence(1, size(toks) - ${n - 1}), " +
-                     s"i -> concat_ws(' ', slice(toks, i, $n)))")).as("sh"))
+    wordTokens(docs, n, "source")
+      .select(col("source"), explode(wordGrams(n)).as("sh"))
       .select(col("source"), polyHash(col("sh"), 31L, P1).as("h"))
-
-  /** Per-source 32-component signature from (source, h) rows — one
-    * streaming-legal aggregation (min is the whole fold), state =
-    * |sources| × 32 longs however large the corpus. */
-  private[graft] def sourceSigOf(rows: DataFrame): DataFrame = {
-    val sigCols = (0 until NumHashes)
-      .map(j => min((lit(permA(j)) * col("h") + lit(permB(j))) % lit(P1)).as(s"h$j"))
-    rows.groupBy("source").agg(sigCols.head, sigCols.tail: _*)
-  }
 
   /** Token width of the cross-document exact-substring window — mirrored
     * as literals in the oracle (slice width, range bound, interval
@@ -1653,12 +1529,8 @@ object Dedup {
 
   private[graft] def dupWindowStarts(docs: DataFrame,
                                      digestKeyed: Boolean = true): DataFrame = {
-    val grams = fanOutNarrow(docs)
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= SubstrW)
-      .select(col("doc_id"),
-        posexplode(expr(s"transform(sequence(1, size(toks) - ${SubstrW - 1}), " +
-                        s"i -> concat_ws(' ', slice(toks, i, $SubstrW)))")))
+    val grams = wordTokens(fanOutNarrow(docs), SubstrW)
+      .select(col("doc_id"), posexplode(wordGrams(SubstrW)))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("p"),
               (if (digestKeyed) unhex(md5(col("col"))) else col("col")).as("g"))
     val dupG = grams.groupBy("g")
@@ -2051,7 +1923,7 @@ object Dedup {
     * dhs/dbnd filter as [[indexDeleteOracleSql]], t-prefixed tail) and
     * the compacted screen (an l-prefixed chain rebuilt from the LIVE
     * corpus — the DF cap recomputed on surviving counts, literally the
-    * Spark-side [[buildMinhashIndex]] on the filtered docs, k-prefixed
+    * Spark-side [[minhashIndex]] on the filtered docs, k-prefixed
     * tail) composed in ONE WITH, joined per batch doc. Lockstep group:
     * the %10 takedown rule and the 250 split move with
     * dedup_index_delete / dedup_incremental_minhash. */

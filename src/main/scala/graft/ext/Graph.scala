@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * the reference's star schema implies but never analyzes; its Athena
   * layer stops at joins/aggregations, `/root/reference/README.md:28-31`).
   * Complements
-  * the dedup family's connected components (`Dedup.clusters`) with an
+  * the connected components both families share ([[connectedComponents]],
+  * behind `Dedup.clusters` and [[components]]) with an
   * ITERATIVE VALUE computation: Pregel-style rounds expressed as
   * join + aggregate, the shape GraphX/Pregel lowers to.
   *
@@ -467,90 +468,97 @@ object Graph {
       .unionByName(n2.withColumn("iter", lit(2)))
   }
 
-  /** Connected components of the mutual-kNN similarity graph — hash-min
-    * label propagation with pointer jumping, the same O(log n)-round
-    * loop as [[Dedup.clusters]] but over similarity edges (the
+  /** Connected components of the mutual-kNN similarity graph — the
+    * one CC loop ([[connectedComponents]]) over similarity edges (the
     * embedding-cluster labeling a SemDeDup-style pipeline feeds into
     * per-cluster dedup and leakage-safe splits). Every node gets the
     * MINIMUM vec_id reachable in its component (singletons label
-    * themselves); per round two shuffle joins, one localCheckpoint
-    * (constant plan depth) WRAPPED in GraftSql.stripOrigin — the
-    * checkpoint's carried constraint set compounds through the
-    * next round's self-join and doubled the round wall past ~12
-    * rounds until stripped (BASELINE round 19) — and round k-1's
-    * checkpoint freed after round k materializes. Memoized per (session, dir) (CkptMemo `graphcc`,
+    * themselves). Memoized per (session, dir) (CkptMemo `graphcc`,
     * Bench owner: graph_components; NOT in PlanShapeSpec's laziness
     * allowlist). The oracle reconstructs the same labels with a
     * recursive transitive closure over the identical `mu` edges. */
   def components(spark: SparkSession, dir: String): DataFrame =
     CkptMemo.getOrElseUpdate((spark, dir, "graphcc"),
-      componentsOverEdges(spark, dir,
-        Similarity.knnMutual(spark, dir).select("a_id", "b_id")))
+      connectedComponents(Tables.embeddings(spark, dir).select(col("vec_id")),
+        Similarity.knnMutual(spark, dir).select("a_id", "b_id"), "vec_id", "comp"))
 
-  /** The hash-min + pointer-jumping CC loop over an ARBITRARY mutual
-    * (a_id, b_id) edge frame — the seam [[components]] (audited
-    * unsplit edges, memoized) shares with `tools/GraphEdgePrice`
-    * (prices the split-served edge set against the audited one for
-    * the graph family — round-17 verdict item 6); one loop, two edge
-    * sets, so the comparison can never measure two algorithms. */
-  private[graft] def componentsOverEdges(spark: SparkSession, dir: String,
-                                         mu: DataFrame): DataFrame = {
-      import org.apache.spark.storage.StorageLevel
-      val edges = mu
-        .unionByName(mu.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-        .withColumnsRenamed(Map("a_id" -> "u", "b_id" -> "v"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nodes = Tables.embeddings(spark, dir).select(col("vec_id"))
-      var labels = nodes.withColumn("comp", col("vec_id")).localCheckpoint()
-      var prevRdd = org.apache.spark.sql.GraftSql.checkpointRdd(labels)
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < 30) {
-        val neighborMin = edges
-          .join(labels.withColumnsRenamed(Map("vec_id" -> "v", "comp" -> "vc")),
-                Seq("v"))
-          .groupBy(col("u").as("vec_id"))
-          .agg(min("vc").as("nmin"))
-        val stepped = labels.withColumnRenamed("comp", "old")
-          .join(neighborMin, Seq("vec_id"), "left")
-          .select(col("vec_id"), col("old"),
-                  least(col("old"), coalesce(col("nmin"), col("old"))).as("c1"))
-        // pointer jumping: labels are vec_ids, so c1 indexes back into
-        // this round's own label table — label reach doubles per round
-        val parent = stepped.select(col("vec_id").as("c1"), col("c1").as("pc"))
-        val matPre = stepped.join(parent, Seq("c1"), "left")
-          .select(col("vec_id"),
-                  least(col("c1"), coalesce(col("pc"), col("c1"))).as("comp"),
-                  col("old"))
-          .select(col("vec_id"), col("comp"),
-                  (col("comp") < col("old")).as("chg"))
-        // stripOrigin is LOAD-BEARING, not cosmetic: Dataset
-        // .localCheckpoint carries the pre-checkpoint plan's constraint
-        // set into the new LogicalRDD leaf (originConstraints), and in
-        // this loop round k+1's self-join compounds round k's set —
-        // per-round wall DOUBLED past ~12 rounds (768 k tail: 46 s wall
-        // vs 22 s task CPU, executors idle, all task metrics flat)
-        // until the driver spent the round in constraint propagation.
-        // Stripping the optimizer-hint metadata restores O(1) planning
-        // per round; labels are identical (BASELINE round 19).
-        val mat = org.apache.spark.sql.GraftSql
-          .stripOrigin(matPre.localCheckpoint())
-        changed = mat.filter(col("chg")).count()
-        prevRdd.foreach(_.unpersist(false))
-        prevRdd = org.apache.spark.sql.GraftSql.checkpointRdd(mat)
-        labels = mat.select("vec_id", "comp")
-        rounds += 1
-      }
-      // Non-convergence must fail loudly, not return silently-wrong
-      // labels that diverge from the recursive-closure oracle: with
-      // pointer jumping, label reach doubles per round, so 30 rounds
-      // cover any component ≤ 2^30 nodes — hitting the cap unconverged
-      // means a bug, not a big graph.
-      require(changed == 0,
-        s"components(): hash-min loop hit the $rounds-round cap with " +
-        s"$changed labels still changing — unconverged labels would be wrong")
-      edges.unpersist()
-      labels
+  /** THE connected-components loop — hash-min label propagation plus
+    * pointer jumping over an undirected (a_id, b_id) edge frame `mu`:
+    * each round every node takes (a) the min label among its neighbors
+    * and (b) its label's own current label (path halving). (a) alone
+    * converges in O(diameter) rounds, which a 30-round cap cannot cover
+    * for long chains at 100 TB; (b) doubles the label's reach each
+    * round, giving O(log n) convergence. Every round is two shuffle
+    * joins, no driver graph. Returns (`id`, `label`) for every `id` of
+    * `nodes`, label = the minimum id reachable. Generic over the column
+    * names so each caller plans exactly as its own copy did:
+    * [[Dedup.clusters]] (doc_id/cluster over near-dup pairs),
+    * [[components]] (vec_id/comp over mutual-kNN edges) and
+    * `tools/GraphEdgePrice` (prices the split-served edge set against
+    * the audited one — one loop, so the comparison can never measure
+    * two algorithms).
+    *
+    * Lifecycle per round: localCheckpoint (eager) materializes the round
+    * AND truncates the logical plan to constant depth — without it the
+    * self-join lineage doubles per round and Catalyst analysis blows up
+    * after a handful of rounds. Once round k is materialized, round
+    * k-1's checkpoint RDD is unpersisted, so exactly ONE label frame is
+    * cached at any time; the final round's checkpoint IS the result. */
+  private[graft] def connectedComponents(nodes: DataFrame, mu: DataFrame,
+                                         id: String, label: String): DataFrame = {
+    import org.apache.spark.sql.GraftSql
+    val edges = mu
+      .unionByName(mu.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
+      .withColumnsRenamed(Map("a_id" -> "u", "b_id" -> "v"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var labels = nodes.withColumn(label, col(id)).localCheckpoint()
+    var prevRdd = GraftSql.checkpointRdd(labels)
+    var changed = 1L
+    var rounds = 0
+    while (changed > 0 && rounds < 30) {
+      val neighborMin = edges
+        .join(labels.withColumnsRenamed(Map(id -> "v", label -> "vc")), Seq("v"))
+        .groupBy(col("u").as(id))
+        .agg(min("vc").as("nmin"))
+      val stepped = labels.withColumnRenamed(label, "old")
+        .join(neighborMin, Seq(id), "left")
+        .select(col(id), col("old"),
+                least(col("old"), coalesce(col("nmin"), col("old"))).as("c1"))
+      // pointer jumping: labels are ids, so c1 indexes back into this
+      // round's own label table — label reach doubles per round
+      val parent = stepped.select(col(id).as("c1"), col("c1").as("pc"))
+      val matPre = stepped.join(parent, Seq("c1"), "left")
+        .select(col(id),
+                least(col("c1"), coalesce(col("pc"), col("c1"))).as(label),
+                col("old"))
+        .select(col(id), col(label),
+                (col(label) < col("old")).as("chg")) // labels only decrease
+      // stripOrigin is LOAD-BEARING, not cosmetic: Dataset
+      // .localCheckpoint carries the pre-checkpoint plan's constraint
+      // set into the new LogicalRDD leaf (originConstraints), and in
+      // this loop round k+1's self-join compounds round k's set —
+      // per-round wall DOUBLED past ~12 rounds (768 k tail: 46 s wall
+      // vs 22 s task CPU, executors idle, all task metrics flat)
+      // until the driver spent the round in constraint propagation.
+      // Stripping the optimizer-hint metadata restores O(1) planning
+      // per round; labels are identical (BASELINE round 19).
+      val mat = GraftSql.stripOrigin(matPre.localCheckpoint())
+      changed = mat.filter(col("chg")).count() // cheap: reads the checkpoint
+      prevRdd.foreach(_.unpersist(false)) // round k-1's checkpoint now dead
+      prevRdd = GraftSql.checkpointRdd(mat)
+      labels = mat.select(id, label)
+      rounds += 1
+    }
+    edges.unpersist()
+    // Non-convergence must fail loudly, not return silently-wrong
+    // labels that diverge from the recursive-closure oracle: with
+    // pointer jumping, label reach doubles per round, so 30 rounds
+    // cover any component ≤ 2^30 nodes — hitting the cap unconverged
+    // means a bug, not a big graph.
+    require(changed == 0,
+      s"connected components: hash-min loop hit the $rounds-round cap with " +
+      s"$changed labels still changing — unconverged labels would be wrong")
+    labels
   }
 
   /** Component-SIZE distribution — the one-glance health readout of

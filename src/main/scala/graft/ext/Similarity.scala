@@ -587,18 +587,18 @@ object Similarity {
       .reduce(_ unionByName _)
   }
 
-  /** The split index's candidate pairs: `probed` (vec_id, cell) rows —
-    * whatever quantizer ranked them — descend once per round's model,
-    * then meet the (vec_id, ncell) postings in one capped bucket join.
-    * A band margin is only defined at depth 1. */
-  private def splitCandidates(spark: SparkSession, dir: String,
+  /** The split index's candidate pairs over the corpus vectors `emb`
+    * ([[embWithNrm]]): `probed` (vec_id, cell) rows — whatever quantizer
+    * ranked them — descend once per round's model, then meet the
+    * (vec_id, ncell) postings in one capped bucket join. A band margin
+    * is only defined at depth 1. */
+  private def splitCandidates(emb: DataFrame,
                               postings: DataFrame,
                               modelsByRound: Seq[DataFrame],
                               probed: DataFrame,
                               marginMicro: Long): DataFrame = {
     require(marginMicro == 0L || modelsByRound.size == 1,
       s"a band margin needs a depth-1 index, got ${modelsByRound.size} rounds")
-    val emb = embWithNrm(spark, dir)
     val probeMap = modelsByRound.foldLeft(probed)((p, seeds) =>
       splitDescend(emb, p, seeds, marginMicro))
     pairCandidatesAB(
@@ -618,8 +618,8 @@ object Similarity {
                          postings: DataFrame, modelsByRound: Seq[DataFrame],
                          probed: DataFrame, marginMicro: Long = 0L)
       : DataFrame =
-    serveTop3(splitCandidates(spark, dir, postings, modelsByRound, probed,
-        marginMicro))
+    serveTop3(splitCandidates(embWithNrm(spark, dir), postings,
+        modelsByRound, probed, marginMicro))
       .select("a_id", "b_id", "rn", "sim")
 
   /** The audited stub depth-1 index served to `probed`. */
@@ -823,10 +823,10 @@ object Similarity {
     * "incbaseidx": later callers skip the partition listing) — all
     * owned by sim_split_incremental. A rebuild after an eviction reads
     * the files already written (the model's _SUCCESS marks a complete
-    * index: it is written last). Returns (postings path, postings
-    * reload, model reload). */
+    * index: it is written last). Returns (postings reload, model
+    * reload). */
   private def incBaseIndex(spark: SparkSession, dir: String)
-      : (String, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) = {
     val (postingsPath, modelPath) = incBasePaths(spark, dir)
     val base = splitRound(spark, dir, incBaseHome(spark, dir),
       Some(("incsplit0s", "incsplit0a")))
@@ -835,8 +835,7 @@ object Similarity {
         readPostings(spark, postingsPath)
       else persistSplitIndex(spark, base.postings, Seq(base.seeds),
         postingsPath, modelPath)._1)
-    (postingsPath, postings,
-     spark.read.schema(base.seeds.schema).parquet(modelPath))
+    (postings, spark.read.schema(base.seeds.schema).parquet(modelPath))
   }
 
   /** The frozen-quantizer BASE home assignment (vec_id < n/2) —
@@ -873,7 +872,7 @@ object Similarity {
                                                None,
                                              memoArrDesc: Boolean = false)
       : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
-    val (postingsPath, reloaded, model) = incBaseIndex(spark, dir)
+    val (reloaded, model) = incBaseIndex(spark, dir)
     // the arrival descent is canonical only for the batch trio (the
     // stream seam descends ITS OWN arrHome) — memoized behind the
     // caller flag (memo "incarrdesc", same owner)
@@ -891,17 +890,21 @@ object Similarity {
     val newHot = hotParents.fold(newHotAll)(ps =>
       newHotAll.filter(expr("cell div 2").isin(ps: _*)))
     val (_, seeds1, assigned1) =
-      prunedRound(spark, dir, postingsPath, newHot, Some(arrN))
+      prunedRound(spark, dir, reloaded, newHot, Some(arrN))
     (occ, assigned1, nextSplitAsg(comb, newHot, assigned1),
      Seq(model, seeds1))
   }
 
-  /** A maintenance round over PERSISTED postings at `path`: the
-    * `newHot` work list is collected driver-side (model-sized metadata,
-    * never data rows), and the member scan reads the postings PRUNED to
-    * those ncells at the file listing, plus any not-yet-persisted
-    * `arrivals` in those cells. Returns (any cell hot, model, picks). */
-  private def prunedRound(spark: SparkSession, dir: String, path: String,
+  /** A maintenance round over a PERSISTED postings reload
+    * ([[readPostings]]): the `newHot` work list is collected driver-side
+    * (model-sized metadata, never data rows), and the member scan reads
+    * the postings PRUNED to those ncells, plus any not-yet-persisted
+    * `arrivals` in those cells. The filter runs on the caller's reload,
+    * so pruning reads the partition listing that reload already holds —
+    * a fresh `spark.read` would list every ncell directory again (a
+    * Spark job of one task per directory). Returns (any cell hot, model,
+    * picks). */
+  private def prunedRound(spark: SparkSession, dir: String, postings: DataFrame,
                           newHot: DataFrame, arrivals: Option[DataFrame])
       : (Boolean, DataFrame, DataFrame) = {
     val hotList = newHot.collect().map(_.getLong(0))
@@ -914,11 +917,8 @@ object Similarity {
       s"new-hot ncell outside INT range (${hotList.take(3).mkString(",")}…)" +
       " — the partition-pruning filter would match nothing; widen the " +
       "partition column handling before raising the cell/depth encoding")
-    // filter BEFORE the long cast so the partition filter lands on the
-    // directory-inferred INT column
-    val pruned = spark.read.parquet(path)
-      .filter(col("ncell").isin(hotList.map(_.toInt): _*))
-      .select(col("vec_id"), col("ncell").cast("long").as("cell"))
+    val pruned = postings.filter(col("ncell").isin(hotList: _*))
+      .select(col("vec_id"), col("ncell").as("cell"))
     val members = embWithNrm(spark, dir).join(arrivals.fold(pruned)(a =>
       pruned.unionByName(a.join(newHot, Seq("cell"), "left_semi"))),
       Seq("vec_id"))
@@ -999,13 +999,14 @@ object Similarity {
       // variant re-planned the frozen-centroid assignment ~370× in one
       // tree, round-18 plan audit)
       val p = Tables.scratch(s"split_inc_deep_r$k")
-      val reloaded = persistPostings(spark,
+      val postings = persistPostings(spark,
         asg.withColumnRenamed("cell", "ncell"), p)
-        .withColumnRenamed("ncell", "cell")
+      val reloaded = postings.withColumnRenamed("ncell", "cell")
       val occ = occupancy(reloaded)
       snaps = snaps :+ occSnap(k - 1, occ)
       val newHot = occ.filter(col("n_before") > SplitOccupancy).select("cell")
-      val (anyHot, _, assigned) = prunedRound(spark, dir, p, newHot, None)
+      val (anyHot, _, assigned) =
+        prunedRound(spark, dir, postings, newHot, None)
       asg = if (anyHot) nextSplitAsg(reloaded, newHot, assigned) else reloaded
     }
     (snaps :+ occSnap(SplitDepth, occupancy(asg)))
@@ -1196,9 +1197,11 @@ object Similarity {
     val r = stubRound(spark, dir)
     val probed = stubProbes(spark, dir)
       .filter(probeSample(probeN, col("vec_id")))
+    // one corpus read shared by every arm: each `Tables.embeddings`
+    // read runs its own 1-task parquet schema-inference job
+    val emb = embWithNrm(spark, dir)
     SplitBandSweepMargins.map { m =>
-      val cand = splitCandidates(spark, dir, r.postings, Seq(r.seeds),
-        probed, m)
+      val cand = splitCandidates(emb, r.postings, Seq(r.seeds), probed, m)
       // the candidate count leads the fold's left-deep chain: with the
       // fold first the arm shuffled 3 % more bytes, and with the fold as
       // one right-deep subtree it ran 4 more tasks (sf0.1, graft.Bench);
@@ -2976,7 +2979,8 @@ object Similarity {
     * round (6-dp-rounded means). Round 1 is the memoized [[ivfTrain]]
     * result; rounds 2..[[LloydMaxRounds]] re-assign against the previous
     * round's centroids and recompute. Lifecycle — deliberately NOT the
-    * Dedup.clusters one-frame-at-a-time rule: the output IS the union of
+    * one-frame-at-a-time rule of the CC loop
+    * ([[Graph.connectedComponents]]): the output IS the union of
     * every round, so each round's checkpoint must stay cached until the
     * final trajectory materializes (a localCheckpoint has no lineage to
     * recompute from; freeing round k early would corrupt the union).
@@ -2984,7 +2988,7 @@ object Similarity {
     * ~2 MB at the 4096-cell clamp — so even all [[LloydMaxRounds]]
     * rounds together are broadcast-scale; ALL loop checkpoints are freed
     * in one sweep after the (also tiny) trajectory checkpoint exists
-    * (never ivfTrain's own — other queries retain it). The clusters rule
+    * (never ivfTrain's own — other queries retain it). The CC loop's rule
     * applies when rounds are corpus-sized; do not "fix" this loop to
     * match it. localCheckpoint per round still bounds plan depth. Early
     * stop when a round moves no centroid (max per-(cell,pos) pico-diff

@@ -552,12 +552,8 @@ object TextOps {
     // raw (doc_id, s) rows; each branch applies exactly the distinct it
     // needs (eval only ever needs the s set — a (doc_id, s) distinct
     // first would be a second shuffle over the eval corpus for nothing)
-    def shingles(df: DataFrame): DataFrame = df
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= 5)
-      .select(col("doc_id"),
-        explode(expr("transform(sequence(1, size(toks) - 4), " +
-                     "i -> concat_ws(' ', slice(toks, i, 5)))")).as("s"))
+    def shingles(df: DataFrame): DataFrame = Dedup.wordTokens(df, 5)
+      .select(col("doc_id"), explode(Dedup.wordGrams(5)).as("s"))
     val evalSh = shingles(docs.filter(col("source") === evalSource))
       .select("s").distinct().withColumn("hit", lit(1))
     shingles(docs.filter(col("source") =!= evalSource)).distinct()
@@ -1375,12 +1371,8 @@ object TextOps {
   private[graft] def dupSpanFracOf(spark: SparkSession, dir: String,
                                    digestKeyed: Boolean): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val gram = explode(expr("transform(sequence(1, size(toks) - 7), " +
-                            "i -> concat_ws(' ', slice(toks, i, 8)))"))
-    val sh = docs
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= 8)
-      .select(col("doc_id"), gram.as("raw"))
+    val sh = Dedup.wordTokens(docs, 8)
+      .select(col("doc_id"), explode(Dedup.wordGrams(8)).as("raw"))
       .select(col("doc_id"),
         (if (digestKeyed) unhex(md5(col("raw"))) else col("raw")).as("s"))
       .distinct()
@@ -2556,13 +2548,10 @@ object TextOps {
   /** Shared gram-hash frame: (doc_id, p, h, ng) — one hash per token
     * [[WinK]]-gram start, ng = number of grams in the doc. */
   private def winnowHashes(spark: SparkSession, dir: String): DataFrame =
-    Dedup.fanOutNarrow(Tables.documents(spark, dir))
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= WinK)
+    Dedup.wordTokens(Dedup.fanOutNarrow(Tables.documents(spark, dir)), WinK)
       .select(col("doc_id"),
         (size(col("toks")) - (WinK - 1)).cast("long").as("ng"),
-        posexplode(expr(s"transform(sequence(1, size(toks) - ${WinK - 1}), " +
-                        s"i -> concat_ws(' ', slice(toks, i, $WinK)))")))
+        posexplode(Dedup.wordGrams(WinK)))
       .select(col("doc_id"), col("ng"), (col("pos") + 1).cast("long").as("p"),
               graft.functions.PolyHashMod.col(col("col"), 31L, WinP).as("h"))
 

@@ -79,7 +79,7 @@ object DocStream {
   /** MinHash-tier streaming screen — the continuous-ingest face of
     * `Dedup.incrementalMinhash`: every micro-batch of new documents is
     * screened against the PERSISTED corpus signature index (hashed
-    * shingles + band buckets, built once by `Dedup.buildMinhashIndex`)
+    * shingles + band buckets, built once by `Dedup.minhashIndex`)
     * via `foreachBatch`. The per-batch logic — shingle the batch, band,
     * batch×corpus bucket equi-join, exact-Jaccard confirm — is a full
     * batch pipeline whose confirm joins batch-derived shingles back to
@@ -111,8 +111,8 @@ object DocStream {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
         if (!batch.isEmpty) {
-          val screened =
-            graft.ext.Dedup.incMinhashScreen(corpusHs, corpusBands, batch)
+          val screened = graft.ext.Dedup.minhashIndex(batch)(
+            graft.ext.Dedup.minhashScreen((corpusHs, corpusBands), batch, _))
           screened.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
           // free the screen's localCheckpoint once the batch is on disk —
           // a long-running stream must not accumulate one cached RDD per
@@ -141,8 +141,8 @@ object DocStream {
     * minhash screen above; StreamingSpec pins equality under
     * maxFilesPerTrigger=1 replay. */
   def sourceSignatures(docs: DataFrame): DataFrame =
-    graft.ext.Dedup.sourceSigOf(
-      graft.ext.Dedup.sourceShingleHashes(docs, 3))
+    graft.ext.Dedup.sigsOf(
+      graft.ext.Dedup.sourceShingleHashes(docs, 3), "source")
 
   /** CONTINUOUS count-min sketch — the live face of
     * `text_cms_estimate`'s counter table and the SECOND mergeable

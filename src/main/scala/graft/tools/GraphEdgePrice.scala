@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * build wall seconds per edge set, edge counts + overlap, and the
   * downstream connected-component labels' node-level agreement (both
   * label sets are min-reachable vec_id over the SAME CC loop —
-  * Graph.componentsOverEdges — so equal labels mean equal components).
+  * Graph.connectedComponents — so equal labels mean equal components).
   *
   * Usage: scripts/run_main.sh graft.tools.GraphEdgePrice <dir>
   * Scale-measurement tool (knee dirs) — not an oracle query.
@@ -53,7 +53,9 @@ object GraphEdgePrice {
     def runCc(e: org.apache.spark.sql.DataFrame) = {
       val b = metrics.snapshot(spark.sparkContext)
       val (c, wc) = timed {
-        graft.ext.Graph.componentsOverEdges(spark, dir, e).localCheckpoint()
+        graft.ext.Graph.connectedComponents(
+          graft.Tables.embeddings(spark, dir).select("vec_id"), e, "vec_id", "comp")
+          .localCheckpoint()
       }
       (c, wc, metrics.delta(spark.sparkContext, b))
     }

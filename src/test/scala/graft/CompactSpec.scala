@@ -43,10 +43,12 @@ class CompactSpec extends SparkSpec {
     val corpus = (0L to cap.toLong).map(i => (i, "x y z")).toDF("doc_id", "text")
     val live = corpus.filter($"doc_id" =!= 0L)
     val batch = Seq((5000L, "x y z")).toDF("doc_id", "text")
-    val (hs, bands) = ext.Dedup.buildMinhashIndex(corpus)
-    val tomb = ext.Dedup.incMinhashScreen(
-      hs.filter($"doc_id" =!= 0L), bands.filter($"doc_id" =!= 0L), batch)
-    val rec = ext.Dedup.compactReconcileOf(tomb, live, batch).collect()
+    val (hs, bands) = ext.Dedup.minhashIndex(corpus, keep = true)(identity)
+    val rec = ext.Dedup.minhashIndex(batch) { bIdx =>
+      val tomb = ext.Dedup.minhashScreen(
+        (hs.filter($"doc_id" =!= 0L), bands.filter($"doc_id" =!= 0L)), batch, bIdx)
+      ext.Dedup.compactReconcileOf(tomb, live, batch, bIdx).collect()
+    }
     assert(rec.length === 1)
     val r = rec.head
     assert(r.getLong(1) === 0L && r.getInt(2) === 1,

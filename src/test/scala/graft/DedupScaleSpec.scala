@@ -115,7 +115,7 @@ class DedupScaleSpec extends SparkSpec {
     val (baseHs, baseBands) = index(corpus)
     val bBands = Dedup.bandsOf(Dedup.hsOf(Dedup.shingleGroups(batch, 3)))
     val baseCand = candidates(baseBands, bBands)
-    val baseOut = Dedup.incMinhashScreen(baseHs, baseBands, batch)
+    val baseOut = Dedup.minhashIndex(batch)(Dedup.minhashScreen((baseHs, baseBands), batch, _))
       .collect().map(_.toSeq).toSet
     assert(baseOut.exists(r => r(2) == 0), "no batch doc screened out — vacuous")
 
@@ -125,7 +125,7 @@ class DedupScaleSpec extends SparkSpec {
         .reduce(_ unionByName _).filter(F.col("doc_id") % 1000000L < 250))
     val (bigHs, bigBands) = index(bigCorpus)
     val scaledCand = candidates(bigBands, bBands)
-    val scaledOut = Dedup.incMinhashScreen(bigHs, bigBands, batch)
+    val scaledOut = Dedup.minhashIndex(batch)(Dedup.minhashScreen((bigHs, bigBands), batch, _))
       .collect().map(_.toSeq).toSet
     assert(scaledOut === baseOut,
       s"x$K disjoint corpus changed the screening verdicts")

@@ -33,12 +33,14 @@ class IndexDeleteSpec extends SparkSpec {
     val planted = corpus.filter(col("doc_id") === 10)
       .withColumn("doc_id", lit(2000L))
     val batch = planted
-    val (hs, bands) = Dedup.buildMinhashIndex(corpus)
-    val before = Dedup.incMinhashScreen(hs, bands, batch)
+    val (hs, bands) = Dedup.minhashIndex(corpus, keep = true)(identity)
+    def screen(h: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashIndex(batch)(Dedup.minhashScreen((h, b), batch, _))
+    val before = screen(hs, bands)
       .collect().map(r => (r.getLong(1), r.getInt(2))).head
-    val after = Dedup.incMinhashScreen(
+    val after = screen(
       hs.filter(col("doc_id") % 10 =!= 0),
-      bands.filter(col("doc_id") % 10 =!= 0), batch)
+      bands.filter(col("doc_id") % 10 =!= 0))
       .collect().map(r => (r.getLong(1), r.getInt(2))).head
     assert(before._1 >= 1L && before._2 === 0,
       s"planted dup not caught pre-delete: $before")

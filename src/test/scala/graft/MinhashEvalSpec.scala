@@ -38,7 +38,7 @@ class MinhashEvalSpec extends SparkSpec {
       (2L, "q r s t u v w x y z aa bb cc dd ee ff"),
       (3L, "gg hh ii jj kk ll mm nn oo pp qq rr ss tt uu vv")
     ).toDF("doc_id", "text")
-    val (truth, cand, hit, recall, _) = row(Dedup.minhashEvalOf(docs))
+    val (truth, cand, hit, recall, _) = row(Dedup.withEvalSample(docs)(Dedup.minhashEvalOf))
     assert(truth == 1L && hit == 1L && recall == 1000000L,
       s"exact dup not recalled: truth=$truth cand=$cand hit=$hit")
   }
@@ -54,7 +54,7 @@ class MinhashEvalSpec extends SparkSpec {
       (0L, shared + " " + (1 to 7).map(i => s"x$i").mkString(" ")),
       (1L, shared + " " + (1 to 7).map(i => s"y$i").mkString(" "))
     ).toDF("doc_id", "text")
-    val (truth, _, hit, recall, _) = row(Dedup.minhashEvalOf(docs))
+    val (truth, _, hit, recall, _) = row(Dedup.withEvalSample(docs)(Dedup.minhashEvalOf))
     assert(truth == 1L, s"borderline pair missing from ground truth")
     assert(hit <= truth)
     assert(recall == hit * 1000000L,

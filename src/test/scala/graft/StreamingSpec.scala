@@ -167,7 +167,7 @@ class StreamingSpec extends SparkSpec {
     val planted = corpus.filter(col("doc_id") === 0)
       .withColumn("doc_id", lit(1000L))
     val batchDocs = docs.filter(col("doc_id") >= split).unionByName(planted)
-    val (hs, bands) = Dedup.buildMinhashIndex(corpus)
+    val (hs, bands) = Dedup.minhashIndex(corpus, keep = true)(identity)
 
     // two stream files + maxFilesPerTrigger=1 → at least two micro-batches
     val dir = Files.createTempDirectory("graft-docs-mh-stream").toString
@@ -193,7 +193,8 @@ class StreamingSpec extends SparkSpec {
 
     val streamed = spark.read.parquet(s"$out/batch_id=*")
       .select("doc_id", "n_corpus_matches", "keep")
-    val batch = Dedup.incMinhashScreen(hs, bands, batchDocs)
+    val batch = Dedup.minhashIndex(batchDocs)(
+        Dedup.minhashScreen((hs, bands), batchDocs, _))
       .select("doc_id", "n_corpus_matches", "keep")
     // every batch doc screened exactly once; stream ≡ one-shot batch in
     // the no-cap-firing regime this corpus is in (no batch shingle's DF
@@ -427,7 +428,7 @@ class StreamingSpec extends SparkSpec {
     assert(nBatches >= 2, "docs arrived in one micro-batch — replay vacuous")
 
     // twin 1: the uncapped stateless fold run as a batch
-    val direct = Dedup.sourceSigOf(Dedup.sourceShingleHashes(docs, 3))
+    val direct = Dedup.sigsOf(Dedup.sourceShingleHashes(docs, 3), "source")
       .collect()
       .map(r => r.getString(0) -> (1 until r.length).map(r.getLong).toVector)
       .toMap
