@@ -9,10 +9,12 @@
 #   3. graft.Bench at sf0.1                 (builder bench -> bench.json)
 #
 # Usage: scripts/gates.sh <round-number>
-# Appends a dated "Round <N> gates" block (gate results plus per-file
-# code-line counts of src/main/scala/graft/ext) to BASELINE.md and leaves the
-# builder bench.json at the repo root for the commit. Exits non-zero on
-# the first red gate. Full per-gate logs live in /tmp/gates_*_r<N>.log.
+# Appends a dated "Round <N> gates" block (gate results, memo evictions,
+# the oracle-digest diff, plus per-file code-line counts of
+# src/main/scala/graft/ext) to BASELINE.md, rewrites oracle_sql.sha256
+# from the Verify dump and leaves this run's bench.json at the repo root
+# for the commit. Exits non-zero on the first red gate. Full per-gate
+# logs live in /tmp/gates_*_r<N>.log.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 ROUND="${1:?usage: scripts/gates.sh <round-number>}"
@@ -58,6 +60,12 @@ fi
 ORACLE_LINE=$(tail -1 "$CLOG")
 grep -E "^(SLOW|ORACLE BUDGET)" "$CLOG" | tee -a "$LOG" || true
 echo "oracle mirror: $ORACLE_LINE" | tee -a "$LOG"
+# Verify's summary line carries the memo eviction count
+VERIFY_MEMO=$(grep -o 'memo_evictions=[0-9]*' "$VLOG" | tail -1)
+# per-key oracle SQL digests: compare with the committed file, then
+# rewrite it from this dump (a Spark-side refactor shows "0 differ")
+DIGEST_LINE=$(python3 scripts/oracle_digests.py "$OUT/oracle_sql.json" \
+  oracle_sql.sha256 | tee -a "$LOG" | head -1)
 
 echo "== gate 3/3: builder bench sf0.1 ==" | tee -a "$LOG"
 BLOG=/tmp/gates_bench_r${ROUND}.log
@@ -80,7 +88,8 @@ else:
     value = b.get("value")
     if isinstance(value, (int, float)):
         print(f'{value:.1f} s / {len(b.get("queries", {}))} queries / '
-              f'errors={b.get("n_errors", "?")}')
+              f'errors={b.get("n_errors", "?")} / '
+              f'memo_evictions={b.get("memo_evictions", "?")}')
     else:
         print(f"malformed bench.json (no numeric value: {value!r})")
 EOF
@@ -104,7 +113,8 @@ done)
   echo "## Round ${ROUND} gates ($(date -u +%Y-%m-%d))"
   echo ""
   echo "- tests: ${TESTS_LINE:-see $TLOG}"
-  echo "- oracle mirror (sf0.01): ${ORACLE_LINE}"
+  echo "- oracle mirror (sf0.01): ${ORACLE_LINE}; Verify ${VERIFY_MEMO:-memo_evictions=?}"
+  echo "- ${DIGEST_LINE:-oracle digests: not computed} — oracle_sql.sha256 rewritten"
   echo "- builder bench (sf0.1, local[32]): ${BENCH_LINE} — committed bench.json"
   echo "- code lines, src/main/scala/graft/ext (grep -vcE" \
        "'^[[:space:]]*(/\*\*|\*|//|\$)'): ${CODE_LINES%, }"

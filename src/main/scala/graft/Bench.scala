@@ -162,9 +162,13 @@ object Bench {
     if (errs.nonEmpty)
       System.err.println(s"BENCH FAILURES: ${errs.length} " +
         results.collect { case (k, _, _, Some(e)) => s"$k($e)" }.mkString(", "))
+    // memo evictions go in the durable record only: a session that
+    // outgrows CkptMemo's cap rebuilds evicted entries, and that cost
+    // would otherwise show only as WARN lines in a log
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""task_metrics":$tm,"n_errors":${errs.length},""" +
+      s""""memo_evictions":${ext.CkptMemo.evictions},""" +
       s""""errors":${errs.mkString("{", ",", "}")},"sf":"$sfDir"}"""
     // stdout gets the COMPACT record only (the driver-contract shape —
     // totals + per-query seconds, no task_metrics): the full line grew

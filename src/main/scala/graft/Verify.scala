@@ -13,11 +13,15 @@ object Verify {
       else _ => true
     val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(q => nameFilter(q._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val selected = SparkEntry.queries.filter(q => nameFilter(q._1)).toSeq
+    val failed = selected.count { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        false
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        true
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -35,6 +39,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // an eviction means a later request rebuilt a memo: say so on the
+    // summary, not only as a WARN line
+    println(s"[verify] ${selected.size} queries, $failed failed, " +
+      s"memo_evictions=${ext.CkptMemo.evictions}")
     spark.stop()
   }
 }

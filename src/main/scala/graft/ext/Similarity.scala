@@ -3,6 +3,7 @@ package graft.ext
 import graft.Tables
 import graft.ops.Num
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over `embeddings` (64-dim float vectors) — the
@@ -56,8 +57,12 @@ object Similarity {
     * csim first, ties to the lower cell); every oracle is unchanged. */
   // lazy: NProbe is declared later in the file — a plain val would
   // capture the uninitialized 0 during object construction
-  private lazy val topNProbe = udaf(
-    new graft.functions.TopKPairsAggregator(NProbe),
+  private lazy val topNProbe = topPairs(NProbe)
+
+  /** The bounded top-`k` (score, id) aggregate behind [[topNProbe]] and
+    * [[topServe]]. */
+  private def topPairs(k: Int) = udaf(
+    new graft.functions.TopKPairsAggregator(k),
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
 
   /** Bounded top-3 SERVE ranking over a corpus-probe candidate frame
@@ -71,9 +76,7 @@ object Similarity {
     * while the aggregate map-side-combines to 3 pairs per probe.
     * Probe-bounded reranks (100-row eval probes, delete/filtered/upsert
     * serves) legitimately stay window-based. Oracles unchanged. */
-  private lazy val topServe = udaf(
-    new graft.functions.TopKPairsAggregator(3),
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
+  private lazy val topServe = topPairs(3)
 
   private def serveTop3(cand: DataFrame): DataFrame =
     cand.groupBy("a_id")
@@ -82,13 +85,52 @@ object Similarity {
       .select(col("a_id"), col("col._2").as("b_id"),
               (col("pos") + 1).cast("int").as("rn"), col("col._1").as("sim"))
 
-  /** Expand a [[topNProbe]] result column `tk` back to the ranked long
+  /** The one nearest-cell ranking: every (vec_id, embedding, nrm) row
+    * against a (cell, cv, cnrm) centroid table by 6-dp-rounded cosine,
+    * folded per vector by a bounded top-k aggregate (default
+    * [[topNProbe]]; no window sort) into the column `tk` — largest csim
+    * first, ties to the lower cell. Callers place their own [[fanOut]]
+    * and read `tk` through [[explodeRanked]] or [[nearestCell]]. */
+  private def rankCells(vecs: DataFrame, cents: DataFrame,
+                        agg: UserDefinedFunction = topNProbe): DataFrame =
+    vecs.crossJoin(broadcast(cents))
+      .select(col("vec_id"),
+              Num.rnd(dotCols(col("embedding"), col("cv")) /
+                        (col("nrm") * col("cnrm")), 6).as("csim"),
+              col("cell"))
+      .groupBy("vec_id")
+      .agg(agg(col("csim"), col("cell")).as("tk"))
+
+  /** Expand a [[rankCells]] result column `tk` back to the ranked long
     * form (vec_id, cell, csim, rn) every consumer expects. */
   private def explodeRanked(df: DataFrame): DataFrame =
     df.select(col("vec_id"), posexplode(col("tk")))
       .select(col("vec_id"), col("col._2").as("cell"),
               col("col._1").as("csim"),
               (col("pos") + 1).cast("int").as("rn"))
+
+  /** The rank-1 entry of a [[rankCells]] result: (vec_id, cell, csim). */
+  private def nearestCell(df: DataFrame): DataFrame =
+    df.select(col("vec_id"),
+              element_at(col("tk"), 1).getField("_2").as("cell"),
+              element_at(col("tk"), 1).getField("_1").as("csim"))
+
+  /** The seed (stub) centroid table: the first `cells` vectors of a
+    * (vec_id, embedding, nrm) frame as (cell, cv, cnrm). */
+  private def seedCentroids(vecs: DataFrame, cells: Int): DataFrame =
+    vecs.filter(col("vec_id") < cells)
+      .select(col("vec_id").as("cell"), col("embedding").as("cv"),
+              col("nrm").as("cnrm"))
+
+  /** Long-form centroids (cell, pos, m) → the (cell, cv, cnrm) table
+    * [[rankCells]] scans: position-sorted element lists, norm once per
+    * centroid. Tiny frame (≤ cells rows); consumers that need no norm
+    * leave `cnrm` to column pruning. */
+  private def centroidTable(longForm: DataFrame): DataFrame =
+    longForm.groupBy("cell")
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+                     x => x.getField("m")).as("cv"))
+      .withColumn("cnrm", sqrt(dotCols(col("cv"), col("cv"))))
 
   /** Long-form centroid rows from a vecMean result: (key…, pos, m) with
     * means rounded at 6 dp for the cross-engine check — posexplode here
@@ -216,7 +258,6 @@ object Similarity {
     * key, nrm). */
   private[graft] def pairCandidatesAB(aKeyed: DataFrame, bKeyed: DataFrame,
                                       key: String, cap: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val a = aKeyed.select(col("vec_id").as("a_id"), col("embedding").as("va"),
                           col(key), col("nrm").as("nrm_a"))
     val wCap = Window.partitionBy(key)
@@ -369,23 +410,8 @@ object Similarity {
   private def rankedAtNprobe(spark: SparkSession, dir: String,
                              k: Int): DataFrame = {
     val emb = embWithNrm(spark, dir)
-    val cents = emb.filter(col("vec_id") < ivfCells(embCount(spark, dir)))
-      .select(col("vec_id").as("cell"), col("embedding").as("cv"),
-              col("nrm").as("cnrm"))
-    val topK = udaf(
-      new graft.functions.TopKPairsAggregator(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
-    // bounded top-k aggregate, not a window: the n×cells scan
-    // map-side-combines to k pairs per vector — no full sort,
-    // no spill, linear in n past the cell clamp (see topNProbe doc)
-    explodeRanked(
-      fanOut(emb).crossJoin(broadcast(cents))
-        .select(col("vec_id"),
-                Num.rnd(dotCols(col("embedding"), col("cv")) /
-                          (col("nrm") * col("cnrm")), 6).as("csim"),
-                col("cell"))
-        .groupBy("vec_id")
-        .agg(topK(col("csim"), col("cell")).as("tk")))
+    explodeRanked(rankCells(fanOut(emb),
+      seedCentroids(emb, ivfCells(embCount(spark, dir))), topPairs(k)))
   }
 
   /** Home-cell (rank-1) coarse assignment — the `sim_ivf_assign` query. */
@@ -409,11 +435,34 @@ object Similarity {
   private def ivfCandidates(spark: SparkSession, dir: String): DataFrame = {
     val ranked = ivfAssignRanked(spark, dir)
     val emb = embWithNrm(spark, dir)
-    val probes = emb.join(ranked.select("vec_id", "cell"), Seq("vec_id"))
-    val indexed = emb.join(ranked.filter(col("rn") === 1)
-                             .select("vec_id", "cell"), Seq("vec_id"))
-    pairCandidatesAB(probes, indexed, "cell", MaxBucketCandidates)
+    cellCandidates(emb, ranked, emb, homeOf(ranked))
+  }
+
+  /** The IVF cell candidate stage (a_id, b_id, 6-dp sim): `probes`
+    * (vec_id, embedding, nrm) join their probed cells (`probeCells`:
+    * vec_id, cell, …), `indexed` joins its HOME cells (`home`: vec_id,
+    * cell), capped bucket join on cell, self pairs dropped. A pair
+    * appears at most once (the b side has one home cell). */
+  private def cellCandidates(probes: DataFrame, probeCells: DataFrame,
+                             indexed: DataFrame, home: DataFrame): DataFrame =
+    pairCandidatesAB(
+      probes.join(probeCells.select("vec_id", "cell"), Seq("vec_id")),
+      indexed.join(home, Seq("vec_id")), "cell", MaxBucketCandidates)
       .filter(col("a_id") =!= col("b_id"))
+
+  /** The home-cell (rn = 1) rows of a ranked assignment: (vec_id, cell). */
+  private def homeOf(ranked: DataFrame): DataFrame =
+    ranked.filter(col("rn") === 1).select("vec_id", "cell")
+
+  /** Probe-bounded top-3 per a_id by the rerank window (sim desc, b_id
+    * asc) — the serve tail where only a probe sample ranks (see
+    * [[topServe]]); rn as INT. */
+  private def windowTop3(cand: DataFrame): DataFrame = {
+    val w = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
+    cand.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 3)
+      .select(col("a_id"), col("b_id"), col("sim"),
+              col("rn").cast("int").as("rn"))
   }
 
   /** Occupancy threshold for [[cellSplit]] — at sf0.01 (500 vectors /
@@ -507,8 +556,7 @@ object Similarity {
     * cells: the audited stub round, or the Lloyd-trained one. */
   private def homeRound(spark: SparkSession, dir: String, ranked: DataFrame,
                         memoKeys: (String, String)): SplitRound =
-    splitRound(spark, dir,
-      ranked.filter(col("rn") === 1).select("vec_id", "cell"), Some(memoKeys))
+    splitRound(spark, dir, homeOf(ranked), Some(memoKeys))
 
   private def stubRound(spark: SparkSession, dir: String): SplitRound =
     homeRound(spark, dir, ivfAssignRanked(spark, dir), ("splitseeds", "splitasg"))
@@ -644,19 +692,29 @@ object Similarity {
     df.repartition(col(byCol))
       .write.mode("overwrite").partitionBy(byCol).parquet(path)
 
-  /** Write (vec_id, ncell) postings partitioned by ncell and reload
-    * them ([[readPostings]]). */
+  /** Write postings partitioned by `key` and reload them
+    * ([[readPostings]]). */
   private def persistPostings(spark: SparkSession, postings: DataFrame,
-                              path: String): DataFrame = {
-    writePostings(postings, "ncell", path)
-    readPostings(spark, path)
+                              path: String, key: String = "ncell"): DataFrame = {
+    writePostings(postings, key, path)
+    readPostings(spark, path, key)
   }
 
-  /** Persisted postings at `path`; the partition column comes back as
-    * the directory's inferred INT and is cast back to LONG so the serve
-    * joins stay type-identical. */
-  private def readPostings(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).withColumn("ncell", col("ncell").cast("long"))
+  /** Persisted postings at `path`; the partition column `key` comes back
+    * as the directory's inferred INT and is cast back to LONG so the
+    * serve joins stay type-identical. */
+  private def readPostings(spark: SparkSession, path: String,
+                           key: String = "ncell"): DataFrame =
+    spark.read.parquet(path).withColumn(key, col(key).cast("long"))
+
+  /** Write an un-partitioned model table and reload it with the schema
+    * it was written with — no schema-inference job, and an empty table
+    * still reads back. */
+  private def persistModel(spark: SparkSession, model: DataFrame,
+                           path: String): DataFrame = {
+    model.write.mode("overwrite").parquet(path)
+    spark.read.schema(model.schema).parquet(path)
+  }
 
   /** Persist a split index — postings plus ONE model table, a `round`
     * column carrying each round's (cell, sv, snrm, tau) when there is
@@ -677,8 +735,7 @@ object Similarity {
       else models.zipWithIndex
         .map { case (m, i) => m.withColumn("round", lit(i + 1)) }
         .reduce(_ unionByName _)
-    table.write.mode("overwrite").parquet(modelsPath)
-    val back = spark.read.schema(table.schema).parquet(modelsPath)
+    val back = persistModel(spark, table, modelsPath)
     (reloaded,
      if (models.size == 1) Seq(back)
      else models.indices.map(i =>
@@ -947,20 +1004,6 @@ object Similarity {
     cellSplitReportOf(occ, assigned1)
   }
 
-  /** Rank a (vec_id, embedding, nrm) frame against a (cell, cv, cnrm)
-    * centroid table — the bounded top-[[NProbe]] aggregate every
-    * assignment path uses (no window sort). */
-  private def rankedAgainstCentroids(vecs: DataFrame,
-                                     cents: DataFrame): DataFrame =
-    explodeRanked(
-      fanOut(vecs).crossJoin(broadcast(cents))
-        .select(col("vec_id"),
-                Num.rnd(dotCols(col("embedding"), col("cv")) /
-                          (col("nrm") * col("cnrm")), 6).as("csim"),
-                col("cell"))
-        .groupBy("vec_id")
-        .agg(topNProbe(col("csim"), col("cell")).as("tk")))
-
   /** Serve the incrementally-maintained index
     * (sim_split_incremental_serve) — the maintain → PERSIST BACK →
     * SERVE loop: the depth-2 assignment and both rounds' models are
@@ -974,8 +1017,8 @@ object Similarity {
       finalA.withColumnRenamed("cell", "ncell"), models,
       Tables.scratch("split_inc2_postings"), Tables.scratch("split_inc2_models"))
     splitServe(spark, dir, postings, reloaded,
-      rankedAgainstCentroids(embWithNrm(spark, dir),
-          frozenBaseCentroids(spark, dir))
+      explodeRanked(rankCells(fanOut(embWithNrm(spark, dir)),
+          frozenBaseCentroids(spark, dir)))
         .select("vec_id", "cell"))
   }
 
@@ -1302,7 +1345,6 @@ object Similarity {
     * in half by construction and routes probes identically. */
   private def splitSeeds(spark: SparkSession, dir: String,
                          members: DataFrame, hot: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb = embWithNrm(spark, dir)
     val m = members.join(hot, Seq("cell"))
     val s0 = m.groupBy("cell").agg(min("vec_id").as("svid0"))
@@ -1332,9 +1374,7 @@ object Similarity {
     * column; output is |cells| rows at any corpus scale. Ties on the
     * majority break label-ascending on both engines. */
   def cellPurity(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val home = ivfAssignRanked(spark, dir).filter(col("rn") === 1)
-      .select("vec_id", "cell")
+    val home = homeOf(ivfAssignRanked(spark, dir))
     val emb = Tables.embeddings(spark, dir).select("vec_id", "label")
     val pc = home.join(emb, Seq("vec_id"))
       .groupBy("cell", "label").agg(count(lit(1)).as("c"))
@@ -1509,7 +1549,6 @@ object Similarity {
       nnDescentBuild(spark, dir).localCheckpoint())
 
   private def nnDescentBuild(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val mu = knnMutual(spark, dir)
     val adj = mu.select(col("a_id").as("v"), col("b_id").as("n"))
       .unionByName(mu.select(col("b_id").as("v"), col("a_id").as("n")))
@@ -1577,7 +1616,6 @@ object Similarity {
     * brute-force cost is paid for the probe sample, never n². */
   private def probeRanked(corpus: DataFrame, probes: DataFrame, sim: Column,
                           k: Int, keep: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
     fanOut(corpus).crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("a_id") && keep)
@@ -1642,7 +1680,6 @@ object Similarity {
     * [[TruthDepth]] by construction. */
   def recallAtK(spark: SparkSession, dir: String,
                 probeN: Long = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val ks = Seq(1, 3, 5, 10).toDF("k")
     val ranked = exactTruthRanked(spark, dir, probeN)
@@ -1710,23 +1747,13 @@ object Similarity {
     * fixed sample ∩ live. */
   def ivfDeleteSearch(spark: SparkSession, dir: String,
                       probeN: Long = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ranked = ivfAssignRanked(spark, dir)
     val emb = Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 10 =!= 0)
       .select(col("vec_id"), col("embedding"),
               sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
-    val probes = emb.filter(probeSample(probeN, col("vec_id")))
-      .join(ranked.select("vec_id", "cell"), Seq("vec_id"))
-    val indexed = emb.join(ranked.filter(col("rn") === 1)
-                             .select("vec_id", "cell"), Seq("vec_id"))
-    val w = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
-    pairCandidatesAB(probes, indexed, "cell", MaxBucketCandidates)
-      .filter(col("a_id") =!= col("b_id"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("a_id"), col("b_id"), col("sim"),
-              col("rn").cast("int").as("rn"))
+    windowTop3(cellCandidates(emb.filter(probeSample(probeN, col("vec_id"))),
+      ranked, emb, homeOf(ranked)))
   }
 
   /** FILTERED vector search — the metadata-predicate ANN every vector
@@ -1762,7 +1789,6 @@ object Similarity {
     * because the index side is the full static corpus. */
   private[graft] def filteredTopKFor(spark: SparkSession, dir: String,
                                      probeVecs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ranked = ivfAssignRanked(spark, dir)
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), col("label"),
@@ -1772,16 +1798,10 @@ object Similarity {
               sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))
       .join(ranked.select("vec_id", "cell"), Seq("vec_id"))
       .withColumn("ck", concat_ws("#", col("cell"), col("label")))
-    val indexed = emb.join(ranked.filter(col("rn") === 1)
-                             .select("vec_id", "cell"), Seq("vec_id"))
+    val indexed = emb.join(homeOf(ranked), Seq("vec_id"))
       .withColumn("ck", concat_ws("#", col("cell"), col("label")))
-    val w = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
-    pairCandidatesAB(probes, indexed, "ck", MaxBucketCandidates)
-      .filter(col("a_id") =!= col("b_id"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("a_id"), col("b_id"), col("sim"),
-              col("rn").cast("int").as("rn"))
+    windowTop3(pairCandidatesAB(probes, indexed, "ck", MaxBucketCandidates)
+      .filter(col("a_id") =!= col("b_id")))
   }
 
   /** Recall eval for [[filteredTopK]] — truth = the exact SAME-LABEL
@@ -1823,14 +1843,10 @@ object Similarity {
     * screens share the join. */
   def nprobeSweep(spark: SparkSession, dir: String,
                   probeN: Long = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb = embWithNrm(spark, dir)
-    val cents = emb.filter(col("vec_id") < ivfCells(embCount(spark, dir)))
-      .select(col("vec_id").as("cell"), col("embedding").as("cv"),
-              col("nrm").as("cnrm"))
     val wp = Window.partitionBy("a_id").orderBy(col("csim").desc, col("cell").asc)
     val probeRanks = probeVecs(emb, probeN)
-      .crossJoin(broadcast(cents))
+      .crossJoin(broadcast(seedCentroids(emb, ivfCells(embCount(spark, dir)))))
       .select(col("a_id"), col("qv"), col("qnrm"), col("cell"),
               Num.rnd(dotCols(col("qv"), col("cv")) /
                         (col("qnrm") * col("cnrm")), 6).as("csim"))
@@ -1839,9 +1855,7 @@ object Similarity {
       .drop("csim")
     val wCap = Window.partitionBy("cell")
       .orderBy(saltOrd(col("vec_id")).asc, col("vec_id").asc)
-    val capped = emb
-      .join(ivfAssignRanked(spark, dir).filter(col("rn") === 1)
-              .select("vec_id", "cell"), Seq("vec_id"))
+    val capped = emb.join(homeOf(ivfAssignRanked(spark, dir)), Seq("vec_id"))
       .withColumn("rnb", row_number().over(wCap))
       .filter(col("rnb") <= MaxBucketCandidates)
     val cand = probeRanks.join(capped, Seq("cell"))
@@ -1931,20 +1945,15 @@ object Similarity {
     * (NprobePlannedSpec pins it). */
   private[graft] def serveAtNprobe(spark: SparkSession, dir: String,
                                  k: Int): DataFrame =
-    if (k == NProbe)
-      // the production width IS the production serve — one seam
-      serveTop3(ivfCandidates(spark, dir)).select("a_id", "b_id", "rn", "sim")
+    // the production width IS the production serve — one seam
+    if (k == NProbe) ivfTopK(spark, dir)
     else {
       val ranked = ivfAssignRanked(spark, dir)
       val rankedK =
         if (k < NProbe) ranked.filter(col("rn") <= k)
         else rankedAtNprobe(spark, dir, k)
       val emb = embWithNrm(spark, dir)
-      val probes = emb.join(rankedK.select("vec_id", "cell"), Seq("vec_id"))
-      val indexed = emb.join(ranked.filter(col("rn") === 1)
-                               .select("vec_id", "cell"), Seq("vec_id"))
-      serveTop3(pairCandidatesAB(probes, indexed, "cell", MaxBucketCandidates)
-          .filter(col("a_id") =!= col("b_id")))
+      serveTop3(cellCandidates(emb, rankedK, emb, homeOf(ranked)))
         .select("a_id", "b_id", "rn", "sim")
     }
 
@@ -2034,7 +2043,6 @@ object Similarity {
     * lockstep). */
   private def signShortlist(spark: SparkSession, dir: String,
                             probeN: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val pk = signBits(spark, dir).select("vec_id", "w1", "w2")
     val pr = pk.filter(probeSample(probeN, col("vec_id")))
       .select(col("vec_id").as("a_id"), col("w1").as("q1"), col("w2").as("q2"))
@@ -2062,7 +2070,6 @@ object Similarity {
     * eval-harness contract as [[int8RecallEval]]). */
   def hammingTopK(spark: SparkSession, dir: String,
                   probeN: Long = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val short = signShortlist(spark, dir, probeN)
     val emb = embWithNrm(spark, dir)
     val q = probeVecs(emb, probeN)
@@ -2132,7 +2139,6 @@ object Similarity {
 
   private def rrfFusionBuild(spark: SparkSession, dir: String,
                              probeN: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val wa = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id").asc)
     val legA = ivfCandidates(spark, dir)
       .filter(probeSample(probeN, col("a_id")))
@@ -2204,7 +2210,6 @@ object Similarity {
 
   private def graphSearchBuild(spark: SparkSession, dir: String,
                                probeN: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val mu = knnMutual(spark, dir).select("a_id", "b_id")
     val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
       .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
@@ -2468,18 +2473,11 @@ object Similarity {
     * byte-identical across engines (the [[centroidBySource]] precedent).
     * Long form (cell, pos, m). */
   def ivfTrain(spark: SparkSession, dir: String): DataFrame =
-    CkptMemo.getOrElseUpdate((spark, dir, "ivftrain"), {
-      val assigned = ivfAssign(spark, dir).select("vec_id", "cell")
-      meanLongForm(
-        Tables.embeddings(spark, dir)
-          .select(col("vec_id"), col("embedding"))
-          .join(assigned, Seq("vec_id"))
-          .groupBy("cell")
-          .agg(vecMean(col("embedding")).as("mv")),
-        "cell")
+    CkptMemo.getOrElseUpdate((spark, dir, "ivftrain"),
+      cellMeans(Tables.embeddings(spark, dir),
+          ivfAssign(spark, dir).select("vec_id", "cell"))
         .orderBy("cell", "pos")
-        .localCheckpoint()
-    })
+        .localCheckpoint())
 
   /** Every (vector, trained cell) ranked by cosine, kept to rn ≤
     * [[NProbe]] — the trained-quantizer analog of [[ivfAssignRanked]],
@@ -2489,26 +2487,10 @@ object Similarity {
     * doubles); norms precomputed once per vector / per centroid (the
     * file-wide invariant) so the scan does ONE 64-dim fold per pair. */
   private[graft] def ivfTrainedRanked(spark: SparkSession, dir: String): DataFrame =
-    CkptMemo.getOrElseUpdate((spark, dir, "ivftrainedranked"), {
-      val cents = ivfTrain(spark, dir)
-        .groupBy("cell")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-                       x => x.getField("m")).as("cv"))
-        .withColumn("cnrm", sqrt(dotCols(col("cv"), col("cv"))))
-      // same bounded top-NProbe aggregate as ivfAssignRanked — the
-      // trained scan is the second n×cells pass and spilled identically
-      // under the window form
-      explodeRanked(
-        fanOut(embWithNrm(spark, dir))
-          .crossJoin(broadcast(cents))
-          .select(col("vec_id"),
-                  Num.rnd(dotCols(col("embedding"), col("cv")) /
-                            (col("nrm") * col("cnrm")), 6).as("csim"),
-                  col("cell"))
-          .groupBy("vec_id")
-          .agg(topNProbe(col("csim"), col("cell")).as("tk")))
-        .localCheckpoint()
-    })
+    CkptMemo.getOrElseUpdate((spark, dir, "ivftrainedranked"),
+      explodeRanked(rankCells(fanOut(embWithNrm(spark, dir)),
+          centroidTable(ivfTrain(spark, dir))))
+        .localCheckpoint())
 
   /** Re-assignment against the TRAINED centroids — the quantizer a real
     * IVF index serves queries with (seed assign → Lloyd step → final
@@ -2533,7 +2515,6 @@ object Similarity {
     * worst member (min csim, ties to the lower id — the row a human
     * reviews first). */
   def outlierReport(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("cell")
       .orderBy(col("csim").asc, col("vec_id").asc)
     ivfAssignTrained(spark, dir)
@@ -2565,11 +2546,7 @@ object Similarity {
   private def trainedServeFrom(spark: SparkSession, dir: String,
                                ranked: DataFrame): DataFrame = {
     val emb = embWithNrm(spark, dir)
-    val probes = emb.join(ranked.select("vec_id", "cell"), Seq("vec_id"))
-    val indexed = emb.join(ranked.filter(col("rn") === 1)
-                             .select("vec_id", "cell"), Seq("vec_id"))
-    serveTop3(pairCandidatesAB(probes, indexed, "cell", MaxBucketCandidates)
-      .filter(col("a_id") =!= col("b_id")))
+    serveTop3(cellCandidates(emb, ranked, emb, homeOf(ranked)))
       .select("a_id", "b_id", "rn", "sim")
   }
 
@@ -2593,15 +2570,20 @@ object Similarity {
     * (SimIndexPersistSpec pins equality and the layout). The writes
     * happen at query-construction (the eager-persist family — never in
     * PlanShapeSpec's laziness list). */
-  def ivfIndexPersistSearch(spark: SparkSession, dir: String): DataFrame = {
-    val centsPath = Tables.scratch("ivf_index_centroids")
-    ivfTrain(spark, dir).write.mode("overwrite").parquet(centsPath)
-    val postingsPath = Tables.scratch("ivf_index_postings")
-    writePostings(ivfTrainedRanked(spark, dir), "cell", postingsPath)
-    val reloaded = spark.read.parquet(postingsPath)
-      .withColumn("cell", col("cell").cast("long"))
-    trainedServeFrom(spark, dir, reloaded)
-  }
+  def ivfIndexPersistSearch(spark: SparkSession, dir: String): DataFrame =
+    trainedServeFrom(spark, dir, persistTrainedIndex(spark, dir,
+      Tables.scratch("ivf_index_centroids"),
+      Tables.scratch("ivf_index_postings"))._2)
+
+  /** The one trained-index write: the Lloyd centroids (long form) at
+    * `centsPath`, then the ranked postings partitioned by cell at
+    * `postingsPath`; returns both RELOADED (centroids, postings). Each
+    * persist query keeps its own paths — their specs read them. */
+  private def persistTrainedIndex(spark: SparkSession, dir: String,
+                                  centsPath: String, postingsPath: String)
+      : (DataFrame, DataFrame) =
+    (persistModel(spark, ivfTrain(spark, dir), centsPath),
+     persistPostings(spark, ivfTrainedRanked(spark, dir), postingsPath, "cell"))
 
   /** UPSERT lifecycle serving (sim_ivf_upsert_search) — the ARRIVAL
     * half of the index-maintenance pair ([[ivfDeleteSearch]] is the
@@ -2634,16 +2616,8 @@ object Similarity {
     val live = embWithNrm(spark, dir).filter(
       (col("vec_id") < split && col("vec_id") % 10 =!= 0) ||
         col("vec_id") >= split)
-    val homeCells = explodeRanked(
-      fanOut(live).crossJoin(broadcast(cents))
-        .select(col("vec_id"),
-                Num.rnd(dotCols(col("embedding"), col("cv")) /
-                          (col("nrm") * col("cnrm")), 6).as("csim"),
-                col("cell"))
-        .groupBy("vec_id")
-        .agg(topNProbe(col("csim"), col("cell")).as("tk")))
-      .filter(col("rn") === 1).select("vec_id", "cell")
-    upsertServeFrom(live, homeCells, cents, probeN)
+    upsertServeFrom(live, homeOf(explodeRanked(rankCells(fanOut(live), cents))),
+      cents, probeN)
   }
 
   /** Embeddings with their L2 norm — the (vec_id, embedding, nrm) shape
@@ -2664,29 +2638,11 @@ object Similarity {
   private[graft] def upsertServeFrom(live: DataFrame, homeCells: DataFrame,
                                      cents: DataFrame,
                                      probeN: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // the literal leading band: a SERVE-side sample knob on a
     // stream-shared seam, not an eval probe
     val probeSide = live.filter(col("vec_id") < probeN)
-    val probeRanked = explodeRanked(
-      fanOut(probeSide).crossJoin(broadcast(cents))
-        .select(col("vec_id"),
-                Num.rnd(dotCols(col("embedding"), col("cv")) /
-                          (col("nrm") * col("cnrm")), 6).as("csim"),
-                col("cell"))
-        .groupBy("vec_id")
-        .agg(topNProbe(col("csim"), col("cell")).as("tk")))
-    val probes = probeSide
-      .join(probeRanked.select("vec_id", "cell"), Seq("vec_id"))
-    val indexed = live.join(homeCells, Seq("vec_id"))
-    val wr = Window.partitionBy("a_id")
-      .orderBy(col("sim").desc, col("b_id").asc)
-    pairCandidatesAB(probes, indexed, "cell", MaxBucketCandidates)
-      .filter(col("a_id") =!= col("b_id"))
-      .withColumn("rn", row_number().over(wr))
-      .filter(col("rn") <= 3)
-      .select(col("a_id"), col("b_id"), col("sim"),
-              col("rn").cast("int").as("rn"))
+    windowTop3(cellCandidates(probeSide,
+      explodeRanked(rankCells(fanOut(probeSide), cents)), live, homeCells))
   }
 
   /** SemDeDup-style semantic dedup (cluster-then-confirm, after Abbas et
@@ -2720,10 +2676,8 @@ object Similarity {
     // un-thresholded in-cell pair frame — before round 20 each re-ran
     // the capped candidate join + cosine
     CkptMemo.getOrElseUpdate((spark, dir, "sempairs"), {
-      val ranked = ivfTrainedRanked(spark, dir)
-      val emb = embWithNrm(spark, dir)
-      val withCell = emb.join(
-        ranked.filter(col("rn") === 1).select("vec_id", "cell"), Seq("vec_id"))
+      val withCell = embWithNrm(spark, dir)
+        .join(homeOf(ivfTrainedRanked(spark, dir)), Seq("vec_id"))
       pairCandidates(withCell, "cell").filter(col("a_id") < col("b_id"))
         .localCheckpoint()
     })
@@ -2731,8 +2685,7 @@ object Similarity {
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
     // the keep-list join needs only (vec_id, cell) — straight off the
     // memoized trained ranking, no second embeddings scan
-    val homeCells = ivfTrainedRanked(spark, dir)
-      .filter(col("rn") === 1).select("vec_id", "cell")
+    val homeCells = homeOf(ivfTrainedRanked(spark, dir))
     val dups = semanticPairsAll(spark, dir)
       .filter(col("sim") >= 0.4)
     // a vector's dup-with-smaller-id count arrives on the b side (a < b)
@@ -2847,13 +2800,6 @@ object Similarity {
         Num.micro("n_hit", "n_pred", 1000000L).as("precision_micro"))
   }
 
-  /** Training convergence: squared distance each cell's centroid moved in
-    * the Lloyd step (seed → trained) — the metric that tells a pipeline
-    * when to stop iterating. Per-dim squared diffs are stored as INTEGER
-    * pico-units (round(d²·1e12) as long, ≤ 4e12 each, 64 per cell — far
-    * inside Long), so the per-cell sum is exact integer arithmetic,
-    * immune to summation order (the text_unigram_logprob discipline).
-    * One broadcast join on (cell, pos) + one agg. */
   /** INCREMENTAL assignment against a FROZEN index — the ANN face of
     * [[Dedup.incrementalMinhash]]'s daily-append contract: the
     * quantizer is trained on the EXISTING corpus half only (vec_id <
@@ -2886,12 +2832,9 @@ object Similarity {
     // Bench's list; VERDICT r18 item 2)
     CkptMemo.getOrElseUpdate((spark, dir, "frozencents"), {
       val split = embCount(spark, dir) / 2
-      val emb = embWithNrm(spark, dir)
-      val corpus = emb.filter(col("vec_id") < split)
-      val seeds = corpus.filter(col("vec_id") < ivfCells(split))
-        .select(col("vec_id").as("cell"), col("embedding").as("cv"),
-                col("nrm").as("cnrm"))
-      centsOf(lloydStep(fanOut(corpus), seeds)).localCheckpoint()
+      val corpus = embWithNrm(spark, dir).filter(col("vec_id") < split)
+      centroidTable(lloydStep(fanOut(corpus),
+          seedCentroids(corpus, ivfCells(split)))).localCheckpoint()
     })
 
   /** Nearest-frozen-centroid assignment for an arbitrary (vec_id,
@@ -2900,25 +2843,19 @@ object Similarity {
     * aggregate (the ivfAssignRanked discipline — no window sort). */
   private[graft] def assignToCentroids(batch: DataFrame,
                                        cents: DataFrame): DataFrame =
-    fanOut(batch.select(col("vec_id"), col("embedding"),
-             sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm")))
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-              Num.rnd(dotCols(col("embedding"), col("cv")) /
-                        (col("nrm") * col("cnrm")), 6).as("csim"),
-              col("cell"))
-      .groupBy("vec_id")
-      .agg(topNProbe(col("csim"), col("cell")).as("tk"))
-      .select(col("vec_id"),
-              element_at(col("tk"), 1).getField("_2").as("cell"),
-              element_at(col("tk"), 1).getField("_1").as("csim"))
+    nearestCell(rankCells(fanOut(batch.select(col("vec_id"), col("embedding"),
+      sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm"))), cents))
 
+  /** Training convergence: squared distance each cell's centroid moved in
+    * the Lloyd step (seed → trained) — the metric that tells a pipeline
+    * when to stop iterating. Per-dim squared diffs are stored as INTEGER
+    * pico-units (round(d²·1e12) as long, ≤ 4e12 each, 64 per cell — far
+    * inside Long), so the per-cell sum is exact integer arithmetic,
+    * immune to summation order (the text_unigram_logprob discipline).
+    * One broadcast join on (cell, pos) + one agg. */
   def ivfTrainDelta(spark: SparkSession, dir: String): DataFrame = {
-    val seed = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < ivfCells(embCount(spark, dir)))
-      .select(col("vec_id").as("cell"), posexplode(col("embedding")))
-      .select(col("cell"), col("pos").cast("int").as("pos"),
-              col("col").cast("double").as("sv"))
+    val seed = seedLongForm(Tables.embeddings(spark, dir),
+      ivfCells(embCount(spark, dir))).withColumnRenamed("m", "sv")
     val diff = col("m") - col("sv")
     ivfTrain(spark, dir)
       .join(seed, Seq("cell", "pos"))
@@ -2939,13 +2876,13 @@ object Similarity {
     * guard, same discipline as the adaptive index knobs). */
   private[graft] val LloydMaxRounds = 3
 
-  /** Long-form centroids → (cell, cv: Array[Double], cnrm) for the next
-    * assignment scan. Tiny frame (≤cells rows). */
-  private def centsOf(tr: DataFrame): DataFrame =
-    tr.groupBy("cell")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-                     x => x.getField("m")).as("cv"))
-      .withColumn("cnrm", sqrt(dotCols(col("cv"), col("cv"))))
+  /** The seed centroids in long form (cell, pos, m): the first `cells`
+    * vectors' raw elements as doubles — Lloyd round 0. */
+  private def seedLongForm(embRaw: DataFrame, cells: Int): DataFrame =
+    embRaw.filter(col("vec_id") < cells)
+      .select(col("vec_id").as("cell"), posexplode(col("embedding")))
+      .select(col("cell"), col("pos").cast("int").as("pos"),
+              col("col").cast("double").as("m"))
 
   /** One Lloyd step against arbitrary centroids: nearest-centroid assign
     * (6-dp-rounded cosine, ties to the lower cell — identical on both
@@ -2953,26 +2890,23 @@ object Similarity {
     * carry (vec_id, embedding, nrm). A centroid that captures no vectors
     * simply vanishes from the next round's table — identically on both
     * engines, since assignments are identical. */
-  private def lloydStep(emb: DataFrame, cents: DataFrame): DataFrame = {
+  private def lloydStep(emb: DataFrame, cents: DataFrame): DataFrame =
     // nearest-centroid assignment via the bounded top-1 aggregate (the
     // ivfAssignRanked discipline): map-side combine, no n×cells sort —
     // this is the per-round scan the iterated trainer pays LloydMaxRounds
     // times, so the window form's spill multiplied with rounds
-    val asg = emb.crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-              Num.rnd(dotCols(col("embedding"), col("cv")) /
-                        (col("nrm") * col("cnrm")), 6).as("csim"),
-              col("cell"))
-      .groupBy("vec_id")
-      .agg(topNProbe(col("csim"), col("cell")).as("tk"))
-      .select(col("vec_id"),
-              element_at(col("tk"), 1).getField("_2").as("cell"))
+    cellMeans(emb, nearestCell(rankCells(emb, cents)).select("vec_id", "cell"))
+
+  /** The Lloyd mean half, shared by [[ivfTrain]] (under the memoized
+    * stub assignment) and [[lloydStep]]: each cell's element-wise
+    * [[vecMean]] of its (vec_id, embedding) members under a (vec_id,
+    * cell) assignment, in long form (cell, pos, m) at 6 dp. */
+  private def cellMeans(emb: DataFrame, asg: DataFrame): DataFrame =
     meanLongForm(
       emb.select("vec_id", "embedding").join(asg, Seq("vec_id"))
         .groupBy("cell")
         .agg(vecMean(col("embedding")).as("mv")),
       "cell")
-  }
 
   /** The full Lloyd trajectory, memoized: (iter, cell, pos, m) for
     * iter = 0 (seed centroids, raw doubles) through the last executed
@@ -3001,16 +2935,12 @@ object Similarity {
         .select(col("vec_id"), col("embedding"),
                 sqrt(dotCols(col("embedding"), col("embedding"))).as("nrm")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seed = embRaw
-      .filter(col("vec_id") < cells)
-      .select(col("vec_id").as("cell"), posexplode(col("embedding")))
-      .select(col("cell"), col("pos").cast("int").as("pos"),
-              col("col").cast("double").as("m"))
+    val seed = seedLongForm(embRaw, cells)
     var acc = seed.withColumn("iter", lit(0))
     // round 1: the caller's memoized ivfTrain result in production (not
     // ours to free); computed from the seed centroids when absent (spec
     // path) — semantically identical (same assign + mean step)
-    var cur = round1.getOrElse(lloydStep(emb, centsOf(seed)).localCheckpoint())
+    var cur = round1.getOrElse(lloydStep(emb, centroidTable(seed)).localCheckpoint())
     acc = acc.unionByName(cur.withColumn("iter", lit(1)))
     val loopRdds = scala.collection.mutable.ListBuffer
       .empty[Option[org.apache.spark.rdd.RDD[_]]]
@@ -3019,7 +2949,7 @@ object Similarity {
     var iterN = 1
     var moved = true
     while (moved && iterN < LloydMaxRounds) {
-      val next = lloydStep(emb, centsOf(cur)).localCheckpoint()
+      val next = lloydStep(emb, centroidTable(cur)).localCheckpoint()
       loopRdds += org.apache.spark.sql.GraftSql.checkpointRdd(next)
       val maxT = next
         .join(cur.withColumnRenamed("m", "pm"), Seq("cell", "pos"))
@@ -3298,22 +3228,16 @@ object Similarity {
                                          cells: Int): DataFrame = {
     val wv = whitened.groupBy("vec_id")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("z")))),
-                     x => x.getField("z")).as("wv"))
-      .withColumn("nrm", sqrt(dotCols(col("wv"), col("wv"))))
-    val cents = wv.filter(col("vec_id") < cells)
-      .select(col("vec_id").as("cell"), col("wv").as("cv"),
-              col("nrm").as("cnrm"))
-    // bounded top-1 aggregate (the ivfAssignRanked discipline)
-    wv.crossJoin(broadcast(cents))
+                     x => x.getField("z")).as("embedding"))
+      .withColumn("nrm", sqrt(dotCols(col("embedding"), col("embedding"))))
+    // the [[rankCells]] scan plus csim's `+ 0.0` signed-zero rule
+    nearestCell(wv.crossJoin(broadcast(seedCentroids(wv, cells)))
       .select(col("vec_id"),
-        (Num.rnd(dotCols(col("wv"), col("cv")) /
+        (Num.rnd(dotCols(col("embedding"), col("cv")) /
                    (col("nrm") * col("cnrm")), 6) + lit(0.0)).as("csim"),
         col("cell"))
       .groupBy("vec_id")
-      .agg(topNProbe(col("csim"), col("cell")).as("tk"))
-      .select(col("vec_id"),
-              element_at(col("tk"), 1).getField("_2").as("cell"),
-              element_at(col("tk"), 1).getField("_1").as("csim"))
+      .agg(topNProbe(col("csim"), col("cell")).as("tk")))
   }
 
   /** The dim-stats oracle chain through `ds` (pos, n, mean, var_samp,
@@ -3506,7 +3430,6 @@ object Similarity {
     * an embed stage. Centroids are the ROUNDED per-dim means so both
     * engines fold identical inputs. */
   def labelEval(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(spark, dir)
     // vecMean yields each label's mean vector directly in dim order — no
     // explode, no collect_list re-assembly; rounded per element at 6 dp
@@ -3542,7 +3465,6 @@ object Similarity {
     * drop from the denominator on both engines. One |topk|-row join +
     * two aggregations; |labels| output rows at any scale. */
   def knnLabelEval(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lbl = Tables.embeddings(spark, dir).select("vec_id", "label")
     val nb = ivfTopK(spark, dir)
       .join(lbl.select(col("vec_id").as("b_id"), col("label").as("nl")),
@@ -3577,57 +3499,69 @@ object Similarity {
   private[graft] val PqCodes = 16
   private[graft] val PqQueries = 4 // ADC probe set: vec_id < 4
 
-  /** Long-form subvectors (vec_id, sub, sv[8], dxx): one row per
-    * (vector, subspace); dxx = sv·sv precomputed once per subvector (the
-    * file-wide norms invariant — the assignment scans then pay ONE
-    * 8-dim fold per (subvector, code) candidate). */
+  /** Long-form subvectors (vec_id, sub, sv[8], dxx) of the raw
+    * embeddings — [[subvectors]] over the float vectors. */
   private[graft] def pqSubvectors(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"), posexplode(array((0 until PqSubs).map { s =>
-        slice(col("embedding"), s * PqSubDim + 1, PqSubDim)
-      }: _*)))
-      .select(col("vec_id"), col("pos").cast("int").as("sub"), col("col").as("sv"))
+    subvectors(Tables.embeddings(spark, dir), Seq("vec_id"), col("embedding"))
+
+  /** The one subvector split, for raw vectors and residuals alike: `v`
+    * cut into the [[PqSubs]] × [[PqSubDim]] geometry, one row per
+    * (keys…, sub) with sv and dxx = sv·sv precomputed once per subvector
+    * (the file-wide norms invariant — the assignment scans then pay ONE
+    * 8-dim fold per (subvector, code) candidate). */
+  private def subvectors(df: DataFrame, keys: Seq[String], v: Column): DataFrame =
+    df.select(keys.map(col) :+ posexplode(array((0 until PqSubs).map { s =>
+        slice(v, s * PqSubDim + 1, PqSubDim)
+      }: _*)): _*)
+      .select(keys.map(col) :+ col("pos").cast("int").as("sub") :+
+              col("col").as("sv"): _*)
       .withColumn("dxx", dotCols(col("sv"), col("sv")))
 
-  /** Nearest-sub-centroid assignment: squared L2 expanded as
-    * ((sv·sv − 2·sv·cv) + cv·cv) — ArrayDot folds with this EXACT
-    * association mirrored in the oracle SQL, 6-dp-rounded, ties to the
-    * lower code. `cb` must carry (sub, code, cv, dcc) and is
+  /** Squared L2 expanded as ((x·x − 2·x·c) + c·c) over precomputed
+    * self-dots — the EXACT association the oracle SQL mirrors. */
+  private def sqL2(xx: String, x: String, c: String, cc: String): Column =
+    col(xx) - lit(2.0) * dotCols(col(x), col(c)) + col(cc)
+
+  /** Nearest-sub-centroid assignment: [[sqL2]] 6-dp-rounded, ties to
+    * the lower code. `cb` must carry (sub, code, cv, dcc) and is
     * broadcast-tiny; all 8 subspaces assign in ONE plan keyed by sub. */
   private[graft] def pqAssign(subs: DataFrame, cb: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id", "sub").orderBy(col("d2").asc, col("code").asc)
+    val w = Window.partitionBy("vec_id", "sub").orderBy(col("d2").asc, col("code").asc)
     subs.join(broadcast(cb), Seq("sub"))
       .select(col("vec_id"), col("sub"), col("code"),
-        Num.rnd(col("dxx") - lit(2.0) * dotCols(col("sv"), col("cv")) + col("dcc"), 6)
-          .as("d2"))
+              Num.rnd(sqL2("dxx", "sv", "cv", "dcc"), 6).as("d2"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select("vec_id", "sub", "code", "d2")
   }
 
-  /** Trained PQ codebook (sub, code, cv, dcc): seeds are the first
-    * [[PqCodes]] vectors' subvectors (every seed captures its own
-    * subvector — d2 exactly 0 — so no code starts empty), then one
-    * Lloyd step per subspace: seed assign → per-(sub, code) [[vecMean]]
-    * rounded at 6 dp — the [[ivfTrain]] discipline at subvector grain,
-    * every subspace training in the same single plan. Memoized: the
-    * codes query and ADC search both start from it. */
+  /** The one codebook trainer (sub, code, cv, dcc), for raw subvectors
+    * and residuals alike: seeds are the first [[PqCodes]] vectors'
+    * subvectors (every seed captures its own subvector — d2 exactly 0 —
+    * so no code starts empty), then one Lloyd step per subspace: seed
+    * assign → per-(sub, code) `mean` ([[vecMean]] over float
+    * subvectors, [[vecMeanD]] over double residuals) rounded at 6 dp —
+    * the [[ivfTrain]] discipline at subvector grain, every subspace
+    * training in the same single plan. */
+  private def pqTrain(subs: DataFrame,
+                      mean: UserDefinedFunction): DataFrame = {
+    val seed = subs.filter(col("vec_id") < PqCodes)
+      .select(col("sub"), col("vec_id").as("code"), col("sv").as("cv"),
+              col("dxx").as("dcc"))
+    subs.join(pqAssign(subs, seed).select("vec_id", "sub", "code"),
+              Seq("vec_id", "sub"))
+      .groupBy("sub", "code")
+      .agg(mean(col("sv")).as("mv"))
+      .select(col("sub"), col("code"),
+              transform(col("mv"), v => Num.rnd(v, 6)).as("cv"))
+      .withColumn("dcc", dotCols(col("cv"), col("cv")))
+  }
+
+  /** Trained PQ codebook over the raw subvectors ([[pqTrain]]).
+    * Memoized: the codes query and ADC search both start from it. */
   private[graft] def pqCodebook(spark: SparkSession, dir: String): DataFrame =
-    CkptMemo.getOrElseUpdate((spark, dir, "pqcb"), {
-      val subs = pqSubvectors(spark, dir)
-      val seed = subs.filter(col("vec_id") < PqCodes)
-        .select(col("sub"), col("vec_id").as("code"), col("sv").as("cv"),
-                col("dxx").as("dcc"))
-      val asg0 = pqAssign(subs, seed).select("vec_id", "sub", "code")
-      subs.join(asg0, Seq("vec_id", "sub"))
-        .groupBy("sub", "code")
-        .agg(vecMean(col("sv")).as("mv"))
-        .select(col("sub"), col("code"),
-                transform(col("mv"), v => Num.rnd(v, 6)).as("cv"))
-        .withColumn("dcc", dotCols(col("cv"), col("cv")))
-        .localCheckpoint()
-    })
+    CkptMemo.getOrElseUpdate((spark, dir, "pqcb"),
+      pqTrain(pqSubvectors(spark, dir), vecMean).localCheckpoint())
 
   /** PQ encode: every (vector, subspace) assigned to its trained code —
     * the compressed representation a 100 TB store persists (n×8 rows of
@@ -3662,58 +3596,69 @@ object Similarity {
       .select("sub", "n_vecs", "sum_d2_micro", "max_d2_micro", "mean_d2_micro")
       .orderBy("sub")
 
-  /** ADC (asymmetric distance computation) top-3: each query vector
-    * precomputes its distance to every (sub, code) centroid ONCE — a
-    * queries×8×16 table in exact integer micro-units — then a candidate's
-    * approximate distance is 8 table lookups summed, never a 64-dim
-    * float fold per candidate. The lookup table is broadcast; the codes
-    * scan is embarrassingly parallel; per-(query, candidate) sums are
-    * exact integers (the text_unigram_logprob discipline), so ranking is
-    * engine- and order-invariant. */
   /** Candidates an ADC pass shortlists per query before exact re-rank —
     * static (the [[NProbe]] discipline) so the oracle composes the same
     * constant. */
   private[graft] val PqShortlist = 32
 
-  /** ADC-ranked candidates per query, kept to the re-rank shortlist
-    * (rn ≤ [[PqShortlist]]) — shared by the ADC top-k query and the
-    * exact re-rank stage; memoized (tiny: queries×32 rows). */
+  /** One ADC table entry: a query subvector's squared L2 to a code
+    * ([[sqL2]]) in exact integer micro-units. */
+  private def adcTerm: Column =
+    round(sqL2("dxx", "sv", "cv", "dcc") * lit(1e6)).cast("long").as("t")
+
+  /** The one ADC (asymmetric distance computation) ranking, for PQ and
+    * IVF-PQ alike: each query precomputes its distance to every code
+    * ONCE — the broadcast table `dtab` (q_id, keys…, t) — then a
+    * candidate's approximate distance is its codes' (vec_id, keys…)
+    * table lookups summed, never a 64-dim float fold per candidate. The
+    * per-(query, candidate) sums are exact integers (the
+    * text_unigram_logprob discipline), so ranking is engine- and
+    * order-invariant; kept to rn ≤ [[PqShortlist]] (adist, then
+    * vec_id). PQ looks up by (sub, code), IVF-PQ by (cell, sub, code). */
+  private def adcShortlist(codes: DataFrame, dtab: DataFrame,
+                           keys: Seq[String]): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("adist").asc, col("vec_id").asc)
+    codes.join(broadcast(dtab), keys)
+      .filter(col("vec_id") =!= col("q_id"))
+      .groupBy("q_id", "vec_id")
+      .agg(Num.rnd(sum("t").cast("double") / lit(1e6), 6).as("adist"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= PqShortlist)
+      .select("q_id", "vec_id", "rn", "adist")
+  }
+
+  /** The top-3 prefix of an [[adcShortlist]]. */
+  private def adcTop3(ranked: DataFrame): DataFrame =
+    ranked.filter(col("rn") <= 3).select("q_id", "vec_id", "rn", "adist")
+
+  /** PQ ADC-ranked candidates per query ([[adcShortlist]] on (sub,
+    * code)) — shared by the ADC top-k query and the exact re-rank stage;
+    * memoized (tiny: queries×32 rows). */
   private def pqAdcRanked(spark: SparkSession, dir: String): DataFrame =
-    CkptMemo.getOrElseUpdate((spark, dir, "pqadc"), {
-      import org.apache.spark.sql.expressions.Window
-      val dtab = pqSubvectors(spark, dir)
-        .filter(col("vec_id") < PqQueries)
-        .select(col("vec_id").as("q_id"), col("sub"), col("sv"), col("dxx"))
-        .join(pqCodebook(spark, dir), Seq("sub"))
-        .select(col("q_id"), col("sub"), col("code"),
-          round((col("dxx") - lit(2.0) * dotCols(col("sv"), col("cv")) + col("dcc"))
-                  * lit(1e6)).cast("long").as("t"))
-      val w = Window.partitionBy("q_id").orderBy(col("adist").asc, col("vec_id").asc)
-      pqCodes(spark, dir).select("vec_id", "sub", "code")
-        .join(broadcast(dtab), Seq("sub", "code"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(Num.rnd(sum("t").cast("double") / lit(1e6), 6).as("adist"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= PqShortlist)
-        .select("q_id", "vec_id", "rn", "adist")
-        .localCheckpoint()
-    })
+    CkptMemo.getOrElseUpdate((spark, dir, "pqadc"),
+      adcShortlist(pqCodes(spark, dir).select("vec_id", "sub", "code"),
+        pqSubvectors(spark, dir).filter(col("vec_id") < PqQueries)
+          .select(col("vec_id").as("q_id"), col("sub"), col("sv"), col("dxx"))
+          .join(pqCodebook(spark, dir), Seq("sub"))
+          .select(col("q_id"), col("sub"), col("code"), adcTerm),
+        Seq("sub", "code")).localCheckpoint())
 
   def pqAdcTopK(spark: SparkSession, dir: String): DataFrame =
-    pqAdcRanked(spark, dir)
-      .filter(col("rn") <= 3)
-      .select("q_id", "vec_id", "rn", "adist")
+    adcTop3(pqAdcRanked(spark, dir))
 
-  /** The full PQ serving path: ADC shortlist ([[PqShortlist]] table-
-    * lookup candidates per query — cheap, compressed-domain) then EXACT
-    * squared-L2 re-rank of only those candidates against the float
-    * vectors (the recall-repair step every production PQ index runs;
-    * Jégou et al. §5). Per query the exact stage touches 32 vectors
-    * regardless of corpus size — the 100 TB read pattern: codes stay
-    * hot, floats are fetched for a constant-size shortlist. */
-  def pqRerankTopK(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  /** The full PQ serving path: ADC shortlist then [[rerankTop3]]. */
+  def pqRerankTopK(spark: SparkSession, dir: String): DataFrame =
+    rerankTop3(spark, dir, pqAdcRanked(spark, dir))
+
+  /** The one exact re-rank, for PQ and IVF-PQ alike: the (q_id, vec_id)
+    * ADC shortlist ([[PqShortlist]] compressed-domain candidates per
+    * query) re-scored by EXACT squared L2 ([[sqL2]]) against the float
+    * vectors, top 3 per query (the recall-repair step every production
+    * PQ index runs; Jégou et al. §5). Per query the exact stage touches
+    * 32 vectors regardless of corpus size — the 100 TB read pattern:
+    * codes stay hot, floats are fetched for a constant-size shortlist. */
+  private def rerankTop3(spark: SparkSession, dir: String,
+                         shortlist: DataFrame): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
               dotCols(col("embedding"), col("embedding")).as("vv"))
@@ -3721,12 +3666,11 @@ object Similarity {
                        col("vv").as("qq"))
       .filter(col("q_id") < PqQueries)
     val w = Window.partitionBy("q_id").orderBy(col("d2").asc, col("vec_id").asc)
-    pqAdcRanked(spark, dir).select("q_id", "vec_id")
+    shortlist.select("q_id", "vec_id")
       .join(emb, Seq("vec_id"))
       .join(broadcast(q), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
-        Num.rnd(col("qq") - lit(2.0) * dotCols(col("qv"), col("embedding"))
-                  + col("vv"), 6).as("d2"))
+              Num.rnd(sqL2("qq", "qv", "embedding", "vv"), 6).as("d2"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .select("q_id", "vec_id", "rn", "d2")
@@ -3734,70 +3678,44 @@ object Similarity {
 
   // ---- IVF-PQ: the composed billion-vector serving shape ----
 
-  /** Trained coarse centroids rebuilt to position-sorted lists — the
-    * broadcast-size (cells×64) frame both residual stages join. */
-  private def trainedCentroidList(spark: SparkSession, dir: String): DataFrame =
-    ivfTrain(spark, dir)
-      .groupBy("cell")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-                     x => x.getField("m")).as("cv"))
-
   /** Residual subvectors w.r.t. a (vec_id, cell) pair set: residual =
     * embedding − trained centroid of `cell` (float→double cast, then an
     * exact IEEE element-wise subtract — the 6-dp-rounded centroids are
-    * identical doubles cross-engine), split into the [[PqSubs]]×
-    * [[PqSubDim]] PQ geometry with per-subvector norms precomputed
-    * (the file-wide invariant). Passing the HOME assignment gives the
-    * index side; passing the probe set gives the per-probed-cell query
-    * residuals — same code path, mirrored CTEs. */
+    * identical doubles cross-engine), split by [[subvectors]]. Passing
+    * the HOME assignment gives the index side; passing the probe set
+    * gives the per-probed-cell query residuals — same code path,
+    * mirrored CTEs. */
   private[graft] def residualSubs(spark: SparkSession, dir: String,
                                   pairs: DataFrame): DataFrame =
-    residualSubsWith(spark, dir, pairs, trainedCentroidList(spark, dir))
+    residualSubsWith(spark, dir, pairs, centroidTable(ivfTrain(spark, dir)))
 
-  /** [[residualSubs]] against a GIVEN centroid-list frame (cell, cv) —
-    * the seam the persisted-index serve path reloads its coarse
-    * centroids through. */
+  /** [[residualSubs]] against a GIVEN [[centroidTable]] frame — the seam
+    * the persisted-index serve path reloads its coarse centroids
+    * through. */
   private def residualSubsWith(spark: SparkSession, dir: String,
                                pairs: DataFrame, cents: DataFrame): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-      .join(pairs, Seq("vec_id"))
-      .join(broadcast(cents), Seq("cell"))
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("embedding").cast("array<double>"), col("cv"),
-                 (a, b) => a - b).as("res"))
-      .select(col("vec_id"), col("cell"),
-              posexplode(array((0 until PqSubs).map { s =>
-        slice(col("res"), s * PqSubDim + 1, PqSubDim)
-      }: _*)))
-      .select(col("vec_id"), col("cell"), col("pos").cast("int").as("sub"),
-              col("col").as("sv"))
-      .withColumn("dxx", dotCols(col("sv"), col("sv")))
+    subvectors(Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("embedding"))
+        .join(pairs, Seq("vec_id"))
+        .join(broadcast(cents), Seq("cell"))
+        .select(col("vec_id"), col("cell"),
+          zip_with(col("embedding").cast("array<double>"), col("cv"),
+                   (a, b) => a - b).as("res")),
+      Seq("vec_id", "cell"), col("res"))
 
   /** PQ codebook trained on per-cell RESIDUALS (vector − its trained
-    * coarse centroid) — the IVF-PQ composition (Jégou et al. 2011 §III):
-    * the coarse quantizer absorbs the corpus-scale structure, so the
-    * residuals are small and near-isotropic and the 8×16 sub-codebooks
-    * spend their precision where it matters. Same seed + one-Lloyd-step
-    * discipline as [[pqCodebook]]. Memoized (owner: sim_ivfpq_topk):
-    * the codes scan and the ADC table both start from it, and the memo
-    * caps the train chain at one execution per (session, dir). */
+    * coarse centroid) by [[pqTrain]] — the IVF-PQ composition (Jégou et
+    * al. 2011 §III): the coarse quantizer absorbs the corpus-scale
+    * structure, so the residuals are small and near-isotropic and the
+    * 8×16 sub-codebooks spend their precision where it matters.
+    * Memoized (owner: sim_ivfpq_topk): the codes scan and the ADC table
+    * both start from it, and the memo caps the train chain at one
+    * execution per (session, dir). */
   private[graft] def ivfpqCodebook(spark: SparkSession, dir: String): DataFrame =
-    CkptMemo.getOrElseUpdate((spark, dir, "ivfpqcb"), {
-      val home = ivfAssignTrained(spark, dir).select("vec_id", "cell")
-      val rsubs = residualSubs(spark, dir, home)
-      val seed = rsubs.filter(col("vec_id") < PqCodes)
-        .select(col("sub"), col("vec_id").as("code"), col("sv").as("cv"),
-                col("dxx").as("dcc"))
-      val asg0 = pqAssign(rsubs, seed).select("vec_id", "sub", "code")
-      rsubs.join(asg0, Seq("vec_id", "sub"))
-        .groupBy("sub", "code")
-        .agg(vecMeanD(col("sv")).as("mv"))
-        .select(col("sub"), col("code"),
-                transform(col("mv"), v => Num.rnd(v, 6)).as("cv"))
-        .withColumn("dcc", dotCols(col("cv"), col("cv")))
-        .localCheckpoint()
-    })
+    CkptMemo.getOrElseUpdate((spark, dir, "ivfpqcb"),
+      pqTrain(residualSubs(spark, dir,
+          ivfAssignTrained(spark, dir).select("vec_id", "cell")), vecMeanD)
+        .localCheckpoint())
 
   /** Residual PQ codes + home cell per vector — what an IVF-PQ index
     * persists: (cell, 8 codes) per vector, floats needed only for
@@ -3807,6 +3725,62 @@ object Similarity {
     pqAssign(residualSubs(spark, dir, home), ivfpqCodebook(spark, dir))
       .select("vec_id", "sub", "code")
       .join(home, Seq("vec_id"))
+  }
+
+  /** The IVF-PQ ADC ranking through rn ≤ [[PqShortlist]] — shared by
+    * the top-k and the exact re-rank. Memoized (owner: sim_ivfpq_topk,
+    * which runs first in Bench's owner list). */
+  private def ivfpqAdcRanked(spark: SparkSession, dir: String): DataFrame =
+    CkptMemo.getOrElseUpdate((spark, dir, "ivfpqadc"),
+      ivfpqAdcFrom(spark, dir,
+        ivfTrainedRanked(spark, dir), ivfpqCodebook(spark, dir),
+        ivfpqCodes(spark, dir), centroidTable(ivfTrain(spark, dir)))
+        .localCheckpoint())
+
+  /** The IVF-PQ ADC serve composition over GIVEN index frames — shared
+    * by [[ivfpqAdcRanked]] (session-lifetime memos) and
+    * [[ivfpqIndexPersistSearch]] (the same index reloaded from durable
+    * parquet), so the two serve paths can never diverge. `ranked` =
+    * the coarse ranked assignment (vec_id, cell, rn ≤ NProbe); `cb` =
+    * the residual codebook (sub, code, cv, dcc); `codes` = the postings
+    * (vec_id, sub, code, cell); `cents` = the coarse [[centroidTable]]. */
+  private def ivfpqAdcFrom(spark: SparkSession, dir: String,
+                           ranked: DataFrame, cb: DataFrame,
+                           codes: DataFrame, cents: DataFrame): DataFrame = {
+    val probes = ranked
+      .filter(col("rn") <= NProbe)
+      .filter(col("vec_id") < PqQueries)
+      .select("vec_id", "cell")
+    adcShortlist(codes,
+      residualSubsWith(spark, dir, probes, cents)
+        .join(broadcast(cb), Seq("sub"))
+        .select(col("vec_id").as("q_id"), col("cell"), col("sub"), col("code"),
+                adcTerm),
+      Seq("cell", "sub", "code"))
+  }
+
+  /** Persisted IVF-PQ index round trip (sim_ivfpq_persist) — the
+    * [[ivfIndexPersistSearch]] rule applied to the COMPOSED index, i.e.
+    * everything a production billion-vector index ships on disk: the
+    * coarse centroids (long form, model-sized) and the coarse ranked
+    * postings (vec_id, cell, rn ≤ NProbe — PARTITIONED BY cell) through
+    * the shared [[persistTrainedIndex]], the residual PQ codebook (8×16
+    * rows), and the PQ code postings (vec_id, 8 codes + home cell —
+    * PARTITIONED BY cell, 9 small ints per vector: the compressed domain
+    * that stays hot at 100 TB while floats are only fetched for
+    * re-rank). The un-partitioned tables reload with the schema they
+    * were written with ([[persistModel]]). Search runs entirely from
+    * the RELOADED files via the shared [[ivfpqAdcFrom]] seam; the
+    * oracle IS sim_ivfpq_topk's SQL unchanged — only the index's home
+    * moved. IvfPqPersistSpec pins search equality and the layout. */
+  def ivfpqIndexPersistSearch(spark: SparkSession, dir: String): DataFrame = {
+    val (cents, ranked) = persistTrainedIndex(spark, dir,
+      Tables.scratch("ivfpq_index_centroids"), Tables.scratch("ivfpq_index_postings"))
+    val cb = persistModel(spark, ivfpqCodebook(spark, dir),
+      Tables.scratch("ivfpq_index_codebook"))
+    val codes = persistPostings(spark, ivfpqCodes(spark, dir),
+      Tables.scratch("ivfpq_index_codes"), "cell")
+    adcTop3(ivfpqAdcFrom(spark, dir, ranked, cb, codes, centroidTable(cents)))
   }
 
   /** IVF-PQ search — the standard billion-vector serving shape, composed
@@ -3822,117 +3796,17 @@ object Similarity {
     * list), and the integer sums make ranking engine- and
     * order-invariant. A candidate pairs with a query through at most
     * one cell (home is unique), so no dedup stage exists. */
-  /** The IVF-PQ ADC ranking through rn ≤ [[PqShortlist]] — shared by
-    * the top-k and the exact re-rank (the [[pqAdcRanked]] pattern
-    * applied to the composed index). Memoized (owner: sim_ivfpq_topk,
-    * which runs first in Bench's owner list). */
-  private def ivfpqAdcRanked(spark: SparkSession, dir: String): DataFrame =
-    CkptMemo.getOrElseUpdate((spark, dir, "ivfpqadc"), {
-      ivfpqAdcFrom(spark, dir,
-        ivfTrainedRanked(spark, dir), ivfpqCodebook(spark, dir),
-        ivfpqCodes(spark, dir), trainedCentroidList(spark, dir))
-        .localCheckpoint()
-    })
-
-  /** The IVF-PQ ADC serve composition over GIVEN index frames — shared
-    * by [[ivfpqAdcRanked]] (session-lifetime memos) and
-    * [[ivfpqIndexPersistSearch]] (the same index reloaded from durable
-    * parquet), so the two serve paths can never diverge. `ranked` =
-    * the coarse ranked assignment (vec_id, cell, rn ≤ NProbe); `cb` =
-    * the residual codebook (sub, code, cv, dcc); `codes` = the postings
-    * (vec_id, sub, code, cell); `cents` = the coarse centroid list
-    * (cell, cv). */
-  private def ivfpqAdcFrom(spark: SparkSession, dir: String,
-                           ranked: DataFrame, cb: DataFrame,
-                           codes: DataFrame, cents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val probes = ranked
-      .filter(col("rn") <= NProbe)
-      .filter(col("vec_id") < PqQueries)
-      .select("vec_id", "cell")
-    val dtab = residualSubsWith(spark, dir, probes, cents)
-      .join(broadcast(cb), Seq("sub"))
-      .select(col("vec_id").as("q_id"), col("cell"), col("sub"), col("code"),
-        round((col("dxx") - lit(2.0) * dotCols(col("sv"), col("cv"))
-                 + col("dcc")) * lit(1e6)).cast("long").as("t"))
-    val w = Window.partitionBy("q_id").orderBy(col("adist").asc, col("vec_id").asc)
-    codes
-      .join(broadcast(dtab), Seq("cell", "sub", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id")
-      .agg(Num.rnd(sum("t").cast("double") / lit(1e6), 6).as("adist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= PqShortlist)
-      .select("q_id", "vec_id", "rn", "adist")
-  }
-
-  /** Persisted IVF-PQ index round trip (sim_ivfpq_persist) — the
-    * [[ivfIndexPersistSearch]] rule applied to the COMPOSED index, i.e.
-    * everything a production billion-vector index ships on disk: the
-    * coarse centroids (long form, model-sized), the coarse ranked
-    * postings (vec_id, cell, rn ≤ NProbe — PARTITIONED BY cell), the
-    * residual PQ codebook (8×16 rows), and the PQ code postings
-    * (vec_id, 8 codes + home cell — PARTITIONED BY cell, 9 small ints
-    * per vector: the compressed domain that stays hot at 100 TB while
-    * floats are only fetched for re-rank). Search runs entirely from
-    * the RELOADED files via the shared [[ivfpqAdcFrom]] seam; the
-    * oracle IS sim_ivfpq_topk's SQL unchanged — only the index's home
-    * moved. IvfPqPersistSpec pins search equality and the layout. */
-  def ivfpqIndexPersistSearch(spark: SparkSession, dir: String): DataFrame = {
-    val centsPath = Tables.scratch("ivfpq_index_centroids")
-    ivfTrain(spark, dir).write.mode("overwrite").parquet(centsPath)
-    val postingsPath = Tables.scratch("ivfpq_index_postings")
-    writePostings(ivfTrainedRanked(spark, dir), "cell", postingsPath)
-    val cbPath = Tables.scratch("ivfpq_index_codebook")
-    ivfpqCodebook(spark, dir).write.mode("overwrite").parquet(cbPath)
-    val codesPath = Tables.scratch("ivfpq_index_codes")
-    writePostings(ivfpqCodes(spark, dir), "cell", codesPath)
-    val ranked = spark.read.parquet(postingsPath)
-      .withColumn("cell", col("cell").cast("long"))
-    val cents = spark.read.parquet(centsPath)
-      .groupBy("cell")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-                     x => x.getField("m")).as("cv"))
-    val cb = spark.read.parquet(cbPath)
-    val codes = spark.read.parquet(codesPath)
-      .withColumn("cell", col("cell").cast("long"))
-    ivfpqAdcFrom(spark, dir, ranked, cb, codes, cents)
-      .filter(col("rn") <= 3)
-      .select("q_id", "vec_id", "rn", "adist")
-  }
-
   def ivfpqTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfpqAdcRanked(spark, dir)
-      .filter(col("rn") <= 3)
-      .select("q_id", "vec_id", "rn", "adist")
+    adcTop3(ivfpqAdcRanked(spark, dir))
 
   /** IVF-PQ + exact re-rank — the COMPLETE billion-vector serving path
     * (coarse quantizer prunes cells → residual PQ codes rank in the
-    * compressed domain → float re-rank repairs the shortlist): the
-    * [[pqRerankTopK]] recall-repair stage applied to the composed
-    * index. Per query the exact stage fetches [[PqShortlist]] float
-    * vectors regardless of corpus size — at 100 TB the codes stay hot
-    * in memory, the floats are a constant-size point lookup, and the
-    * candidate generation never leaves the probed cells. */
-  def ivfpqRerankTopK(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-              dotCols(col("embedding"), col("embedding")).as("vv"))
-    val q = emb.select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-                       col("vv").as("qq"))
-      .filter(col("q_id") < PqQueries)
-    val w = Window.partitionBy("q_id").orderBy(col("d2").asc, col("vec_id").asc)
-    ivfpqAdcRanked(spark, dir).select("q_id", "vec_id")
-      .join(emb, Seq("vec_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        Num.rnd(col("qq") - lit(2.0) * dotCols(col("qv"), col("embedding"))
-                  + col("vv"), 6).as("d2"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select("q_id", "vec_id", "rn", "d2")
-  }
+    * compressed domain → [[rerankTop3]] repairs the shortlist): at
+    * 100 TB the codes stay hot in memory, the floats are a
+    * constant-size point lookup, and the candidate generation never
+    * leaves the probed cells. */
+  def ivfpqRerankTopK(spark: SparkSession, dir: String): DataFrame =
+    rerankTop3(spark, dir, ivfpqAdcRanked(spark, dir))
 
   // ---- generated oracle SQL ----
   // The oracle encodes the sf0.01 index regime: numPlanes(500) == 8 and
