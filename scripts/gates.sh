@@ -10,11 +10,11 @@
 #
 # Usage: scripts/gates.sh <round-number>
 # Appends a dated "Round <N> gates" block (gate results, memo evictions,
-# the oracle-digest diff, plus per-file code-line counts of
+# the oracle- and plan-digest diffs, plus per-file code-line counts of
 # src/main/scala/graft/ext) to BASELINE.md, rewrites oracle_sql.sha256
-# from the Verify dump and leaves this run's bench.json at the repo root
-# for the commit. Exits non-zero on the first red gate. Full per-gate
-# logs live in /tmp/gates_*_r<N>.log.
+# and plan_digests.sha256 from the Verify dump and leaves this run's
+# bench.json at the repo root for the commit. Exits non-zero on the
+# first red gate. Full per-gate logs live in /tmp/gates_*_r<N>.log.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 ROUND="${1:?usage: scripts/gates.sh <round-number>}"
@@ -66,6 +66,11 @@ VERIFY_MEMO=$(grep -o 'memo_evictions=[0-9]*' "$VLOG" | tail -1)
 # rewrite it from this dump (a Spark-side refactor shows "0 differ")
 DIGEST_LINE=$(python3 scripts/oracle_digests.py "$OUT/oracle_sql.json" \
   oracle_sql.sha256 | tee -a "$LOG" | head -1)
+# per-query optimized-plan digests (Verify's plans.json, expression ids
+# and other run-specific ids stripped): a refactor that promises
+# "plans unchanged" shows "0 differ" here; the file is then rewritten
+PLAN_LINE=$(python3 scripts/oracle_digests.py "$OUT/plans.json" \
+  plan_digests.sha256 | tee -a "$LOG" | head -1)
 
 echo "== gate 3/3: builder bench sf0.1 ==" | tee -a "$LOG"
 BLOG=/tmp/gates_bench_r${ROUND}.log
@@ -115,6 +120,7 @@ done)
   echo "- tests: ${TESTS_LINE:-see $TLOG}"
   echo "- oracle mirror (sf0.01): ${ORACLE_LINE}; Verify ${VERIFY_MEMO:-memo_evictions=?}"
   echo "- ${DIGEST_LINE:-oracle digests: not computed} — oracle_sql.sha256 rewritten"
+  echo "- ${PLAN_LINE:-plan digests: not computed} — plan_digests.sha256 rewritten"
   echo "- builder bench (sf0.1, local[32]): ${BENCH_LINE} — committed bench.json"
   echo "- code lines, src/main/scala/graft/ext (grep -vcE" \
        "'^[[:space:]]*(/\*\*|\*|//|\$)'): ${CODE_LINES%, }"

@@ -1,20 +1,25 @@
 #!/usr/bin/env python3
-"""Per-key digests of a Verify dump's oracle SQL.
+"""Per-key digests of a Verify dump: its oracle SQL or its query plans.
 
     scripts/oracle_digests.py <verify_out>/oracle_sql.json oracle_sql.sha256 [--check]
+    scripts/oracle_digests.py <verify_out>/plans.json plan_digests.sha256 [--check]
 
-Reads the dump's {query name: oracle SQL} map, compares one sha256 per key
-against the digest file (one sorted `name sha256` line per key), prints
+Reads the dump's {query name: string} map (oracle SQL, or each query's
+optimized logical plan with run-specific ids stripped), compares one sha256
+per key against the digest file (one sorted `name sha256` line per key),
+prints
 
     oracle digests: N differ, N added, N removed (K keys)
 
-and then rewrites the digest file from the dump. `--check` compares only and
-exits 1 on any difference. A Spark-side refactor that leaves every oracle
-string alone shows "0 differ, 0 added, 0 removed" against the committed
-file, with no second Verify run on the parent commit.
+("plan digests: ..." for a plans.json dump) and then rewrites the digest
+file from the dump. `--check` compares only and exits 1 on any difference.
+A Spark-side refactor that leaves every oracle string (or every plan) alone
+shows "0 differ, 0 added, 0 removed" against the committed file, with no
+second Verify run on the parent commit.
 """
 import hashlib
 import json
+import os
 import sys
 
 
@@ -41,7 +46,8 @@ def main(argv):
     differ = sorted(k for k in new.keys() & old.keys() if new[k] != old[k])
     added = sorted(new.keys() - old.keys())
     removed = sorted(old.keys() - new.keys())
-    print(f"oracle digests: {len(differ)} differ, {len(added)} added, "
+    kind = "plan" if os.path.basename(args[0]).startswith("plans") else "oracle"
+    print(f"{kind} digests: {len(differ)} differ, {len(added)} added, "
           f"{len(removed)} removed ({len(new)} keys)")
     for label, keys in (("differ", differ), ("added", added),
                         ("removed", removed)):

@@ -24,7 +24,7 @@ import org.apache.spark.sql.DataFrame
   * WARN-logged (slf4j `graft.CkptMemo`) and counted in `evictions`, so
   * a run that outgrows the cap says so.
   *
-  * Builds run OUTSIDE the map's monitor (per-key lazy cells): concurrent
+  * Builds run OUTSIDE the map's monitor (per-key cells): concurrent
   * sessions memoizing distinct keys — e.g. two thrift-server queries each
   * materializing their own dedup pipeline — build in parallel; only
   * same-key callers block on one build.
@@ -33,11 +33,24 @@ private[graft] class CkptMemo(maxEntries: Int) {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.CkptMemo")
 
-  /** Lazy-val init is synchronized on the cell, not the memo; a build
-    * that throws is NOT cached (Scala lazy vals retry after failure), and
-    * the failed cell simply rebuilds on next access. */
-  private final class Cell(build0: () => DataFrame) {
-    lazy val value: DataFrame = build0()
+  /** The build runs under the cell's monitor, not the memo's: another
+    * thread asking for the key waits for it. The monitor is reentrant,
+    * so the cell records its building thread and a same-thread request
+    * (a build that asks for its own key) fails at once, naming the key,
+    * instead of recursing until the stack overflows. */
+  private final class Cell(key: Any, build0: () => DataFrame) {
+    private var built: DataFrame = null
+    private var builder: Thread = null
+    def value: DataFrame = synchronized {
+      if (builder eq Thread.currentThread())
+        throw new IllegalStateException(s"the memo build of $key requested " +
+          "its own key (a memo keyed like one of its own inputs)")
+      if (built == null) {
+        builder = Thread.currentThread()
+        try built = build0() finally builder = null
+      }
+      built
+    }
   }
 
   private val m =
@@ -54,7 +67,7 @@ private[graft] class CkptMemo(maxEntries: Int) {
       val hit = m.get(key)
       if (hit != null) hit
       else {
-        val c = new Cell(() => build)
+        val c = new Cell(key, () => build)
         m.put(key, c)
         if (m.size > maxEntries) {
           val it = m.entrySet().iterator()
@@ -67,7 +80,11 @@ private[graft] class CkptMemo(maxEntries: Int) {
         c
       }
     }
-    cell.value
+    try cell.value
+    catch { case e: Throwable => // never cache a failed build
+      synchronized { if (m.get(key) eq cell) m.remove(key) }
+      throw e
+    }
   }
 }
 

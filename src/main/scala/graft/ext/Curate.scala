@@ -116,8 +116,7 @@ object Curate {
       .filter((1 to 6).map(j => col(s"g$j") === 1).reduce(_ && _))
       .select("doc_id")
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-              size(split(col("text"), " ")).cast("long").as("n_tok"),
+      .select(col("doc_id"), Tokens.nTok.as("n_tok"),
               (Similarity.saltOrd(col("doc_id")) % 32L).cast("int").as("shard"))
     kept.join(toks, Seq("doc_id"))
       .groupBy("shard")
@@ -179,8 +178,7 @@ object Curate {
       .select("doc_id")
     val cur = curriculum(spark, dir).select("doc_id", "phase", "shard")
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-              size(split(col("text"), " ")).cast("long").as("n_tok"))
+      .select(col("doc_id"), Tokens.nTok.as("n_tok"))
     kept.join(cur, Seq("doc_id")).join(toks, Seq("doc_id"))
       .groupBy("phase", "shard")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
@@ -200,8 +198,7 @@ object Curate {
     * 2-dp-grain doubles and rounds at 2 dp (the money-column rule). */
   def report(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"),
-              size(split(col("text"), " ")).cast("long").as("n_tok"))
+      .select(col("doc_id"), col("source"), Tokens.nTok.as("n_tok"))
     val lang = TextOps.langid(spark, dir)
       .select(col("doc_id"), (col("predicted") === "en").cast("long").as("is_en"))
     val qual = TextOps.quality(spark, dir)

@@ -1,6 +1,8 @@
 package graft.ext
 
 import graft.Tables
+import graft.ext.Tokens._
+import graft.ops.Num
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -85,20 +87,6 @@ object Dedup {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
-
-  /** Space-split tokens (key, toks) of the documents with at least `n`
-    * tokens — the frame [[wordGrams]] reads; shorter docs yield no gram. */
-  private[graft] def wordTokens(docs: DataFrame, n: Int,
-                                key: String = "doc_id"): DataFrame =
-    docs.select(col(key), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= n)
-
-  /** The word n-grams of [[wordTokens]]' `toks`, in start order — the one
-    * gram expression (higher-order functions, codegen-friendly, no UDF)
-    * every shingle, gram and window site of Dedup and TextOps explodes. */
-  private[graft] def wordGrams(n: Int): Column =
-    expr(s"transform(sequence(1, size(toks) - ${n - 1}), " +
-         s"i -> concat_ws(' ', slice(toks, i, $n)))")
 
   /** Hashed word n-gram rows (doc_id, h1, h2), one per occurrence — the
     * projection under both the capped index [[shingleGroups]] and the
@@ -431,7 +419,7 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
     val base = docs.agg(count(lit(1)).as("n_docs"),
                         countDistinct("source").as("n_sources"))
-    val toks = docs.select(explode(split(col("text"), " ")).as("tok"))
+    val toks = tokenRows(docs)
       .agg(count(lit(1)).as("n_tokens"), countDistinct("tok").as("n_vocab"))
     val dupg = docs.groupBy("text").agg(count(lit(1)).as("c"))
       .filter(col("c") > 1)
@@ -563,7 +551,7 @@ object Dedup {
     * non-negative → div ≡ //. */
   def dedupSavings(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tok"))
+      .select(col("doc_id"), nTok.as("n_tok"))
     val cl = clusters(spark, dir)
     val keep = cl.groupBy("cluster").agg(min("doc_id").as("keep_id"))
     cl.join(keep, Seq("cluster")).join(toks, Seq("doc_id"))
@@ -1172,8 +1160,7 @@ object Dedup {
       simhashOf(Tables.documents(spark, dir)).localCheckpoint())
 
   private[graft] def simhashOf(docs: DataFrame): DataFrame = {
-    val tf = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    val tf = tokenRows(docs, "doc_id")
       .groupBy("doc_id", "tok")
       .agg(count(lit(1)).as("cnt"))
     val tokHash = tf.select("tok").distinct()
@@ -1324,9 +1311,8 @@ object Dedup {
       .join(csz, Seq("cluster"))
       .withColumn("u_micro",
         Similarity.saltOrd(col("doc_id")) % 1000000L + 1L)
-      .withColumn("lnu",
-        round(log(col("u_micro").cast("double") /
-                  lit(1000000L).cast("double")) * lit(1e6)).cast("long"))
+      .withColumn("lnu", Num.lnMicro(
+        col("u_micro").cast("double") / lit(1000000L).cast("double")))
       .withColumn("key_micro", (-col("lnu")) * col("cluster_size"))
     val w = Window.partitionBy("source")
       .orderBy(col("key_micro").asc, col("doc_id").asc)
@@ -1552,7 +1538,7 @@ object Dedup {
           greatest(coalesce(col("prev_end"), col("p")), col("p"))).as("add"))
       .groupBy("doc_id").agg(sum("add").as("n_covered"))
     docs.select(col("doc_id"),
-                size(split(col("text"), " ")).cast("long").as("n_tokens"))
+                nTok.as("n_tokens"))
       .join(cov, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
               coalesce(col("n_covered"), lit(0L)).as("n_covered"))
@@ -1593,8 +1579,7 @@ object Dedup {
       .withColumn("isl", sum("brk").over(wRun))
       .groupBy("doc_id", "isl")
       .agg(min("p").as("cs"), max(col("p") + lit(SubstrW.toLong)).as("ce"))
-    val nt = docs.select(col("doc_id"),
-      size(split(col("text"), " ")).cast("long").as("n"))
+    val nt = docs.select(col("doc_id"), nTok.as("n"))
     val wCs = Window.partitionBy("doc_id").orderBy("cs")
     // kept = gaps before each covered island + the tail + whole-doc rows
     // for documents with no duplicated span at all

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.Tables
+import graft.ops.Num
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -386,8 +387,7 @@ object Graph {
       .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
     val lnm = und.groupBy("u").agg(count(lit(1)).as("deg"))
       .select(col("u").as("apex"),
-              round(log(col("deg").cast("double")) * lit(1e6)).cast("long")
-                .as("lnm"))
+              Num.lnMicro(col("deg").cast("double")).as("lnm"))
     val aa = und.as("e1").join(und.as("e2"),
         col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
       .select(col("e1.u").as("apex"), col("e1.v").as("x_id"),

@@ -315,7 +315,7 @@ object Similarity {
     * (trained-IVF home cells): the two index-health twins must apply
     * the identical discipline. */
   private def entropyFold(sizes: DataFrame): DataFrame = {
-    def lnMicro(c: Column): Column = round(log(c) * lit(1e6)).cast("long")
+    import Num.lnMicro
     sizes
       .agg(count(lit(1)).as("n_buckets"), sum("c").as("n_vecs"),
            max("c").as("max_bucket"),
@@ -964,7 +964,7 @@ object Similarity {
   private def prunedRound(spark: SparkSession, dir: String, postings: DataFrame,
                           newHot: DataFrame, arrivals: Option[DataFrame])
       : (Boolean, DataFrame, DataFrame) = {
-    val hotList = newHot.collect().map(_.getLong(0))
+    val hotList = newHot.collect().map(_.getLong(0)).sorted
     // the pruning isin compares against the directory-inferred INT
     // partition column — every ncell must fit INT, which the ivfCells
     // clamp (≤ 131k cells, ncell = cell·2^depth + path) guarantees; a

@@ -1,8 +1,10 @@
 package graft.ext
 
 import graft.Tables
+import graft.ext.Tokens._
 import graft.ops.Num
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators over `documents` — the training-data-pipeline
@@ -27,18 +29,17 @@ object TextOps {
   def tokens(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-              size(split(col("text"), " ")).as("n_ws"),
+              size(wsTokens).as("n_ws"),
               size(expr("regexp_extract_all(text, '[a-z]+|[0-9]+|[^ ]', 0)")).as("n_bpe"))
 
   /** Quality scoring: char/token/unique-token counts + a boolean gate
     * (integer outputs — exact across engines). */
   def quality(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
     Tables.documents(spark, dir)
       .select(col("doc_id"),
               length(col("text")).as("n_char"),
-              size(toks).as("n_tok"),
-              size(array_distinct(toks)).as("n_uniq"))
+              size(wsTokens).as("n_tok"),
+              size(array_distinct(wsTokens)).as("n_uniq"))
       .withColumn("ttr_pct",
         when(col("n_tok") > 0,
              Num.rnd(lit(100.0) * col("n_uniq") / col("n_tok"), 1))
@@ -63,7 +64,7 @@ object TextOps {
     val stops = Seq("the", "a", "to", "of", "and")
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"),
-              size(split(col("text"), " ")).as("n_tok"),
+              size(wsTokens).as("n_tok"),
               length(expr("replace(text, ' ', '')")).as("n_ns"),
               length(expr("regexp_replace(text, '[^A-Za-z]', '')")).as("n_alpha"),
               hitCount(stops).as("n_stop"))
@@ -92,7 +93,7 @@ object TextOps {
   def fertilityBySource(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("source"),
-              size(split(col("text"), " ")).cast("long").as("n_ws"),
+              nTok.as("n_ws"),
               size(expr("regexp_extract_all(text, '[a-z]+|[0-9]+|[^ ]', 0)"))
                 .cast("long").as("n_bpe"))
       .groupBy("source")
@@ -305,12 +306,11 @@ object TextOps {
   /** Corpus-level stats: per-language doc counts, token means, quality
     * rate — the aggregate view a data-curation pipeline reports. */
   def statsAgg(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
     Tables.documents(spark, dir)
       .select(col("lang"),
-              size(toks).as("n_tok"),
-              (size(toks).between(10, 2000) &&
-               size(array_distinct(toks)) >= 5).cast("int").as("ok"))
+              size(wsTokens).as("n_tok"),
+              (size(wsTokens).between(10, 2000) &&
+               size(array_distinct(wsTokens)) >= 5).cast("int").as("ok"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
            Num.rnd(avg("n_tok"), 2).as("avg_tokens"),
@@ -321,8 +321,7 @@ object TextOps {
   /** Corpus-wide token frequency: top 20 tokens (vocab head — the first
     * thing a tokenizer-training pipeline inspects). */
   def topTokens(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("tok"))
+    tokenRows(Tables.documents(spark, dir))
       .groupBy("tok").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("tok").asc)
       .limit(20)
@@ -345,9 +344,7 @@ object TextOps {
     * vocabulary-sized. Pure integer outputs (micro-unit rate via
     * non-negative `div`). */
   def vocabOov(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val st = Tables.documents(spark, dir)
-      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
+    val st = tokenRows(Tables.documents(spark, dir), "source")
       .groupBy("source", "tok").agg(count(lit(1)).as("n"))
     val tc = st.groupBy("tok").agg(sum("n").as("cn"))
       .withColumn("rk", row_number().over(
@@ -360,9 +357,7 @@ object TextOps {
              .as("n_types_invocab"))
       .select(col("source"), col("n_tokens"), col("n_oov"),
         col("n_types_invocab"),
-        expr("CASE WHEN n_tokens = 0 THEN CAST(0 AS BIGINT) " +
-          "ELSE (n_oov * CAST(1000000 AS BIGINT)) div n_tokens END")
-          .as("oov_rate_micro"))
+        Num.micro("n_oov", "n_tokens", 0L).as("oov_rate_micro"))
   }
 
   /** Document-length histogram in 100-char buckets. */
@@ -378,13 +373,11 @@ object TextOps {
     * keep = rep_ratio <= 0.5 (median on this corpus is ~0.54, so both
     * classes are populated and the oracle check is non-vacuous). */
   def repetition(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-              size(toks).as("n_tok"),
-              size(array_distinct(toks)).as("n_uniq"))
-      .withColumn("rep_ratio",
-        Num.rnd(lit(1.0) - col("n_uniq").cast("double") / col("n_tok"), 6))
+              size(wsTokens).as("n_tok"),
+              size(array_distinct(wsTokens)).as("n_uniq"))
+      .withColumn("rep_ratio", repRatio(col("n_tok"), col("n_uniq")))
       .withColumn("keep", (col("rep_ratio") <= 0.5).cast("int"))
   }
 
@@ -411,7 +404,6 @@ object TextOps {
     * same hex string in both engines), the reproducible version of
     * `ORDER BY rand()` stratified sampling. One shuffle by source. */
   def samplePerSource(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("source")
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
     Tables.documents(spark, dir)
@@ -438,14 +430,12 @@ object TextOps {
     * per source (the samplePerSource shuffle shape); at 100 TB this is
     * a per-partition top-k accumulator, never a global sort. */
   def weightedSample(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val keyed = Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"),
-              size(split(col("text"), " ")).cast("long").as("n_tok"),
+              nTok.as("n_tok"),
               (Similarity.saltOrd(col("doc_id")) % 1000000L + 1L).as("u_micro"))
-      .withColumn("lnu",
-        round(log(col("u_micro").cast("double") /
-                  lit(1000000L).cast("double")) * lit(1e6)).cast("long"))
+      .withColumn("lnu", Num.lnMicro(
+        col("u_micro").cast("double") / lit(1000000L).cast("double")))
       .withColumn("key_nano", expr("((-lnu) * 1000) div n_tok"))
     val w = Window.partitionBy("source")
       .orderBy(col("key_nano").asc, col("doc_id").asc)
@@ -479,14 +469,11 @@ object TextOps {
     * form (doc_id, dim, v); TF shape (hash per DISTINCT token, weight by
     * count) like simhash, so the agg runs over per-doc vocab rows. */
   def hashEmbed(spark: SparkSession, dir: String): DataFrame = {
-    val P1 = 1000000007L
-    val tf = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    val tf = tokenRows(Tables.documents(spark, dir), "doc_id")
       .groupBy("doc_id", "tok")
       .agg(count(lit(1)).as("cnt"))
     val tokHash = tf.select("tok").distinct()
-      .select(col("tok"),
-              graft.functions.PolyHashMod.col(col("tok"), 31L, P1).as("h"))
+      .select(col("tok"), featureHash.as("h"))
     tf.join(tokHash, Seq("tok"))
       .select(col("doc_id"),
               (col("h") % 64).cast("int").as("dim"), // low 6 bits: dimension
@@ -552,8 +539,8 @@ object TextOps {
     // raw (doc_id, s) rows; each branch applies exactly the distinct it
     // needs (eval only ever needs the s set — a (doc_id, s) distinct
     // first would be a second shuffle over the eval corpus for nothing)
-    def shingles(df: DataFrame): DataFrame = Dedup.wordTokens(df, 5)
-      .select(col("doc_id"), explode(Dedup.wordGrams(5)).as("s"))
+    def shingles(df: DataFrame): DataFrame = wordTokens(df, 5)
+      .select(col("doc_id"), explode(wordGrams(5)).as("s"))
     val evalSh = shingles(docs.filter(col("source") === evalSource))
       .select("s").distinct().withColumn("hit", lit(1))
     shingles(docs.filter(col("source") =!= evalSource)).distinct()
@@ -653,10 +640,8 @@ object TextOps {
     * each doc. Scores rounded at 6 dp before ranking so ordering is
     * identical cross-engine (ties break on token). */
   def tfidf(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
-    val tf = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    val tf = tokenRows(docs, "doc_id")
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
@@ -707,7 +692,7 @@ object TextOps {
                   dfCap: Int = 50, thr: Double = 0.5): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val sh = docs
-      .select(col("doc_id"), split(col("text"), " ").as("t"))
+      .select(col("doc_id"), wsTokens.as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"),
         explode(expr("transform(sequence(0, size(t) - 3), " +
@@ -751,15 +736,19 @@ object TextOps {
     * offset ÷ seqLen. ONE shuffle (window by source); at 100 TB the
     * packing unit is the source shard, so parallelism = number of
     * sources/shards and no global coordination is needed. */
-  def pack(spark: SparkSession, dir: String, seqLen: Int = 512): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def pack(spark: SparkSession, dir: String, seqLen: Int = 512): DataFrame =
+    packOffsets(spark, dir)
+      .withColumn("seq_id", floor(col("start_off") / seqLen).cast("long"))
+
+  /** (doc_id, source, n_tok, start_off): each document's token offset in
+    * its source's doc_id-ordered concatenation — the one window pass of
+    * [[pack]] and [[packReport]]. */
+  private def packOffsets(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("source").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"),
-              size(split(col("text"), " ")).cast("long").as("n_tok"))
+      .select(col("doc_id"), col("source"), nTok.as("n_tok"))
       .withColumn("start_off", coalesce(sum("n_tok").over(w), lit(0L)))
-      .withColumn("seq_id", floor(col("start_off") / seqLen).cast("long"))
   }
 
   /** Packing-efficiency report over candidate context lengths — the
@@ -774,13 +763,7 @@ object TextOps {
     * output rows at any corpus scale. ALL-INTEGER (non-negative floor
     * division only). */
   def packReport(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val base = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"),
-              size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .withColumn("start_off", coalesce(sum("n_tok").over(w), lit(0L)))
+    val base = packOffsets(spark, dir)
     Seq(256, 512, 1024).map { l =>
       base
         .withColumn("is_split",
@@ -802,14 +785,23 @@ object TextOps {
     }.reduce(_ unionByName _).orderBy("source", "seq_len")
   }
 
-  /** Temperature resampling across sources — the p^α rebalancing a
-    * multilingual/multi-domain pipeline applies so high-resource sources
-    * don't drown low-resource ones (α = 0.5 here): per-source quota
-    * ∝ sqrt(share), then a deterministic md5-ordered take of quota docs
-    * per source. Two tiny aggregates broadcast to one windowed pass over
-    * the corpus — no per-row shuffle beyond the source partition. Weights
-    * are 6-dp-rounded BEFORE the floor so the integer quotas are
-    * byte-identical cross-engine. */
+  /** (source, n_docs, n_tokens) — the per-source token total of
+    * [[mixturePlan]], [[epochPlan]] and [[tokenBudgetMix]]. */
+  private def sourceTotals(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir).select(col("source"), nTok.as("n_tok"))
+      .groupBy("source")
+      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
+
+  /** [[sourceTotals]] plus each source's equal share of `budget` tokens
+    * (budget div n_sources) in column `share` — the uniform split
+    * [[mixturePlan]] caps and [[epochPlan]] repeats up to. */
+  private def equalShares(spark: SparkSession, dir: String, budget: Long,
+                          share: String): DataFrame = {
+    val perSrc = sourceTotals(spark, dir)
+    perSrc.crossJoin(broadcast(perSrc.agg(count(lit(1)).as("n_src"))))
+      .withColumn(share, expr(s"CAST($budget AS BIGINT) div n_src"))
+  }
+
   /** Mixture/budget planning — the step BEFORE any sampling runs: given
     * a total token budget, derive each source's sampling rate so the
     * planned take fits an equal per-source share (the uniform-mixture
@@ -823,22 +815,14 @@ object TextOps {
     * (actually taking the sample) is deliberately NOT here, because a
     * planner that must scan the corpus twice is wrong at 100 TB. */
   def mixturePlan(spark: SparkSession, dir: String,
-                  budgetTokens: Long = 10000L): DataFrame = {
-    val perSrc = Tables.documents(spark, dir)
-      .select(col("source"),
-              size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-    val nSrc = perSrc.agg(count(lit(1)).as("n_src"))
-    perSrc.crossJoin(broadcast(nSrc))
-      .withColumn("share", expr(s"CAST($budgetTokens AS BIGINT) div n_src"))
+                  budgetTokens: Long = 10000L): DataFrame =
+    equalShares(spark, dir, budgetTokens, "share")
       .select(col("source"), col("n_docs"), col("n_tokens"),
         least(lit(1000000L),
           expr("(share * CAST(1000000 AS BIGINT)) div n_tokens"))
           .as("rate_micro"))
       .withColumn("planned_tokens",
         expr("(n_tokens * rate_micro) div CAST(1000000 AS BIGINT)"))
-  }
 
   /** EPOCH plan — the repetition half the capped mixture plan throws
     * away: [[mixturePlan]] clamps each source's sampling rate at 1.0
@@ -855,16 +839,8 @@ object TextOps {
     * EpochPlanSpec pins it). All integers non-negative ⇒ div ≡ `//`,
     * % ≡ %. |sources| rows at any corpus scale. */
   def epochPlan(spark: SparkSession, dir: String,
-                budgetTokens: Long = 10000L): DataFrame = {
-    val perSrc = Tables.documents(spark, dir)
-      .select(col("source"),
-              size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-    val nSrc = perSrc.agg(count(lit(1)).as("n_src"))
-    perSrc.crossJoin(broadcast(nSrc))
-      .withColumn("share_tokens",
-                  expr(s"CAST($budgetTokens AS BIGINT) div n_src"))
+                budgetTokens: Long = 10000L): DataFrame =
+    equalShares(spark, dir, budgetTokens, "share_tokens")
       .select(col("source"), col("n_docs"), col("n_tokens"),
         col("share_tokens"),
         expr("(share_tokens * CAST(1000000 AS BIGINT)) div n_tokens")
@@ -873,13 +849,30 @@ object TextOps {
         expr("share_tokens % n_tokens").as("tail_tokens"))
       .withColumn("over_repeat", (col("epochs_micro") > 4000000L).cast("int"))
       .orderBy("source")
-  }
 
   /** Count-min-sketch hash bases (4 rows × 64 buckets, mod 1000003) —
     * mirrored literally in the oracle's per-base folds; lockstep only. */
   private val CmsBases = Seq(131L, 137L, 139L, 149L)
   private val CmsBuckets = 64
   private val CmsProbeTerms = Seq("spark", "vector", "dup")
+
+  /** The 4×64 CMS counter table of a document frame — stream-agnostic
+    * (explode → 4 portable hashes → one count agg), shared by the
+    * batch estimator and `DocStream.cmsSketch` so the sketch layout
+    * can't drift between them. Counter sums are commutative and
+    * associative, so a streaming fold over ANY micro-batch arrival
+    * order equals this batch aggregation exactly. */
+  private[graft] def cmsSketchOf(docs: DataFrame): DataFrame =
+    cmsRows(tokenRows(docs), "tok")
+      .groupBy("row_j", "bucket").agg(count(lit(1)).as("cnt"))
+
+  /** `keep`, then (row_j, bucket) of string column `c` for every CMS row
+    * j — the one hash-to-cell mapping of the sketch and its probes. */
+  private def cmsRows(df: DataFrame, c: String, keep: Column*): DataFrame =
+    CmsBases.zipWithIndex.map { case (b, j) =>
+      df.select(keep :+ lit(j).as("row_j") :+ (graft.functions.PolyHashMod
+        .col(col(c), b, 1000003L) % CmsBuckets).as("bucket"): _*)
+    }.reduce(_ unionByName _)
 
   /** COUNT-MIN SKETCH term-frequency estimation — the fourth mergeable
     * sketch in the family (HLL distinct / Misra-Gries heavy hitters /
@@ -893,33 +886,12 @@ object TextOps {
     * by CmsSpec. Sketch state is d·w counters at ANY corpus scale and
     * merges by addition — the 100 TB re-aggregation shape. Probe terms
     * are the bm25 literal family. */
-  /** The 4×64 CMS counter table of a document frame — stream-agnostic
-    * (explode → 4 portable hashes → one count agg), shared by the
-    * batch estimator and `DocStream.cmsSketch` so the sketch layout
-    * can't drift between them. Counter sums are commutative and
-    * associative, so a streaming fold over ANY micro-batch arrival
-    * order equals this batch aggregation exactly. */
-  private[graft] def cmsSketchOf(docs: DataFrame): DataFrame = {
-    val tk = docs.select(explode(split(col("text"), " ")).as("tok"))
-    CmsBases.zipWithIndex.map { case (b, j) =>
-      tk.select(lit(j).as("row_j"),
-        (graft.functions.PolyHashMod.col(col("tok"), b, 1000003L) %
-          CmsBuckets).as("bucket"))
-    }.reduce(_ unionByName _)
-      .groupBy("row_j", "bucket").agg(count(lit(1)).as("cnt"))
-  }
-
   def cmsEstimate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cms = cmsSketchOf(Tables.documents(spark, dir))
-    val tk = Tables.documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("tok"))
-    val terms = CmsProbeTerms.toDF("term")
-    val probes = CmsBases.zipWithIndex.map { case (b, j) =>
-      terms.select(col("term"), lit(j).as("row_j"),
-        (graft.functions.PolyHashMod.col(col("term"), b, 1000003L) %
-          CmsBuckets).as("bucket"))
-    }.reduce(_ unionByName _)
+    val docs = Tables.documents(spark, dir)
+    val cms = cmsSketchOf(docs)
+    val tk = tokenRows(docs)
+    val probes = cmsRows(CmsProbeTerms.toDF("term"), "term", col("term"))
     val est = probes.join(broadcast(cms), Seq("row_j", "bucket"), "left")
       .groupBy("term").agg(min(coalesce(col("cnt"), lit(0L))).as("est_c"))
     val tru = tk.filter(col("tok").isin(CmsProbeTerms: _*))
@@ -940,10 +912,8 @@ object TextOps {
     * not the corpus (the madOutlier histogram precedent) — one corpus
     * pass to counts, then model-sized work at any scale. */
   def ngramCoverage(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val cnt = Tables.documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("tok"))
+    val cnt = tokenRows(Tables.documents(spark, dir))
       .groupBy("tok").agg(count(lit(1)).as("c"))
     val w = Window.orderBy(col("c").desc, col("tok").asc)
     val ranked = cnt
@@ -974,11 +944,7 @@ object TextOps {
     * |sources|-row model at any corpus scale. */
   def tokenBudgetMix(spark: SparkSession, dir: String,
                      budget: Long = 100000L): DataFrame = {
-    val perSrc = Tables.documents(spark, dir)
-      .select(col("source"),
-              size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
+    val perSrc = sourceTotals(spark, dir)
       .withColumn("weight_micro",
         round(sqrt(col("n_tokens").cast("double")) * 1e6).cast("long"))
     val tot = perSrc.agg(sum("weight_micro").as("tw"))
@@ -1010,9 +976,8 @@ object TextOps {
     ksDriftOf(Tables.documents(spark, dir))
 
   private[graft] def ksDriftOf(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lv = docs
-      .select(size(split(col("text"), " ")).cast("long").as("len"),
+      .select(nTok.as("len"),
               (col("source") === "src0").cast("long").as("isa"))
     val g = lv.groupBy("len")
       .agg(sum("isa").as("ca"), sum(lit(1L) - col("isa")).as("cb"))
@@ -1048,9 +1013,16 @@ object TextOps {
               col("rate_micro"))
       .select(col("doc_id"), col("source"), col("rate_micro"))
 
+  /** Temperature resampling across sources — the p^α rebalancing a
+    * multilingual/multi-domain pipeline applies so high-resource sources
+    * don't drown low-resource ones (α = 0.5 here): per-source quota
+    * ∝ sqrt(share), then a deterministic md5-ordered take of quota docs
+    * per source. Two tiny aggregates broadcast to one windowed pass over
+    * the corpus — no per-row shuffle beyond the source partition. Weights
+    * are 6-dp-rounded BEFORE the floor so the integer quotas are
+    * byte-identical cross-engine. */
   def temperatureSample(spark: SparkSession, dir: String,
                         budget: Int = 200): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
     // ONE per-source aggregate; the global total is a window over the
     // tiny post-agg frame (n_sources rows on a single partition), not a
@@ -1083,8 +1055,7 @@ object TextOps {
     * but reducer memory is O(k), not O(vocabulary). */
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.Encoders
-    val toks = Tables.documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("tok"))
+    val toks = tokenRows(Tables.documents(spark, dir))
     val cand = toks.select(col("tok")).as[String](Encoders.STRING)
       .select(new graft.functions.MisraGries(127).toColumn) // typed select
       .toDF("cand")
@@ -1108,20 +1079,38 @@ object TextOps {
     * vocabulary join, no second shuffle; at 100 TB the hashing is linear
     * in corpus size and the agg is partial+final. A learned model swaps
     * the weight formula for a broadcast weight table — same plan. */
-  def qualityModel(spark: SparkSession, dir: String): DataFrame = {
-    val P1 = 1000000007L
-    val h = graft.functions.PolyHashMod.col(col("tok"), 31L, P1)
-    val w = (h % 64) * 37 % 21 - 10 // deterministic weights in [-10, 10]
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .select(col("doc_id"), w.as("w"))
+  def qualityModel(spark: SparkSession, dir: String): DataFrame =
+    tokenRows(Tables.documents(spark, dir), "doc_id")
+      // deterministic weights in [-10, 10]
+      .select(col("doc_id"), (featureBucket * 37 % 21 - 10).as("w"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tok"), sum("w").as("score"))
       .select(col("doc_id"), col("n_tok"), col("score"),
               Num.rnd(col("score").cast("double") / col("n_tok"), 6)
                 .as("score_per_tok"),
               (col("score") > 0).cast("int").as("keep"))
-  }
+
+  /** The hashed token feature PolyHashMod(tok, 31, P1) (column `tok`)
+    * and its bucket mod 64 — the one feature space of [[qualityModel]],
+    * [[qualityTrain]], the `qscored` apply and [[hashEmbed]]'s
+    * dimensions (oracle: the `(a*31 + b) % 1000000007` fold, then % 64). */
+  private val P1 = 1000000007L
+  private def featureHash: Column =
+    graft.functions.PolyHashMod.col(col("tok"), 31L, P1)
+  private def featureBucket: Column = featureHash % 64
+
+  /** (doc_id, y): the [[gopherGates]] labels the quality trainer and its
+    * audits score against. */
+  private def gopherLabels(spark: SparkSession, dir: String): DataFrame =
+    gopherGates(spark, dir).select(col("doc_id"), col("gopher_ok").as("y"))
+
+  /** The memoized scored docs (doc_id, n_tok, score_micro) joined to
+    * their [[gopherLabels]] — what [[qualityRoc]], [[qualityCalibration]]
+    * and [[qualityGateCalibrated]] read. */
+  private def scoredLabelled(spark: SparkSession, dir: String): DataFrame =
+    qualityScoreTrained(spark, dir)
+      .select(col("doc_id"), col("n_tok"), col("score_micro"))
+      .join(gopherLabels(spark, dir), Seq("doc_id"))
 
   /** Quality-classifier TRAINING half (round-9 verdict item 4) — closes
     * the last train→apply gap in the curation stack (IVF train→search,
@@ -1130,9 +1119,9 @@ object TextOps {
     *   w_b = ln(n_pos_b + 1) − ln(tp + 64) − ln(n_neg_b + 1) + ln(tn + 64),
     * on a deterministic heuristic-labeled seed (label = [[gopherGates]]'
     * `gopher_ok` — the standard bootstrap: heuristic gates label the
-    * seed, the learned model generalizes). Feature space is EXACTLY
-    * [[qualityModel]]'s (PolyHashMod(tok,31,1e9+7) mod 64), so the
-    * learned table is drop-in for the same scorer shape.
+    * seed, the learned model generalizes). Features are [[featureBucket]],
+    * [[qualityModel]]'s own, so the learned table is drop-in for the
+    * same scorer shape.
     *
     * Float discipline (CLAUDE.md ln rule): each ln is rounded at 6 dp
     * INDEPENDENTLY on both engines and stored as integer micro-nats;
@@ -1141,13 +1130,9 @@ object TextOps {
     * occurrence, codegen'd), ONE groupBy(bucket) with partial agg;
     * model state is 64 rows at any corpus size. */
   def qualityTrain(spark: SparkSession, dir: String): DataFrame = {
-    val P1 = 1000000007L
-    val lab = gopherGates(spark, dir).select(col("doc_id"), col("gopher_ok").as("y"))
-    val occ = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .select(col("doc_id"),
-        (graft.functions.PolyHashMod.col(col("tok"), 31L, P1) % 64).as("b"))
-    val cnt = occ.join(lab, Seq("doc_id"))
+    val occ = tokenRows(Tables.documents(spark, dir), "doc_id")
+      .select(col("doc_id"), featureBucket.as("b"))
+    val cnt = occ.join(gopherLabels(spark, dir), Seq("doc_id"))
       .groupBy("b")
       .agg(sum(when(col("y") === 1, 1L).otherwise(0L)).as("n_pos"),
            sum(when(col("y") === 0, 1L).otherwise(0L)).as("n_neg"))
@@ -1159,8 +1144,7 @@ object TextOps {
               coalesce(col("n_pos"), lit(0L)).as("n_pos"),
               coalesce(col("n_neg"), lit(0L)).as("n_neg"))
     val tot = full.agg(sum("n_pos").as("tp"), sum("n_neg").as("tn"))
-    def lnMicro(c: Column): Column =
-      round(log(c.cast("double")) * lit(1e6)).cast("long")
+    import Num.lnMicro
     full.crossJoin(broadcast(tot))
       .select(col("bucket"), col("n_pos"), col("n_neg"),
         (lnMicro(col("n_pos") + lit(1L)) - lnMicro(col("tp") + lit(64L)) -
@@ -1185,12 +1169,9 @@ object TextOps {
     // corpus_train_schedule alone (VERDICT r16 item 7). Owner in
     // Bench's list: text_quality_score_trained.
     CkptMemo.getOrElseUpdate((spark, dir, "qscored"), {
-      val P1 = 1000000007L
       val w = qualityTrain(spark, dir).select(col("bucket"), col("w_micro"))
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-        .select(col("doc_id"),
-          (graft.functions.PolyHashMod.col(col("tok"), 31L, P1) % 64).as("bucket"))
+      tokenRows(Tables.documents(spark, dir), "doc_id")
+        .select(col("doc_id"), featureBucket.as("bucket"))
         .join(broadcast(w), Seq("bucket"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_tok"), sum("w_micro").as("score_micro"))
@@ -1225,12 +1206,8 @@ object TextOps {
   def qualityRoc(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cuts = QualityRocCuts.toDF("cut_micro")
-    val scored = qualityScoreTrained(spark, dir)
-      .select(col("doc_id"), col("n_tok"), col("score_micro"))
-    val lab = gopherGates(spark, dir)
-      .select(col("doc_id"), col("gopher_ok").as("y"))
     val pred = col("score_micro") > col("cut_micro") * col("n_tok")
-    scored.join(lab, Seq("doc_id"))
+    scoredLabelled(spark, dir)
       .crossJoin(broadcast(cuts))
       .groupBy("cut_micro")
       .agg(
@@ -1240,12 +1217,8 @@ object TextOps {
         sum(when(col("y") === 1, 1L).otherwise(0L)).as("n_pos"))
       .select(col("cut_micro"), col("n_pred"), col("tp"), col("fp"),
         col("n_pos"),
-        expr("CASE WHEN n_pred = 0 THEN CAST(1000000 AS BIGINT) " +
-             "ELSE (tp * CAST(1000000 AS BIGINT)) div n_pred END")
-          .as("precision_micro"),
-        expr("CASE WHEN n_pos = 0 THEN CAST(1000000 AS BIGINT) " +
-             "ELSE (tp * CAST(1000000 AS BIGINT)) div n_pos END")
-          .as("recall_micro"))
+        Num.micro("tp", "n_pred", 1000000L).as("precision_micro"),
+        Num.micro("tp", "n_pos", 1000000L).as("recall_micro"))
       .orderBy("cut_micro")
   }
 
@@ -1271,12 +1244,7 @@ object TextOps {
     * over docs. CalibrationSpec ties Σn_docs to the corpus count and
     * Σn_pos to [[qualityRoc]]'s n_pos column. */
   def qualityCalibration(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = qualityScoreTrained(spark, dir)
-      .select(col("doc_id"), col("n_tok"), col("score_micro"))
-    val lab = gopherGates(spark, dir)
-      .select(col("doc_id"), col("gopher_ok").as("y"))
-    val g = scored.join(lab, Seq("doc_id"))
+    val g = scoredLabelled(spark, dir)
       .select(expr("score_micro div n_tok").as("spt_micro"), col("y"))
       .groupBy("spt_micro")
       .agg(count(lit(1)).as("n_g"), sum("y").cast("long").as("p_g"))
@@ -1323,11 +1291,7 @@ object TextOps {
     val calib = qualityCalibration(spark, dir)
     val tau = calib.filter(col("rate_micro") >= 500000L)
       .agg(coalesce(min("spt_min_micro"), lit(1000000000L)).as("tau_micro"))
-    val scored = qualityScoreTrained(spark, dir)
-      .select(col("doc_id"), col("n_tok"), col("score_micro"))
-    val lab = gopherGates(spark, dir)
-      .select(col("doc_id"), col("gopher_ok").as("y"))
-    val f = scored.join(lab, Seq("doc_id")).crossJoin(broadcast(tau))
+    val f = scoredLabelled(spark, dir).crossJoin(broadcast(tau))
       .select(col("y").cast("long").as("y"), col("tau_micro"),
         (col("score_micro") > 0).cast("long").as("ks"),
         (expr("score_micro div n_tok") >= col("tau_micro"))
@@ -1345,9 +1309,7 @@ object TextOps {
       .agg(max("tau_micro").as("tau_micro"), sum("flag").as("n_keep"),
            sum(col("flag") * col("y")).as("n_pos_kept"))
       .select(col("gate"), col("tau_micro"), col("n_keep"), col("n_pos_kept"),
-        expr("CASE WHEN n_keep = 0 THEN CAST(1000000 AS BIGINT) " +
-             "ELSE (n_pos_kept * CAST(1000000 AS BIGINT)) div n_keep END")
-          .as("precision_micro"))
+        Num.micro("n_pos_kept", "n_keep", 1000000L).as("precision_micro"))
       .orderBy("gate")
   }
 
@@ -1371,8 +1333,8 @@ object TextOps {
   private[graft] def dupSpanFracOf(spark: SparkSession, dir: String,
                                    digestKeyed: Boolean): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val sh = Dedup.wordTokens(docs, 8)
-      .select(col("doc_id"), explode(Dedup.wordGrams(8)).as("raw"))
+    val sh = wordTokens(docs, 8)
+      .select(col("doc_id"), explode(wordGrams(8)).as("raw"))
       .select(col("doc_id"),
         (if (digestKeyed) unhex(md5(col("raw"))) else col("raw")).as("s"))
       .distinct()
@@ -1412,13 +1374,12 @@ object TextOps {
     * the shared base of [[unigramLogprob]] and [[pplBuckets]]; its SQL
     * mirror is [[unigramPdCteSql]] (lockstep). */
   private[graft] def unigramPerDoc(docs: DataFrame): DataFrame = {
-    val tk = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    val tk = tokenRows(docs, "doc_id")
     val cnt = tk.groupBy("tok").agg(count(lit(1)).as("c"))
     val tot = cnt.agg(sum("c").as("n"))
     val lp = cnt.crossJoin(broadcast(tot))
       .select(col("tok"),
-              round(log(col("c") / col("n")) * lit(1e6)).cast("long").as("lpm"))
+              Num.lnMicro(col("c") / col("n")).as("lpm"))
     tk.join(lp, Seq("tok"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tok"), sum("lpm").as("sum_lp_micro"))
@@ -1444,8 +1405,7 @@ object TextOps {
     * comparison. */
   def dsirWeights(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val tk = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    val tk = tokenRows(docs, "doc_id")
     val tgtIds = docs.filter(col("source") === "src0").select("doc_id")
     val raw = tk.groupBy("tok").agg(count(lit(1)).as("cr"))
     val tgt = tk.join(tgtIds, Seq("doc_id"))
@@ -1455,12 +1415,7 @@ object TextOps {
         .agg(count(lit(1)).as("nt")))
     val lp = raw.join(tgt, Seq("tok"), "left")
       .crossJoin(broadcast(consts))
-      .select(col("tok"),
-        (round(log((coalesce(col("ct"), lit(0L)) + lit(1L)) /
-                     (col("nt") + col("v"))) * lit(1e6)).cast("long") -
-         round(log((col("cr") + lit(1L)) /
-                     (col("nr") + col("v"))) * lit(1e6)).cast("long"))
-          .as("dlt_micro"))
+      .select(col("tok"), laplaceDelta("ct", "nt").as("dlt_micro"))
     tk.join(lp, Seq("tok"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tok"), sum("dlt_micro").as("logratio_micro"))
@@ -1483,29 +1438,42 @@ object TextOps {
     * division rule). The (source × vocab) grid is model-sized ×
     * |sources| — bounded at any corpus scale; one broadcast of the
     * |sources|-row totals. */
-  def klDrift(spark: SparkSession, dir: String): DataFrame = {
-    val tk = Tables.documents(spark, dir)
-      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-    val corpus = tk.groupBy("tok").agg(count(lit(1)).as("cr"))
-    val consts = corpus.agg(count(lit(1)).as("v"), sum("cr").as("nr"))
-    val srcTot = tk.groupBy("source").agg(count(lit(1)).as("ns"))
-    val srcCnt = tk.groupBy("source", "tok").agg(count(lit(1)).as("cs"))
-    corpus.crossJoin(broadcast(srcTot))
-      .join(srcCnt, Seq("source", "tok"), "left")
-      .crossJoin(broadcast(consts))
+  def klDrift(spark: SparkSession, dir: String): DataFrame =
+    sourceTokenGrid(spark, dir)
       .select(col("source"), col("ns"), col("v"),
         (coalesce(col("cs"), lit(0L)) + lit(1L)).as("csp"),
-        (round(log((coalesce(col("cs"), lit(0L)) + lit(1L)) /
-                     (col("ns") + col("v"))) * lit(1e6)).cast("long") -
-         round(log((col("cr") + lit(1L)) /
-                     (col("nr") + col("v"))) * lit(1e6)).cast("long"))
-          .as("dlt_micro"))
+        laplaceDelta("cs", "ns").as("dlt_micro"))
       .groupBy("source")
       .agg(first("ns").as("n_tok"), first("v").as("n_vocab"),
            sum(col("csp") * col("dlt_micro")).as("num"))
       .withColumn("kl_micro", expr("num div (n_tok + n_vocab)"))
       .select("source", "n_tok", "n_vocab", "num", "kl_micro")
       .orderBy("source")
+
+  /** The (source × corpus vocabulary) grid of [[klDrift]] and
+    * [[jsdDrift]]: per (source, tok) the corpus count `cr`, the source's
+    * count `cs` (null where the source never uses tok) and token total
+    * `ns`, with the broadcast corpus constants `v` = |V| and `nr`. */
+  private def sourceTokenGrid(spark: SparkSession, dir: String): DataFrame = {
+    val tk = tokenRows(Tables.documents(spark, dir), "source")
+    val corpus = tk.groupBy("tok").agg(count(lit(1)).as("cr"))
+    val consts = corpus.agg(count(lit(1)).as("v"), sum("cr").as("nr"))
+    val srcTot = tk.groupBy("source").agg(count(lit(1)).as("ns"))
+    corpus.crossJoin(broadcast(srcTot))
+      .join(tk.groupBy("source", "tok").agg(count(lit(1)).as("cs")),
+            Seq("source", "tok"), "left")
+      .crossJoin(broadcast(consts))
+  }
+
+  /** ln((c + 1) / (n + |V|)) − ln((cr + 1) / (nr + |V|)) in micro-nats:
+    * a token's Laplace-smoothed log-probability in a slice (count `c`,
+    * null when unseen, of total `n`) minus in the corpus (`cr` of `nr`),
+    * |V| = column `v` — the per-token delta of [[dsirWeights]] and
+    * [[klDrift]]. */
+  private def laplaceDelta(c: String, n: String): Column = {
+    def lnP(c: Column, n: String) =
+      Num.lnMicro((c + lit(1L)) / (col(n) + col("v")))
+    lnP(coalesce(col(c), lit(0L)), n) - lnP(col("cr"), "nr")
   }
 
   /** Source×source VOCABULARY overlap matrix — the symmetric companion
@@ -1519,8 +1487,7 @@ object TextOps {
     * contributes s² pair rows, so volume is ≤ |vocab|·|sources|² —
     * model-sized × a handful, at any corpus scale. */
   def vocabOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val st = Tables.documents(spark, dir)
-      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
+    val st = tokenRows(Tables.documents(spark, dir), "source")
       .distinct()
     val sz = st.groupBy("source").agg(count(lit(1)).as("v"))
     val inter = st.as("a").join(st.as("b"),
@@ -1554,16 +1521,8 @@ object TextOps {
     * per side. Scale: the (source × vocab) grid is model-sized ×
     * |sources|, totals broadcast — bounded at any corpus size. */
   def jsdDrift(spark: SparkSession, dir: String): DataFrame = {
-    def lnMicro(c: Column): Column = round(log(c) * lit(1e6)).cast("long")
-    val tk = Tables.documents(spark, dir)
-      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-    val corpus = tk.groupBy("tok").agg(count(lit(1)).as("cr"))
-    val consts = corpus.agg(count(lit(1)).as("v"), sum("cr").as("nr"))
-    val srcTot = tk.groupBy("source").agg(count(lit(1)).as("ns"))
-    corpus.crossJoin(broadcast(srcTot))
-      .join(tk.groupBy("source", "tok").agg(count(lit(1)).as("cs")),
-            Seq("source", "tok"), "left")
-      .crossJoin(broadcast(consts))
+    import Num.lnMicro
+    sourceTokenGrid(spark, dir)
       .select(col("source"), col("ns"), col("v"),
         (coalesce(col("cs"), lit(0L)) + lit(1L)).as("a"),
         (col("cr") + lit(1L)).as("b"),
@@ -1595,8 +1554,7 @@ object TextOps {
     * aggregation then a per-doc fold — two map-side-combined shuffles
     * on doc-bounded keys, linear at any corpus scale. */
   def ttr(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    tokenRows(Tables.documents(spark, dir), "doc_id")
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
       .groupBy("doc_id")
       .agg(sum("c").as("n_tok"), count(lit(1)).as("n_types"),
@@ -1623,7 +1581,7 @@ object TextOps {
   def shardPlan(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
-              size(split(col("text"), " ")).cast("long").as("n_tok"))
+              nTok.as("n_tok"))
       .withColumn("shard",
         (Similarity.saltOrd(col("doc_id")) % 32L).cast("int"))
     val sh = docs.groupBy("shard")
@@ -1644,12 +1602,11 @@ object TextOps {
     * length profile a mixture designer reads next to the KS drift
     * number; one window pass per source + a conditional agg. */
   def lenQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("source")
       .orderBy(col("n_tok").asc, col("doc_id").asc)
     Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"),
-              size(split(col("text"), " ")).cast("long").as("n_tok"))
+              nTok.as("n_tok"))
       .withColumn("rn", row_number().over(w))
       .withColumn("n", count(lit(1)).over(Window.partitionBy("source")))
       .groupBy("source")
@@ -1675,13 +1632,12 @@ object TextOps {
     import spark.implicits._
     val cuts = VocabGrowthCuts.toDF("cut")
     val docs = Tables.documents(spark, dir)
-    val fd = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    val fd = tokenRows(docs, "doc_id")
       .groupBy("tok").agg(min("doc_id").as("fd"))
     val vg = fd.crossJoin(broadcast(cuts)).filter(col("fd") < col("cut"))
       .groupBy("cut").agg(count(lit(1)).as("n_vocab"))
     docs
-      .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("nt"))
+      .select(col("doc_id"), nTok.as("nt"))
       .crossJoin(broadcast(cuts)).filter(col("doc_id") < col("cut"))
       .groupBy("cut").agg(count(lit(1)).as("n_docs"), sum("nt").as("n_tok"))
       .join(vg, Seq("cut"))
@@ -1705,7 +1661,6 @@ object TextOps {
     * one corpus-wide cut. Output carries rank/cumulative tokens so the
     * cut is auditable; `selected` is the gate. */
   def dsirSelect(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("source")
       .orderBy(col("logratio_micro").desc, col("doc_id").asc)
     dsirWeights(spark, dir).drop("keep")
@@ -1731,7 +1686,6 @@ object TextOps {
     * 3·rn ≤ nd / 3·rn ≤ 2·nd — no percentile floats. Scale: the model
     * is |vocab| rows, the rank is one window per language partition. */
   def pplBuckets(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
     val pl = scoredFrame(docs).select(col("doc_id"), predictedCol.as("plang"))
     val w = Window.partitionBy("plang").orderBy(col("nll").asc, col("doc_id").asc)
@@ -1773,13 +1727,12 @@ object TextOps {
   def boilerplateStrip(spark: SparkSession, dir: String): DataFrame = {
     val groups = boilerplate(spark, dir).select(col("pfx"))
       .withColumn("strip", lit(1))
-    val toks = split(col("text"), " ")
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), pfxCol.as("pfx"))
       .join(broadcast(groups), Seq("pfx"), "left")
       .select(col("doc_id"),
-        when(col("strip") === 1,
-          concat_ws(" ", slice(toks, lit(9), greatest(size(toks) - 8, lit(0)))))
+        when(col("strip") === 1, concat_ws(" ",
+          slice(wsTokens, lit(9), greatest(size(wsTokens) - 8, lit(0)))))
           .otherwise(col("text")).as("kept_text"),
         coalesce(col("strip"), lit(0)).cast("int").as("stripped"))
       .withColumn("n_tok_after",
@@ -1791,7 +1744,7 @@ object TextOps {
     * the curation funnel ([[Curate]]); its SQL mirror is
     * [[boilerplateGroupsSql]]'s pfx expression. */
   private[graft] def pfxCol: Column =
-    concat_ws(" ", slice(split(col("text"), " "), 1, 8))
+    concat_ws(" ", slice(wsTokens, 1, 8))
 
   /** Oracle mirror of [[boilerplate]] — the >1-member prefix groups;
     * shared by text_boilerplate and the curation-funnel oracle. */
@@ -1819,15 +1772,13 @@ object TextOps {
   /** [[zipf]] over any frame with a `text` column — standalone so specs
     * can drive the decimal algebra on a large synthetic vocabulary. */
   private[graft] def zipfOf(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cnt = docs
-      .select(explode(split(col("text"), " ")).as("tok"))
+    val cnt = tokenRows(docs)
       .groupBy("tok").agg(count(lit(1)).as("c"))
     val ranked = cnt.withColumn("rn",
       row_number().over(Window.orderBy(col("c").desc, col("tok").asc)))
     val t = ranked.select(
-      round(log(col("rn").cast("double")) * lit(1e6)).cast("long").as("x"),
-      round(log(col("c").cast("double")) * lit(1e6)).cast("long").as("y"))
+      Num.lnMicro(col("rn").cast("double")).as("x"),
+      Num.lnMicro(col("c").cast("double")).as("y"))
     val dec = "decimal(38,0)"
     t.agg(count(lit(1)).as("k"),
           sum(col("x").cast(dec)).as("sx"),
@@ -1851,10 +1802,9 @@ object TextOps {
     * micronized — deterministic ranking. Top-20 via orderBy+limit
     * (TakeOrderedAndProject), ranked after. */
   def pmi(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dt = Tables.documents(spark, dir)
       .select(col("doc_id"),
-              explode(array_distinct(split(col("text"), " "))).as("tok"))
+              explode(array_distinct(wsTokens)).as("tok"))
     val n = dt.select(countDistinct(col("doc_id")).as("n"))
     val cx = dt.groupBy("tok").agg(count(lit(1)).as("cx"))
     val pairs = dt.as("a")
@@ -1867,14 +1817,17 @@ object TextOps {
       .join(broadcast(cx.select(col("tok").as("y"), col("cx").as("cy"))), Seq("y"))
       .crossJoin(broadcast(n))
       .select(col("x"), col("y"), col("cxy"),
-        round(log((col("cxy") * col("n")).cast("double") /
-                  (col("cx") * col("cy"))) * lit(1e6))
-          .cast("long").as("pmi_micro"))
-    val w = Window.orderBy(col("pmi_micro").desc, col("x").asc, col("y").asc)
-    scored
-      .orderBy(col("pmi_micro").desc, col("x").asc, col("y").asc).limit(k)
-      .withColumn("rn", row_number().over(w))
+        Num.lnMicro((col("cxy") * col("n")).cast("double") /
+                    (col("cx") * col("cy"))).as("pmi_micro"))
+    topRanked(scored, k, col("pmi_micro").desc, col("x").asc, col("y").asc)
   }
+
+  /** The first `k` rows under `order`, numbered 1..k in that order as
+    * `rn` — a TakeOrderedAndProject then a k-row window ([[pmi]],
+    * [[skipgramPmi]], [[bm25]]). */
+  private def topRanked(df: DataFrame, k: Int, order: Column*): DataFrame =
+    df.orderBy(order: _*).limit(k)
+      .withColumn("rn", row_number().over(Window.orderBy(order: _*)))
 
   /** Windowed skip-gram PMI — the word2vec-style LOCAL collocation
     * measure next to [[pmi]]'s document-level co-occurrence (whole-doc
@@ -1893,9 +1846,8 @@ object TextOps {
     * and a k-row rank window. Window 2 and k = 20 are mirrored
     * literals. */
   def skipgramPmi(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val pt = Tables.documents(spark, dir)
-      .select(col("doc_id"), posexplode(split(col("text"), " ")))
+      .select(col("doc_id"), posexplode(wsTokens))
       .select(col("doc_id"), col("pos"), col("col").as("tok"))
     val pairs = pt.as("a").join(pt.as("b"),
         col("a.doc_id") === col("b.doc_id") &&
@@ -1910,13 +1862,10 @@ object TextOps {
       .join(broadcast(my), Seq("y"))
       .crossJoin(broadcast(t))
       .select(col("x"), col("y"), col("cxy"),
-        round(log(col("cxy").cast("double") * col("t").cast("double") /
-                  (col("cxl").cast("double") * col("cyr").cast("double"))) *
-              lit(1e6)).cast("long").as("pmi_micro"))
-    val w = Window.orderBy(col("pmi_micro").desc, col("x").asc, col("y").asc)
-    scored
-      .orderBy(col("pmi_micro").desc, col("x").asc, col("y").asc).limit(k)
-      .withColumn("rn", row_number().over(w))
+        Num.lnMicro(col("cxy").cast("double") * col("t").cast("double") /
+          (col("cxl").cast("double") * col("cyr").cast("double")))
+          .as("pmi_micro"))
+    topRanked(scored, k, col("pmi_micro").desc, col("x").asc, col("y").asc)
   }
 
   /** Per-source token-distribution Shannon entropy — the
@@ -1928,16 +1877,13 @@ object TextOps {
     * final normalization divides — no fp-order drift. Two hash
     * aggregations + one broadcast of the |sources|-row totals. */
   def entropy(spark: SparkSession, dir: String): DataFrame = {
-    val tk = Tables.documents(spark, dir)
-      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
+    val tk = tokenRows(Tables.documents(spark, dir), "source")
     val cnt = tk.groupBy("source", "tok").agg(count(lit(1)).as("c"))
     val tot = cnt.groupBy("source")
       .agg(sum("c").as("n"), count(lit(1)).as("vocab"))
     cnt.join(broadcast(tot), Seq("source"))
       .select(col("source"), col("n"), col("vocab"),
-              (col("c") *
-                round(log(col("c") / col("n")) * lit(1e6)).cast("long"))
-                .as("clpm"))
+              (col("c") * Num.lnMicro(col("c") / col("n"))).as("clpm"))
       .groupBy("source", "n", "vocab")
       .agg(sum("clpm").as("sum_clpm"))
       .select(col("source"), col("n").as("n_tok"), col("vocab"),
@@ -1987,7 +1933,6 @@ object TextOps {
     * At 100 TB the quantile state per source is one row — the pattern
     * holds for any per-shard relative gate. */
   def quantileSelect(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val d = Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"), length(col("text")).as("n_char"))
     val w = Window.partitionBy("source")
@@ -2018,7 +1963,7 @@ object TextOps {
     * the small one. */
   def bigramLogprob(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val t = split(col("text"), " ")
+    val t = wsTokens
     val bg = docs.select(col("doc_id"),
         explode(arrays_zip(
           slice(t, lit(1), size(t) - 1).as("w1"),
@@ -2031,8 +1976,7 @@ object TextOps {
     val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
     val lp = c2.join(c1, Seq("w1")).crossJoin(broadcast(vocab))
       .select(col("w1"), col("w2"),
-        round(log((col("c2") + lit(1.0)) / (col("c1") + col("v"))) * lit(1e6))
-          .cast("long").as("lpm"))
+        Num.lnMicro((col("c2") + lit(1.0)) / (col("c1") + col("v"))).as("lpm"))
     bg.join(lp, Seq("w1", "w2"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bi"), sum("lpm").as("sum_lp_micro"))
@@ -2054,39 +1998,41 @@ object TextOps {
     * via TakeOrderedAndProject (distributed heap), ranked after. */
   def bm25(spark: SparkSession, dir: String,
            terms: Seq[String] = Seq("spark", "vector", "dup"),
-           k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(spark, dir)
-    val dl = docs.select(col("doc_id"), size(split(col("text"), " ")).as("dl"))
-    val tf = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+           k: Int = 10): DataFrame =
+    topRanked(bm25Scores(Tables.documents(spark, dir), terms), k,
+              col("score_micro").desc, col("doc_id").asc)
+      .withColumn("score", col("score_micro").cast("double") / lit(1e6))
+      .select("doc_id", "n_hit", "score_micro", "score", "rn")
+
+  /** BM25 (k1 = 1.2, b = 0.75) over the postings of `terms`: (doc_id,
+    * n_hit, score_micro), or per (query_id, doc_id) when a (query_id,
+    * tok) table `queries` is joined in — [[bm25]] and [[bm25Multi]].
+    * tf, df, dl and the corpus stats come from one corpus read. */
+  private def bm25Scores(docs: DataFrame, terms: Seq[String],
+                         queries: Option[DataFrame] = None): DataFrame = {
+    val dl = docs.select(col("doc_id"), size(wsTokens).as("dl"))
+    val tf = tokenRows(docs, "doc_id")
       .filter(col("tok").isin(terms: _*))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
     val dfq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("n_toks"))
-    // k1 = 1.2, b = 0.75; norm = (1-b) + b*dl/avgdl with avgdl exact
-    // double division. Every op below is IEEE-exact-rounded with an
-    // identical operand tree in the oracle, so doubles are bit-equal.
+    // norm = (1-b) + b*dl/avgdl with avgdl exact double division. Every
+    // op below is IEEE-exact-rounded with an identical operand tree in
+    // the oracle, so doubles are bit-equal.
     val idf = Num.rnd(log(lit(1.0) +
       (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))), 6)
     val norm = lit(0.25) + lit(0.75) *
       (col("dl").cast("double") /
         (col("n_toks").cast("double") / col("n_docs")))
-    val scored = tf.join(broadcast(dfq), Seq("tok"))
+    queries.foldLeft(tf)((f, q) => f.join(broadcast(q), Seq("tok")))
+      .join(broadcast(dfq), Seq("tok"))
       .join(dl, Seq("doc_id"))
       .crossJoin(broadcast(stats))
       .withColumn("sc_micro",
         round(idf * ((col("tf") * lit(2.2)) /
           (col("tf") + lit(1.2) * norm)) * lit(1e6)).cast("long"))
-      .groupBy("doc_id")
+      .groupBy(queries.map(_ => col("query_id")).toSeq :+ col("doc_id"): _*)
       .agg(count(lit(1)).as("n_hit"), sum("sc_micro").as("score_micro"))
-    val w = Window.orderBy(col("score_micro").desc, col("doc_id").asc)
-    scored
-      .orderBy(col("score_micro").desc, col("doc_id").asc).limit(k)
-      .withColumn("rn", row_number().over(w))
-      .withColumn("score",
-        col("score_micro").cast("double") / lit(1e6))
-      .select("doc_id", "n_hit", "score_micro", "score", "rn")
   }
 
   /** The multi-query BM25 eval set — a literal (query_id, term) table,
@@ -2107,37 +2053,14 @@ object TextOps {
     * frame. Same integer micro-unit discipline as [[bm25]]: identical
     * IEEE operand tree both engines, BIGINT score sums. */
   def bm25Multi(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val qterms = Bm25Queries
       .flatMap { case (q, ts) => ts.map(t => (q, t)) }
       .toDF("query_id", "tok")
-    val allTerms = Bm25Queries.flatMap(_._2).distinct
-    val docs = Tables.documents(spark, dir)
-    val dl = docs.select(col("doc_id"), size(split(col("text"), " ")).as("dl"))
-    val tf = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .filter(col("tok").isin(allTerms: _*))
-      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-    val dfq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("n_toks"))
-    val idf = Num.rnd(log(lit(1.0) +
-      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))), 6)
-    val norm = lit(0.25) + lit(0.75) *
-      (col("dl").cast("double") /
-        (col("n_toks").cast("double") / col("n_docs")))
-    val scored = tf.join(broadcast(qterms), Seq("tok"))
-      .join(broadcast(dfq), Seq("tok"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
-      .withColumn("sc_micro",
-        round(idf * ((col("tf") * lit(2.2)) /
-          (col("tf") + lit(1.2) * norm)) * lit(1e6)).cast("long"))
-      .groupBy("query_id", "doc_id")
-      .agg(count(lit(1)).as("n_hit"), sum("sc_micro").as("score_micro"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("score_micro").desc, col("doc_id").asc)
-    scored
+    bm25Scores(Tables.documents(spark, dir),
+               Bm25Queries.flatMap(_._2).distinct, Some(qterms))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .withColumn("score", col("score_micro").cast("double") / lit(1e6))
@@ -2246,8 +2169,7 @@ object TextOps {
   private[graft] def bpeTrainRounds(docs: DataFrame, nRounds: Int,
                                     ckpt: Boolean = false)
       : (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val wc = docs.select(explode(split(col("text"), " ")).as("w"))
+    val wc = docs.select(explode(wsTokens).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
     var syms = wc
       .select(col("w"), col("c"),
@@ -2305,7 +2227,7 @@ object TextOps {
     val totals = curve.filter(col("rounds") === 0)
       .select(col("n_syms").as("n_chars"))
       .crossJoin(
-        docs.select(explode(split(col("text"), " ")).as("w"))
+        docs.select(explode(wsTokens).as("w"))
           .agg(count(lit(1)).as("n_words")))
     curve.crossJoin(broadcast(totals))
       .select(col("rounds"), col("n_words"), col("n_syms"), col("n_chars"),
@@ -2364,7 +2286,7 @@ object TextOps {
     val docs = Tables.documents(spark, dir)
     val wn = bpeTrainOf(docs)._2
       .groupBy("w").agg(count(lit(1)).as("n_sym"))
-    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+    docs.select(col("doc_id"), explode(wsTokens).as("w"))
       .join(wn, "w")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_ws_tok"), sum("n_sym").as("n_bpe_tok"))
@@ -2387,7 +2309,7 @@ object TextOps {
     val docs = Tables.documents(spark, dir)
     val wn = bpeTrainOf(docs)._2
       .groupBy("w").agg(count(lit(1)).as("n_sym"))
-    docs.select(col("source"), explode(split(col("text"), " ")).as("w"))
+    docs.select(col("source"), explode(wsTokens).as("w"))
       .join(wn, "w")
       .groupBy("source")
       .agg(count(lit(1)).as("n_words"),
@@ -2548,10 +2470,10 @@ object TextOps {
   /** Shared gram-hash frame: (doc_id, p, h, ng) — one hash per token
     * [[WinK]]-gram start, ng = number of grams in the doc. */
   private def winnowHashes(spark: SparkSession, dir: String): DataFrame =
-    Dedup.wordTokens(Dedup.fanOutNarrow(Tables.documents(spark, dir)), WinK)
+    wordTokens(Dedup.fanOutNarrow(Tables.documents(spark, dir)), WinK)
       .select(col("doc_id"),
         (size(col("toks")) - (WinK - 1)).cast("long").as("ng"),
-        posexplode(Dedup.wordGrams(WinK)))
+        posexplode(wordGrams(WinK)))
       .select(col("doc_id"), col("ng"), (col("pos") + 1).cast("long").as("p"),
               graft.functions.PolyHashMod.col(col("col"), 31L, WinP).as("h"))
 
@@ -2579,7 +2501,6 @@ object TextOps {
       winnowBuild(spark, dir).localCheckpoint())
 
   private def winnowBuild(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val wk = Window.partitionBy("doc_id").orderBy("p").rowsBetween(0, WinW - 1)
     val hs = winnowHashes(spark, dir)
     val sel = hs

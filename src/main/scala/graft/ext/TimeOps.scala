@@ -705,7 +705,7 @@ object TimeOps {
     * div ≡ //). One groupBy on (user, type) then a per-user fold —
     * two map-side-combined aggregations, no window. */
   def userEntropy(spark: SparkSession, dir: String): DataFrame = {
-    def lnMicro(c: Column): Column = round(log(c) * lit(1e6)).cast("long")
+    import Num.lnMicro
     Tables.events(spark, dir)
       .groupBy("user_id", "event_type").agg(count(lit(1)).as("c"))
       .groupBy("user_id")

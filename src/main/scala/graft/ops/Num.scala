@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{expr, lit, round}
+import org.apache.spark.sql.functions.{expr, lit, log, round}
 
 /** Cross-engine-stable rounding.
   *
@@ -27,6 +27,12 @@ object Num {
     val p = s"1e$s" // 1e2 = 100.0 etc., double literal in DuckDB
     s"round(($expr) * $p) / $p"
   }
+
+  /** ln(c) rounded to integer micro-nats — the ln rule: ln is not
+    * IEEE-exactly rounded, so every ln is pinned to this grid on both
+    * engines (oracle: `round(ln(x) * 1e6)` as BIGINT) before any
+    * arithmetic touches it. */
+  def lnMicro(c: Column): Column = round(log(c) * lit(1e6)).cast("long")
 
   /** `num / den` in integer micro-units (exact BIGINT `div`), `ifZero`
     * when `den` is 0 — the recall/precision ratio of every eval query,

@@ -120,7 +120,7 @@ object Scalars {
     * The oracle emulates outer-unnest by substituting [NULL] for the
     * missing array before DuckDB's inner unnest. */
   def explodeOuter(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
+    val toks = graft.ext.Tokens.wsTokens
     Tables.documents(spark, dir)
       .select(col("doc_id"),
               when(size(toks) >= 50, slice(toks, 1, 3)).as("arr"))

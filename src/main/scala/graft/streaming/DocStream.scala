@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ops.Num
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -217,15 +216,11 @@ object DocStream {
   }
 
   /** Streaming curation: one survivor per exact text (first arrival) +
-    * repetition gate (same expression as TextOps.repetition). */
-  def curate(docs: DataFrame): DataFrame = {
-    val toks = split(col("text"), " ")
+    * the repetition gate of TextOps.repetition (`Tokens.repRatio`). */
+  def curate(docs: DataFrame): DataFrame =
     docs
       .dropDuplicates("text")
-      .withColumn("rep_ratio",
-        Num.rnd(lit(1.0) -
-          size(array_distinct(toks)).cast("double") / size(toks), 6))
+      .withColumn("rep_ratio", graft.ext.Tokens.repRatio())
       .filter(col("rep_ratio") <= 0.5)
       .select("doc_id", "text", "lang", "source", "n_chars", "rep_ratio")
-  }
 }
