@@ -10,8 +10,8 @@
 #
 # Usage: scripts/gates.sh <round-number>
 # Appends a dated "Round <N> gates" block (gate results, memo evictions,
-# the oracle- and plan-digest diffs, plus per-file code-line counts of
-# src/main/scala/graft/ext) to BASELINE.md, rewrites oracle_sql.sha256
+# the oracle- and plan-digest diffs, plus code-line counts of the engine
+# and of the DuckDB reference) to BASELINE.md, rewrites oracle_sql.sha256
 # and plan_digests.sha256 from the Verify dump and leaves this run's
 # bench.json at the repo root for the commit. Exits non-zero on the
 # first red gate. Full per-gate logs live in /tmp/gates_*_r<N>.log.
@@ -106,12 +106,21 @@ case "$BENCH_LINE" in
        | tee -a "$LOG"; exit 1 ;;
 esac
 
-# Per-file code lines of the operator sources (comment-only and blank
-# lines excluded), so the code-size aim has a number every round
-CODE_LINES=$(for f in src/main/scala/graft/ext/*.scala; do
-  printf '%s %s, ' "$(basename "$f" .scala)" \
-    "$(grep -vcE '^[[:space:]]*(/\*\*|\*|//|$)' "$f")"
-done)
+# Code lines (comment-only and blank lines excluded, one grep rule):
+# per file of the engine's ext/ and of the DuckDB reference oracle/, and
+# the totals of ext/, ops/, oracle/ and all of src/main, so a collapse of
+# engine code is measured apart from the reference it is checked by
+CODE_RULE='^[[:space:]]*(/\*\*|\*|//|$)'
+code_lines() { cat "$@" | grep -vcE "$CODE_RULE"; }
+per_file() {
+  for f in "$@"; do
+    printf '%s %s, ' "$(basename "$f" .scala)" "$(code_lines "$f")"
+  done
+}
+G=src/main/scala/graft
+CODE_LINES=$(per_file $G/ext/*.scala)
+ORACLE_LINES=$(per_file $G/oracle/*.scala)
+CODE_TOTALS="ext/ $(code_lines $G/ext/*.scala), ops/ $(code_lines $G/ops/*.scala), oracle/ $(code_lines $G/oracle/*.scala), src/main $(code_lines $(find src/main -name '*.scala'))"
 
 {
   echo ""
@@ -122,8 +131,9 @@ done)
   echo "- ${DIGEST_LINE:-oracle digests: not computed} — oracle_sql.sha256 rewritten"
   echo "- ${PLAN_LINE:-plan digests: not computed} — plan_digests.sha256 rewritten"
   echo "- builder bench (sf0.1, local[32]): ${BENCH_LINE} — committed bench.json"
-  echo "- code lines, src/main/scala/graft/ext (grep -vcE" \
-       "'^[[:space:]]*(/\*\*|\*|//|\$)'): ${CODE_LINES%, }"
+  echo "- code lines (grep -vcE '$CODE_RULE'): ${CODE_TOTALS}"
+  echo "- code lines, engine src/main/scala/graft/ext: ${CODE_LINES%, }"
+  echo "- code lines, reference src/main/scala/graft/oracle: ${ORACLE_LINES%, }"
 } >> BASELINE.md
 echo "Appended Round ${ROUND} gate block to BASELINE.md"
 

@@ -54,28 +54,16 @@ object SparkEntry {
       ext.Curate.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables, from the [[graft.oracle]] reference
+    * objects. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    Map("flagship" ->
-      ("SELECT n_name, count(*) AS n_customers, round((avg(c_acctbal)) * 1e2) / 1e2 AS avg_acctbal " +
-       "FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey " +
-       "WHERE c_mktsegment IN ('BUILDING','AUTOMOBILE','MACHINERY') " +
-       "GROUP BY n_name ORDER BY n_name")) ++
-      ops.Sources.oracle ++
-      ops.Filters.oracle ++
-      ops.Joins.oracle ++
-      ops.Aggs.oracle ++
-      ops.Windows.oracle ++
-      ops.Scalars.oracle ++
-      ops.Sets.oracle ++
-      ops.Skew.oracle ++
-      ops.Analytics.oracle ++
-      ext.TimeOps.oracle ++
-      ext.TextOps.oracle ++
-      ext.Dedup.oracle ++
-      ext.Similarity.oracle ++
-      ext.Geo.oracle ++
-      ext.Graph.oracle ++
-      ext.Multimodal.oracle ++
-      ext.Curate.oracle
+    oracle.Ops.sql ++
+      oracle.TimeOps.sql ++
+      oracle.TextOps.sql ++
+      oracle.Dedup.sql ++
+      oracle.Similarity.sql ++
+      oracle.Geo.sql ++
+      oracle.Graph.sql ++
+      oracle.Multimodal.sql ++
+      oracle.Curate.sql
 }

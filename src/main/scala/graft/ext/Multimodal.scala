@@ -51,21 +51,24 @@ object Multimodal {
               ((col("n_bytes") * 11 + 17) % 480).as("height"),
               lit(3).as("channels"))
 
-  /** One sampled "frame" per 128-byte chunk, keeping every 4th — the
-    * frame-sample batch shape: mapPartitions emits MULTIPLE typed rows
-    * per input item (a real video decoder slots in at the same seam). */
+  /** Frame size and stride of [[frameSample]]. */
+  private[graft] val FrameBytes = 128
+  private[graft] val FrameStride = 4
+
+  /** One sampled "frame" per FrameBytes chunk, keeping every FrameStride-th
+    * — the frame-sample batch shape: mapPartitions emits MULTIPLE typed
+    * rows per input item (a real video decoder slots in at the same
+    * seam). */
   def frameSample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val frameBytes = 128
-    val stride = 4
     Tables.documents(spark, dir)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, bytes) =>
-        val nFrames = (bytes.length + frameBytes - 1) / frameBytes
-        (0 until nFrames by stride).iterator.map { i =>
-          val off = i * frameBytes
-          val len = math.min(frameBytes, bytes.length - off)
+        val nFrames = (bytes.length + FrameBytes - 1) / FrameBytes
+        (0 until nFrames by FrameStride).iterator.map { i =>
+          val off = i * FrameBytes
+          val len = math.min(FrameBytes, bytes.length - off)
           (id, i.toLong, off.toLong, len.toLong)
         }
       })
@@ -92,6 +95,11 @@ object Multimodal {
       })
       .toDF("doc_id", "bucket", "cnt")
   }
+
+  /** [[histNearDup]]'s L1 threshold in bytes (also its length-band
+    * width) and its per-band candidate cap. */
+  private[graft] val HistTau = 20L
+  private[graft] val HistBandCap = 256
 
   /** Media near-dup by byte-histogram distance — the cheap signature
     * tier BETWEEN byte-identical dedup ([[mediaDedup]], exact only)
@@ -129,17 +137,16 @@ object Multimodal {
     * firings — the remediation is a narrower τ or a signature screen
     * like dedup_minhash_lsh first). The cap does not bite below
     * occupancy 256 (sf0.01 and sf0.1 results are exactly the uncapped
-    * ones, and the oracle mirrors the cap CTE verbatim). τ = 20 bytes
-    * is the literal mirrored in the oracle (band width AND threshold —
-    * one constant, lockstep). */
-  def histNearDup(spark: SparkSession, dir: String, tau: Long = 20L): DataFrame =
+    * ones, and the oracle builds the same cap CTE). τ = [[HistTau]]
+    * bytes is band width AND threshold on both engines. */
+  def histNearDup(spark: SparkSession, dir: String, tau: Long = HistTau): DataFrame =
     histNearDupOf(spark, Tables.documents(spark, dir), tau)
 
   /** [[histNearDup]] over any (doc_id, text) frame — standalone so the
     * spec can drive the band cap on a crafted hot-band fixture. */
   private[graft] def histNearDupOf(spark: SparkSession, docs: DataFrame,
-                                   tau: Long = 20L,
-                                   cap: Int = 256): DataFrame = {
+                                   tau: Long = HistTau,
+                                   cap: Int = HistBandCap): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val h = docs
@@ -218,13 +225,13 @@ object Multimodal {
     * test corpus (docs ≤ ~550 bytes → 1-5 chunks) so the operator's
     * pair/threshold behavior is exercised; a production media store
     * would use 64 KiB-class blocks, changing only this constant. */
-  private val ChunkBytes = 128
+  private[graft] val ChunkBytes = 128
 
   /** Max media items a chunk digest may appear in before it is dropped
     * from candidate generation — the [[Dedup.MaxShingleDf]] rule at byte
     * grain (an all-zeros padding block shared by M items would otherwise
     * generate M² candidate pairs and carries no dedup signal). */
-  private val MaxChunkDf = 100
+  private[graft] val MaxChunkDf = 100
 
   /** Chunk-digest near-dup over the binary payload — the
     * backup/dedupe-system shape (fixed-block content chunking): split
@@ -282,12 +289,12 @@ object Multimodal {
     * text-hash family); divisor 32 ⇒ ~32-char average chunks against
     * the 48-553-char test corpus (~9 chunks/doc — boundary behavior
     * actually exercised). A production store would use a 48-64 KiB
-    * target, changing only the divisor. Mirrored literally in the
-    * oracle's per-window list_reduce — lockstep only. */
-  private val CdcWindow = 16
-  private val CdcBase = 131L
-  private val CdcMod = 1000003L
-  private val CdcDiv = 32L
+    * target, changing only the divisor. The oracle's per-window
+    * list_reduce reads these vals. */
+  private[graft] val CdcWindow = 16
+  private[graft] val CdcBase = 131L
+  private[graft] val CdcMod = 1000003L
+  private[graft] val CdcDiv = 32L
 
   /** Content-defined chunks of every document: boundaries from the
     * rolling-hash Expression, ends = in-content boundaries + document
@@ -495,168 +502,4 @@ object Multimodal {
     "mm_dedup_media"     -> mediaDedup _,
     "mm_dedup_chunks"    -> mediaChunkDedup _,
     "mm_resize_meta"     -> resizeMeta _)
-
-  private val metaSql =
-    "SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes, " +
-      "(strlen(text) * 7 + 13) % 640 AS width, " +
-      "(strlen(text) * 11 + 17) % 480 AS height, 3 AS channels FROM documents"
-
-  /** The FULL 256-bin byte histogram as CTEs ending in `mh` (doc_id,
-    * bucket, cnt) — oracle mirror of the near-dup signature. The
-    * oracle counts ascii(char) where Spark counts payload bytes —
-    * valid only under the ASCII-corpus invariant (TestdataAsciiSpec),
-    * the mm_dedup_media rule. Names claimed: mhc/mh. */
-  private val hist256CteSql: String =
-    "mhc AS (SELECT doc_id, UNNEST(list_transform(range(1, strlen(text)+1), " +
-    "i -> ascii(text[CAST(i AS INTEGER)]))) AS b FROM documents), " +
-    "mh AS (SELECT doc_id, CAST(b AS INTEGER) AS bucket, count(*) AS cnt " +
-    "FROM mhc GROUP BY doc_id, bucket)"
-
-  /** The CDC chunk extraction as CTEs ending in `cc` (doc_id, chunk) —
-    * oracle mirror of [[cdcChunksOf]]; shared by mm_cdc_chunks and
-    * mm_cdc_pairs (names claimed: cb/ce/cc). */
-  private[graft] val cdcChunkCteSql: String =
-    "cb AS (SELECT doc_id, text, " +
-    "list_filter(range(16, strlen(text)+1), bi -> " +
-    "list_reduce([CAST(0 AS BIGINT)] || list_transform(range(bi-15, bi+1), " +
-    "cj -> CAST(ascii(text[CAST(cj AS INTEGER)]) AS BIGINT)), " +
-    "(h, c) -> (h*131 + c) % 1000003) % 32 = 0) AS bs FROM documents), " +
-    "ce AS (SELECT doc_id, text, " +
-    "list_append(list_filter(bs, x -> x < strlen(text)), strlen(text)) " +
-    "AS ends FROM cb), " +
-    "cc AS (SELECT doc_id, text[CAST(CASE WHEN u.k = 1 THEN 1 ELSE " +
-    "ends[CAST(u.k-1 AS INTEGER)]+1 END AS INTEGER) : " +
-    "CAST(ends[CAST(u.k AS INTEGER)] AS INTEGER)] AS chunk " +
-    "FROM ce, UNNEST(range(1, len(ends)+1)) AS u(k))"
-
-  val oracle: Map[String, String] = Map(
-    // mx-prefixed; regexp over text ≡ regexp over decoded payload under
-    // the ASCII-corpus invariant; (cnt desc, s asc) rank, top-20 literal
-    "mm_strings_extract" ->
-      ("WITH mxr AS (SELECT doc_id, unnest(regexp_extract_all(text, " +
-       "'[A-Za-z]{6,}')) AS s FROM documents), " +
-       "mxc AS (SELECT s, count(*) AS cnt, " +
-       "count(DISTINCT doc_id) AS n_docs FROM mxr GROUP BY s), " +
-       "mxk AS (SELECT s, cnt, n_docs, CAST(row_number() OVER (" +
-       "ORDER BY cnt DESC, s ASC) AS INTEGER) AS rn FROM mxc) " +
-       "SELECT rn, s, cnt, n_docs FROM mxk WHERE rn <= 20 ORDER BY rn"),
-    // CDC boundary rule mirrored literally: per candidate end position
-    // bi, the 16-char window hash is the SAME PolyHashMod fold as the
-    // Expression's rolling update (list_reduce with the mandatory
-    // BIGINT seed cast — CLAUDE.md portable-hash rule); constants
-    // 16/131/1000003/32 are lockstep with CdcWindow/Base/Mod/Div.
-    // md5(chunk VARCHAR) == md5(chunk bytes) under the ASCII-corpus
-    // invariant (TestdataAsciiSpec)
-    "mm_cdc_chunks" ->
-      (s"WITH $cdcChunkCteSql " +
-       "SELECT md5(chunk) AS fp, count(DISTINCT doc_id) AS n_docs, " +
-       "count(*) AS n_occ, min(doc_id) AS keep_id, " +
-       "CAST(max(strlen(chunk)) AS BIGINT) AS chunk_len " +
-       "FROM cc GROUP BY 1 HAVING count(*) >= 2"),
-    // CDC pairs: the same cdcChunkCteSql chain feeding the identical
-    // DF-cap(100)/half-containment pair logic as mm_dedup_chunks —
-    // thresholds move in lockstep with chunkPairsOf
-    "mm_cdc_pairs" ->
-      (s"WITH $cdcChunkCteSql, " +
-       "pch AS (SELECT DISTINCT doc_id, md5(chunk) AS d FROM cc), " +
-       "prare AS (SELECT d FROM pch GROUP BY d HAVING count(*) <= 100), " +
-       "pchr AS (SELECT pch.doc_id, pch.d FROM pch JOIN prare USING (d)), " +
-       "psz AS (SELECT doc_id, count(*) AS sz FROM pchr GROUP BY doc_id), " +
-       "ppr AS (SELECT x.doc_id AS a_id, y.doc_id AS b_id, count(*) AS inter " +
-       "FROM pchr x JOIN pchr y ON x.d = y.d AND x.doc_id < y.doc_id " +
-       "GROUP BY 1, 2) " +
-       "SELECT a_id, b_id, inter, sa.sz AS sz_a, sb.sz AS sz_b FROM ppr " +
-       "JOIN psz sa ON ppr.a_id = sa.doc_id " +
-       "JOIN psz sb ON ppr.b_id = sb.doc_id " +
-       "WHERE inter * 2 >= least(sa.sz, sb.sz)"),
-    // fixture-construction ground truth (the dedup_url pattern): the
-    // Spark side PARSES real header bytes; the oracle restates what the
-    // builder wrote — parity: even=png(33 B), odd=jpeg(46+digits B)
-    "mm_image_dims" ->
-      ("SELECT doc_id, " +
-       "CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS format, " +
-       "CAST(16 + doc_id % 1024 AS BIGINT) AS width, " +
-       "CAST(16 + (doc_id * 7) % 768 AS BIGINT) AS height, " +
-       "CAST(CASE WHEN doc_id % 2 = 0 THEN 33 " +
-       "ELSE 46 + strlen(CAST(doc_id AS VARCHAR)) END AS BIGINT) AS n_bytes " +
-       "FROM documents ORDER BY doc_id"),
-    "mm_media_meta"      -> metaSql,
-    "mm_media_meta_plan" -> metaSql,
-    // md5(text) = md5(payload bytes) under the ASCII-corpus invariant
-    // (TestdataAsciiSpec); DuckDB md5 is VARCHAR-only
-    "mm_dedup_media" ->
-      ("SELECT md5(text) AS fp, min(doc_id) AS keep_id, " +
-       "count(*) AS n_copies, CAST(max(strlen(text)) AS BIGINT) AS n_bytes " +
-       "FROM documents GROUP BY md5(text)"),
-    // chunk digests over text[i*128+1 : i*128+128] = the payload's
-    // 128-byte blocks under the ASCII-corpus invariant (DuckDB md5 and
-    // slicing are VARCHAR-based); DF cap and containment threshold
-    // mirrored exactly
-    "mm_dedup_chunks" ->
-      ("WITH ch AS (SELECT DISTINCT doc_id, " +
-       "md5(text[CAST(i*128+1 AS INTEGER) : CAST(i*128+128 AS INTEGER)]) AS d " +
-       "FROM documents, " +
-       "UNNEST(range(0, (greatest(strlen(text), 1) - 1)//128 + 1)) AS u(i)), " +
-       "rare AS (SELECT d FROM ch GROUP BY d HAVING count(*) <= 100), " +
-       "chr AS (SELECT ch.doc_id, ch.d FROM ch JOIN rare USING (d)), " +
-       "sz AS (SELECT doc_id, count(*) AS sz FROM chr GROUP BY doc_id), " +
-       "pr AS (SELECT x.doc_id AS a_id, y.doc_id AS b_id, count(*) AS inter " +
-       "FROM chr x JOIN chr y ON x.d = y.d AND x.doc_id < y.doc_id GROUP BY 1, 2) " +
-       "SELECT a_id, b_id, inter, sa.sz AS sz_a, sb.sz AS sz_b FROM pr " +
-       "JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id " +
-       "WHERE inter * 2 >= least(sa.sz, sb.sz)"),
-    "mm_frame_sample" ->
-      ("SELECT doc_id, i AS frame_idx, i * 128 AS frame_off, " +
-       "least(128, strlen(text) - i * 128) AS frame_len " +
-       "FROM documents, " +
-       "UNNEST(range(0, CAST(ceil(strlen(text) / 128.0) AS BIGINT), 4)) AS t(i)"),
-    // byte-based (not codepoint-based): hex(encode(text)) is the UTF-8
-    // byte stream, 2 hex chars per byte; char 2i-1 is byte i's high
-    // nibble. Exact for arbitrary non-ASCII content.
-    "mm_byte_histogram" ->
-      ("WITH h AS (SELECT doc_id, hex(encode(text)) AS hx FROM documents), " +
-       "ch AS (SELECT doc_id, UNNEST(list_transform(range(1, len(hx)//2 + 1), " +
-       "i -> hx[2*i-1])) AS nib FROM h) " +
-       "SELECT doc_id, CAST(CASE WHEN nib BETWEEN '0' AND '9' " +
-       "THEN ascii(nib)-48 ELSE ascii(nib)-55 END AS INTEGER) AS bucket, " +
-       "count(*) AS cnt FROM ch GROUP BY doc_id, bucket"),
-    // mn-prefixed tail over the 256-bin `mh` signature (hist256CteSql,
-    // ASCII-invariant): banded length join (width = threshold = 20,
-    // lossless for L1 <= 20 since |len_a-len_b| <= L1), signed-union
-    // per-bucket |diff| then the sum. The Spark side computes the SAME
-    // L1 over dense 256-long arrays via the codegen ArrayL1 primitive
-    // (one row per candidate — the relational form here is the oracle's
-    // sf0.01-sized mirror, not the scale path); every value non-negative
-    "mm_hist_near_dup" ->
-      (s"WITH $hist256CteSql, " +
-       "mnl0 AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS len, " +
-       "CAST(sum(cnt) AS BIGINT) // 20 AS band FROM mh GROUP BY doc_id), " +
-       // band cap 256 in saltOrd order — does not bite at sf0.01
-       // (max occupancy 28) but keeps the CTE chain the exact mirror
-       // of the Spark guardrail
-       "mnr AS (SELECT doc_id, len, band, row_number() OVER " +
-       "(PARTITION BY band ORDER BY " +
-       s"${Similarity.saltOrdSql("doc_id")}, doc_id) AS rnb FROM mnl0), " +
-       "mnl AS (SELECT doc_id, len, band FROM mnr WHERE rnb <= 256), " +
-       "mnp AS (SELECT a.doc_id AS a_id, a.len AS len_a, u.bk " +
-       "FROM mnl a, UNNEST([a.band - 1, a.band, a.band + 1]) AS u(bk)), " +
-       "mnc AS (SELECT p.a_id, b.doc_id AS b_id, p.len_a, b.len AS len_b " +
-       "FROM mnp p JOIN mnl b ON p.bk = b.band " +
-       "WHERE p.a_id < b.doc_id AND abs(p.len_a - b.len) <= 20), " +
-       "mns AS (SELECT c.a_id, c.b_id, h.bucket, CAST(h.cnt AS BIGINT) AS s " +
-       "FROM mnc c JOIN mh h ON h.doc_id = c.a_id " +
-       "UNION ALL SELECT c.a_id, c.b_id, h.bucket, -CAST(h.cnt AS BIGINT) " +
-       "FROM mnc c JOIN mh h ON h.doc_id = c.b_id), " +
-       "mnb AS (SELECT a_id, b_id, bucket, abs(CAST(sum(s) AS BIGINT)) AS ab " +
-       "FROM mns GROUP BY 1, 2, 3), " +
-       "mnd AS (SELECT a_id, b_id, CAST(sum(ab) AS BIGINT) AS l1 " +
-       "FROM mnb GROUP BY 1, 2) " +
-       "SELECT c.a_id, c.b_id, c.len_a, c.len_b, d.l1 " +
-       "FROM mnd d JOIN mnc c USING (a_id, b_id) " +
-       "WHERE d.l1 <= 20 ORDER BY a_id, b_id"),
-    "mm_resize_meta" ->
-      ("SELECT doc_id, width, height, " +
-       "CAST(floor(width * 224.0 / greatest(width, height, 1)) AS BIGINT) AS out_w, " +
-       "CAST(floor(height * 224.0 / greatest(width, height, 1)) AS BIGINT) AS out_h " +
-       "FROM (" + metaSql + ") m"))
 }

@@ -137,9 +137,9 @@ object Aggs {
     // combined with the sketches in one groupBy, Spark's distinct
     // rewrite keyed the 410-long HLL++ partial buffer by
     // (l_returnflag, l_orderkey) — one ~3.3 KB sketch buffer PER
-    // DISTINCT ORDER KEY flowing through the exchange (plan audit
-    // plans/r20/agg_approx_before.txt, operator (3): Keys [flag, okey],
-    // Results [413]). Split out, the sketch pass partial-aggregates to
+    // DISTINCT ORDER KEY flowing through the exchange (the round-20
+    // plan audit: the partial aggregate's Keys [flag, okey], Results
+    // [413]). Split out, the sketch pass partial-aggregates to
     // |flags| rows per map task and the exact pass shuffles 16-byte
     // (flag, okey) rows with map-side partial distinct — identical
     // values (countDistinct ≡ distinct + count; l_orderkey is null-free,
@@ -402,159 +402,4 @@ object Aggs {
     "distinct_keys"     -> distinctKeys _,
     "agg_rollup"        -> rollupAgg _,
     "q1_agg"            -> q1Agg _)
-
-  val oracle: Map[String, String] = Map(
-    // bucket arithmetic (round·100 µ-units, bin() bit length, top-4-bit
-    // shifts, 100·cum ≥ q·n rank rule) mirrors histQuantile literally —
-    // lockstep only; bin()/length are BIGINT in DuckDB → cast
-    // gn-prefixed; rank-weighted HUGEINT sum, ascending (spend, key)
-    // rank order lockstep with giniAgg; both // operands nonneg (the
-    // SUBTRACTION is where the sign can appear — no division after it)
-    "agg_gini" ->
-      ("WITH gnc AS (SELECT c_mktsegment, o_custkey, " +
-       "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS s_cents " +
-       "FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1, 2), " +
-       "gnr AS (SELECT c_mktsegment, s_cents, row_number() OVER (" +
-       "PARTITION BY c_mktsegment ORDER BY s_cents ASC, o_custkey ASC) AS i " +
-       "FROM gnc), " +
-       "gna AS (SELECT c_mktsegment, count(*) AS n_cust, " +
-       "CAST(sum(CAST(s_cents AS HUGEINT)) AS HUGEINT) AS stot, " +
-       "CAST(sum(CAST(i AS HUGEINT) * CAST(s_cents AS HUGEINT)) AS HUGEINT) " +
-       "AS wsum FROM gnr GROUP BY 1) " +
-       "SELECT c_mktsegment, n_cust, CAST(stot AS BIGINT) AS total_cents, " +
-       "CAST((wsum * 2000000) // (CAST(n_cust AS HUGEINT) * stot) AS BIGINT) - " +
-       "((n_cust + 1) * CAST(1000000 AS BIGINT)) // n_cust AS gini_micro " +
-       "FROM gna ORDER BY c_mktsegment"),
-    // hh-prefixed; exact cents, HUGEINT squares ≡ DECIMAL(38),
-    // nonneg // == div
-    "agg_hhi" ->
-      ("WITH hhc AS (SELECT c_mktsegment, o_custkey, " +
-       "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS HUGEINT) AS sd " +
-       "FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1, 2), " +
-       "hha AS (SELECT c_mktsegment, count(*) AS n_cust, " +
-       "CAST(sum(sd) AS HUGEINT) AS stot, CAST(sum(sd * sd) AS HUGEINT) AS ssq " +
-       "FROM hhc GROUP BY 1) " +
-       "SELECT c_mktsegment, n_cust, CAST(stot AS BIGINT) AS total_cents, " +
-       "CAST((ssq * 1000000) // (stot * stot) AS BIGINT) AS hhi_micro " +
-       "FROM hha ORDER BY c_mktsegment"),
-    // md-prefixed; lower-median positional rank — exact selection,
-    // nonneg so // == div
-    "agg_median" ->
-      ("WITH mdr AS (SELECT o_orderpriority, o_totalprice, " +
-       "row_number() OVER (PARTITION BY o_orderpriority " +
-       "ORDER BY o_totalprice ASC, o_orderkey ASC) AS rn, " +
-       "count(*) OVER (PARTITION BY o_orderpriority) AS n FROM orders) " +
-       "SELECT o_orderpriority, CAST(n AS BIGINT) AS n, " +
-       "o_totalprice AS median_price FROM mdr WHERE rn = (n + 1) // 2 " +
-       "ORDER BY o_orderpriority"),
-    // am-prefixed; (cnt desc, value asc) deterministic tie rule
-    "agg_mode" ->
-      ("WITH amc AS (SELECT o_orderstatus, o_orderpriority, count(*) AS cnt " +
-       "FROM orders GROUP BY 1, 2), " +
-       "amr AS (SELECT o_orderstatus, o_orderpriority, cnt, row_number() OVER (" +
-       "PARTITION BY o_orderstatus ORDER BY cnt DESC, o_orderpriority ASC) AS rn " +
-       "FROM amc) " +
-       "SELECT o_orderstatus, o_orderpriority AS mode_priority, cnt AS mode_cnt " +
-       "FROM amr WHERE rn = 1 ORDER BY o_orderstatus"),
-    "agg_hist_quantile" ->
-      ("WITH hv AS (SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS vm, " +
-       "l_returnflag AS flag FROM lineitem), " +
-       "hb AS (SELECT flag, vm, CAST(length(bin(vm)) AS INTEGER) AS bl FROM hv), " +
-       "hlb AS (SELECT flag, (vm >> greatest(bl - 4, 0)) << greatest(bl - 4, 0) AS lb FROM hb), " +
-       "hshard AS (SELECT flag, lb, count(*) AS c FROM hlb GROUP BY 1, 2), " +
-       "hdir AS (SELECT lb, count(*) AS c FROM hlb GROUP BY 1), " +
-       "hre AS (SELECT lb, CAST(sum(c) AS BIGINT) AS c FROM hshard GROUP BY 1), " +
-       "hn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM hdir), " +
-       "hq AS (SELECT unnest([50, 90, 99]) AS q_pct), " +
-       "hcd AS (SELECT lb, CAST(sum(c) OVER (ORDER BY lb ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM hdir), " +
-       "hcr AS (SELECT lb, CAST(sum(c) OVER (ORDER BY lb ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM hre), " +
-       "hed AS (SELECT q_pct, n, min(lb) AS est_micro FROM hcd, hn, hq " +
-       "WHERE cum * 100 >= q_pct * n GROUP BY 1, 2), " +
-       "her AS (SELECT q_pct, n, min(lb) AS est_micro_reagg FROM hcr, hn, hq " +
-       "WHERE cum * 100 >= q_pct * n GROUP BY 1, 2) " +
-       "SELECT hed.q_pct, hed.n AS n_rows, hed.est_micro, her.est_micro_reagg, " +
-       "CAST(hed.est_micro = her.est_micro_reagg AS INTEGER) AS agree " +
-       "FROM hed JOIN her ON hed.q_pct = her.q_pct AND hed.n = her.n"),
-    "agg_winsorize" ->
-      ("WITH l AS (SELECT l_returnflag AS flag, l_extendedprice AS x FROM lineitem), " +
-       "r AS (SELECT flag, x, row_number() OVER (PARTITION BY flag ORDER BY x) AS rn, " +
-       "count(*) OVER (PARTITION BY flag) AS n FROM l), " +
-       "b AS (SELECT flag, min(x) AS lo, max(x) AS hi FROM r " +
-       "WHERE rn = (n * 5) // 100 + 1 OR rn = (n * 95) // 100 GROUP BY flag) " +
-       "SELECT l.flag, b.lo, b.hi, count(*) AS n, " +
-       "round((sum(greatest(b.lo, least(b.hi, l.x)))) * 1e2) / 1e2 AS sum_w, " +
-       "round((avg(greatest(b.lo, least(b.hi, l.x)))) * 1e2) / 1e2 AS avg_w " +
-       "FROM l JOIN b USING (flag) GROUP BY l.flag, b.lo, b.hi ORDER BY l.flag"),
-    "agg_cube" ->
-      ("SELECT o_orderstatus, o_orderpriority, count(*) AS n FROM orders " +
-       "GROUP BY CUBE (o_orderstatus, o_orderpriority)"),
-    "agg_grouping_sets" ->
-      ("SELECT o_orderstatus, o_orderpriority, count(*) AS n, " +
-       "CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority) " +
-       "AS INTEGER) AS gid FROM orders " +
-       "GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())"),
-    "agg_pivot" ->
-      ("SELECT o_orderpriority, " +
-       "count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f, " +
-       "count(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o, " +
-       "count(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_p " +
-       "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"),
-    "agg_na_fill" ->
-      ("SELECT event_type, " +
-       "count(CASE WHEN coalesce(CASE WHEN value > 10 THEN value END, -1.0) = -1.0 " +
-       "THEN 1 END) AS n_filled, count(*) AS n_total " +
-       "FROM events GROUP BY event_type ORDER BY event_type"),
-    "agg_sketch_reagg" ->
-      ("SELECT count(DISTINCT l_returnflag) AS n_groups, " +
-       "count(DISTINCT l_orderkey) AS n_exact_global, " +
-       "CAST(abs(approx_count_distinct(l_orderkey) - count(DISTINCT l_orderkey)) " +
-       "<= count(DISTINCT l_orderkey) * 0.1 AS INTEGER) AS global_ok " +
-       "FROM lineitem"),
-    // agg_approx: sketch algorithms are engine-specific, so each engine
-    // bounds-checks its OWN sketch against its OWN exact value and the
-    // agreed-on booleans (+ the exact count) are what hash-matches.
-    "agg_approx" ->
-      ("WITH a AS (SELECT l_returnflag, " +
-       "approx_count_distinct(l_orderkey) AS apx, " +
-       "count(DISTINCT l_orderkey) AS n_exact, " +
-       "approx_quantile(l_extendedprice, 0.5) AS apx_p50, " +
-       "count(*) AS n_rows FROM lineitem GROUP BY l_returnflag), " +
-       "r AS (SELECT l.l_returnflag, " +
-       "sum(CASE WHEN l.l_extendedprice <= a.apx_p50 THEN 1 ELSE 0 END) AS n_le " +
-       "FROM lineitem l JOIN a USING (l_returnflag) GROUP BY l.l_returnflag) " +
-       "SELECT a.l_returnflag, a.n_exact, " +
-       "CAST(abs(a.apx - a.n_exact) <= a.n_exact * 0.1 AS INTEGER) AS cd_ok, " +
-       "CAST(r.n_le * 20 >= a.n_rows * 9 AND r.n_le * 20 <= a.n_rows * 11 " +
-       "AS INTEGER) AS p50_ok " +
-       "FROM a JOIN r USING (l_returnflag) ORDER BY a.l_returnflag"),
-    "agg_groupby_count" ->
-      ("SELECT o_orderpriority, count(*) AS n FROM orders " +
-       "GROUP BY o_orderpriority ORDER BY o_orderpriority"),
-    "agg_global" ->
-      ("SELECT count(*) AS n_rows, round((sum(l_quantity)) * 1e2) / 1e2 AS sum_qty, " +
-       "round((avg(l_extendedprice)) * 1e2) / 1e2 AS avg_price, " +
-       "count(CASE WHEN l_discount > 0.05 THEN 1 END) AS n_highdisc FROM lineitem"),
-    "agg_stats" ->
-      ("SELECT c_nationkey, count(*) AS n, round((avg(c_acctbal)) * 1e2) / 1e2 AS avg_bal, " +
-       "min(c_acctbal) AS min_bal, max(c_acctbal) AS max_bal, " +
-       "round((sum(c_acctbal)) * 1e2) / 1e2 AS sum_bal FROM customer " +
-       "GROUP BY c_nationkey ORDER BY c_nationkey"),
-    "agg_count_distinct" ->
-      ("SELECT l_returnflag, count(DISTINCT l_orderkey) AS n_orders, " +
-       "count(DISTINCT l_partkey) AS n_parts FROM lineitem " +
-       "GROUP BY l_returnflag ORDER BY l_returnflag"),
-    "distinct_keys" ->
-      "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders",
-    "agg_rollup" ->
-      ("SELECT o_orderstatus, o_orderpriority, count(*) AS n, " +
-       "round((sum(o_totalprice)) * 1e2) / 1e2 AS sum_price FROM orders " +
-       "GROUP BY ROLLUP (o_orderstatus, o_orderpriority)"),
-    "q1_agg" ->
-      ("SELECT l_returnflag, l_linestatus, round((sum(l_quantity)) * 1e2) / 1e2 AS sum_qty, " +
-       "round((sum(l_extendedprice)) * 1e2) / 1e2 AS sum_base_price, " +
-       "round((sum(l_extendedprice * (1 - l_discount))) * 1e2) / 1e2 AS sum_disc_price, " +
-       "round((avg(l_quantity)) * 1e2) / 1e2 AS avg_qty, round((avg(l_extendedprice)) * 1e2) / 1e2 AS avg_price, " +
-       "count(*) AS count_order FROM lineitem " +
-       "WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00' " +
-       "GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"))
 }

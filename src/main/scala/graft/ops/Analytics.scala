@@ -145,62 +145,4 @@ object Analytics {
     "q5_region_volume" -> q5RegionVolume _,
     "q18_large_orders" -> q18LargeOrders _,
     "agg_corr"         -> corrAnalytic _)
-
-  val oracle: Map[String, String] = Map(
-    "audit_referential" ->
-      ("WITH e1 AS (SELECT 'lineitem->orders' AS fk_edge, " +
-       "CAST(count(*) - count(o.k) AS BIGINT) AS n_orphans, count(*) AS n_rows " +
-       "FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey AS k FROM orders) o " +
-       "ON l.l_orderkey = o.k), " +
-       "e2 AS (SELECT 'lineitem->supplier' AS fk_edge, " +
-       "CAST(count(*) - count(s.k) AS BIGINT) AS n_orphans, count(*) AS n_rows " +
-       "FROM lineitem l LEFT JOIN (SELECT DISTINCT s_suppkey AS k FROM supplier) s " +
-       "ON l.l_suppkey = s.k), " +
-       "e3 AS (SELECT 'orders->customer' AS fk_edge, " +
-       "CAST(count(*) - count(c.k) AS BIGINT) AS n_orphans, count(*) AS n_rows " +
-       "FROM orders o LEFT JOIN (SELECT DISTINCT c_custkey AS k FROM customer) c " +
-       "ON o.o_custkey = c.k), " +
-       "e4 AS (SELECT 'customer->nation' AS fk_edge, " +
-       "CAST(count(*) - count(n.k) AS BIGINT) AS n_orphans, count(*) AS n_rows " +
-       "FROM customer c LEFT JOIN (SELECT DISTINCT n_nationkey AS k FROM nation) n " +
-       "ON c.c_nationkey = n.k) " +
-       "SELECT * FROM e1 UNION ALL SELECT * FROM e2 UNION ALL " +
-       "SELECT * FROM e3 UNION ALL SELECT * FROM e4 ORDER BY fk_edge"),
-    "agg_corr" ->
-      ("SELECT l_returnflag, count(*) AS n, " +
-       "round((corr(l_quantity, l_extendedprice)) * 1e6) / 1e6 AS corr_qty_price, " +
-       "round((corr(l_extendedprice, l_discount)) * 1e6) / 1e6 AS corr_price_disc, " +
-       "round((covar_samp(l_quantity, l_extendedprice)) * 1e4) / 1e4 AS covar_qty_price, " +
-       "round((regr_slope(l_extendedprice, l_quantity)) * 1e6) / 1e6 AS slope_price_qty " +
-       "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"),
-    "q3_topk" ->
-      ("SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS odate, " +
-       "o_orderpriority, " +
-       "round((sum(l_extendedprice * (1 - l_discount))) * 1e2) / 1e2 AS revenue " +
-       "FROM customer JOIN orders ON c_custkey = o_custkey " +
-       "JOIN lineitem ON o_orderkey = l_orderkey " +
-       "WHERE c_mktsegment = 'BUILDING' " +
-       "AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00' " +
-       "AND l_shipdate > TIMESTAMP '1997-01-01 00:00:00' " +
-       "GROUP BY l_orderkey, odate, o_orderpriority " +
-       "ORDER BY revenue DESC, l_orderkey ASC LIMIT 10"),
-    "q5_region_volume" ->
-      ("SELECT n_name, " +
-       "round((sum(l_extendedprice * (1 - l_discount))) * 1e2) / 1e2 AS revenue " +
-       "FROM customer JOIN orders ON c_custkey = o_custkey " +
-       "JOIN lineitem ON o_orderkey = l_orderkey " +
-       "JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey " +
-       "JOIN nation ON s_nationkey = n_nationkey " +
-       "JOIN region ON n_regionkey = r_regionkey " +
-       "WHERE r_name = 'ASIA' " +
-       "GROUP BY n_name ORDER BY revenue DESC, n_name ASC"),
-    "q18_large_orders" ->
-      ("SELECT c_name, c_custkey, o_orderkey, " +
-       "strftime(o_orderdate, '%Y-%m-%d') AS odate, o_totalprice, " +
-       "round((total_qty) * 1e2) / 1e2 AS total_qty " +
-       "FROM (SELECT l_orderkey, sum(l_quantity) AS total_qty FROM lineitem " +
-       "GROUP BY 1 HAVING sum(l_quantity) > 300) b " +
-       "JOIN orders ON o_orderkey = b.l_orderkey " +
-       "JOIN customer ON o_custkey = c_custkey " +
-       "ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 20"))
 }

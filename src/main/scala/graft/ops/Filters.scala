@@ -68,25 +68,4 @@ object Filters {
     "filter_range"   -> rangeFilter _,
     "semi_isin"      -> semiIsin _,
     "proj_alias"     -> projAlias _)
-
-  val oracle: Map[String, String] = Map(
-    "filter_isin" ->
-      ("SELECT c_custkey, c_name, c_mktsegment FROM customer " +
-       "WHERE c_mktsegment IN ('BUILDING','AUTOMOBILE')"),
-    "filter_notnull" ->
-      ("SELECT l_returnflag, count(*) AS n FROM lineitem " +
-       "WHERE (CASE WHEN l_discount > 0 THEN l_discount END) IS NOT NULL " +
-       "AND l_quantity IS NOT NULL GROUP BY l_returnflag ORDER BY l_returnflag"),
-    "filter_range" ->
-      ("SELECT l_linestatus, count(*) AS n FROM lineitem " +
-       "WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00' " +
-       "AND l_shipdate < TIMESTAMP '1999-01-01 00:00:00' " +
-       "AND l_quantity BETWEEN 10 AND 20 GROUP BY l_linestatus ORDER BY l_linestatus"),
-    "semi_isin" ->
-      ("SELECT c_nationkey, count(*) AS n FROM customer " +
-       "WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey IN (0,1)) " +
-       "GROUP BY c_nationkey ORDER BY c_nationkey"),
-    "proj_alias" ->
-      ("SELECT c_custkey AS id, c_name AS customer_name, c_acctbal AS balance, " +
-       "c_mktsegment AS segment FROM customer"))
 }

@@ -223,67 +223,4 @@ object Joins {
     "join_inner_agg"      -> innerAgg _,
     "join_match_rate"     -> matchRate _,
     "join_ambiguous_proj" -> ambiguousProj _)
-
-  val oracle: Map[String, String] = Map(
-    "cdc_upsert" ->
-      ("WITH upd AS (SELECT key, value AS new_val FROM (" +
-       "SELECT user_id + 1400 AS key, event_id, value, " +
-       "row_number() OVER (PARTITION BY user_id + 1400 ORDER BY event_id DESC) AS rn " +
-       "FROM events) u WHERE rn = 1), " +
-       "base AS (SELECT c_custkey AS key, CAST(c_acctbal AS DOUBLE) AS old_val " +
-       "FROM customer) " +
-       "SELECT coalesce(b.key, u.key) AS key, " +
-       "CASE WHEN u.key IS NULL THEN 'keep' " +
-       "WHEN u.new_val < 50.0 THEN 'delete' " +
-       "WHEN b.key IS NULL THEN 'insert' ELSE 'update' END AS op, " +
-       "CASE WHEN u.key IS NOT NULL AND u.new_val < 50.0 THEN NULL " +
-       "ELSE round((coalesce(u.new_val, b.old_val)) * 1e2) / 1e2 END AS val " +
-       "FROM base b FULL OUTER JOIN upd u ON b.key = u.key"),
-    "join_bloom_prune" ->
-      ("SELECT strftime(o_orderdate, '%Y-%m') AS month, " +
-       "round((sum(l_extendedprice * (1 - l_discount))) * 1e2) / 1e2 AS revenue, " +
-       "count(*) AS n_items " +
-       "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-       "WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000 " +
-       "GROUP BY 1 ORDER BY month"),
-    "join_band_bucket" ->
-      ("SELECT a.o_orderkey AS a_k, b.o_orderkey AS b_k, " +
-       "a.o_totalprice AS a_x, b.o_totalprice AS b_x, " +
-       "round((abs(a.o_totalprice - b.o_totalprice)) * 1e2) / 1e2 AS diff " +
-       "FROM orders a JOIN orders b ON a.o_orderkey < b.o_orderkey " +
-       "AND abs(a.o_totalprice - b.o_totalprice) <= 1.0"),
-    "join_null_safe" ->
-      ("SELECT c.k, count(*) AS n FROM " +
-       "(SELECT CASE WHEN c_nationkey % 5 = 0 THEN NULL ELSE c_nationkey % 5 END AS k " +
-       "FROM customer) c JOIN " +
-       "(SELECT CASE WHEN n_nationkey % 5 = 0 THEN NULL ELSE n_nationkey % 5 END AS k " +
-       "FROM nation) d ON c.k IS NOT DISTINCT FROM d.k " +
-       "GROUP BY c.k ORDER BY c.k NULLS FIRST"),
-    "join_broadcast_left" ->
-      ("SELECT c_custkey, c_name, n_name FROM customer " +
-       "LEFT JOIN nation ON c_nationkey = n_nationkey"),
-    "semi_join" ->
-      ("SELECT c_custkey, c_mktsegment FROM customer c " +
-       "WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)"),
-    "anti_join" ->
-      ("SELECT c_custkey, c_name FROM customer c " +
-       "WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey " +
-       "AND o.o_totalprice > 300000)"),
-    "join_right_outer" ->
-      ("SELECT n_nationkey, n_name, count(c_custkey) AS n_building " +
-       "FROM (SELECT c_custkey, c_nationkey FROM customer " +
-       "WHERE c_mktsegment = 'BUILDING') c " +
-       "RIGHT JOIN nation ON c.c_nationkey = n_nationkey " +
-       "GROUP BY n_nationkey, n_name ORDER BY n_nationkey"),
-    "join_inner_agg" ->
-      ("SELECT o_orderpriority, round((sum(l_extendedprice * (1 - l_discount))) * 1e2) / 1e2 AS revenue, " +
-       "count(*) AS n_items FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-       "GROUP BY o_orderpriority ORDER BY o_orderpriority"),
-    "join_match_rate" ->
-      ("SELECT count(*) AS total, count(n_name) AS matched, " +
-       "round((100.0 * count(n_name) / count(*)) * 1e2) / 1e2 AS match_pct " +
-       "FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey"),
-    "join_ambiguous_proj" ->
-      ("SELECT c_custkey, c_name AS name, s_suppkey FROM customer " +
-       "JOIN supplier ON c_nationkey = s_nationkey"))
 }

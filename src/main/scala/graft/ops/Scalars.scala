@@ -194,78 +194,4 @@ object Scalars {
     "scalar_json"          -> jsonExtract _,
     "scalar_datetime"      -> datetime _,
     "scalar_string"        -> strings _)
-
-  private val zorderBits: String =
-    (0 until 8).map(i =>
-      s"(((zx >> $i) & 1) << ${2 * i}) + (((zy >> $i) & 1) << ${2 * i + 1})")
-      .mkString(" + ")
-
-  val oracle: Map[String, String] = Map(
-    "scalar_explode_outer" ->
-      ("WITH t AS (SELECT doc_id, CASE WHEN len(tk) >= 50 THEN tk[1:3] END AS arr " +
-       "FROM (SELECT doc_id, string_split(text, ' ') AS tk FROM documents)) " +
-       "SELECT doc_id, unnest(coalesce(arr, [CAST(NULL AS VARCHAR)])) AS tok, " +
-       "CAST(arr IS NOT NULL AS INTEGER) AS had_array FROM t"),
-    "scalar_zorder" ->
-      (s"SELECT l_orderkey, l_linenumber, zx, zy, CAST($zorderBits AS BIGINT) AS zval " +
-       "FROM (SELECT l_orderkey, l_linenumber, l_partkey % 256 AS zx, " +
-       "l_suppkey % 256 AS zy FROM lineitem) t"),
-    "scalar_map" ->
-      ("SELECT o_orderkey, CAST(2 AS INTEGER) AS n_entries, " +
-       "o_totalprice AS price_val, 'price' AS key, o_totalprice AS value " +
-       "FROM orders UNION ALL " +
-       "SELECT o_orderkey, CAST(2 AS INTEGER), o_totalprice, 'cust', " +
-       "CAST(o_custkey AS DOUBLE) FROM orders"),
-    "scalar_date_arith" ->
-      ("SELECT o_orderkey, " +
-       "CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01') AS INTEGER) " +
-       "AS days_to_2002, " +
-       "strftime(CAST(o_orderdate AS DATE) + INTERVAL 30 DAY, '%Y-%m-%d') AS plus_30d, " +
-       "CAST(year(o_orderdate) AS INTEGER) AS yr, " +
-       "CAST(quarter(o_orderdate) AS INTEGER) AS qtr FROM orders"),
-    "scalar_array" ->
-      ("SELECT l_orderkey, CAST(len(qs) AS INTEGER) AS n_items, " +
-       "qs[1] AS min_q, qs[-1] AS max_q, " +
-       "CAST(len(list_filter(qs, q -> q >= 25)) AS INTEGER) AS n_big, " +
-       "round((list_sum(qs)) * 1e2) / 1e2 AS sum_q FROM (" +
-       "SELECT l_orderkey, list_sort(list(l_quantity)) AS qs FROM lineitem " +
-       "GROUP BY l_orderkey) t ORDER BY l_orderkey"),
-    "scalar_math" ->
-      ("SELECT c_custkey, abs(c_acctbal) AS abs_bal, " +
-       "CAST(ceil(c_acctbal) AS BIGINT) AS ceil_bal, " +
-       "CAST(floor(c_acctbal) AS BIGINT) AS floor_bal, " +
-       "round((sqrt(abs(c_acctbal))) * 1e6) / 1e6 AS sqrt_bal, " +
-       "round((pow(c_acctbal / 10000.0, 2)) * 1e6) / 1e6 AS sq_norm, " +
-       "CAST(sign(c_acctbal) AS DOUBLE) AS sign_bal FROM customer"),
-    "scalar_derive" ->
-      ("SELECT l_orderkey, l_linenumber, " +
-       "round((CAST(l_extendedprice AS DOUBLE) / l_quantity) * 1e2) / 1e2 AS price_per_unit " +
-       "FROM lineitem"),
-    "scalar_sentinel_null" ->
-      ("SELECT event_type, count(*) AS n_total, " +
-       "count(CASE WHEN value > 10 THEN value END) AS n_valid, " +
-       "round((sum(coalesce(CASE WHEN value > 10 THEN value END, 0.0))) * 1e2) / 1e2 AS sum_v " +
-       "FROM events GROUP BY event_type ORDER BY event_type"),
-    "scalar_ratio_pct" ->
-      ("SELECT c_nationkey, n, n_hi, " +
-       "CASE WHEN n > 0 THEN round((100.0 * n_hi / n) * 1e1) / 1e1 ELSE 0.0 END AS pct_hi FROM (" +
-       "SELECT c_nationkey, count(*) AS n, " +
-       "count(CASE WHEN c_acctbal > 5000 THEN 1 END) AS n_hi " +
-       "FROM customer GROUP BY c_nationkey) t ORDER BY c_nationkey"),
-    "scalar_case_bucket" ->
-      ("SELECT bucket, count(*) AS n, round((avg(o_totalprice)) * 1e2) / 1e2 AS avg_price FROM (" +
-       "SELECT CASE WHEN o_totalprice < 50000 THEN 'small' " +
-       "WHEN o_totalprice < 200000 THEN 'medium' ELSE 'large' END AS bucket, " +
-       "o_totalprice FROM orders) t GROUP BY bucket ORDER BY bucket"),
-    "scalar_json" ->
-      ("SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k " +
-       "FROM events"),
-    "scalar_datetime" ->
-      ("SELECT event_id, CAST(date_part('hour', ts) AS INTEGER) AS h, " +
-       "CAST(date_part('day', ts) AS INTEGER) AS dom, " +
-       "strftime(ts, '%Y-%m-%d') AS day FROM events"),
-    "scalar_string" ->
-      ("SELECT c_custkey, upper(c_name) AS uname, substring(c_name, 1, 8) AS prefix, " +
-       "CAST(length(c_name) AS INTEGER) AS name_len, " +
-       "concat_ws('-', c_mktsegment, c_nationkey) AS seg_key FROM customer"))
 }

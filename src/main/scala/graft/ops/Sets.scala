@@ -48,18 +48,4 @@ object Sets {
     "union_by_name" -> unionByNameQ _,
     "set_intersect" -> intersectQ _,
     "set_except"    -> exceptQ _)
-
-  val oracle: Map[String, String] = Map(
-    "union_by_name" ->
-      ("SELECT src, count(*) AS n, round((avg(acctbal)) * 1e2) / 1e2 AS avg_bal FROM (" +
-       "SELECT c_name AS name, c_acctbal AS acctbal, 'customer' AS src FROM customer " +
-       "UNION ALL " +
-       "SELECT s_name AS name, s_acctbal AS acctbal, 'supplier' AS src FROM supplier" +
-       ") t GROUP BY src ORDER BY src"),
-    "set_intersect" ->
-      ("SELECT c_nationkey AS nkey FROM customer INTERSECT " +
-       "SELECT s_nationkey AS nkey FROM supplier ORDER BY nkey"),
-    "set_except" ->
-      ("SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING' EXCEPT " +
-       "SELECT o_custkey AS k FROM orders WHERE year(o_orderdate) = 1998 ORDER BY k"))
 }

@@ -62,14 +62,4 @@ object Skew {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "skew_salted_agg"  -> saltedAgg _,
     "skew_salted_join" -> saltedJoin _)
-
-  val oracle: Map[String, String] = Map(
-    // the oracle is the UNSALTED query — proving the rewrite is identity
-    "skew_salted_agg" ->
-      ("SELECT l_returnflag, round((sum(l_quantity)) * 1e2) / 1e2 AS sum_qty, " +
-       "count(*) AS n FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"),
-    "skew_salted_join" ->
-      ("SELECT n_name, count(*) AS n_customers FROM customer " +
-       "JOIN nation ON c_nationkey = n_nationkey " +
-       "GROUP BY n_name ORDER BY n_name"))
 }

@@ -464,73 +464,4 @@ object Sources {
     "src_quarantine"     -> quarantine _,
     "sql_view_query"     -> sqlView _,
     "sql_catalog_table"  -> catalogTable _)
-
-  val oracle: Map[String, String] = Map(
-    // plain restatement over the source table — equality proves every
-    // arrival file was ingested EXACTLY once across the three runs
-    // (a re-processed bookmark would double-count, a skipped late file
-    // would under-count)
-    "src_bookmark_ingest" ->
-      ("SELECT o_orderpriority, count(*) AS n, " +
-       "round((sum(o_totalprice)) * 1e2) / 1e2 AS total " +
-       "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"),
-    // same restatement — here the equality additionally proves
-    // exactly-once through the injected mid-schedule crash (a
-    // re-consumed batch would double-count, an unrecovered one would
-    // under-count)
-    "src_bookmark_atomic" ->
-      ("SELECT o_orderpriority, count(*) AS n, " +
-       "round((sum(o_totalprice)) * 1e2) / 1e2 AS total " +
-       "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"),
-    "src_compaction" ->
-      ("SELECT o_orderpriority, count(*) AS n, " +
-       "round((sum(o_totalprice)) * 1e2) / 1e2 AS total " +
-       "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"),
-    "src_partitioned_roundtrip" ->
-      ("SELECT o_orderpriority, count(*) AS n, " +
-       "round((sum(o_totalprice)) * 1e2) / 1e2 AS total " +
-       "FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_orderpriority"),
-    // relational restatement of the two write phases — equality proves
-    // the non-overwritten partitions survived; 0.9 CAST to DOUBLE
-    // (decimal-literal rule), discount rounded at 2 dp BEFORE the sum
-    "src_dynamic_overwrite" ->
-      ("SELECT o_orderpriority, count(*) AS n, " +
-       "round((sum(CASE WHEN o_orderpriority = '1-URGENT' " +
-       "THEN round((o_totalprice * CAST(0.9 AS DOUBLE)) * 1e2) / 1e2 " +
-       "ELSE o_totalprice END)) * 1e2) / 1e2 AS total " +
-       "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"),
-    "src_csv_roundtrip" ->
-      "SELECT r_regionkey, r_name FROM region",
-    "src_json_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation",
-    "src_parquet_pushdown" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem WHERE l_quantity >= 45",
-    "src_orc_roundtrip" ->
-      "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier",
-    // round-trip identity + evolution semantics expressed on the source
-    // table: early batch lacks n_regionkey (null-filled), batch label
-    // comes from the partition directory
-    "src_schema_evolution" ->
-      ("SELECT n_nationkey, n_name, " +
-       "CASE WHEN n_nationkey >= 12 THEN n_regionkey END AS n_regionkey, " +
-       "CASE WHEN n_nationkey < 12 THEN 'old' ELSE 'new' END AS batch " +
-       "FROM nation"),
-    // clean rows pass through with flag 0; the two injected malformed
-    // lines surface with a null key, the parseable column kept, flag 1
-    "src_quarantine" ->
-      ("SELECT r_regionkey, r_name, 0 AS quarantined FROM region " +
-       "UNION ALL SELECT NULL, 'BADLAND', 1 " +
-       "UNION ALL SELECT NULL, 'NOWHERE', 1"),
-    "sql_view_query" ->
-      ("SELECT n_name, count(*) AS n_customers, " +
-       "round((avg(c_acctbal)) * 1e2) / 1e2 AS avg_bal " +
-       "FROM customer JOIN nation ON c_nationkey = n_nationkey " +
-       "GROUP BY n_name ORDER BY n_name"),
-    "src_json_array_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation",
-    "sql_catalog_table" ->
-      ("SELECT n_name, count(*) AS n_customers, " +
-       "round((sum(c_acctbal)) * 1e2) / 1e2 AS total_bal " +
-       "FROM customer JOIN nation ON c_nationkey = n_nationkey " +
-       "GROUP BY n_name ORDER BY n_name"))
 }

@@ -185,63 +185,4 @@ object Windows {
     "window_running_sum"       -> runningSum _,
     "window_range_frame"       -> rangeFrame _,
     "sort_limit"               -> sortLimit _)
-
-  val oracle: Map[String, String] = Map(
-    // wc-prefixed; first-occurrence flag + running sum — the
-    // COUNT(DISTINCT) OVER workaround, (ts, event_id) total order
-    "window_cum_distinct" ->
-      ("WITH wcf AS (SELECT user_id, event_id, ts, " +
-       "CASE WHEN row_number() OVER (PARTITION BY user_id, event_type " +
-       "ORDER BY ts, event_id) = 1 THEN 1 ELSE 0 END AS is_first " +
-       "FROM events) " +
-       "SELECT user_id, event_id, CAST(is_first AS INTEGER) AS is_first, " +
-       "CAST(sum(is_first) OVER (PARTITION BY user_id ORDER BY ts, event_id " +
-       "ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_types_seen " +
-       "FROM wcf ORDER BY user_id, event_id"),
-    "window_first_last" ->
-      ("SELECT o_orderkey, o_custkey, first_value(o_totalprice) OVER w AS first_price, " +
-       "last_value(o_totalprice) OVER w AS last_price, " +
-       "nth_value(o_totalprice, 2) OVER w AS second_price FROM orders " +
-       "WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC " +
-       "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"),
-    "window_ranking_suite" ->
-      ("SELECT c_mktsegment, c_custkey, CAST(rank() OVER w AS INTEGER) AS rnk, " +
-       "CAST(dense_rank() OVER w AS INTEGER) AS drnk, " +
-       "CAST(ntile(4) OVER w AS INTEGER) AS quartile, " +
-       "round((percent_rank() OVER w) * 1e6) / 1e6 AS pct_rank, " +
-       "round((cume_dist() OVER w) * 1e6) / 1e6 AS cdist FROM customer " +
-       "WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC)"),
-    "window_sample_stratified" ->
-      ("SELECT c_custkey, c_mktsegment FROM (" +
-       "SELECT c_custkey, c_mktsegment, row_number() OVER (" +
-       "PARTITION BY c_mktsegment ORDER BY ((c_custkey % 2147483648) * 2654435761) % 1000003, c_custkey) AS rn " +
-       "FROM customer) t WHERE rn <= 100"),
-    // window_sample_rand: intentionally no oracle (rand(42) is
-    // partitioning-dependent; rows-only check per the contract).
-    "window_topk_agg" ->
-      ("SELECT c_mktsegment, c_custkey, rn FROM (" +
-       "SELECT c_mktsegment, c_custkey, CAST(row_number() OVER (" +
-       "PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC) AS INTEGER) AS rn " +
-       "FROM customer) t WHERE rn <= 5"),
-    "window_topk_per_group" ->
-      ("SELECT c_mktsegment, c_custkey, c_acctbal, rn FROM (" +
-       "SELECT c_mktsegment, c_custkey, c_acctbal, CAST(row_number() OVER (" +
-       "PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC) AS INTEGER) AS rn " +
-       "FROM customer) t WHERE rn <= 5"),
-    "window_lag_rank" ->
-      ("SELECT o_orderkey, o_custkey, CAST(row_number() OVER w AS INTEGER) AS rn, " +
-       "lag(o_totalprice, 1) OVER w AS prev_price FROM orders " +
-       "WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)"),
-    "window_range_frame" ->
-      ("SELECT o_orderkey, o_orderpriority, CAST(floor(o_totalprice) AS BIGINT) AS p, " +
-       "count(*) OVER (PARTITION BY o_orderpriority ORDER BY CAST(floor(o_totalprice) AS BIGINT) " +
-       "RANGE BETWEEN 1000 PRECEDING AND 1000 FOLLOWING) AS n_near FROM orders"),
-    "window_running_sum" ->
-      ("SELECT o_orderkey, o_custkey, round((sum(o_totalprice) OVER (" +
-       "PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC " +
-       "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) * 1e2) / 1e2 AS running_spend " +
-       "FROM orders"),
-    "sort_limit" ->
-      ("SELECT o_orderkey, o_custkey, o_totalprice FROM orders " +
-       "ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10"))
 }

@@ -1,10 +1,10 @@
-package graft.ext
+package graft.oracle
 
 /** DuckDB-side oracle execution hints. The oracle SQL strings are run
   * ONLY by DuckDB (the driver's t2 compare and
   * scripts/compare_oracle.py) — never by Spark — so DuckDB-specific
   * syntax is in scope here and nowhere else. */
-private[ext] object OracleHints {
+private[oracle] object OracleHints {
 
   /** Rewrite every CTE definition `name AS (SELECT …)` to
     * `name AS MATERIALIZED (SELECT …)`. DuckDB 1.x INLINES each CTE

@@ -125,7 +125,7 @@ object EventStream {
     * generalize (e.g. per-session payloads, early triggers). */
   def sessionizeStream(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
-    val gapMs = 5 * 60 * 1000L
+    val gapMs = graft.ext.TimeOps.SessionGapMicros / 1000
     val typed = events
       .withWatermark("ts", "10 minutes")
       .select(col("user_id"), col("ts"))

@@ -94,7 +94,8 @@ object VecStream {
                            arrivalStream: DataFrame,
                            tombstoneIds: DataFrame,
                            assignOut: String, checkpointDir: String,
-                           searchOut: String, probeN: Long = 100): Unit = {
+                           searchOut: String,
+                           probeN: Long = graft.ext.Similarity.ProbeN): Unit = {
     import org.apache.spark.sql.functions.col
     val cents = graft.ext.Similarity.frozenBaseCentroids(spark, dir)
       .localCheckpoint() // one build; micro-batches re-read the frame

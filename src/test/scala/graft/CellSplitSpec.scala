@@ -209,7 +209,7 @@ class CellSplitSpec extends SparkSpec {
       "csp AS (SELECT d.cell, d.vec_id, " +
       "CAST(CASE WHEN d.s0sim >= t.tau THEN 0 ELSE 1 END AS INTEGER) AS sub " +
       "FROM csd d JOIN cst t ON t.cell = d.cell)"
-    assert(ext.Similarity.cellSplitRoundCtesFor("cs", "home") === frozen)
+    assert(oracle.Similarity.cellSplitRoundCtesFor("cs", "home") === frozen)
   }
 
   test("serve-tail generator: the (st, cs) instance reproduces the " +
@@ -243,7 +243,7 @@ class CellSplitSpec extends SparkSpec {
       "stb y ON x.ncell = y.ncell AND x.vec_id <> y.vec_id), str AS " +
       "(SELECT a_id, b_id, sim, row_number() OVER (PARTITION BY a_id " +
       "ORDER BY sim DESC, b_id ASC) AS rn FROM stq)"
-    assert(ext.Similarity.splitServeTailFor("st", "cs") === frozen)
+    assert(oracle.Similarity.splitServeTailFor("st", "cs") === frozen)
   }
 
   test("trained split serve: all-cool trained probes ≡ the trained " +

@@ -16,6 +16,9 @@ import org.apache.spark.sql.DataFrame
 class CkptMemoSpec extends SparkSpec {
 
   test("an eviction at cap + 1 is counted, logged and the evicted key rebuilds") {
+    // start the session first: its start reconfigures logging, which
+    // would drop an appender attached before it
+    assert(!spark.sparkContext.isStopped)
     val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val appender = new AbstractAppender("ckpt-memo-spec", null, null, true,
                                         Property.EMPTY_ARRAY) {

@@ -45,7 +45,7 @@ class NprobePlannedSpec extends SparkSpec {
       "FROM m x JOIN bc y ON x.cell = y.cell AND x.vec_id <> y.vec_id), " +
       "r AS (SELECT a_id, b_id, sim, row_number() OVER (PARTITION BY a_id " +
       "ORDER BY sim DESC, b_id ASC) AS rn FROM p)"
-    assert(ext.Similarity.ivfChainCtesFor("", 2) === frozen)
+    assert(oracle.Similarity.ivfChainCtesFor("", 2) === frozen)
   }
 
   test("serveAtNprobe at the production width IS sim_ivf_topk") {
