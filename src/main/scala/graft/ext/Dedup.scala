@@ -38,7 +38,9 @@ object Dedup {
     * construction" into an enforced invariant. The oracle reads it. */
   private[graft] val MaxShingleDf = 100
 
-  private[graft] val P1 = 1000000007L // polyhash modulus (both engines, < 2^30)
+  // the one polyhash modulus (both engines, < 2^30): the shingle, MinHash
+  // and band hashes here, TextOps' quality feature and winnowing hash
+  private[graft] val P1 = 1000000007L
   private[graft] val P2 = 998244353L  // second modulus → simhash high bits
 
   /** Exact dedup: deterministic survivor (min doc_id) + multiplicity per
@@ -312,24 +314,6 @@ object Dedup {
       .orderBy("thr_pct")
   }
 
-  /** PARAGRAPH-level near-dup (round-12 verdict item 5 — Lee et al.
-    * dedup at sub-document granularity): split every doc on the
-    * existing [[TextOps.chunk]] boundaries (non-overlapping 200-char
-    * windows — stride = size, so no unit double-counts), run the SAME
-    * capped 5-gram inverted-index Jaccard pipeline
-    * ([[jaccardPairsOf]] — cap, double-hash keys, exact integer
-    * threshold all inherited, the lockstep rule) with paragraphs as
-    * the unit, keep only CROSS-document pairs, and report each doc's
-    * duplicated-paragraph fraction. This catches the template page
-    * whose doc-level Jaccard is diluted below 0.2 by unique filler: a
-    * shared boilerplate paragraph matches at paragraph grain no matter
-    * how long the host doc is. Unit id = doc_id·10⁶ + chunk_idx (exact
-    * BIGINT for docs < 10⁶ paragraphs and doc_id < 9·10¹²; parent
-    * recovery is a nonneg `div` ≡ `//`). flagged = ≥ half the doc's
-    * paragraphs duplicated (the [[TextOps.dupSpanFrac]] 0.5
-    * convention). Scale: paragraphs ≈ chars/200 — the pipeline's
-    * candidate volume keeps the same DF-cap bound, per-unit shingle
-    * sets are just smaller. */
   /** Paragraph units shared by the measure ([[paraNearDup]]) and apply
     * ([[paraExcise]]) halves: non-overlapping 200/200 chunk windows,
     * pid = doc_id·10⁶ + chunk_idx. */
@@ -358,6 +342,24 @@ object Dedup {
         .select("a_id", "b_id")
     })
 
+  /** PARAGRAPH-level near-dup (round-12 verdict item 5 — Lee et al.
+    * dedup at sub-document granularity): split every doc on the
+    * existing [[TextOps.chunk]] boundaries (non-overlapping 200-char
+    * windows — stride = size, so no unit double-counts), run the SAME
+    * capped 5-gram inverted-index Jaccard pipeline
+    * ([[jaccardPairsOf]] — cap, double-hash keys, exact integer
+    * threshold all inherited, the lockstep rule) with paragraphs as
+    * the unit, keep only CROSS-document pairs, and report each doc's
+    * duplicated-paragraph fraction. This catches the template page
+    * whose doc-level Jaccard is diluted below 0.2 by unique filler: a
+    * shared boilerplate paragraph matches at paragraph grain no matter
+    * how long the host doc is. Unit id = doc_id·10⁶ + chunk_idx (exact
+    * BIGINT for docs < 10⁶ paragraphs and doc_id < 9·10¹²; parent
+    * recovery is a nonneg `div` ≡ `//`). flagged = ≥ half the doc's
+    * paragraphs duplicated (the [[TextOps.dupSpanFrac]] 0.5
+    * convention). Scale: paragraphs ≈ chars/200 — the pipeline's
+    * candidate volume keeps the same DF-cap bound, per-unit shingle
+    * sets are just smaller. */
   def paraNearDup(spark: SparkSession, dir: String): DataFrame = {
     val units = paraUnits(spark, dir)
     val crossDoc = paraPairs(spark, dir)
@@ -466,6 +468,17 @@ object Dedup {
       Tables.documents(spark, dir).filter(col("doc_id") >= split), matches)
   }
 
+  /** UNCAPPED distinct hashed n-gram shingles per doc — the raw
+    * (doc_id, h1, h2) frame [[ngramNovelty]] and [[dfHist]] read
+    * (candidate stages go through the capped [[shingleGroups]]
+    * instead). */
+  private def hashedShingles(spark: SparkSession, dir: String,
+                             n: Int): DataFrame =
+    hashedShinglesOf(Tables.documents(spark, dir), n)
+
+  private[graft] def hashedShinglesOf(docs: DataFrame, n: Int): DataFrame =
+    shingleHashes(docs, n).distinct()
+
   /** Per-document n-gram NOVELTY against everything that came before it
     * (doc_id order = arrival order): share of a doc's distinct 3-gram
     * shingles whose FIRST occurrence is this doc. The crawl-health
@@ -478,17 +491,6 @@ object Dedup {
     * min-agg + one join-back, no pair expansion anywhere. Docs too
     * short for a shingle read novelty 1e6 (nothing seen before —
     * mirrored CASE). */
-  /** UNCAPPED distinct hashed n-gram shingles per doc — the raw
-    * (doc_id, h1, h2) frame [[ngramNovelty]] and [[dfHist]] read
-    * (candidate stages go through the capped [[shingleGroups]]
-    * instead). */
-  private def hashedShingles(spark: SparkSession, dir: String,
-                             n: Int): DataFrame =
-    hashedShinglesOf(Tables.documents(spark, dir), n)
-
-  private[graft] def hashedShinglesOf(docs: DataFrame, n: Int): DataFrame =
-    shingleHashes(docs, n).distinct()
-
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
     val sh = hashedShingles(spark, dir, 3)
     val first = sh.groupBy("h1", "h2").agg(min("doc_id").as("fd"))
@@ -1131,16 +1133,6 @@ object Dedup {
 
   private[graft] val SimBits = 60 // 30 bits from each modulus (P1, P2 < 2^30)
 
-  /** 60-bit SimHash per document: two portable token polyhashes supply 30
-    * sign-weighted bits each; bit j set when Σ tokens(±1) > 0.
-    * Oracle-checked (same math in DuckDB).
-    *
-    * Computed in TF shape: occurrences collapse to (doc, token, count)
-    * first, tokens are hashed once per DISTINCT token, and the ±1
-    * per-occurrence sums become ±count — the 60-column aggregate then
-    * runs over |vocab per doc| rows instead of every token occurrence
-    * (at 100 TB: vocab ≪ corpus). No broadcast hint on the hash join —
-    * vocab is unbounded in general; AQE decides. */
   /** Memoized production fingerprint frame ("simhashfp", owner
     * dedup_simhash in Bench's list): dedup_simhash_pairs band-joins the
     * SAME 60-bit fingerprints — before round 20 it recomputed the whole
@@ -1152,6 +1144,16 @@ object Dedup {
     memo.getOrElseUpdate((spark, dir, "simhashfp"),
       simhashOf(Tables.documents(spark, dir)).localCheckpoint())
 
+  /** 60-bit SimHash per document: two portable token polyhashes supply 30
+    * sign-weighted bits each; bit j set when Σ tokens(±1) > 0.
+    * Oracle-checked (same math in DuckDB).
+    *
+    * Computed in TF shape: occurrences collapse to (doc, token, count)
+    * first, tokens are hashed once per DISTINCT token, and the ±1
+    * per-occurrence sums become ±count — the 60-column aggregate then
+    * runs over |vocab per doc| rows instead of every token occurrence
+    * (at 100 TB: vocab ≪ corpus). No broadcast hint on the hash join —
+    * vocab is unbounded in general; AQE decides. */
   private[graft] def simhashOf(docs: DataFrame): DataFrame = {
     val tf = tokenRows(docs, "doc_id")
       .groupBy("doc_id", "tok")
@@ -1470,6 +1472,33 @@ object Dedup {
     * from it. */
   private[graft] val SubstrW = 5
 
+  /** Memoized production instance of [[dupWindowStarts]] — both halves
+    * of the exact-substring family (measure [[substrCross]], apply
+    * [[substrExcise]]) consume the identical duplicated-start frame;
+    * before round 19 each re-ran the gram + digest + DF pipeline.
+    * Owner: dedup_substr_cross in Bench's list. */
+  private def dupStartsCkpt(spark: SparkSession, dir: String): DataFrame =
+    memo.getOrElseUpdate((spark, dir, "substrstarts"),
+      dupWindowStarts(Tables.documents(spark, dir)).localCheckpoint())
+
+  /** Duplicated-window start positions (doc_id, p): every 1-based token
+    * position whose [[SubstrW]]-gram occurs verbatim in ≥2 documents.
+    * Shared base of [[substrCross]] (coverage measure) and
+    * [[substrExcise]] (span removal apply). `digestKeyed = false` keeps
+    * the raw-string key — spec-only reference path. */
+  private[graft] def dupWindowStarts(docs: DataFrame,
+                                     digestKeyed: Boolean = true): DataFrame = {
+    val grams = wordTokens(fanOutNarrow(docs), SubstrW)
+      .select(col("doc_id"), posexplode(wordGrams(SubstrW)))
+      .select(col("doc_id"), (col("pos") + 1).cast("long").as("p"),
+              (if (digestKeyed) unhex(md5(col("col"))) else col("col")).as("g"))
+    val dupG = grams.groupBy("g")
+      .agg(countDistinct("doc_id").as("nd"))
+      .filter(col("nd") >= 2)
+      .select("g")
+    grams.join(dupG, Seq("g")).select("doc_id", "p")
+  }
+
   /** Cross-document exact-substring coverage — the ExactSubstr dedup
     * shape (Lee et al., "Deduplicating Training Data Makes Language
     * Models Better"): for every document, the fraction of its tokens
@@ -1492,33 +1521,6 @@ object Dedup {
     * SubstrDigestSpec pins digest ≡ string on real data. Never
     * all-pairs: the duplicated-gram set is |distinct grams| and the
     * coverage union is |duplicated starts| rows partitioned by doc. */
-  /** Duplicated-window start positions (doc_id, p): every 1-based token
-    * position whose [[SubstrW]]-gram occurs verbatim in ≥2 documents.
-    * Shared base of [[substrCross]] (coverage measure) and
-    * [[substrExcise]] (span removal apply). `digestKeyed = false` keeps
-    * the raw-string key — spec-only reference path. */
-  /** Memoized production instance of [[dupWindowStarts]] — both halves
-    * of the exact-substring family (measure [[substrCross]], apply
-    * [[substrExcise]]) consume the identical duplicated-start frame;
-    * before round 19 each re-ran the gram + digest + DF pipeline.
-    * Owner: dedup_substr_cross in Bench's list. */
-  private def dupStartsCkpt(spark: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate((spark, dir, "substrstarts"),
-      dupWindowStarts(Tables.documents(spark, dir)).localCheckpoint())
-
-  private[graft] def dupWindowStarts(docs: DataFrame,
-                                     digestKeyed: Boolean = true): DataFrame = {
-    val grams = wordTokens(fanOutNarrow(docs), SubstrW)
-      .select(col("doc_id"), posexplode(wordGrams(SubstrW)))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("p"),
-              (if (digestKeyed) unhex(md5(col("col"))) else col("col")).as("g"))
-    val dupG = grams.groupBy("g")
-      .agg(countDistinct("doc_id").as("nd"))
-      .filter(col("nd") >= 2)
-      .select("g")
-    grams.join(dupG, Seq("g")).select("doc_id", "p")
-  }
-
   def substrCross(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)

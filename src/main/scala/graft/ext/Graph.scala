@@ -3,6 +3,7 @@ package graft.ext
 import graft.Tables
 import graft.ops.Num
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over the purchase graph (customer ↔ supplier edges
@@ -134,25 +135,92 @@ object Graph {
     * `src` plus one aggregation by `dst` — rank state is |nodes| rows,
     * edges never rewrite. At 100 TB this is the exact Pregel superstep
     * shape: co-partition edges and ranks on the join key and the
-    * per-round shuffle moves only rank deltas. Isolated nodes don't
-    * exist by construction (every node comes from an edge), so the
-    * LEFT join + coalesce(0) only guards rounding-starved corners. */
-  def pagerank(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame = {
-    val edges = edgesCkpt(spark, dir) // (src, dst, deg) — deg pre-attached
-    val nodes = degCkpt(spark, dir).select(col("src").as("node"), col("deg"))
-    var r = nodes.select(col("node"), lit(1000000L).as("r"))
-    for (_ <- 1 to rounds) {
-      val contrib = edges
-        .join(r, edges("src") === r("node"))
-        .select(col("dst").as("node"), expr("r div deg").as("ct"))
-        .groupBy("node").agg(sum("ct").as("c"))
-      r = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-                (lit(150000L) + expr("(85 * coalesce(c, 0)) div 100")).as("r"))
-    }
-    nodes.join(r, Seq("node"))
+    * per-round shuffle moves only rank deltas ([[dampedRank]]). */
+  def pagerank(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame =
+    // (src, dst, deg) edges — deg pre-attached; every node restarts
+    dampedRank(edgesCkpt(spark, dir), "src", "dst",
+      degCkpt(spark, dir).select(col("src").as("node"), col("deg")),
+      lit(1L), rounds)
       .select(nodeString(col("node")).as("node"), col("deg"),
               col("r").as("rank_micro"))
+
+  /** THE damped-rank loop of [[pagerank]] and [[ppr]]: the rank state
+    * starts at `restart`·10⁶ µ per node of `nodes` (node, deg, …); each
+    * of `rounds` synchronous rounds spreads `r div deg` from every `src`
+    * to its `dst` along `edges` (the source's `deg` attached) and sets
+    * r' = `restart`·150000 + (85·Σ contrib) div 100. `restart` is 1 for
+    * every node in pagerank and the seed flag in ppr, so only seeds get
+    * the start and restart mass there. Returns `nodes` with its final
+    * `r`. Isolated nodes don't exist by construction (every node comes
+    * from an edge), so the LEFT join + coalesce(0) only guards
+    * rounding-starved corners. */
+  private def dampedRank(edges: DataFrame, src: String, dst: String,
+                         nodes: DataFrame, restart: Column,
+                         rounds: Int): DataFrame = {
+    var r = nodes.select(col("node"), (restart * lit(1000000L)).as("r"))
+    for (_ <- 1 to rounds) {
+      val contrib = edges
+        .join(r, edges(src) === r("node"))
+        .select(col(dst).as("node"), expr("r div deg").as("ct"))
+        .groupBy("node").agg(sum("ct").as("c"))
+      r = nodes.join(contrib, Seq("node"), "left")
+        .select(col("node"), (restart * lit(150000L) +
+                              expr("(85 * coalesce(c, 0)) div 100")).as("r"))
+    }
+    nodes.join(r, Seq("node"))
+  }
+
+  /** The mutual-kNN similarity graph as every query over it reads it —
+    * the one read of the memoized [[Similarity.knnMutual]] edge frame:
+    * `mu` the undirected (a_id < b_id) edges, `und` both directions as
+    * (u, v) and `deg` each node's degree (u, deg). Views only, built on
+    * first use: nothing here is memoized beyond `knnmutual` itself. */
+  private[graft] final class MutualGraph(val mu: DataFrame) {
+    lazy val und: DataFrame = mu.select(col("a_id").as("u"), col("b_id").as("v"))
+      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
+    lazy val deg: DataFrame = und.groupBy("u").agg(count(lit(1)).as("deg"))
+  }
+
+  private[graft] def mutualGraph(spark: SparkSession, dir: String): MutualGraph =
+    new MutualGraph(Similarity.knnMutual(spark, dir).select("a_id", "b_id"))
+
+  /** Every wedge x–apex–y (x < y) of a directed (u, v) edge frame `e`:
+    * one row (apex, x, y) per pair of the apex's neighbours, columns
+    * named as the caller reads them. */
+  private def wedges(e: DataFrame, apex: String = "apex", x: String = "x_id",
+                     y: String = "y_id"): DataFrame =
+    e.as("e1").join(e.as("e2"),
+        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
+      .select(col("e1.u").as(apex), col("e1.v").as(x), col("e2.v").as(y))
+
+  /** `e` with the degree of each named endpoint column attached under
+    * its given name: `end -> name` joins `deg` (u, deg) on `end`. */
+  private def endpointDegrees(e: DataFrame, deg: DataFrame,
+                              ends: (String, String)*): DataFrame =
+    ends.foldLeft(e) { case (acc, (end, d)) =>
+      acc.join(deg.select(col("u").as(end), col("deg").as(d)), Seq(end))
+    }
+
+  /** A per-apex weight of the link-score fold: `apex` derived from the
+    * apex's `deg`, summed per pair as `summand` into column `name`. */
+  private final case class ApexWeight(apex: Column, summand: String, name: String)
+
+  /** THE link-score fold: every pair (x_id, y_id) of the mutual graph
+    * that closes at least one wedge, with its common-neighbour count
+    * `cn` and, given an apex weight, that weight's sum; `endpoints`
+    * then scores the pair by its own ends, and existing edges are
+    * anti-joined away last (they are kNN hits, not predictions).
+    * Wedge volume is ≤ k²·|V| on the degree-bounded mutual-top-k graph
+    * at any corpus scale (see [[commonNeighbors]]). */
+  private def linkScores(g: MutualGraph, w: Option[ApexWeight] = None,
+                         endpoints: DataFrame => DataFrame = identity): DataFrame = {
+    val wed = w.fold(wedges(g.und).select("x_id", "y_id")) { a =>
+      wedges(g.und).join(g.deg.select(col("u").as("apex"), a.apex), Seq("apex"))
+    }
+    val sc = endpoints(wed.groupBy("x_id", "y_id").agg(count(lit(1)).as("cn"),
+      w.map(a => sum(expr(a.summand)).as(a.name)).toSeq: _*))
+    sc.join(g.mu, sc("x_id") === g.mu("a_id") && sc("y_id") === g.mu("b_id"),
+            "left_anti")
   }
 
   /** Triangle enumeration over the mutual-kNN similarity graph
@@ -173,21 +241,15 @@ object Graph {
     * about. Output is the sorted (x<y<z) triple list; the middle vertex
     * recovered as sum−min−max (pure integer). */
   def triangles(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
-    val dg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    val o = und
-      .join(dg.select(col("u"), col("deg").as("du")), Seq("u"))
-      .join(dg.select(col("u").as("v"), col("deg").as("dv")), Seq("v"))
+    val g = mutualGraph(spark, dir)
+    val mu = g.mu
+    val o = endpointDegrees(g.und, g.deg, "u" -> "du", "v" -> "dv")
       .filter(col("du") < col("dv") ||
               (col("du") === col("dv") && col("u") < col("v")))
       .select("u", "v")
-    val wed = o.as("e1").join(o.as("e2"),
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.u").as("apex"), col("e1.v").as("x"), col("e2.v").as("y"))
-    wed.join(mu, mu("a_id") === least(col("x"), col("y")) &&
-                 mu("b_id") === greatest(col("x"), col("y")))
+    wedges(o, x = "x", y = "y")
+      .join(mu, mu("a_id") === least(col("x"), col("y")) &&
+                mu("b_id") === greatest(col("x"), col("y")))
       .select(least(col("apex"), col("x"), col("y")).as("x_id"),
               (col("apex") + col("x") + col("y") -
                 least(col("apex"), col("x"), col("y")) -
@@ -210,16 +272,12 @@ object Graph {
     * |wedges| vs |E|. Every node with an edge appears; deg-1 nodes get
     * cc 0 (no wedge exists). */
   def clusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
-    val dg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    val wed = und.as("e1").join(und.as("e2"),
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.u").as("u"), col("e1.v").as("x"), col("e2.v").as("y"))
-    val tri = wed.join(mu, mu("a_id") === col("x") && mu("b_id") === col("y"))
+    val g = mutualGraph(spark, dir)
+    val mu = g.mu
+    val tri = wedges(g.und, "u", "x", "y")
+      .join(mu, mu("a_id") === col("x") && mu("b_id") === col("y"))
       .groupBy("u").agg(count(lit(1)).as("n_tri"))
-    dg.join(tri, Seq("u"), "left")
+    g.deg.join(tri, Seq("u"), "left")
       .select(col("u").as("vec_id"), col("deg"),
               coalesce(col("n_tri"), lit(0L)).as("n_tri"))
       .withColumn("cc_micro",
@@ -244,13 +302,8 @@ object Graph {
     * emb_dim_stats pattern). One degree agg + two broadcast-size joins
     * + one global agg; single output row at any scale. */
   def degreeAssort(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
-    val dg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    und
-      .join(dg.select(col("u"), col("deg").as("dx")), Seq("u"))
-      .join(dg.select(col("u").as("v"), col("deg").as("dy")), Seq("v"))
+    val g = mutualGraph(spark, dir)
+    endpointDegrees(g.und, g.deg, "u" -> "dx", "v" -> "dy")
       .agg(count(lit(1)).as("n"),
            sum("dx").as("sum_x"),
            sum(col("dx") * col("dy")).as("sum_xy"),
@@ -280,19 +333,17 @@ object Graph {
     * agg — |cells| output rows at any scale. Cells with no graph node
     * don't appear (they contribute 0 to Q). */
   def cellModularity(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
+    val g = mutualGraph(spark, dir)
+    val mu = g.mu
     val home = Similarity.ivfAssignRanked(spark, dir)
       .filter(col("rn") === 1).select("vec_id", "cell")
-    val und = mu.select(col("a_id").as("u"))
-      .union(mu.select(col("b_id").as("u")))
-    val dg = und.groupBy("u").agg(count(lit(1)).as("deg"))
     val mtot = mu.agg(count(lit(1)).as("m"))
     val eIn = mu
       .join(home.select(col("vec_id").as("a_id"), col("cell").as("ca")), Seq("a_id"))
       .join(home.select(col("vec_id").as("b_id"), col("cell").as("cb")), Seq("b_id"))
       .filter(col("ca") === col("cb"))
       .groupBy(col("ca").as("cell")).agg(count(lit(1)).as("e_in"))
-    dg.join(home.select(col("vec_id").as("u"), col("cell")), Seq("u"))
+    g.deg.join(home.select(col("vec_id").as("u"), col("cell")), Seq("u"))
       .groupBy("cell")
       .agg(count(lit(1)).as("n_nodes"), sum("deg").as("d_tot"))
       .join(eIn, Seq("cell"), "left")
@@ -318,18 +369,8 @@ object Graph {
     * safe where a general social graph would need the triangles
     * orientation trick. Existing edges are anti-joined away (they are
     * kNN hits, not predictions). */
-  def commonNeighbors(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
-    val cn = und.as("e1").join(und.as("e2"),
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.v").as("x_id"), col("e2.v").as("y_id"))
-      .groupBy("x_id", "y_id").agg(count(lit(1)).as("cn"))
-    cn.join(mu, cn("x_id") === mu("a_id") && cn("y_id") === mu("b_id"),
-            "left_anti")
-      .select("x_id", "y_id", "cn")
-  }
+  def commonNeighbors(spark: SparkSession, dir: String): DataFrame =
+    linkScores(mutualGraph(spark, dir))
 
   /** Resource-allocation link prediction (Zhou/Lü/Zhang's RA index) —
     * [[commonNeighbors]] refined by hub discounting: a shared neighbor
@@ -342,24 +383,9 @@ object Graph {
     * graphs). Same bounded wedge enumeration as commonNeighbors
     * (degree ≤ k on a mutual-top-k graph ⇒ wedges ≤ k²·|V| at any
     * scale); one extra |wedges|-row join to attach the apex degree. */
-  def resourceAlloc(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
-    val dg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-      .select(col("u").as("apex"), col("deg"))
-    val ra = und.as("e1").join(und.as("e2"),
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.u").as("apex"), col("e1.v").as("x_id"),
-              col("e2.v").as("y_id"))
-      .join(dg, Seq("apex"))
-      .groupBy("x_id", "y_id")
-      .agg(count(lit(1)).as("cn"),
-           sum(expr("1000000 div deg")).as("ra_micro"))
-    ra.join(mu, ra("x_id") === mu("a_id") && ra("y_id") === mu("b_id"),
-            "left_anti")
-      .select("x_id", "y_id", "cn", "ra_micro")
-  }
+  def resourceAlloc(spark: SparkSession, dir: String): DataFrame =
+    linkScores(mutualGraph(spark, dir),
+      Some(ApexWeight(col("deg"), "1000000 div deg", "ra_micro")))
 
   /** Adamic–Adar link prediction — the third classic index alongside
     * [[commonNeighbors]] (uniform weight) and [[resourceAlloc]]
@@ -374,25 +400,10 @@ object Graph {
     * (non-negative operands, CLAUDE.md division rule). Same bounded
     * wedge enumeration as the siblings: degree ≤ k on a mutual-top-k
     * graph ⇒ wedges ≤ k²·|V| at any corpus scale. */
-  def adamicAdar(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
-    val lnm = und.groupBy("u").agg(count(lit(1)).as("deg"))
-      .select(col("u").as("apex"),
-              Num.lnMicro(col("deg").cast("double")).as("lnm"))
-    val aa = und.as("e1").join(und.as("e2"),
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.u").as("apex"), col("e1.v").as("x_id"),
-              col("e2.v").as("y_id"))
-      .join(lnm, Seq("apex"))
-      .groupBy("x_id", "y_id")
-      .agg(count(lit(1)).as("cn"),
-           sum(expr("1000000000000 div lnm")).as("aa_micro"))
-    aa.join(mu, aa("x_id") === mu("a_id") && aa("y_id") === mu("b_id"),
-            "left_anti")
-      .select("x_id", "y_id", "cn", "aa_micro")
-  }
+  def adamicAdar(spark: SparkSession, dir: String): DataFrame =
+    linkScores(mutualGraph(spark, dir),
+      Some(ApexWeight(Num.lnMicro(col("deg").cast("double")).as("lnm"),
+                      "1000000000000 div lnm", "aa_micro")))
 
   /** Neighborhood-Jaccard link prediction — the normalized fourth index
     * completing [[commonNeighbors]] (raw count) / [[resourceAlloc]]
@@ -404,21 +415,11 @@ object Graph {
     * engine-agnostic. Same bounded wedge enumeration, plus two
     * |pairs|-row degree joins. */
   def jaccardLink(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
-    val dg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    val cn = und.as("e1").join(und.as("e2"),
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.v").as("x_id"), col("e2.v").as("y_id"))
-      .groupBy("x_id", "y_id").agg(count(lit(1)).as("cn"))
-    val jac = cn
-      .join(dg.select(col("u").as("x_id"), col("deg").as("dx")), Seq("x_id"))
-      .join(dg.select(col("u").as("y_id"), col("deg").as("dy")), Seq("y_id"))
-      .withColumn("jac_micro",
-        expr("(cn * CAST(1000000 AS BIGINT)) div (dx + dy - cn)"))
-    jac.join(mu, jac("x_id") === mu("a_id") && jac("y_id") === mu("b_id"),
-             "left_anti")
+    val g = mutualGraph(spark, dir)
+    linkScores(g, endpoints =
+        endpointDegrees(_, g.deg, "x_id" -> "dx", "y_id" -> "dy")
+          .withColumn("jac_micro",
+            expr("(cn * CAST(1000000 AS BIGINT)) div (dx + dy - cn)")))
       .select("x_id", "y_id", "cn", "jac_micro")
   }
 
@@ -436,14 +437,10 @@ object Graph {
     * oracle CTEs in lockstep. Output = adopted nodes only
     * (vec_id, label, iter). */
   def labelProp(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
+    val und = mutualGraph(spark, dir).und
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
-    val split = CountMemo.get(spark, dir, "embeddings")(emb.count()) / 2
-    val l0 = emb.filter(col("vec_id") < split)
+    val l0 = emb.filter(col("vec_id") < Similarity.embCount(spark, dir) / 2)
     def round(labeled: DataFrame): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("vec_id")
         .orderBy(col("n").desc, col("label").asc)
       und
@@ -473,7 +470,7 @@ object Graph {
   def components(spark: SparkSession, dir: String): DataFrame =
     CkptMemo.getOrElseUpdate((spark, dir, "graphcc"),
       connectedComponents(Tables.embeddings(spark, dir).select(col("vec_id")),
-        Similarity.knnMutual(spark, dir).select("a_id", "b_id"), "vec_id", "comp"))
+        mutualGraph(spark, dir).mu, "vec_id", "comp"))
 
   /** THE connected-components loop — hash-min label propagation plus
     * pointer jumping over an undirected (a_id, b_id) edge frame `mu`:
@@ -485,11 +482,8 @@ object Graph {
     * joins, no driver graph. Returns (`id`, `label`) for every `id` of
     * `nodes`, label = the minimum id reachable. Generic over the column
     * names so each caller plans exactly as its own copy did:
-    * [[Dedup.clusters]] (doc_id/cluster over near-dup pairs),
-    * [[components]] (vec_id/comp over mutual-kNN edges) and
-    * `tools/GraphEdgePrice` (prices the split-served edge set against
-    * the audited one — one loop, so the comparison can never measure
-    * two algorithms).
+    * [[Dedup.clusters]] (doc_id/cluster over near-dup pairs) and
+    * [[components]] (vec_id/comp over mutual-kNN edges).
     *
     * Lifecycle per round: localCheckpoint (eager) materializes the round
     * AND truncates the logical plan to constant depth — without it the
@@ -592,23 +586,17 @@ object Graph {
     * lockstep. */
   def kcore(spark: SparkSession, dir: String): DataFrame = {
     val K = 2
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
+    val und = mutualGraph(spark, dir).und
+    // each node's degree in the subgraph induced by the survivors `s`
+    def inducedDeg(s: DataFrame): DataFrame =
+      und.join(s, Seq("u")).join(s.withColumnRenamed("u", "v"), Seq("v"))
+        .groupBy("u").agg(count(lit(1)).as("dg"))
     val all = und.select("u").distinct()
     var surv = all
-    for (_ <- 1 to 3) {
-      surv = und
-        .join(surv, Seq("u"))
-        .join(surv.withColumnRenamed("u", "v"), Seq("v"))
-        .groupBy("u").agg(count(lit(1)).as("dg"))
-        .filter(col("dg") >= K).select("u")
-    }
-    val finalDeg = und.join(surv, Seq("u"))
-      .join(surv.withColumnRenamed("u", "v"), Seq("v"))
-      .groupBy("u").agg(count(lit(1)).as("dg"))
+    for (_ <- 1 to 3)
+      surv = inducedDeg(surv).filter(col("dg") >= K).select("u")
     all.join(surv.withColumn("ic", lit(1)), Seq("u"), "left")
-      .join(finalDeg, Seq("u"), "left")
+      .join(inducedDeg(surv), Seq("u"), "left")
       .select(col("u").as("vec_id"),
               coalesce(col("ic"), lit(0)).cast("int").as("in_core"),
               coalesce(col("dg"), lit(0L)).as("core_deg"))
@@ -626,12 +614,9 @@ object Graph {
     * from a trusted seed set (curated-quality anchors). Oracle unrolls
     * identical bf-prefixed CTE rounds. */
   def bfsLayers(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
-    val emb = Tables.embeddings(spark, dir).select(col("vec_id"))
-    val seedCut = CountMemo.get(spark, dir, "embeddings")(emb.count()) / 10
-    var dist = emb.select(col("vec_id"),
+    val und = mutualGraph(spark, dir).und
+    val seedCut = Similarity.embCount(spark, dir) / 10
+    var dist = Tables.embeddings(spark, dir).select(col("vec_id"),
       when(col("vec_id") < seedCut, 0).otherwise(lit(null)).as("d"))
     for (r <- 1 to 3) {
       val reached = und
@@ -665,26 +650,12 @@ object Graph {
     * nodes more than 3 hops from every seed read 0 — exactly the docs
     * the selection would drop. */
   def ppr(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
-    val dg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    val emb = Tables.embeddings(spark, dir).select(col("vec_id"))
-    val seedCut = CountMemo.get(spark, dir, "embeddings")(emb.count()) / 10
-    val nodes = dg.select(col("u").as("node"), col("deg"),
+    val g = mutualGraph(spark, dir)
+    val seedCut = Similarity.embCount(spark, dir) / 10
+    val nodes = g.deg.select(col("u").as("node"), col("deg"),
       (col("u") < seedCut).cast("int").as("seed"))
-    val ewd = und.join(dg, Seq("u")) // (u, v, deg) — deg pre-attached
-    var r = nodes.select(col("node"), (col("seed") * lit(1000000L)).as("r"))
-    for (_ <- 1 to rounds) {
-      val contrib = ewd.join(r, ewd("u") === r("node"))
-        .select(col("v").as("node"), expr("r div deg").as("ct"))
-        .groupBy("node").agg(sum("ct").as("c"))
-      r = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (col("seed") * lit(150000L) +
-            expr("(85 * coalesce(c, 0)) div 100")).as("r"))
-    }
-    nodes.join(r, Seq("node"))
+    // (u, v, deg) edges — deg pre-attached; only seeds restart
+    dampedRank(g.und.join(g.deg, Seq("u")), "u", "v", nodes, col("seed"), rounds)
       .select(col("node").as("vec_id"), col("deg"), col("seed"),
               col("r").as("ppr_micro"))
       .orderBy("vec_id")
@@ -704,11 +675,9 @@ object Graph {
     * by construction). Per round one |edges| join + one agg; the fixed
     * round count bounds plan depth, no checkpoint needed. */
   def eigenCentrality(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
-    val dg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-      .select(col("u").as("node"), col("deg"))
+    val g = mutualGraph(spark, dir)
+    val und = g.und
+    val dg = g.deg.select(col("u").as("node"), col("deg"))
     var x = dg.select(col("node"), lit(1000000L).as("x"))
     for (_ <- 1 to rounds) {
       val s = und.join(x, und("u") === x("node"))
@@ -732,17 +701,15 @@ object Graph {
     * are unioned in so a path-2 node that is also a neighbor is not
     * double-counted. */
   def twoHopReach(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
-    val dg = und.groupBy("u").agg(count(lit(1)).as("deg"))
+    val g = mutualGraph(spark, dir)
+    val und = g.und
     val two = und.as("e1")
       .join(und.as("e2"), col("e1.v") === col("e2.u"))
       .select(col("e1.u").as("u"), col("e2.v").as("v"))
       .filter(col("u") =!= col("v"))
     val reach = und.union(two).distinct()
       .groupBy("u").agg(count(lit(1)).as("n_reach"))
-    dg.join(reach, Seq("u"))
+    g.deg.join(reach, Seq("u"))
       .select(col("u").as("vec_id"), col("deg"), col("n_reach"))
       .orderBy("vec_id")
   }
@@ -760,7 +727,7 @@ object Graph {
     * div in Spark; all-one-label degenerates to 1e6 via a mirrored
     * CASE. One |E| join + model-sized label frames. */
   def labelHomophily(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
+    val mu = mutualGraph(spark, dir).mu
     val lab = Tables.embeddings(spark, dir).select("vec_id", "label")
     val e = mu
       .join(lab.withColumnsRenamed(Map("vec_id" -> "a_id", "label" -> "la")),
@@ -797,10 +764,7 @@ object Graph {
     * aggregations over the memoized edge frame; output is
     * |distinct degrees| rows (≤ k-ish) at any scale. */
   def degreeHist(spark: SparkSession, dir: String): DataFrame = {
-    val mu = Similarity.knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"))
-      .union(mu.select(col("b_id").as("u")))
-    val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
+    val deg = mutualGraph(spark, dir).deg
     val tot = deg.agg(count(lit(1)).as("n_nodes"))
     deg.groupBy("deg").agg(count(lit(1)).as("n"))
       .crossJoin(broadcast(tot))

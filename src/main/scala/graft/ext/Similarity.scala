@@ -185,7 +185,7 @@ object Similarity {
     * while bench/production scales get a bigger index. The count that
     * feeds the formula is one metadata-cheap job, memoized per
     * (session, dir) — the same role AQE's runtime stats play. */
-  private def embCount(spark: SparkSession, dir: String): Long =
+  private[graft] def embCount(spark: SparkSession, dir: String): Long =
     CountMemo.get(spark, dir, "embeddings")(
       Tables.embeddings(spark, dir).count())
 
@@ -298,16 +298,6 @@ object Similarity {
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), bucketCol(numPlanes(embCount(spark, dir))))
 
-  /** LSH bucket-balance entropy — the index-health number an ANN
-    * operator watches before trusting its candidate volumes: Shannon
-    * entropy of the bucket-size distribution vs the ln(n_buckets)
-    * ceiling, as a micro-unit balance ratio. Skewed hyperplanes (or a
-    * drifted corpus) collapse mass into few buckets → candidate caps
-    * fire and recall quietly degrades; balance ≈ 1e6 is the healthy
-    * reading. Same micronized-ln discipline as the entropy family
-    * (each ln rounded to µ-nats FIRST, then exact BIGINT; all
-    * non-negative so div ≡ //). One bucket-size agg + a one-row fold —
-    * free at any corpus scale. */
   /** One-row micronized-ln entropy fold over a (key, c) size frame —
     * shared by [[bucketEntropy]] (LSH buckets) and [[cellBalance]]
     * (trained-IVF home cells): the two index-health twins must apply
@@ -328,6 +318,16 @@ object Similarity {
               "h_micro", "h_max_micro", "balance_micro")
   }
 
+  /** LSH bucket-balance entropy — the index-health number an ANN
+    * operator watches before trusting its candidate volumes: Shannon
+    * entropy of the bucket-size distribution vs the ln(n_buckets)
+    * ceiling, as a micro-unit balance ratio. Skewed hyperplanes (or a
+    * drifted corpus) collapse mass into few buckets → candidate caps
+    * fire and recall quietly degrades; balance ≈ 1e6 is the healthy
+    * reading. Same micronized-ln discipline as the entropy family
+    * (each ln rounded to µ-nats FIRST, then exact BIGINT; all
+    * non-negative so div ≡ //). One bucket-size agg + a one-row fold —
+    * free at any corpus scale. */
   def bucketEntropy(spark: SparkSession, dir: String): DataFrame =
     entropyFold(lshBuckets(spark, dir)
       .groupBy("bucket").agg(count(lit(1)).as("c")))
@@ -1576,6 +1576,12 @@ object Similarity {
       .select("a_id", "b_id", "rn", "sim")
   }
 
+  /** The memo holds the RANKED top-[[TruthDepth]] (with rn) so
+    * [[recallAtK]]'s k-sweep and the legs' top-3 slice share ONE
+    * probe × corpus pass; a top-3 slice of the deeper ranking is
+    * identical to ranking-then-cutting at 3 (same window order). */
+  private val TruthDepth = 10
+
   /** The eval family's shared EXACT ground truth — per probe (vec_id <
     * probeN), the exact 6-dp-cosine top-3 over the FULL corpus, self
     * excluded, ties by b_id: one broadcast of the probe table against a
@@ -1589,12 +1595,6 @@ object Similarity {
     * jl, matryoshka, rrf, sign, graph, nn_descent) share only this
     * truth frame — their screens stay their own. probeN is part of the
     * key because specs probe at 10 (the eval-family default is 100). */
-  /** The memo holds the RANKED top-[[TruthDepth]] (with rn) so
-    * [[recallAtK]]'s k-sweep and the legs' top-3 slice share ONE
-    * probe × corpus pass; a top-3 slice of the deeper ranking is
-    * identical to ranking-then-cutting at 3 (same window order). */
-  private val TruthDepth = 10
-
   private[ext] def exactTruthRanked(spark: SparkSession, dir: String,
                                     probeN: Long): DataFrame =
     CkptMemo.getOrElseUpdate((spark, dir, "simtruth", probeN), {
@@ -2219,9 +2219,7 @@ object Similarity {
 
   private def graphSearchBuild(spark: SparkSession, dir: String,
                                probeN: Long): DataFrame = {
-    val mu = knnMutual(spark, dir).select("a_id", "b_id")
-    val und = mu.select(col("a_id").as("u"), col("b_id").as("v"))
-      .union(mu.select(col("b_id").as("u"), col("a_id").as("v")))
+    val und = Graph.mutualGraph(spark, dir).und
     val emb = embWithNrm(spark, dir)
     val probes = probeVecs(emb, probeN)
     val wE = Window.partitionBy("a_id").orderBy(col("hd").asc, col("b_id").asc)
@@ -2625,6 +2623,23 @@ object Similarity {
       explodeRanked(rankCells(fanOut(probeSide), cents)), live, homeCells))
   }
 
+  /** All in-cell candidate pairs (a < b) with their 6-dp cosine, over
+    * the TRAINED home-cell assignment — the un-thresholded frame
+    * [[semanticDedup]] (τ = 0.4) and [[semanticCurve]] (τ grid) both
+    * cut; extracted so the dedup decision and its tuning curve can
+    * never diverge on the candidate stage. */
+  private def semanticPairsAll(spark: SparkSession, dir: String): DataFrame =
+    // memoized ("sempairs", owner dedup_semantic in Bench's list): the
+    // dedup decision, the τ curve, and the recall eval all cut this one
+    // un-thresholded in-cell pair frame — before round 20 each re-ran
+    // the capped candidate join + cosine
+    CkptMemo.getOrElseUpdate((spark, dir, "sempairs"), {
+      val withCell = embWithNrm(spark, dir)
+        .join(homeOf(ivfTrainedRanked(spark, dir)), Seq("vec_id"))
+      pairCandidates(withCell, "cell").filter(col("a_id") < col("b_id"))
+        .localCheckpoint()
+    })
+
   /** SemDeDup-style semantic dedup (cluster-then-confirm, after Abbas et
     * al. 2023): embeddings that land in the same TRAINED coarse cell and
     * confirm at cosine >= 0.4 are semantic duplicates; the keep-list
@@ -2645,23 +2660,6 @@ object Similarity {
     * groups concentrate inside one cell; for cross-bucket coverage at
     * lower thresholds use [[embeddingNearDup]] (LSH buckets are
     * similarity-keyed, not partition-of-space). */
-  /** All in-cell candidate pairs (a < b) with their 6-dp cosine, over
-    * the TRAINED home-cell assignment — the un-thresholded frame
-    * [[semanticDedup]] (τ = 0.4) and [[semanticCurve]] (τ grid) both
-    * cut; extracted so the dedup decision and its tuning curve can
-    * never diverge on the candidate stage. */
-  private def semanticPairsAll(spark: SparkSession, dir: String): DataFrame =
-    // memoized ("sempairs", owner dedup_semantic in Bench's list): the
-    // dedup decision, the τ curve, and the recall eval all cut this one
-    // un-thresholded in-cell pair frame — before round 20 each re-ran
-    // the capped candidate join + cosine
-    CkptMemo.getOrElseUpdate((spark, dir, "sempairs"), {
-      val withCell = embWithNrm(spark, dir)
-        .join(homeOf(ivfTrainedRanked(spark, dir)), Seq("vec_id"))
-      pairCandidates(withCell, "cell").filter(col("a_id") < col("b_id"))
-        .localCheckpoint()
-    })
-
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
     // the keep-list join needs only (vec_id, cell) — straight off the
     // memoized trained ranking, no second embeddings scan

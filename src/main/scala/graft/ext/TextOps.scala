@@ -972,13 +972,12 @@ object TextOps {
                 .as("score_per_tok"),
               (col("score") > 0).cast("int").as("keep"))
 
-  /** The hashed token feature PolyHashMod(tok, 31, P1) (column `tok`)
-    * and its bucket mod 64 — the one feature space of [[qualityModel]],
-    * [[qualityTrain]], the `qscored` apply and [[hashEmbed]]'s
-    * dimensions (the oracle's `featureHashSql`). */
-  private[graft] val P1 = 1000000007L
+  /** The hashed token feature PolyHashMod(tok, 31, [[Dedup.P1]]) (column
+    * `tok`) and its bucket mod 64 — the one feature space of
+    * [[qualityModel]], [[qualityTrain]], the `qscored` apply and
+    * [[hashEmbed]]'s dimensions (the oracle's `featureHashSql`). */
   private def featureHash: Column =
-    graft.functions.PolyHashMod.col(col("tok"), 31L, P1)
+    graft.functions.PolyHashMod.col(col("tok"), 31L, Dedup.P1)
   private def featureBucket: Column = featureHash % 64
 
   /** (doc_id, y): the [[gopherGates]] labels the quality trainer and its
@@ -2206,13 +2205,12 @@ object TextOps {
 
   // ---- winnowing fingerprints (MOSS; Schleimer/Wilkerson/Aiken 2003) ----
 
-  /** Winnowing constants — token-gram size, window width, the modulus of
-    * the portable polynomial hash, and the position-packing scale. All
-    * four are read by the oracle chain. The
+  /** Winnowing constants — token-gram size, window width and the
+    * position-packing scale; the gram hash is the portable polynomial
+    * hash mod [[Dedup.P1]]. All are read by the oracle chain. The
     * pack scale bounds doc length: positions must stay < 1e6 tokens. */
   private[graft] val WinK = 4
   private[graft] val WinW = 4
-  private[graft] val WinP = 1000000007L
   private[graft] val WinPack = 1000000L
 
   /** Shared gram-hash frame: (doc_id, p, h, ng) — one hash per token
@@ -2223,7 +2221,7 @@ object TextOps {
         (size(col("toks")) - (WinK - 1)).cast("long").as("ng"),
         posexplode(wordGrams(WinK)))
       .select(col("doc_id"), col("ng"), (col("pos") + 1).cast("long").as("p"),
-              graft.functions.PolyHashMod.col(col("col"), 31L, WinP).as("h"))
+              graft.functions.PolyHashMod.col(col("col"), 31L, Dedup.P1).as("h"))
 
   /** Winnowing fingerprint selection — the MOSS document-fingerprint
     * scheme: hash every token [[WinK]]-gram, slide a [[WinW]]-gram

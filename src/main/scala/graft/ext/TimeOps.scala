@@ -37,7 +37,6 @@ object TimeOps {
     * aggregation, both shuffling on (event_type, hour) — at 100 TB the
     * bar count is O(types × hours), thousands of rows from billions. */
   def ohlc(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = Tables.events(spark, dir)
       .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
               col("ts"), col("event_id"), col("value"))
@@ -60,6 +59,15 @@ object TimeOps {
               col("low_v"), col("high_v"), col("vol_v"))
   }
 
+  /** The hourly series every rate query reads: events counted per
+    * (event_type, h = the hour's start) as `c` — hours with no event
+    * are absent, so a lag or row number splices the series across them
+    * (the [[autocorr]] contract). */
+  private def hourly(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
+      .agg(count(lit(1)).as("c"))
+
   /** 8-lag exponentially-weighted moving average of the hourly event
     * rate (α = 1/2) with a burst flag — the smoothing baseline an
     * alerting pipeline keeps per series. An EWMA recurrence is
@@ -72,17 +80,13 @@ object TimeOps {
     * of mass), not an approximation left to chance. One lag window per
     * event_type over the |types|×|hours| hourly frame. */
   def ewma(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hourly = Tables.events(spark, dir)
-      .groupBy(date_trunc("hour", col("ts")).as("h"), col("event_type"))
-      .agg(count(lit(1)).as("c"))
     val w = Window.partitionBy("event_type").orderBy("h")
     val terms = col("c").cast("double") +:
       (1 until 8).map(i =>
         coalesce(lag(col("c"), i).over(w), lit(0L)).cast("double") *
           lit(1.0 / (1L << i)))
     val num = terms.reduce(_ + _)
-    hourly
+    hourly(spark, dir)
       .withColumn("ewm", Num.rnd(num / lit(255.0 / 128.0), 4))
       .withColumn("burst",
         (col("c").cast("double") > col("ewm") * 2).cast("int"))
@@ -107,10 +111,7 @@ object TimeOps {
     * events; BIGINT envelope holds to ~3e5 events/hour·type at 1e4
     * hours (beyond: DECIMAL(38), the emb_dim_stats pattern). */
   def autocorr(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hc = Tables.events(spark, dir)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("c"))
+    val hc = hourly(spark, dir)
     val w = Window.partitionBy("event_type").orderBy("h")
     hc.withColumn("p", lag(col("c"), 1).over(w))
       .filter(col("p").isNotNull)
@@ -148,12 +149,9 @@ object TimeOps {
     * hour splices the series — the [[autocorr]] contract, kept
     * deliberately so the two stay composable. */
   def acf(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val lags = AcfLags.toDF("lag")
-    val hc = Tables.events(spark, dir)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("c"))
+    val hc = hourly(spark, dir)
       .withColumn("rn",
         row_number().over(Window.partitionBy("event_type").orderBy("h"))
           .cast("long"))
@@ -194,10 +192,7 @@ object TimeOps {
     * argmax window — thousands of rows from billions of events, same
     * per-type parallelism as [[autocorr]]. */
   def cusum(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hc = Tables.events(spark, dir)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("c"))
+    val hc = hourly(spark, dir)
     val w = Window.partitionBy("event_type").orderBy("h")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = hc.groupBy("event_type")
@@ -232,10 +227,7 @@ object TimeOps {
     * ≤ 24·|types| output rows at any scale; the per-type ranking
     * window is 24 rows. */
   def seasonalProfile(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val prof = Tables.events(spark, dir)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("c"))
+    val prof = hourly(spark, dir)
       .withColumn("hod", hour(col("h")).cast("int"))
       .groupBy("event_type", "hod")
       .agg(count(lit(1)).as("n_hours"), sum("c").as("n_events"))
@@ -262,10 +254,7 @@ object TimeOps {
     * per-(type, hod) window parallelism as the profile; per-type
     * single-row output at any scale. */
   def forecastBacktest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hc = Tables.events(spark, dir)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("c"))
+    val hc = hourly(spark, dir)
       .withColumn("hod", hour(col("h")).cast("int"))
     val w = Window.partitionBy("event_type", "hod").orderBy("h")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -342,7 +331,6 @@ object TimeOps {
     * plain integer div). One lag window per user + one 6-row agg;
     * state is |events| rows partitioned by user at any scale. */
   def gapStats(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val gaps = Tables.events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"))
@@ -381,7 +369,6 @@ object TimeOps {
     * forward — a single shuffle on user_id, no range cross-product.
     * DuckDB's native ASOF LEFT JOIN is the oracle. */
   def asofJoin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = Tables.events(spark, dir)
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("event_id"), col("value"),
@@ -414,7 +401,6 @@ object TimeOps {
     * epoch_us on the two engines — identical under the mandatory UTC
     * session), so the ranking key |Δt| is pure integer. */
   def asofNearest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = Tables.events(spark, dir)
     val p = e.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"))
@@ -514,7 +500,6 @@ object TimeOps {
     * one window over the change log partitioned by the dimension key.
     * event_id breaks timestamp ties deterministically on both engines. */
   def scd2(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts").asc, col("event_id").asc)
     Tables.events(spark, dir)
@@ -537,7 +522,6 @@ object TimeOps {
     * `last(..., ignoreNulls)` — one window per type. Output marks filled
     * rows so downstream can distinguish observation from carry. */
   def gapFill(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = Tables.events(spark, dir)
     val hourly = e.groupBy(date_trunc("hour", col("ts")).as("h"),
                            col("event_type"))
@@ -567,7 +551,6 @@ object TimeOps {
     * then a window over the tiny series: at 100 TB the raw-to-hourly
     * reduction happens map-side and the anomaly pass is O(hours). */
   def spike(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val hourly = Tables.events(spark, dir)
       .groupBy(date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("c"))
@@ -596,7 +579,6 @@ object TimeOps {
     * caveat applies (mad = 0 when over half the days tie — then any
     * deviation flags), which is the standard behavior. */
   def madOutlier(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val daily = Tables.events(spark, dir)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("d"))
       .agg(count(lit(1)).as("x"))
@@ -635,7 +617,6 @@ object TimeOps {
     * are nonneg and ≤ ~56k cents, so every product is far inside
     * int64). One window pass, shuffling once on event_type. */
   def rollingStats(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // baseline = the PRECEDING 5 rows only: a point inside its own
     // window can deviate at most √(n−1)·σ ≈ 2σ, so a 3σ test against a
     // self-inclusive window is structurally dead — the online shape

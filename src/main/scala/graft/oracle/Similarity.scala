@@ -224,6 +224,17 @@ private[graft] object Similarity {
   private lazy val trainedTopKOracleSql: String =
     trainedServeChainSql + s" SELECT a_id, b_id, rn, sim FROM r WHERE rn <= $TopK"
 
+  /** The brute-force exact truth as CTE `name` (a_id, b_id, sim): the
+    * 6-dp cosine of every probe (vec_id < ProbeN) to every other
+    * vector; `on` narrows the join (the filtered leg's same-label
+    * rule). */
+  private def exactTruthCte(name: String, on: String = ""): String =
+    s"$name AS (SELECT x.vec_id AS a_id, y.vec_id AS b_id, " +
+    "round((list_cosine_similarity(x.embedding::DOUBLE[], " +
+    "y.embedding::DOUBLE[])) * 1e6) / 1e6 AS sim " +
+    s"FROM embeddings x JOIN embeddings y ON y.vec_id <> x.vec_id$on " +
+    s"WHERE x.vec_id < $ProbeN)"
+
   /** The shared-truth recall-eval ORACLE tail over a ranked serve
     * relation (a_id, b_id, rn ordered) — `<pfx>ex/xr/sc/ht/cm` names
     * claimed; probe size ProbeN + the integer micro metric forms (the
@@ -231,11 +242,7 @@ private[graft] object Similarity {
     * Every shared-truth recall oracle (st, dz, sb, tre, tse) reads
     * it. */
   private def recallEvalTailSqlFor(pfx: String, rel: String): String =
-    s"${pfx}ex AS (SELECT x.vec_id AS a_id, y.vec_id AS b_id, " +
-    "round((list_cosine_similarity(x.embedding::DOUBLE[], " +
-    "y.embedding::DOUBLE[])) * 1e6) / 1e6 AS sim " +
-    "FROM embeddings x JOIN embeddings y ON y.vec_id <> x.vec_id " +
-    s"WHERE x.vec_id < $ProbeN), " +
+    exactTruthCte(s"${pfx}ex") + ", " +
     s"${pfx}xr AS (SELECT a_id, b_id FROM (SELECT a_id, b_id, " +
     "row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id ASC) " +
     s"AS rn FROM ${pfx}ex) e WHERE rn <= $TopK), " +
@@ -1050,10 +1057,7 @@ private[graft] object Similarity {
       (nnDescentCteSql +
        s", ndbs AS (SELECT a_id, b_id FROM r WHERE rn <= $TopK AND a_id < $ProbeN), " +
        s"ndrs AS (SELECT a_id, b_id FROM ndr WHERE rn <= $TopK AND a_id < $ProbeN), " +
-       "ndex AS (SELECT x.vec_id AS a_id, y.vec_id AS b_id, " +
-       "round((list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[])) * 1e6) / 1e6 AS sim " +
-       "FROM embeddings x JOIN embeddings y ON y.vec_id <> x.vec_id " +
-       s"WHERE x.vec_id < $ProbeN), " +
+       exactTruthCte("ndex") + ", " +
        "ndxr AS (SELECT a_id, b_id FROM (SELECT a_id, b_id, " +
        "row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id ASC) AS rn " +
        s"FROM ndex) e WHERE rn <= $TopK), " +
@@ -1073,10 +1077,7 @@ private[graft] object Similarity {
     "sim_ivf_recall_eval" ->
       (ivfTopKCteSql +
        s", scr AS (SELECT a_id, b_id FROM r WHERE rn <= $TopK AND a_id < $ProbeN), " +
-       "exs AS (SELECT x.vec_id AS a_id, y.vec_id AS b_id, " +
-       "round((list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[])) * 1e6) / 1e6 AS sim " +
-       "FROM embeddings x JOIN embeddings y ON y.vec_id <> x.vec_id " +
-       s"WHERE x.vec_id < $ProbeN), " +
+       exactTruthCte("exs") + ", " +
        "exr AS (SELECT a_id, b_id FROM (SELECT a_id, b_id, " +
        "row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id ASC) AS rn " +
        s"FROM exs) e WHERE rn <= $TopK), " +
@@ -1096,10 +1097,7 @@ private[graft] object Similarity {
     "sim_recall_at_k" ->
       (ivfTopKCteSql + ", " +
        "rkg AS (SELECT UNNEST([1, 3, 5, 10]) AS k), " +
-       "rke AS (SELECT x.vec_id AS a_id, y.vec_id AS b_id, " +
-       "round((list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[])) * 1e6) / 1e6 AS sim " +
-       "FROM embeddings x JOIN embeddings y ON y.vec_id <> x.vec_id " +
-       s"WHERE x.vec_id < $ProbeN), " +
+       exactTruthCte("rke") + ", " +
        "rkr AS (SELECT a_id, b_id, row_number() OVER (PARTITION BY a_id " +
        "ORDER BY sim DESC, b_id ASC) AS rn FROM rke), " +
        "rkt AS (SELECT g.k, a_id, b_id FROM rkr CROSS JOIN rkg g " +
@@ -1128,10 +1126,7 @@ private[graft] object Similarity {
     // nonneg integer micro-units (// ≡ div)
     "sim_mrr_eval" ->
       (ivfTopKCteSql + ", " +
-       "mqe AS (SELECT x.vec_id AS a_id, y.vec_id AS b_id, " +
-       "round((list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[])) * 1e6) / 1e6 AS sim " +
-       "FROM embeddings x JOIN embeddings y ON y.vec_id <> x.vec_id " +
-       s"WHERE x.vec_id < $ProbeN), " +
+       exactTruthCte("mqe") + ", " +
        "mqt AS (SELECT a_id, b_id FROM (SELECT a_id, b_id, " +
        "row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id ASC) AS rn " +
        "FROM mqe) WHERE rn = 1), " +
@@ -1189,10 +1184,7 @@ private[graft] object Similarity {
        "flsc AS (SELECT a_id, b_id FROM (SELECT a_id, b_id, " +
        "row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id ASC) " +
        s"AS rn FROM flpr) t WHERE rn <= $TopK), " +
-       "flex AS (SELECT x.vec_id AS a_id, y.vec_id AS b_id, " +
-       "round((list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[])) * 1e6) / 1e6 AS sim " +
-       "FROM embeddings x JOIN embeddings y ON y.vec_id <> x.vec_id " +
-       s"AND y.label = x.label WHERE x.vec_id < $ProbeN), " +
+       exactTruthCte("flex", " AND y.label = x.label") + ", " +
        "flxr AS (SELECT a_id, b_id FROM (SELECT a_id, b_id, " +
        "row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id ASC) " +
        s"AS rn FROM flex) e WHERE rn <= $TopK), " +
@@ -1483,10 +1475,7 @@ private[graft] object Similarity {
     "round((list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[])) * 1e6) / 1e6 AS sim " +
     "FROM swp p JOIN embeddings x ON x.vec_id = p.a_id " +
     "JOIN swb y ON y.cell = p.cell AND y.vec_id <> p.a_id), " +
-    "swex AS (SELECT x.vec_id AS a_id, y.vec_id AS b_id, " +
-    "round((list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[])) * 1e6) / 1e6 AS sim " +
-    "FROM embeddings x JOIN embeddings y ON y.vec_id <> x.vec_id " +
-    s"WHERE x.vec_id < $ProbeN), " +
+    exactTruthCte("swex") + ", " +
     "swexr AS (SELECT a_id, b_id FROM (SELECT a_id, b_id, " +
     "row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id ASC) AS rn " +
     s"FROM swex) e WHERE rn <= $TopK), " +
@@ -2052,11 +2041,7 @@ private[graft] object Similarity {
       s"(SELECT count(*) FROM bwxr JOIN ${pfx}s USING (a_id, b_id)) " +
       "AS n_hit)"
     }
-    "bwx AS (SELECT x.vec_id AS a_id, y.vec_id AS b_id, " +
-    "round((list_cosine_similarity(x.embedding::DOUBLE[], " +
-    "y.embedding::DOUBLE[])) * 1e6) / 1e6 AS sim " +
-    "FROM embeddings x JOIN embeddings y ON y.vec_id <> x.vec_id " +
-    s"WHERE x.vec_id < $ProbeN), " +
+    exactTruthCte("bwx") + ", " +
     "bwxr AS (SELECT a_id, b_id FROM (SELECT a_id, b_id, " +
     "row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id ASC) " +
     s"AS rn FROM bwx) e WHERE rn <= $TopK), " +

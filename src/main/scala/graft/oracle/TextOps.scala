@@ -1,5 +1,6 @@
 package graft.oracle
 
+import graft.ext.Dedup.P1
 import graft.ext.TextOps._
 
 /** DuckDB reference SQL of the [[graft.ext.TextOps]] queries. */
@@ -277,7 +278,7 @@ private[graft] object TextOps {
 
   /** Winnowing fingerprint chain (wn-prefixed CTE names): gram hashes →
     * packed rightmost-min window selection → fingerprint rows, over
-    * [[winnowHashes]]/[[winnow]]'s [[WinK]], [[WinW]], [[WinP]] and
+    * [[winnowHashes]]/[[winnow]]'s [[WinK]], [[WinW]], [[P1]] and
     * [[WinPack]]. */
   private def winnowCteSql: String =
     "wnt AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents), " +
@@ -286,7 +287,7 @@ private[graft] object TextOps {
     s"FROM wnt, UNNEST(range(1, len(t) - ${WinK - 2})) AS u(i) WHERE len(t) >= $WinK), " +
     "wnh AS (SELECT doc_id, ng, p, " +
     "list_reduce([CAST(0 AS BIGINT)] || list_transform(range(1, len(g)+1), " +
-    s"i -> CAST(ascii(g[i]) AS BIGINT)), (a,b) -> (a*31 + b) % $WinP) AS h " +
+    s"i -> CAST(ascii(g[i]) AS BIGINT)), (a,b) -> (a*31 + b) % $P1) AS h " +
     "FROM wng), " +
     "wnm AS (SELECT doc_id, ng, p, " +
     s"min(h * $WinPack + ($WinPack - p)) OVER (PARTITION BY doc_id ORDER BY p " +
